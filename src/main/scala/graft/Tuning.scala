@@ -14,6 +14,10 @@ import org.apache.spark.sql.SparkSession
   * stats in milliseconds, and it runs on EVERY store read (dedup_delta_*,
   * text_bm25_*, lm_fluency_*, sim_*_index_*, store_fsck, pack/export).
   *
+  * Applied by [[SparkEntry.queries]] and at the mount of every store sink
+  * the ingest door chains (fingerprint, signature and ANN sinks and
+  * appenders), so a door wired layer by layer lists on the driver too.
+  *
   * Local default raises the threshold to 4096 so the driver lists
   * directly. Production on an object store must keep distributed listing —
   * there each list call is a network round-trip and the driver serializes

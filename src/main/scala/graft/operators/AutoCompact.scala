@@ -23,6 +23,10 @@ package graft.operators
   * untouched, so epoch idempotence survives. `checkEvery ≤ 0` disables
   * the hook (the manual-maintenance deployments keep their old behavior).
   *
+  * Stores with an [[EpochLog]] pass its fold as `fold`: it runs at EVERY
+  * cadence boundary, before the bound check, so the log holds at most
+  * `checkEvery` epochs and the bound is judged on the folded base.
+  *
   * In-memory cadence state only: a restarted sink starts its count at the
   * bound check again from zero, which at worst delays one check by
   * `checkEvery` epochs — never a correctness concern.
@@ -32,13 +36,16 @@ final class AutoCompact(checkEvery: Int, factor: Int) extends Serializable {
     "autoCompact factor must be positive when the hook is enabled")
   private var sinceCheck = 0
 
-  /** Call once per COMMITTED epoch. `fileCount`/`partitions` are evaluated
-    * lazily (only on a cadence boundary); `compact` only past the bound. */
-  def tick(fileCount: => Int, partitions: => Int)(compact: => Unit): Unit =
+  /** Call once per COMMITTED epoch. `fold`, `fileCount` and `partitions`
+    * are evaluated lazily (only on a cadence boundary, in that order);
+    * `compact` only past the bound. */
+  def tick(fileCount: => Int, partitions: => Int, fold: => Unit = ())
+          (compact: => Unit): Unit =
     if (checkEvery > 0) {
       sinceCheck += 1
       if (sinceCheck >= checkEvery) {
         sinceCheck = 0
+        fold
         if (fileCount > factor.toLong * math.max(1, partitions)) compact
       }
     }

@@ -12,9 +12,16 @@ import org.apache.spark.util.sketch.BloomFilter
   * continuous-crawl shape: yesterday's 100 TB corpus is history, today's
   * micro-batches must not re-admit its documents.
   *
-  * Layout: an append-only parquet table of 64-bit text fingerprints,
-  * `partitionBy(shard)` on the fingerprint's low byte, plus one Bloom-filter
-  * sidecar file per ingest epoch.
+  * Layout: 64-bit text fingerprints with their `shard` (the fingerprint's
+  * low byte) as an [[EpochLog]] table — a base `fps/shard=K/` written by
+  * seed, fold, compact and retract, plus a flat `fps_log/` holding one
+  * parquet file per committed ingest epoch — and one Bloom-filter sidecar
+  * per seed or epoch. The log exists for the per-file cost: an epoch's
+  * survivors touch one shard each, so a partitioned append wrote one file
+  * (plus its dirs, each a forked `chmod` on a local FS without native
+  * Hadoop IO) per survivor; one log file per epoch tracks the batch. Every
+  * read is base ∪ log ([[read]]); [[AutoCompact]]'s cadence folds the log
+  * into the base.
   *
   * Scale design — the point is what each micro-batch does NOT do:
   *  - No full-store join. The per-seed/per-epoch Bloom filters (each sized
@@ -23,19 +30,56 @@ import org.apache.spark.util.sketch.BloomFilter
   *    first; only possible-hits go to disk verification.
   *  - Verification reads ONLY the store shards that contain a candidate —
   *    `shard IN (...)` is a static partition filter over the candidates'
-  *    low bytes (a handful of dirs for a small candidate set), pinned by the
-  *    same partition-pruning contract as [[AnnIndex]].
-  *  - Survivors append as new files under their shard dirs; nothing is
+  *    low bytes (a handful of base dirs for a small candidate set, a
+  *    row-group filter on the few log files), pinned by the same
+  *    partition-pruning contract as [[AnnIndex]].
+  *  - Survivors append as ONE new log file per epoch; nothing is
   *    rewritten, so the store grows like a log and concurrent readers are
   *    never torn.
-  *  - Idempotent under foreachBatch at-least-once re-delivery via the
-  *    [[AnnIndex.ivfAppender]] epoch-marker protocol: a replayed epoch that
-  *    finds its marker is skipped (its fps are already stored — replaying
-  *    would drop the whole batch as "dup" AND double-append fingerprints).
+  *  - Idempotent under foreachBatch at-least-once re-delivery: the epoch's
+  *    fps stage, the `_ingested_<tag>_epoch_<e>` marker commits, then the
+  *    staged file publishes into the log. A replayed epoch that finds its
+  *    marker is skipped (its fps are already stored — replaying would drop
+  *    the whole batch as "dup" AND double-append fingerprints); a crash
+  *    before the marker discards the stage and the epoch replays whole
+  *    against a store without its own fps.
   */
 object FingerprintStore {
 
   private val NumShards = 256
+
+  /** The fps table's FIXED schema, supplied on every read: a takedown can
+    * retract the store's every fingerprint, and an empty partitioned table
+    * (no data files) must read as zero rows, not fail schema inference. */
+  private val FpsSchema: org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("fp", LongType), StructField("shard", LongType)))
+  }
+
+  private val Log = new EpochLog(Seq(EpochLog.Table("fps", "shard", FpsSchema)))
+
+  /** Marker/stage kind of [[dedupSink]] epochs. */
+  private val SinkKind = "ingested"
+
+  private def fsOf(spark: SparkSession, dir: String) =
+    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** The stored fingerprints, (fp, shard): base ∪ log. Heals a crashed
+    * compact's aside and a crashed fold first, so a reader never sees a
+    * silently empty table or a folded row twice. Empty store → zero rows. */
+  def read(spark: SparkSession, dir: String): DataFrame = {
+    val fs = fsOf(spark, dir)
+    healCompactAside(fs, dir)
+    Log.healFold(fs, dir)
+    Log.read(spark, dir, "fps")
+  }
+
+  private def healCompactAside(fs: org.apache.hadoop.fs.FileSystem,
+                               dir: String): Unit = {
+    val fpsDir = new Path(s"$dir/fps")
+    val prev = new Path(s"$dir/.fps_precompact")
+    if (!fs.exists(fpsDir) && fs.exists(prev)) require(fs.rename(prev, fpsDir))
+  }
 
   /** Fingerprint = xxhash64 of the raw text (the [[Dedup.fingerprint]]
     * exact-dup key); shard = its low byte. */
@@ -105,14 +149,7 @@ object FingerprintStore {
     * Read-only; one broadcast probe per stored row. */
   private[operators] def bloomMisses(spark: SparkSession,
                                      dir: String): DataFrame = {
-    val fs = new Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val fps =
-      if (fs.exists(new Path(s"$dir/fps")))
-        spark.read.schema(FpsSchema).parquet(s"$dir/fps")
-      else
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], FpsSchema)
+    val fps = Log.read(spark, dir, "fps") // no heal: the audit mutates nothing
     val bc = spark.sparkContext.broadcast(loadBlooms(spark, dir).toArray)
     fps.filter(!bloomProbe(bc)(col("fp"))).select("fp")
   }
@@ -128,9 +165,8 @@ object FingerprintStore {
                  idCol: String, textCol: String): DataFrame = {
     val keyed = docs.select(col(idCol).cast("long").as("id"),
       fpCol(textCol).as("fp")).localCheckpoint()
-    val fs = new Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(s"$dir/fps"))) return keyed.select("id").limit(0)
+    if (!Log.hasRows(fsOf(spark, dir), dir, "fps"))
+      return keyed.select("id").limit(0)
     val bc = spark.sparkContext.broadcast(loadBlooms(spark, dir).toArray)
     val cand = keyed.filter(bloomProbe(bc)(col("fp")))
       .select("fp").distinct()
@@ -139,7 +175,7 @@ object FingerprintStore {
     val shards = cand.select("shard").distinct() // ≤ NumShards rows
       .collect().map(_.getLong(0)).toSeq
     if (shards.isEmpty) return keyed.select("id").limit(0)
-    val confirmed = spark.read.schema(FpsSchema).parquet(s"$dir/fps")
+    val confirmed = read(spark, dir)
       .filter(col("shard").isin(shards: _*))
       .join(broadcast(cand.select("fp")), Seq("fp"), "left_semi")
     keyed.join(broadcast(confirmed.select("fp")), Seq("fp"), "left_semi")
@@ -147,29 +183,23 @@ object FingerprintStore {
   }
 
   /** Compact a long-lived store in place: fold the per-epoch Bloom sidecars
-    * into ONE filter sized to the store's true distinct count, and rewrite
-    * the fps table one file per shard (each epoch appends a file per touched
-    * shard — after 10⁴ epochs the screen is 10⁴ filter probes per lookup
-    * and the verify scan is file-opens, not bytes; same disease
-    * [[AnnIndex.compact]] cures for inverted lists).
+    * into ONE filter sized to the store's true distinct count, fold the
+    * log into the base, and rewrite the base one file per shard (each fold
+    * adds a file per touched shard — after 10⁴ epochs the screen is 10⁴
+    * filter probes per lookup and the verify scan is file-opens, not bytes;
+    * same disease [[AnnIndex.compact]] cures for inverted lists).
     *
     * Crash ordering: the merged Bloom publishes BEFORE the old sidecars are
     * deleted — at every instant the union of on-disk filters covers every
     * stored fingerprint (extra filters only cost false positives, which the
     * disk verify absorbs; a coverage GAP would let true dups through
     * unverified). The fps rewrite then swaps via the
-    * aside-publish-heal protocol. Single-writer: run while no sink is
-    * active, like the index compactor; epoch markers are untouched. */
+    * aside-publish-heal protocol, after the log has folded under its own
+    * marker (so the swap only ever replaces the base: no crash point can
+    * resurrect or double a logged row). Single-writer: run while no sink
+    * is active, like the index compactor; epoch markers are untouched. */
   def compact(spark: SparkSession, dir: String): Unit =
     rewriteFps(spark, dir, exclude = None)
-
-  /** The fps table's FIXED schema, supplied on every read: a takedown can
-    * retract the store's every fingerprint, and an empty partitioned table
-    * (no data files) must read as zero rows, not fail schema inference. */
-  private val FpsSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(StructField("fp", LongType), StructField("shard", LongType)))
-  }
 
   private def rewriteFps(spark: SparkSession, dir: String,
                          exclude: Option[DataFrame]): Unit = {
@@ -177,7 +207,8 @@ object FingerprintStore {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val fpsDir = new Path(s"$dir/fps")
     val prev = new Path(s"$dir/.fps_precompact")
-    if (!fs.exists(fpsDir) && fs.exists(prev)) require(fs.rename(prev, fpsDir))
+    healCompactAside(fs, dir) // before the fold: it must not publish over an aside
+    Log.fold(spark, dir)
     if (!fs.exists(fpsDir)) return
     val kept0 = spark.read.schema(FpsSchema).parquet(fpsDir.toString)
       .select("fp", "shard").distinct()
@@ -251,6 +282,13 @@ object FingerprintStore {
                 autoCompactEvery: Int = AutoCompact.DefaultCheckEvery,
                 autoCompactFactor: Int = AutoCompact.DefaultFactor)
                (out: DataFrame => Unit): (DataFrame, Long) => Unit = {
+    graft.Tuning.sessionDefaults(spark) // the store reads list on the driver
+    // A restarted sink finishes (or discards) what a crash left staged
+    // before it reads anything: committed epochs publish into the log, a
+    // committed fold completes.
+    val fs0 = fsOf(spark, dir)
+    Log.healStaging(fs0, dir, SinkKind, streamTag)
+    Log.healFold(fs0, dir)
     // The Bloom list is loaded once per sink start, BROADCAST to executors
     // (a closure-captured filter would re-serialize with every task), and
     // re-broadcast only when an epoch extends it.
@@ -259,14 +297,18 @@ object FingerprintStore {
     var bloomBc = sc.broadcast(blooms.toArray)
     // auto-compaction keys on the Bloom-sidecar count here: every committed
     // non-empty epoch adds one sidecar, each costs a probe per lookup, and
-    // compact() merges them to one (the fps tiny files fold in the same
-    // pass) — so sidecars, not fps files, are this store's growth telemetry
+    // compact() merges them to one (the base's fold files are rewritten in
+    // the same pass) — so sidecars, not fps files, are this store's growth
+    // telemetry. The log folds at every cadence boundary regardless.
     val auto = new AutoCompact(autoCompactEvery, autoCompactFactor)
     (batch: DataFrame, epoch: Long) => {
-      val fs = new Path(dir).getFileSystem(
-        batch.sparkSession.sparkContext.hadoopConfiguration)
-      val marker = new Path(s"$dir/_ingested_${streamTag}_epoch_$epoch")
-      if (!fs.exists(marker) && !batch.isEmpty) {
+      val fs = fsOf(batch.sparkSession, dir)
+      val marker = new Path(EpochLog.markerPath(dir, SinkKind, streamTag, epoch))
+      if (fs.exists(marker)) {
+        Log.healStaging(fs, dir, SinkKind, streamTag)
+      } else if (!batch.isEmpty) {
+        val stage = new Path(EpochLog.stagePath(dir, SinkKind, streamTag, epoch))
+        fs.delete(stage, true)
         // one survivor per distinct text within the batch (min id; the
         // dropDuplicates guards against byte-identical re-delivered rows,
         // which the min-id join alone would emit twice)
@@ -302,7 +344,7 @@ object FingerprintStore {
         // filter); the semi-join keeps one store row per confirmed dup
         val confirmed: DataFrame =
           if (shards.isEmpty) cand.select("fp")
-          else spark.read.schema(FpsSchema).parquet(s"$dir/fps")
+          else read(spark, dir)
             .filter(col("shard").isin(shards: _*))
             .join(broadcast(cand.select("fp")), Seq("fp"), "left_semi")
         val survivors = firsts
@@ -313,10 +355,13 @@ object FingerprintStore {
         val newFps = survivors
           .select(col("__fp").as("fp"),
             pmod(col("__fp"), lit(NumShards)).as("shard"))
-        newFps.repartition(col("shard"))
-          .write.mode("append").partitionBy("shard").parquet(s"$dir/fps")
         val n = survivors.count()
         if (n > 0) {
+          // stage the epoch's fps as one file (invisible until published)
+          // and write its Bloom sidecar, both before the marker: a replay
+          // of an uncommitted epoch overwrites the sidecar, and until then
+          // the extra filter only costs false positives
+          Log.stage(newFps, stage, "fps")
           val epochBloom = newFps.stat.bloomFilter("fp",
             math.max(1024L, 2 * n), 0.01)
           writeBloom(fs, dir, s"${streamTag}_epoch_$epoch", epochBloom)
@@ -326,8 +371,9 @@ object FingerprintStore {
           old.unpersist()
         }
         fs.create(marker, true).close()
+        Log.publish(fs, dir, stage)
         // epoch fully committed: the between-epochs single-writer window
-        auto.tick(bloomCount(spark, dir), 1) {
+        auto.tick(bloomCount(spark, dir), 1, Log.fold(spark, dir)) {
           compact(spark, dir)
           // the store's content is unchanged but its sidecars merged: swap
           // the in-memory list for the merged one (holding the old

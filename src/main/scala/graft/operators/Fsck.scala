@@ -57,9 +57,10 @@ import org.apache.spark.sql.types._
   *    ([[DoorRoute.shardOf]], the ingest route) names a DIFFERENT shard:
   *    a hand-copied store or a re-keyed layout; probes and takedowns for
   *    that id will look in the wrong shard and miss it.
-  *  - `crash_residue` — pending markers, staging dirs, and pre-swap
-  *    asides on disk: work some verb MUST finish (its entry-point heal
-  *    will), listed so the operator knows a crash happened and which
+  *  - `crash_residue` — pending markers (a log fold's `_fold_pending`
+  *    included), staging dirs, and pre-swap asides on disk: work some
+  *    verb MUST finish (its entry-point heal will), listed so the
+  *    operator knows a crash happened and which
   *    store owns it. Read-only by contract, fsck never clears them.
   *  - `layout` — a sharded root whose `shard=i` dirs disagree with the
   *    `_layout` sidecar's k (missing shard dirs, extra dirs past k).
@@ -90,7 +91,7 @@ object Fsck {
   /** Signature-store internal agreement: sigs ids ⟷ band-index ids. */
   def sigInternal(spark: SparkSession, sigDir: String,
                   layer: String = "sig"): DataFrame = {
-    if (!fsOf(spark, sigDir).exists(new Path(s"$sigDir/sigs")))
+    if (!SignatureStore.hasSigs(spark, sigDir))
       return emptyFindings(spark)
     // Symmetric difference as ONE map-side-combinable aggregate instead of
     // two distinct+anti-join passes (r17, guide §2.3 "aggregate before you
@@ -292,7 +293,7 @@ object Fsck {
     val wrong = (df: DataFrame) =>
       df.filter(DoorRoute.shardOf(col("id"), k) =!= shard)
     val sig =
-      if (fsOf(spark, sigDir).exists(new Path(s"$sigDir/sigs")))
+      if (SignatureStore.hasSigs(spark, sigDir))
         shape(wrong(SignatureStore.readSigsIdsNoHeal(spark, sigDir).distinct()),
           "misrouted", s"$layer/sig", s"route hash names another shard (k=$k)")
       else emptyFindings(spark)
@@ -316,6 +317,7 @@ object Fsck {
       else fs.listStatus(p).map(_.getPath.getName).filter { n =>
         n == "_retract_pending" || n == ".retract_stage" ||
           n == "_forget_pending" || n == ".hotbands.tmp" ||
+          n == EpochLog.FoldMarker || n == EpochLog.FoldStage ||
           (n.startsWith(".") && n.endsWith("_precompact")) ||
           n.startsWith(".request_") || n.startsWith(".ivf.tmp") ||
           n.startsWith("._layout")

@@ -15,14 +15,25 @@ import org.apache.spark.sql.functions._
   * the memoized-artifact discipline of `adaptation/dataset.py:131-147`,
   * applied to MinHash signatures).
   *
-  * Layout under `dir`:
-  *  - `sigs/shard=K/` — (id, sig ARRAY<BIGINT>), sharded on the id's hash
-  *    (`NumShards` partitions): the verify join prunes to candidate shards.
-  *  - `bands/bucket=K/` — (id, band_id, band_hash) band index, partitioned
-  *    on the band hash (`NumBuckets` partitions): a probe batch reads ONLY
-  *    its colliding buckets (the [[AnnIndex]] `partitionBy(list_id)` +
-  *    static-prune discipline), never the whole store — per-trigger probe
-  *    cost tracks the batch's bucket footprint, not store age.
+  * Layout under `dir` — both tables are [[EpochLog]] tables, a
+  * partitioned BASE plus a flat LOG of one parquet file per committed sink
+  * epoch, every read going through base ∪ log:
+  *  - `sigs/shard=K/` + `sigs_log/` — (id, sig ARRAY<BIGINT>, shard),
+  *    sharded on the id's hash (`NumShards` partitions): the verify join
+  *    prunes to candidate shards.
+  *  - `bands/bucket=K/` + `bands_log/` — (id, band_id, band_hash, bucket)
+  *    band index, partitioned on the band hash (`NumBuckets` partitions): a
+  *    probe batch reads ONLY its colliding buckets of the base (the
+  *    [[AnnIndex]] `partitionBy(list_id)` + static-prune discipline) and
+  *    the log's few files, never the whole store — per-trigger probe cost
+  *    tracks the batch's bucket footprint and the unfolded epochs, not
+  *    store age.
+  *  - Why a log: one epoch's 8 band rows per survivor land in ~8 buckets
+  *    each, so a partitioned append wrote a file per touched bucket and
+  *    shard (~250 for a 20-survivor epoch) — and on a local FS without
+  *    native Hadoop IO every created file and dir forks a `chmod`. One file
+  *    per table per epoch keeps the append's cost on the batch; seed, fold
+  *    ([[AutoCompact]]'s cadence), compact and retract write the base.
   *  - `_params` — pins (numHashes, shingleSize, bands): signatures from
   *    different parameters never mix; a mismatched probe is a loud error,
   *    not silent zero-overlap estimates.
@@ -31,11 +42,13 @@ import org.apache.spark.sql.functions._
   *    mounted on the same store can never suppress each other's epochs.
   *  - `.sigapp_stage_<tag>_<e>` / `.sigscr_stage_<tag>_<e>` — per-epoch
   *    staging dirs (the [[Pack.shardAppender]] stage-then-publish shape).
+  *  - `_fold_pending` / `.fold_stage` — a log fold's commit marker and
+  *    stage ([[EpochLog.fold]]).
   *
   * Sink crash discipline (both sinks): the epoch's sigs + band rows land
-  * in a staging dir first, the marker commits the epoch, and only then do
-  * the files move into the partitioned tables. A crash before the marker
-  * discards staging and replays the epoch whole — in particular a replayed
+  * in a staging dir first (one file per table), the marker commits the
+  * epoch, and only then do the files move into the logs. A crash before
+  * the marker discards staging and replays the epoch whole — a replayed
   * SCREEN epoch re-probes a store that does NOT contain its own staged
   * signatures, so it recomputes identical survivors instead of
   * self-matching to an empty frame. A crash after the marker replays as a
@@ -143,10 +156,9 @@ object SignatureStore {
   private val CensusMinDf = 32
 
   private def writeBandCensus(spark: SparkSession, dir: String): Unit = {
-    val fs = fsOf(spark, dir)
-    if (!fs.exists(new Path(s"$dir/bands"))) return
+    if (!Log.hasRows(fsOf(spark, dir), dir, "bands")) return
     publishCensus(spark, dir,
-      spark.read.schema(BandsSchema).parquet(s"$dir/bands")
+      Log.read(spark, dir, "bands")
         .groupBy("band_id", "band_hash").agg(count(lit(1)).as("df"))
         .filter(col("df") > CensusMinDf))
   }
@@ -251,40 +263,39 @@ object SignatureStore {
       StructField("bucket", LongType)))
   }
 
+  private val Log = new EpochLog(Seq(
+    EpochLog.Table("sigs", "shard", SigsSchema),
+    EpochLog.Table("bands", "bucket", BandsSchema)))
+
+  /** True when the store holds any signature row, in the base or the
+    * unfolded log — the "has this store ever committed?" test of callers
+    * that must tell a fresh store (nothing to collide with) from a
+    * mismatched one. */
+  def hasSigs(spark: SparkSession, dir: String): Boolean =
+    Log.hasRows(fsOf(spark, dir), dir, "sigs")
+
   /** NO-HEAL reads for [[Fsck]]: the audit's contract is "report, mutate
     * nothing", but [[readBands]]/the sigs read heal `.X_precompact`
     * asides by RENAMING on entry — running those under an audit would
     * both change disk state mid-diagnosis and hide the very
     * crash-residue finding the operator came for. These read the tables
-    * as they lie: live root if present, else zero rows (an aside-only
-    * crash state reads as empty here and surfaces through the audit's
-    * residue listing instead). Schema-supplied like every read. */
+    * as they lie: live base ∪ log (an aside-only crash state reads the
+    * base as empty and surfaces through the audit's residue listing
+    * instead; a pending fold's `_fold_pending` is listed there too).
+    * Schema-supplied like every read. */
   private[operators] def readSigsIdsNoHeal(spark: SparkSession,
                                            dir: String): DataFrame =
-    readTableNoHeal(spark, dir, "sigs", SigsSchema).select("id")
+    Log.read(spark, dir, "sigs").select("id")
 
   private[operators] def readBandsNoHeal(spark: SparkSession,
                                          dir: String): DataFrame =
-    readTableNoHeal(spark, dir, "bands", BandsSchema)
-
-  private def readTableNoHeal(spark: SparkSession, dir: String, sub: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val fs = fsOf(spark, dir)
-    if (fs.exists(new Path(s"$dir/$sub")))
-      spark.read.schema(schema).parquet(s"$dir/$sub")
-    else
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  }
+    Log.read(spark, dir, "bands")
 
   private def readSigsRaw(spark: SparkSession, dir: String): DataFrame = {
     val fs = fsOf(spark, dir)
     healCompactAside(fs, dir, "sigs")
-    if (fs.exists(new Path(s"$dir/sigs")))
-      spark.read.schema(SigsSchema).parquet(s"$dir/sigs")
-    else
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], SigsSchema)
+    Log.healFold(fs, dir)
+    Log.read(spark, dir, "sigs")
   }
 
   /** The stored band index: (id, band_id, band_hash, bucket); empty frame
@@ -296,15 +307,12 @@ object SignatureStore {
     healCompactAside(fs, dir, "bands")
     healCompactAside(fs, dir, "sigs") // the pre-index check below must not
                                       // misread a mid-compact sigs table
-    if (fs.exists(new Path(s"$dir/bands")))
-      spark.read.schema(BandsSchema).parquet(s"$dir/bands")
-    else if (fs.exists(new Path(s"$dir/sigs")))
+    Log.healFold(fs, dir)
+    if (!Log.hasRows(fs, dir, "bands") && Log.hasRows(fs, dir, "sigs"))
       throw new IllegalStateException(
         s"SignatureStore $dir holds sigs but no band index — a pre-index " +
           "store; run backfillBands before probing")
-    else
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], BandsSchema)
+    Log.read(spark, dir, "bands")
   }
 
   /** Rebuild the band index from the stored sigs in one pass (migration
@@ -314,7 +322,10 @@ object SignatureStore {
                     shingleSize: Int = 3, bands: Int = 8): Unit = {
     val fs = fsOf(spark, dir)
     checkParams(fs, dir, numHashes, shingleSize)
-    if (!fs.exists(new Path(s"$dir/sigs"))) return
+    if (!hasSigs(spark, dir)) return
+    // fold first: the rebuilt index replaces the whole bands base, so no
+    // band row may stay behind in the log to double it
+    foldHealed(spark, dir)
     val tmp = new Path(s"$dir/.bands_backfill.tmp")
     fs.delete(tmp, true)
     Dedup.bandedSigs(readSigsRaw(spark, dir).select("id", "sig"), "id",
@@ -335,72 +346,32 @@ object SignatureStore {
 
   // ---------------------------------------------------------------- sinks
 
-  private def markerPath(dir: String, kind: String, tag: String,
-                         epoch: Long): String =
-    s"$dir/_${kind}_${tag}_epoch_$epoch"
-
-  private def stagePath(dir: String, kind: String, tag: String,
-                        epoch: Long): String =
-    s"$dir/.${kind}_stage_${tag}_$epoch"
-
-  /** Write one epoch's signatures into a staging dir: sharded sigs under
-    * `stage/sigs`, band-index rows under `stage/bands`. */
+  /** Write one epoch's signatures into a staging dir, ONE file per table:
+    * sigs (with their shard) under `stage/sigs`, band-index rows (with
+    * their bucket) under `stage/bands`. */
   private def writeStage(sigs: DataFrame, numHashes: Int, bands: Int,
-                         stage: String): Unit = {
-    // one file per touched partition per epoch (see seed's layout note)
-    sigs.withColumn("shard", shardCol(col("id")))
-      .repartition(col("shard"))
-      .write.partitionBy("shard").parquet(s"$stage/sigs")
-    Dedup.bandedSigs(sigs, "id", numHashes, bands)
-      .withColumn("bucket", bucketCol(col("band_hash")))
-      .repartition(col("bucket"))
-      .write.partitionBy("bucket").parquet(s"$stage/bands")
+                         stage: Path): Unit = {
+    Log.stage(sigs.withColumn("shard", shardCol(col("id"))), stage, "sigs")
+    Log.stage(Dedup.bandedSigs(sigs, "id", numHashes, bands)
+      .withColumn("bucket", bucketCol(col("band_hash"))), stage, "bands")
   }
 
-  /** Move a committed staging dir's files into the store's partitioned
-    * tables, then drop the staging dir. Idempotent: per-file atomic
-    * renames; already-moved files are simply absent on a re-sweep. */
-  private def publishStage(fs: FileSystem, dir: String, stage: Path): Unit = {
-    if (!fs.exists(stage)) return
-    Seq("sigs" -> "shard=", "bands" -> "bucket=").foreach {
-      case (sub, partPrefix) =>
-        val subDir = new Path(stage, sub)
-        if (fs.exists(subDir))
-          fs.listStatus(subDir).map(_.getPath)
-            .filter(_.getName.startsWith(partPrefix)).foreach { pd =>
-              val dest = new Path(s"$dir/$sub/${pd.getName}")
-              fs.mkdirs(dest)
-              fs.listStatus(pd).map(_.getPath)
-                .filter(_.getName.endsWith(".parquet")).foreach { f =>
-                  require(fs.rename(f, new Path(dest, f.getName)),
-                    s"SignatureStore: cannot publish $f")
-                }
-            }
-    }
-    fs.delete(stage, true)
+  /** Sink mount: publish committed epoch stages of (kind, tag), discard
+    * uncommitted ones, finish a committed fold. */
+  private def healMount(spark: SparkSession, dir: String, kind: String,
+                        tag: String): Unit = {
+    graft.Tuning.sessionDefaults(spark) // the store reads list on the driver
+    val fs = fsOf(spark, dir)
+    Log.healStaging(fs, dir, kind, tag)
+    Log.healFold(fs, dir)
   }
 
-  /** Crash-recovery sweep over leftover staging dirs of (kind, tag): a
-    * stage whose epoch marker exists is committed — finish its publish;
-    * one without a marker is a pre-commit orphan — discard it (its epoch
-    * replays whole). Only purely-numeric epoch suffixes match, so a tag
-    * that prefixes another tag can never claim (and destroy) the longer
-    * tag's staging. */
-  private def healStaging(fs: FileSystem, dir: String, kind: String,
-                          tag: String): Unit = {
-    val root = new Path(dir)
-    if (!fs.exists(root)) return
-    val prefix = s".${kind}_stage_${tag}_"
-    fs.listStatus(root).map(_.getPath)
-      .filter(_.getName.startsWith(prefix)).foreach { stage =>
-        val epoch = stage.getName.drop(prefix.length)
-        if (epoch.nonEmpty && epoch.forall(_.isDigit)) {
-          if (fs.exists(new Path(markerPath(dir, kind, tag, epoch.toLong))))
-            publishStage(fs, dir, stage)
-          else fs.delete(stage, true)
-        }
-      }
-  }
+  /** The between-epochs window after a committed epoch: fold the log at
+    * the cadence, compact past the bound. */
+  private def autoTick(spark: SparkSession, dir: String,
+                       auto: AutoCompact): Unit =
+    auto.tick(fileCount(spark, dir), partitionDirCount(spark, dir),
+      Log.fold(spark, dir))(compact(spark, dir))
 
   /** foreachBatch sink extending the store: each epoch's docs are hashed
     * once and their signatures + band rows stage, commit (marker), and
@@ -415,30 +386,29 @@ object SignatureStore {
                autoCompactFactor: Int = AutoCompact.DefaultFactor):
       (DataFrame, Long) => Unit = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
-    healStaging(fsOf(spark, dir), dir, "sigapp", streamTag)
+    healMount(spark, dir, "sigapp", streamTag)
     val auto = new AutoCompact(autoCompactEvery, autoCompactFactor)
     (batch: DataFrame, epoch: Long) => {
       val fs = fsOf(batch.sparkSession, dir)
       checkParams(fs, dir, numHashes, shingleSize, bands)
-      val marker = new Path(markerPath(dir, "sigapp", streamTag, epoch))
+      val marker = new Path(EpochLog.markerPath(dir, "sigapp", streamTag, epoch))
       if (fs.exists(marker)) {
-        healStaging(fs, dir, "sigapp", streamTag)
+        Log.healStaging(fs, dir, "sigapp", streamTag)
       } else if (!batch.isEmpty) {
-        val stage = new Path(stagePath(dir, "sigapp", streamTag, epoch))
+        val stage = new Path(EpochLog.stagePath(dir, "sigapp", streamTag, epoch))
         fs.delete(stage, true)
         val sigs = Dedup.minHashSignatures(batch, idCol, textCol, numHashes,
           shingleSize).localCheckpoint()
-        writeStage(sigs, numHashes, bands, stage.toString)
+        writeStage(sigs, numHashes, bands, stage)
         writeParams(fs, dir, numHashes, shingleSize, bands)
         fs.create(marker, true).close()
-        publishStage(fs, dir, stage)
+        Log.publish(fs, dir, stage)
         // epoch fully committed: fold its band counts into the census (an
         // append-grown hot band must be cappable BEFORE any compact), then
         // the between-epochs single-writer auto-compact window
         mergeBandCensus(spark, dir,
           Dedup.bandedSigs(sigs, "id", numHashes, bands))
-        auto.tick(fileCount(spark, dir), partitionDirCount(spark, dir))(
-          compact(spark, dir))
+        autoTick(spark, dir, auto)
       }
     }
   }
@@ -562,16 +532,16 @@ object SignatureStore {
                  maxBandDf: Int = Int.MaxValue)
                 (out: DataFrame => Unit): (DataFrame, Long) => Unit = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
-    healStaging(fsOf(spark, dir), dir, "sigscr", streamTag)
+    healMount(spark, dir, "sigscr", streamTag)
     val auto = new AutoCompact(autoCompactEvery, autoCompactFactor)
     (batch: DataFrame, epoch: Long) => {
       val fs = fsOf(batch.sparkSession, dir)
       checkParams(fs, dir, numHashes, shingleSize, bands)
-      val marker = new Path(markerPath(dir, "sigscr", streamTag, epoch))
+      val marker = new Path(EpochLog.markerPath(dir, "sigscr", streamTag, epoch))
       if (fs.exists(marker)) {
-        healStaging(fs, dir, "sigscr", streamTag)
+        Log.healStaging(fs, dir, "sigscr", streamTag)
       } else if (!batch.isEmpty) {
-        val stage = new Path(stagePath(dir, "sigscr", streamTag, epoch))
+        val stage = new Path(EpochLog.stagePath(dir, "sigscr", streamTag, epoch))
         fs.delete(stage, true)
         val b = batch.localCheckpoint()
         val sigsI = Dedup.minHashSignatures(b, idCol, textCol, numHashes,
@@ -590,27 +560,29 @@ object SignatureStore {
         val survSigs = sigsI
           .join(broadcast(flagged.select(col(idCol).as("id"))), Seq("id"),
             "left_anti")
-        writeStage(survSigs, numHashes, bands, stage.toString)
+        writeStage(survSigs, numHashes, bands, stage)
         writeParams(fs, dir, numHashes, shingleSize, bands)
         fs.create(marker, true).close()
-        publishStage(fs, dir, stage)
+        Log.publish(fs, dir, stage)
         // epoch fully committed: fold the survivors' band counts into the
         // census (append-grown hot bands cappable before any compact),
         // then the between-epochs single-writer auto-compact window
         mergeBandCensus(spark, dir,
           Dedup.bandedSigs(survSigs, "id", numHashes, bands))
-        auto.tick(fileCount(spark, dir), partitionDirCount(spark, dir))(
-          compact(spark, dir))
+        autoTick(spark, dir, auto)
       }
     }
   }
 
   // ----------------------------------------------------------- maintenance
 
-  /** Compact the store: a long-lived appender/screen leaves one parquet
-    * file per epoch per touched partition; fold each `sigs/shard=` and
-    * `bands/bucket=` partition back to one file (the [[AnnIndex.compact]]
-    * disease, same cure). Whole-table aside-publish-heal swap per
+  /** Compact the store: a long-lived appender/screen leaves one log file
+    * per epoch and each fold one base file per touched partition; fold the
+    * log, then rewrite each `sigs/shard=` and `bands/bucket=` partition
+    * back to one file (the [[AnnIndex.compact]] disease, same cure). The
+    * fold runs first under its own marker, so the swaps below only ever
+    * replace the base — base and log never disagree at a crash point.
+    * Whole-table aside-publish-heal swap per
     * sub-table (the [[FingerprintStore.compact]] protocol): build the
     * rewrite in a dot-temp while the live table still serves, move the old
     * table aside, publish, delete the aside; a crash between aside and
@@ -620,9 +592,19 @@ object SignatureStore {
     * racing an in-flight one. */
   def compact(spark: SparkSession, dir: String): Unit = {
     Takedown.heal(spark, dir) // a crashed retract finishes before we rewrite
+    foldHealed(spark, dir)
     compactTable(spark, dir, "sigs", "shard")
     compactTable(spark, dir, "bands", "bucket")
     writeBandCensus(spark, dir) // the census' periodic refresh point
+  }
+
+  /** Heal both tables' compact asides, then fold the log (the fold must
+    * never publish into a base dir a crashed compact moved aside). */
+  private def foldHealed(spark: SparkSession, dir: String): Unit = {
+    val fs = fsOf(spark, dir)
+    healCompactAside(fs, dir, "sigs")
+    healCompactAside(fs, dir, "bands")
+    Log.fold(spark, dir)
   }
 
   private def compactTable(spark: SparkSession, dir: String, sub: String,
@@ -666,7 +648,10 @@ object SignatureStore {
     healCompactAside(fs, dir, "sigs")  // a compact/retract crash residue
     healCompactAside(fs, dir, "bands") // heals before we rewrite
     if (ids.isEmpty) return
-    if (!fs.exists(new Path(s"$dir/sigs"))) return
+    if (!hasSigs(spark, dir)) return
+    // the log folds first (its own marker), so the staged swap below
+    // rewrites the WHOLE store and no retracted row survives in the log
+    foldHealed(spark, dir)
     import spark.implicits._
     // takedown batches are request-sized by contract — broadcast the list
     val gone = ids.toDF("id")
@@ -682,7 +667,7 @@ object SignatureStore {
         .join(broadcast(gone), Seq("id"), "left_anti")
         .repartition(col("shard"))
         .write.partitionBy("shard").parquet(s"$stage/sigs")
-      if (fs.exists(new Path(s"$dir/bands"))) {
+      if (Log.hasRows(fs, dir, "bands")) {
         readBands(spark, dir)
           .join(broadcast(gone), Seq("id"), "left_anti")
           .repartition(col("bucket"))
@@ -696,36 +681,20 @@ object SignatureStore {
     }
   }
 
-  /** Live partition-dir count across both tables — the [[AutoCompact]]
-    * bound's denominator: a healthy compacted store holds ~1 file per
-    * partition dir, so `fileCount > k × partitionDirCount` means ≈k
-    * epoch-appended files per partition. */
+  /** Live base partition-dir count across both tables — the
+    * [[AutoCompact]] bound's denominator: a healthy compacted store holds
+    * ~1 file per partition dir, so `fileCount > k × partitionDirCount`
+    * means ≈k appended files per partition. */
   def partitionDirCount(spark: SparkSession, dir: String): Int = {
     val fs = fsOf(spark, dir)
-    Seq("sigs" -> "shard=", "bands" -> "bucket=").map { case (sub, pre) =>
-      val root = new Path(s"$dir/$sub")
-      if (!fs.exists(root)) 0
-      else fs.listStatus(root).count(st =>
-        st.isDirectory && st.getPath.getName.startsWith(pre))
-    }.sum
+    Seq("sigs", "bands").map(Log.partitionDirCount(fs, dir, _)).sum
   }
 
-  /** Data-file count across both partitioned tables (compaction
-    * telemetry, the [[Pack.shardFileCount]] twin). */
-  def fileCount(spark: SparkSession, dir: String): Int = {
-    val fs = fsOf(spark, dir)
-    Seq("sigs", "bands").map { sub =>
-      val root = new Path(s"$dir/$sub")
-      if (!fs.exists(root)) 0
-      else fs.listStatus(root)
-        .filter(st => st.isDirectory &&
-          (st.getPath.getName.startsWith("shard=") ||
-            st.getPath.getName.startsWith("bucket=")))
-        .map(sd => fs.listStatus(sd.getPath)
-          .count(_.getPath.getName.endsWith(".parquet")))
-        .sum
-    }.sum
-  }
+  /** Partition-file count across both tables (compaction telemetry, the
+    * [[Pack.shardFileCount]] twin): base data files, plus each log file
+    * once per partition it holds rows for ([[EpochLog.partitionFileCount]]). */
+  def fileCount(spark: SparkSession, dir: String): Int =
+    Seq("sigs", "bands").map(Log.partitionFileCount(spark, dir, _)).sum
 
   /** Build (or reuse) a persisted store for a static base corpus; returns
     * its dir — the [[AnnIndex.ivfIndexDir]] content-digest contract:

@@ -56,7 +56,15 @@ import graft.operators.{AnnIndex, FingerprintStore, SignatureStore}
   * colliding band buckets, and the semantic probe only the batch's nprobe
   * nearest list partitions — nothing scales with store age except the
   * pruned partitions' own growth (BENCH_screen / BENCH_semscreen measure
-  * both at 10× stores). */
+  * both at 10× stores). Writes track the batch too: the fp and signature
+  * layers append ONE log file per table per epoch (base + epoch log,
+  * [[graft.operators.EpochLog]]) instead of one file per touched
+  * partition — on a local FS without native Hadoop IO each created file
+  * and dir forks a `chmod`, and the partitioned append wrote ~290 of them
+  * per 100-doc trigger. Probes read base ∪ log; the stores' auto-compact
+  * cadence folds the log into the partitioned base. Every store sink
+  * applies [[graft.Tuning.sessionDefaults]] at mount, so these reads list
+  * their directories on the driver instead of in a distributed job. */
 object FrontDoor {
 
   /** Build the composed sink. `gate` carries the deployment's reference
@@ -158,11 +166,8 @@ object FrontDoor {
     // a door whose sig store never committed an epoch (fresh shard) has
     // nothing to collide with — probeStored's loud no-params check is for
     // MISMATCHED stores, not empty ones
-    val sigSeeded = new org.apache.hadoop.fs.Path(s"$sigDir/sigs")
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .exists(new org.apache.hadoop.fs.Path(s"$sigDir/sigs"))
     val near =
-      if (!sigSeeded)
+      if (!SignatureStore.hasSigs(spark, sigDir))
         keyed.select(col("id"), lit(true).as("dup_near")).limit(0)
       else
         SignatureStore.probeStored(spark, sigDir, sigs,

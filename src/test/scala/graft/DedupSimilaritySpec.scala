@@ -227,7 +227,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val census = spark.read.parquet(s"$dir/hotbands")
       .select("band_id", "band_hash", "df").collect()
       .map(r => ((r.getInt(0), r.getLong(1)), r.getLong(2))).toMap
-    val exact = spark.read.parquet(s"$dir/bands")
+    val exact = SignatureStore.readBands(spark, dir)
       .groupBy("band_id", "band_hash").count()
       .filter(col("count") > 4L).collect()
       .map(r => ((r.getInt(0), r.getLong(1)), r.getLong(2))).toMap
@@ -362,6 +362,67 @@ class DedupSimilaritySpec extends AnyFunSuite {
       32, 8, 0.3).collect()
     assert(hit.map(r => (r.getLong(0), r.getDouble(2))).toSeq ==
       Seq((50L, 1.0)), hit.mkString(","))
+  }
+
+  test("signature store: a crash after a log fold published its base files " +
+    "but before it removed the folded log heals on the next read — no " +
+    "(id, sig) row doubles, n_base_dups is unchanged, nothing re-admits") {
+    import graft.operators.SignatureStore
+    val dir = java.nio.file.Files.createTempDirectory("sigfold").toString
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    def path(s: String) = new org.apache.hadoop.fs.Path(s)
+    val fox = "the quick brown fox jumps over the lazy dog"
+    SignatureStore.seed(Seq((0L, fox)).toDF("doc_id", "text"),
+      "doc_id", "text", dir)
+    // three appended epochs, never folded: their rows sit in the log
+    val app = SignatureStore.appender(spark, dir, "doc_id", "text",
+      streamTag = "f", autoCompactEvery = 1000000)
+    Seq((1L, fox), (2L, "completely different content about spark engines"),
+      (3L, "fresh unrelated words nobody wrote before today anywhere"))
+      .zipWithIndex.foreach { case (d, e) =>
+        app(Seq(d).toDF("doc_id", "text"), e.toLong) }
+    val logged = Seq("sigs_log", "bands_log").flatMap { sub =>
+      fs.listStatus(path(s"$dir/$sub")).map(_.getPath)
+        .filter(_.getName.endsWith(".parquet")).map(p => s"$sub/${p.getName}")
+    }
+    assert(logged.size == 6, logged.mkString(","))
+    def rows() = SignatureStore.read(spark, dir).select("id")
+      .collect().map(_.getLong(0)).sorted.toSeq
+    def probe() = SignatureStore.probeStored(spark, dir,
+        Dedup.minHashSignatures(Seq((90L, fox)).toDF("doc_id", "text"),
+          "doc_id", "text", 32, 3), 32, 8, 0.3)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val rowsBefore = rows()
+    val probeBefore = probe()
+    assert(rowsBefore == Seq(0L, 1L, 2L, 3L) && probeBefore == Seq((90L, 2L)),
+      s"$rowsBefore $probeBefore")
+    // the crash window, rebuilt on disk: keep copies of the log files, let
+    // compact fold them into the base (and remove them), then put the
+    // copies back under a committed `_fold_pending` naming them — the
+    // state a crash leaves between the fold's publish and its log removal
+    val keep = java.nio.file.Files.createTempDirectory("sigfoldkeep").toString
+    logged.foreach(n => org.apache.hadoop.fs.FileUtil.copy(fs, path(s"$dir/$n"),
+      fs, path(s"$keep/$n"), false, spark.sparkContext.hadoopConfiguration))
+    SignatureStore.compact(spark, dir)
+    assert(logged.forall(n => !fs.exists(path(s"$dir/$n"))))
+    logged.foreach(n => require(fs.rename(path(s"$keep/$n"), path(s"$dir/$n"))))
+    val m = fs.create(path(s"$dir/_fold_pending"), true)
+    m.write(logged.mkString("\n").getBytes("UTF-8")); m.close()
+    // the next read heals: the named log files go, the base keeps one row
+    // per id, and the near-dup probe counts each stored copy once
+    assert(rows() == rowsBefore, "a fold crash must not double (id, sig) rows")
+    assert(!fs.exists(path(s"$dir/_fold_pending")))
+    assert(logged.forall(n => !fs.exists(path(s"$dir/$n"))))
+    assert(probe() == probeBefore, "n_base_dups must not change")
+    // and a screen over the healed store still kills the stored content
+    val admitted = scala.collection.mutable.ArrayBuffer[Long]()
+    SignatureStore.screenSink(spark, dir, "doc_id", "text", threshold = 0.4,
+      streamTag = "fs") { df =>
+      admitted ++= df.select("doc_id").collect().map(_.getLong(0))
+    }(Seq((50L, fox), (51L, "completely different content about spark engines"))
+      .toDF("doc_id", "text"), 0L)
+    assert(admitted.isEmpty, s"re-admitted ${admitted.mkString(",")}")
   }
 
   test("signature store: appender and screen marker namespaces are disjoint — " +
@@ -591,7 +652,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       "retract must not disturb other ids' signatures")
     assert(SignatureStore.read(spark, dir).select("id").collect()
       .map(_.getLong(0)).toSet == Set(3L, 4L))
-    assert(spark.read.parquet(s"$dir/bands")
+    assert(SignatureStore.readBands(spark, dir)
       .filter(col("id") < 3).count() == 0L,
       "band rows are derived content and must go with the sigs")
     // mid-retract crash residue: sigs moved aside, publish pending — the

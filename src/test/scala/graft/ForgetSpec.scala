@@ -118,7 +118,7 @@ class ForgetSpec extends AnyFunSuite {
     }
     assert(ex.getMessage.contains("after ann"))
     // the door group already forgot…
-    assert(spark.read.parquet(s"$fpDir/fps").count() == 1L)
+    assert(FingerprintStore.read(spark, fpDir).count() == 1L)
     assert(SignatureStore.read(spark, sigDir).select("id")
       .collect().map(_.getLong(0)).toSeq == Seq(2L))
     assert(spark.read.parquet(s"$ivfDir/lists").filter(col("cid") < 100L)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{AnnIndex, Dsir, SignatureStore}
+import graft.operators.{AnnIndex, Dsir, FingerprintStore, SignatureStore}
 import graft.streaming.{FrontDoor, IngestGate, ShardedDoor}
 
 /** The composed four-layer ingest door ([[FrontDoor.sink]]): one sink, each
@@ -81,7 +81,7 @@ class FrontDoorSpec extends AnyFunSuite {
     // each store holds exactly what its layer admitted: fp fingerprints for
     // every gate survivor except the byte-identical dup (4 and 5 passed the
     // fp layer before dying downstream)…
-    assert(spark.read.parquet(s"$fpDir/fps").count() == 4L)
+    assert(FingerprintStore.read(spark, fpDir).count() == 4L)
     // …signatures for sig-layer survivors (paraphrase 5 died later)…
     val sigIds = SignatureStore.read(spark, sigDir).select("id")
       .collect().map(_.getLong(0)).sorted.toSeq
@@ -91,6 +91,15 @@ class FrontDoorSpec extends AnyFunSuite {
       .filter(col("cid") < 100L).select("cid")
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(cids == Seq(1L, 6L), cids.mkString(","))
+    // the kills of epoch 1 came from the epoch log alone: both stores
+    // started empty and no fold ran, so no partitioned base exists yet
+    assert(!exists(s"$fpDir/fps") && !exists(s"$sigDir/sigs") &&
+      !exists(s"$sigDir/bands"), "epochs must append to the log, not the base")
+  }
+
+  private def exists(p: String): Boolean = {
+    val path = new org.apache.hadoop.fs.Path(p)
+    path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)
   }
 
   test("composed takedown: after FrontDoor.retract the same bytes and a " +
@@ -138,11 +147,23 @@ class FrontDoorSpec extends AnyFunSuite {
         (4L, recrawl("alpha", 4), nudge(v1, 4)),
         (5L, doc("alpha", 56), nudge(v1, 3)))) == Seq(1L))
 
+    // doc 1's fp and sig rows sit only in the unfolded epoch log
+    assert(!exists(s"$fpDir/fps") && !exists(s"$sigDir/sigs"))
+    assert(SignatureStore.read(spark, sigDir).filter(col("id") === 1L)
+      .count() == 1L)
+
     // takedown doc 1 across all three stores in one call
     FrontDoor.retract(spark, fpDir, sigDir, ivfDir,
       Seq((1L, doc("alpha", 4))).toDF("doc_id", "text"), "doc_id", "text")
     assert(spark.read.parquet(s"$ivfDir/lists")
       .filter(col("cid") < 100L).count() == 0L)
+    // …and the retract reached the logged rows: no sig or band row of doc
+    // 1 is left, and the fp layer keeps only docs 4 and 5's fingerprints
+    assert(SignatureStore.read(spark, sigDir).filter(col("id") === 1L)
+      .count() == 0L)
+    assert(SignatureStore.readBands(spark, sigDir).filter(col("id") === 1L)
+      .count() == 0L)
+    assert(FingerprintStore.read(spark, fpDir).count() == 2L)
 
     // phase 2: the exact bytes re-admit (fp forgot them) and a FRESH-text
     // paraphrase re-admits (the index forgot v1). Docs 4/5's own derived
@@ -311,7 +332,7 @@ class FrontDoorSpec extends AnyFunSuite {
     sink(Seq((1L, d0, v0)).toDF("doc_id", "text", "embedding"), 0L)
     assert(acc.toSeq == Seq(1L))
     def storeState() = (
-      spark.read.parquet(s"$fpDir/fps").count(),
+      FingerprintStore.read(spark, fpDir).count(),
       SignatureStore.read(spark, sigDir).count(),
       spark.read.parquet(s"$ivfDir/lists").count())
     val before = storeState()
@@ -373,6 +394,68 @@ class FrontDoorSpec extends AnyFunSuite {
     // read path compensates
     mkSink(1)(twin, 0L)
     assert(accS(1).toSeq == Seq(id1))
+  }
+
+  test("door read path over the epoch log: FrontDoor.probe verdicts equal " +
+    "the sink's kills, layer by layer, for a batch whose duplicates sit " +
+    "only in unfolded log files") {
+    val ref = ((0 until 60).map(i => (i.toLong, doc("alpha", i), true)) ++
+        (0 until 60).map(i => (200L + i, doc("beta", i), false)))
+      .toDF("doc_id", "text", "is_target")
+    val gate = new IngestGate(
+      Dsir.bucketStats(ref, "doc_id", "text", col("is_target")),
+      minAffinity = -1e18)
+    val seed = (for (c <- 0 until 8; k <- 0 until 6) yield
+      ((100 + c * 6 + k).toLong, vec(c, 0.15 * k, (c + 1) % 8)))
+      .toDF("doc_id", "embedding")
+    val ivfDir = AnnIndex.ivfIndexDir(seed, "mem://fd_logprobe",
+      "doc_id", "embedding", nlist = 8, iters = 3, seed = 42L,
+      variant = s"fdl_${java.util.UUID.randomUUID().toString.take(8)}")
+    val fpDir = java.nio.file.Files.createTempDirectory("fdl_fp").toString
+    val sigDir = java.nio.file.Files.createTempDirectory("fdl_sig").toString
+    val acc = scala.collection.mutable.ArrayBuffer[Long]()
+    val sink = FrontDoor.sink(spark, gate, fpDir, sigDir, ivfDir,
+      "doc_id", "text", "embedding", sigThreshold = 0.45,
+      semThreshold = 0.99, nprobe = 2, streamTag = "fdl") { df =>
+      acc ++= df.select("doc_id").collect().map(_.getLong(0))
+    } { _ => () }
+    // epoch 0 admits two pages into empty stores: log files only
+    val (d0, v0) = (doc("alpha", 4), vec(0, 0.5, 2))
+    val (d1, v1) = (doc("alpha", 30), vec(5, 0.5, 7))
+    sink(Seq((1L, d0, v0), (2L, d1, v1))
+      .toDF("doc_id", "text", "embedding"), 0L)
+    assert(acc.sorted.toSeq == Seq(1L, 2L))
+    assert(!exists(s"$fpDir/fps") && !exists(s"$sigDir/sigs") &&
+      !exists(s"$sigDir/bands"), "epoch 0 must sit in the log only")
+    val batch = Seq(
+      (11L, d0, v0),                               // exact copy of 1
+      (12L, recrawl("alpha", 30), nudge(v1, 14)),  // 1-token re-crawl of 2
+      (13L, doc("gamma", 0), nudge(v0, 15)),       // paraphrase of 1
+      (14L, doc("delta", 0), vec(3, 0.5, 9)))      // genuinely new
+      .toDF("doc_id", "text", "embedding")
+    val verdicts = FrontDoor.probe(spark, fpDir, sigDir, ivfDir, batch,
+        "doc_id", "text", "embedding", sigThreshold = 0.45,
+        semThreshold = 0.99, nprobe = 2)
+      .collect().map(r => r.getLong(0) ->
+        (r.getBoolean(1), r.getBoolean(2), r.getBoolean(3))).toMap
+    assert(verdicts(11L)._1 && verdicts(12L)._2 && verdicts(13L)._3 &&
+      verdicts(14L) == ((false, false, false)), verdicts.toString)
+    // the sink's kills, layer by layer, read off each store's growth: a
+    // layer stores exactly the docs it passed
+    val fpBefore = FingerprintStore.read(spark, fpDir).count()
+    val sigBefore = SignatureStore.read(spark, sigDir).select("id")
+      .collect().map(_.getLong(0)).toSet
+    acc.clear()
+    sink(batch, 1L)
+    val passFp = verdicts.filter(!_._2._1).keySet
+    val passSig = verdicts.filter(v => !v._2._1 && !v._2._2).keySet
+    val passAll = verdicts.filter(v => v._2 == ((false, false, false))).keySet
+    assert(FingerprintStore.read(spark, fpDir).count() - fpBefore ==
+      passFp.size.toLong, s"fp layer must pass exactly $passFp")
+    assert(SignatureStore.read(spark, sigDir).select("id").collect()
+      .map(_.getLong(0)).toSet -- sigBefore == passSig,
+      s"sig layer must pass exactly $passSig")
+    assert(acc.toSet == passAll, s"admitted $acc, probe predicted $passAll")
   }
 
   test("a create that crashed mid-build refuses a retry with a DIFFERENT " +

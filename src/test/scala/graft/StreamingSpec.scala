@@ -410,7 +410,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(got.sorted.toSeq == Seq(2000L, 2001L, 2002L, 3003L),
       s"only the 4 fresh texts may survive: ${got.sorted.mkString(",")}")
     // the store grew by exactly the 4 admitted fingerprints
-    val fps = spark.read.parquet(s"$dir/fps").select("fp").collect()
+    val fps = FingerprintStore.read(spark, dir).select("fp").collect()
       .map(_.getLong(0))
     assert(fps.length == 504 && fps.distinct.length == 504,
       s"store must hold 500 history + 4 admitted distinct fps, got ${fps.length}")
@@ -449,7 +449,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(got.sorted.toSeq == Seq(1L, 4L, 6L), got.mkString(","))
     // no fingerprint lost or duplicated across the swaps: the store holds
     // exactly the distinct admitted texts (history + the three survivors)
-    val fps = spark.read.parquet(s"$dir/fps").select("fp").collect()
+    val fps = FingerprintStore.read(spark, dir).select("fp").collect()
       .map(_.getLong(0))
     assert(fps.length == 4 && fps.distinct.length == 4, fps.mkString(","))
     // a restarted sink over the compacted store sees the same history
@@ -999,7 +999,7 @@ class StreamingSpec extends AnyFunSuite {
       "after-ivf-2"))   // ivf rows + marker down, fp rows not yet
     val (fpN, ivfN, accN, quaN) = runScenario("clean", Set.empty)
 
-    def fpRows(d: String) = spark.read.parquet(s"$d/fps")
+    def fpRows(d: String) = graft.operators.FingerprintStore.read(spark, d)
       .select("fp", "shard").collect()
       .map(r => (r.getLong(0), r.getAs[Number](1).longValue)).sorted.toSeq
     def listRows(d: String) = spark.read.parquet(s"$d/lists")
@@ -1183,7 +1183,7 @@ class StreamingSpec extends AnyFunSuite {
 
     def sigRows(d: String) = SignatureStore.read(spark, d)
       .select("id").collect().map(_.getLong(0)).sorted.toSeq
-    def fpRows(d: String) = spark.read.parquet(s"$d/fps")
+    def fpRows(d: String) = graft.operators.FingerprintStore.read(spark, d)
       .select("fp").collect().map(_.getLong(0)).sorted.toSeq
     assert(sigRows(sigC) == sigRows(sigN),
       s"sig store must match the uncrashed run: ${sigRows(sigC)} vs ${sigRows(sigN)}")
@@ -1233,14 +1233,14 @@ class StreamingSpec extends AnyFunSuite {
     curEpoch.set(0L)
     intercept[RuntimeException] { mkScreen()(batch, 0L) }
     // downstream committed its epoch; the screen's marker never did
-    assert(spark.read.parquet(s"$downDir/sigs").count() == 1)
+    assert(SignatureStore.read(spark, downDir).count() == 1)
     assert(SignatureStore.read(spark, screenDir).count() == 1,
       "the screen's own epoch must not have published")
     // replay (fresh sink per restart): out re-delivers the SAME survivors;
     // the downstream's marker makes the second delivery a no-op
     mkScreen()(batch, 0L)
     assert(outCalls.get() == 2, "the crash window must re-invoke out")
-    val downIds = spark.read.parquet(s"$downDir/sigs").select("id")
+    val downIds = SignatureStore.read(spark, downDir).select("id")
       .collect().map(_.getLong(0)).toSeq
     assert(downIds == Seq(11L),
       s"downstream must hold exactly one copy of the survivor: $downIds")
@@ -1249,7 +1249,7 @@ class StreamingSpec extends AnyFunSuite {
     // a re-delivery AFTER the marker is a no-op end to end
     mkScreen()(batch, 0L)
     assert(outCalls.get() == 2, "post-marker replay must not re-invoke out")
-    assert(spark.read.parquet(s"$downDir/sigs").count() == 1)
+    assert(SignatureStore.read(spark, downDir).count() == 1)
   }
 
   test("full front door + refit hook in one foreachBatch: crash-replay " +
@@ -1372,7 +1372,7 @@ class StreamingSpec extends AnyFunSuite {
 
     def sigRows(d: String) = SignatureStore.read(spark, d)
       .select("id").collect().map(_.getLong(0)).sorted.toSeq
-    def fpRows(d: String) = spark.read.parquet(s"$d/fps")
+    def fpRows(d: String) = graft.operators.FingerprintStore.read(spark, d)
       .select("fp").collect().map(_.getLong(0)).sorted.toSeq
     assert(sigRows(sigC) == sigRows(sigN) && fpRows(fpC) == fpRows(fpN),
       "stores must match the uncrashed run bit-for-bit across the replay")
@@ -2449,7 +2449,7 @@ class StreamingSpec extends AnyFunSuite {
 
     def listRows(d: String) = spark.read.parquet(s"$d/lists")
       .select("cid").collect().map(_.getLong(0)).sorted.toSeq
-    def fpRows(d: String) = spark.read.parquet(s"$d/fps")
+    def fpRows(d: String) = graft.operators.FingerprintStore.read(spark, d)
       .select("fp").collect().map(_.getLong(0)).sorted.toSeq
     assert(listRows(ivfC) == listRows(ivfN),
       s"index must match the uncrashed run: ${listRows(ivfC).mkString(",")}" +
