@@ -14,9 +14,12 @@ import org.apache.spark.sql.SparkSession
   * stats in milliseconds, and it runs on EVERY store read (dedup_delta_*,
   * text_bm25_*, lm_fluency_*, sim_*_index_*, store_fsck, pack/export).
   *
-  * Applied by [[SparkEntry.queries]] and at the mount of every store sink
-  * the ingest door chains (fingerprint, signature and ANN sinks and
-  * appenders), so a door wired layer by layer lists on the driver too.
+  * Applied by [[SparkEntry.queries]] ([[sessionDefaults]]) and at the
+  * mount of every store sink the ingest door chains — fingerprint,
+  * signature and ANN sinks and appenders ([[mountDefaults]]) — so a door
+  * wired layer by layer lists on the driver too. A mount never overrides a
+  * threshold the session already set: a library user who mounts a sink on
+  * an object store with the threshold in the Spark conf keeps it.
   *
   * Local default raises the threshold to 4096 so the driver lists
   * directly. Production on an object store must keep distributed listing —
@@ -30,7 +33,15 @@ object Tuning {
   /** Threshold selection, factored for the env-override pin in PlanSpec. */
   def listingThreshold(env: Option[String]): String = env.getOrElse("4096")
 
+  private def envThreshold: Option[String] =
+    sys.env.get("SPARK_GRAFT_LIST_PARALLEL_THRESHOLD")
+
   def sessionDefaults(spark: SparkSession): Unit =
-    spark.conf.set(ListingThresholdKey,
-      listingThreshold(sys.env.get("SPARK_GRAFT_LIST_PARALLEL_THRESHOLD")))
+    spark.conf.set(ListingThresholdKey, listingThreshold(envThreshold))
+
+  /** Store-sink mount: the env override if set, else the local default
+    * only when the session has not set the threshold itself. */
+  def mountDefaults(spark: SparkSession): Unit =
+    if (envThreshold.isDefined || !spark.conf.getAll.contains(ListingThresholdKey))
+      sessionDefaults(spark)
 }

@@ -255,7 +255,7 @@ object AnnIndex {
                   autoCompactEvery: Int = AutoCompact.DefaultCheckEvery,
                   autoCompactFactor: Int = AutoCompact.DefaultFactor):
       (DataFrame, Long) => Unit = {
-    graft.Tuning.sessionDefaults(spark) // the index reads list on the driver
+    graft.Tuning.mountDefaults(spark) // the index reads list on the driver
     healPrecompact(spark, indexDir)
     val cents = loadCentroids(spark, indexDir)
     val auto = new AutoCompact(autoCompactEvery, autoCompactFactor)
@@ -299,7 +299,7 @@ object AnnIndex {
                     autoCompactEvery: Int = AutoCompact.DefaultCheckEvery,
                     autoCompactFactor: Int = AutoCompact.DefaultFactor):
       (DataFrame, Long) => Unit = {
-    graft.Tuning.sessionDefaults(spark) // the index reads list on the driver
+    graft.Tuning.mountDefaults(spark) // the index reads list on the driver
     healPrecompact(spark, indexDir)
     val cents = loadCentroids(spark, indexDir)
     val cb = loadCodebook(spark, indexDir)
@@ -359,7 +359,7 @@ object AnnIndex {
                             autoCompactFactor: Int = AutoCompact.DefaultFactor,
                             onRebuild: Long => Unit = _ => ()):
       (DataFrame, Long) => Unit = {
-    graft.Tuning.sessionDefaults(spark) // the index reads list on the driver
+    graft.Tuning.mountDefaults(spark) // the index reads list on the driver
     Takedown.heal(spark, indexDir) // a crashed recenter owns all three subs
     healPrecompact(spark, indexDir)
     val cents = new java.util.concurrent.atomic.AtomicReference(
@@ -533,7 +533,7 @@ object AnnIndex {
                          autoCompactEvery: Int = AutoCompact.DefaultCheckEvery,
                          autoCompactFactor: Int = AutoCompact.DefaultFactor)
                         (out: DataFrame => Unit): (DataFrame, Long) => Unit = {
-    graft.Tuning.sessionDefaults(spark) // the index reads list on the driver
+    graft.Tuning.mountDefaults(spark) // the index reads list on the driver
     val fs0 = new Path(indexDir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     healPrecompact(spark, indexDir)
@@ -637,7 +637,7 @@ object AnnIndex {
                             autoCompactFactor: Int = AutoCompact.DefaultFactor,
                             onRebuild: Long => Unit = _ => ())
                            (out: DataFrame => Unit): (DataFrame, Long) => Unit = {
-    graft.Tuning.sessionDefaults(spark) // the index reads list on the driver
+    graft.Tuning.mountDefaults(spark) // the index reads list on the driver
     val fs0 = new Path(indexDir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     Takedown.heal(spark, indexDir) // a crashed recenter owns lists+centroids

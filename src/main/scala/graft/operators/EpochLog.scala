@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import java.io.FileNotFoundException
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -33,10 +35,17 @@ import org.apache.spark.sql.types.StructType
   * (the per-partition write the old per-epoch append did, now once per
   * fold), `_fold_pending` commits naming the log files it covers, the
   * staged partition files publish into the base, and only then are the
-  * named log files deleted. [[healFold]] finishes a committed fold (and
-  * discards an uncommitted stage); every reader that may race a crashed
-  * fold runs it first, so the window between base publish and log removal
-  * never reads a row twice. */
+  * named log files deleted. Readers run [[finishFold]] first, so a crash
+  * between base publish and log removal never reads a row twice; it only
+  * completes a committed fold and never touches an uncommitted stage,
+  * which may be a live sink's fold in progress (the read-only probe runs
+  * without the writer lock). Discarding an uncommitted stage is the
+  * writer's job: [[healFold]], run by [[fold]] and at sink mount.
+  *
+  * A fold deletes the log files it moved into the base, so a reader
+  * beside a live sink must run its plan within one fold window: a plan
+  * listed before a fold and executed after it fails on a missing file
+  * (retry it). */
 private[operators] final class EpochLog(tables: Seq[EpochLog.Table]) {
   import EpochLog._
 
@@ -87,17 +96,18 @@ private[operators] final class EpochLog(tables: Seq[EpochLog.Table]) {
     * Flat files go to the table's log; `<part>=K/` dirs (a fold's stage,
     * or an epoch stage written by the earlier partitioned layout) go to
     * the base partition. Idempotent: per-file atomic renames, files
-    * already moved are simply absent on a re-sweep. */
+    * already moved are simply absent on a re-sweep — or vanish under a
+    * concurrent finisher of the same committed fold, which is not an
+    * error either. */
   def publish(fs: FileSystem, dir: String, stage: Path): Unit = {
     if (!fs.exists(stage)) return
     tables.foreach { t =>
-      val sub = new Path(stage, t.name)
-      if (fs.exists(sub)) fs.listStatus(sub).foreach { st =>
+      list(fs, new Path(stage, t.name)).foreach { st =>
         val p = st.getPath
         if (st.isDirectory && p.getName.startsWith(s"${t.partCol}=")) {
           val dest = new Path(s"$dir/${t.name}/${p.getName}")
           fs.mkdirs(dest)
-          fs.listStatus(p).map(_.getPath).filter(isData)
+          list(fs, p).map(_.getPath).filter(isData)
             .foreach(f => move(fs, f, new Path(dest, f.getName)))
         } else if (isData(p)) {
           val dest = logDir(dir, t.name)
@@ -109,8 +119,13 @@ private[operators] final class EpochLog(tables: Seq[EpochLog.Table]) {
     fs.delete(stage, true)
   }
 
+  private def list(fs: FileSystem, p: Path): Array[FileStatus] =
+    try fs.listStatus(p) catch { case _: FileNotFoundException => Array.empty }
+
+  /** Rename, or find it already renamed by a concurrent finisher. */
   private def move(fs: FileSystem, from: Path, to: Path): Unit =
-    require(fs.rename(from, to), s"EpochLog: cannot publish $from")
+    require(fs.rename(from, to) || (!fs.exists(from) && fs.exists(to)),
+      s"EpochLog: cannot publish $from")
 
   /** Crash-recovery sweep over leftover epoch stages of (kind, tag): a
     * stage whose epoch marker exists is committed — finish its publish;
@@ -145,7 +160,6 @@ private[operators] final class EpochLog(tables: Seq[EpochLog.Table]) {
       .filter(_._2.nonEmpty)
     if (logged.isEmpty) return
     val stage = new Path(dir, FoldStage)
-    fs.delete(stage, true)
     logged.foreach { case (t, files) =>
       spark.read.schema(t.schema).parquet(files.map(_.toString): _*)
         .repartition(col(t.partCol))
@@ -163,33 +177,40 @@ private[operators] final class EpochLog(tables: Seq[EpochLog.Table]) {
     healFold(fs, dir)
   }
 
-  /** Finish a committed fold (publish the staged partitions, delete the
-    * log files its marker names, clear stage and marker) or discard an
-    * uncommitted fold stage. Two `exists` calls on a clean store. */
-  def healFold(fs: FileSystem, dir: String): Unit = {
+  /** Finish a committed fold: publish its staged partitions, delete the
+    * log files its marker names, drop the marker. A no-op without the
+    * marker — an uncommitted stage may be a live fold still writing, so it
+    * is left alone. Safe beside another finisher (a reader and the sink):
+    * every step tolerates the other having done it. One `exists` call on a
+    * clean store. */
+  def finishFold(fs: FileSystem, dir: String): Unit = {
     val marker = new Path(dir, FoldMarker)
-    val stage = new Path(dir, FoldStage)
-    if (!fs.exists(marker)) {
-      if (fs.exists(stage)) fs.delete(stage, true)
-      return
-    }
-    publish(fs, dir, stage)
-    val in = fs.open(marker)
-    val names = try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-                  .map(_.trim).filter(_.nonEmpty).toList
-                finally in.close()
+    if (!fs.exists(marker)) return
+    publish(fs, dir, new Path(dir, FoldStage))
+    val names =
+      try {
+        val in = fs.open(marker)
+        try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+          .map(_.trim).filter(_.nonEmpty).toList
+        finally in.close()
+      } catch { case _: FileNotFoundException => Nil } // finished beside us
     names.foreach(n => fs.delete(new Path(dir, n), false))
     fs.delete(marker, false)
   }
 
-  /** Partition files of `name`: the base's data files plus, per log file,
-    * the number of partitions it holds rows for — the files the
-    * per-partition append would have written for the same epochs, so the
-    * figure (and the [[AutoCompact]] bound built on it) keeps its meaning
-    * across the layout. Runs one job when the log is non-empty. */
-  def partitionFileCount(spark: SparkSession, dir: String, name: String): Int = {
+  /** Writer-side heal (fold start, sink mount — the single writer, between
+    * epochs): finish a committed fold, then discard what is left of an
+    * uncommitted one (a crash before its marker; the log still holds its
+    * rows). */
+  def healFold(fs: FileSystem, dir: String): Unit = {
+    finishFold(fs, dir)
+    fs.delete(new Path(dir, FoldStage), true)
+  }
+
+  /** Data files of `name` on disk: the base's partition files plus the
+    * log's files. */
+  def fileCount(fs: FileSystem, dir: String, name: String): Int = {
     val t = table(name)
-    val fs = fsOf(spark, dir)
     val base = new Path(s"$dir/$name")
     val baseFiles =
       if (!fs.exists(base)) 0
@@ -197,12 +218,7 @@ private[operators] final class EpochLog(tables: Seq[EpochLog.Table]) {
         .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"${t.partCol}="))
         .map(sd => fs.listStatus(sd.getPath).count(s => isData(s.getPath)))
         .sum
-    val log = logFiles(fs, dir, name)
-    val logSpans =
-      if (log.isEmpty) 0L
-      else spark.read.schema(t.schema).parquet(log.map(_.toString): _*)
-        .select(col("_metadata.file_path"), col(t.partCol)).distinct().count()
-    baseFiles + logSpans.toInt
+    baseFiles + logFiles(fs, dir, name).size
   }
 
   /** Base partition dirs of `name`. */

@@ -34,8 +34,11 @@ import org.apache.spark.util.sketch.BloomFilter
   *    row-group filter on the few log files), pinned by the same
   *    partition-pruning contract as [[AnnIndex]].
   *  - Survivors append as ONE new log file per epoch; nothing is
-  *    rewritten, so the store grows like a log and concurrent readers are
-  *    never torn.
+  *    rewritten between folds. A fold (every `autoCompactEvery` epochs)
+  *    moves the log into the base and deletes the folded log files, so a
+  *    reader beside the live sink ([[probeTexts]], FrontDoor.probe) must
+  *    collect its result within one fold window: a plan listed before a
+  *    fold and run after it fails on a missing file — retry it.
   *  - Idempotent under foreachBatch at-least-once re-delivery: the epoch's
   *    fps stage, the `_ingested_<tag>_epoch_<e>` marker commits, then the
   *    staged file publishes into the log. A replayed epoch that finds its
@@ -65,12 +68,13 @@ object FingerprintStore {
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** The stored fingerprints, (fp, shard): base ∪ log. Heals a crashed
-    * compact's aside and a crashed fold first, so a reader never sees a
-    * silently empty table or a folded row twice. Empty store → zero rows. */
+    * compact's aside and finishes a committed fold first, so a reader never
+    * sees a silently empty table or a folded row twice. Empty store → zero
+    * rows. */
   def read(spark: SparkSession, dir: String): DataFrame = {
     val fs = fsOf(spark, dir)
     healCompactAside(fs, dir)
-    Log.healFold(fs, dir)
+    Log.finishFold(fs, dir)
     Log.read(spark, dir, "fps")
   }
 
@@ -282,7 +286,7 @@ object FingerprintStore {
                 autoCompactEvery: Int = AutoCompact.DefaultCheckEvery,
                 autoCompactFactor: Int = AutoCompact.DefaultFactor)
                (out: DataFrame => Unit): (DataFrame, Long) => Unit = {
-    graft.Tuning.sessionDefaults(spark) // the store reads list on the driver
+    graft.Tuning.mountDefaults(spark) // the store reads list on the driver
     // A restarted sink finishes (or discards) what a crash left staged
     // before it reads anything: committed epochs publish into the log, a
     // committed fold completes.

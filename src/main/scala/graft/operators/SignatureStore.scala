@@ -294,7 +294,7 @@ object SignatureStore {
   private def readSigsRaw(spark: SparkSession, dir: String): DataFrame = {
     val fs = fsOf(spark, dir)
     healCompactAside(fs, dir, "sigs")
-    Log.healFold(fs, dir)
+    Log.finishFold(fs, dir)
     Log.read(spark, dir, "sigs")
   }
 
@@ -307,7 +307,7 @@ object SignatureStore {
     healCompactAside(fs, dir, "bands")
     healCompactAside(fs, dir, "sigs") // the pre-index check below must not
                                       // misread a mid-compact sigs table
-    Log.healFold(fs, dir)
+    Log.finishFold(fs, dir)
     if (!Log.hasRows(fs, dir, "bands") && Log.hasRows(fs, dir, "sigs"))
       throw new IllegalStateException(
         s"SignatureStore $dir holds sigs but no band index — a pre-index " +
@@ -360,7 +360,7 @@ object SignatureStore {
     * uncommitted ones, finish a committed fold. */
   private def healMount(spark: SparkSession, dir: String, kind: String,
                         tag: String): Unit = {
-    graft.Tuning.sessionDefaults(spark) // the store reads list on the driver
+    graft.Tuning.mountDefaults(spark) // the store reads list on the driver
     val fs = fsOf(spark, dir)
     Log.healStaging(fs, dir, kind, tag)
     Log.healFold(fs, dir)
@@ -690,11 +690,13 @@ object SignatureStore {
     Seq("sigs", "bands").map(Log.partitionDirCount(fs, dir, _)).sum
   }
 
-  /** Partition-file count across both tables (compaction telemetry, the
-    * [[Pack.shardFileCount]] twin): base data files, plus each log file
-    * once per partition it holds rows for ([[EpochLog.partitionFileCount]]). */
-  def fileCount(spark: SparkSession, dir: String): Int =
-    Seq("sigs", "bands").map(Log.partitionFileCount(spark, dir, _)).sum
+  /** Data-file count across both tables, base and log (compaction
+    * telemetry, the [[Pack.shardFileCount]] twin). [[autoTick]] folds
+    * before it counts, so the bound is judged on the base alone. */
+  def fileCount(spark: SparkSession, dir: String): Int = {
+    val fs = fsOf(spark, dir)
+    Seq("sigs", "bands").map(Log.fileCount(fs, dir, _)).sum
+  }
 
   /** Build (or reuse) a persisted store for a static base corpus; returns
     * its dir — the [[AnnIndex.ivfIndexDir]] content-digest contract:

@@ -63,8 +63,9 @@ import graft.operators.{AnnIndex, FingerprintStore, SignatureStore}
   * and dir forks a `chmod`, and the partitioned append wrote ~290 of them
   * per 100-doc trigger. Probes read base ∪ log; the stores' auto-compact
   * cadence folds the log into the partitioned base. Every store sink
-  * applies [[graft.Tuning.sessionDefaults]] at mount, so these reads list
-  * their directories on the driver instead of in a distributed job. */
+  * applies [[graft.Tuning.mountDefaults]] at mount, so these reads list
+  * their directories on the driver instead of in a distributed job
+  * (unless the session set the threshold itself). */
 object FrontDoor {
 
   /** Build the composed sink. `gate` carries the deployment's reference
@@ -130,8 +131,11 @@ object FrontDoor {
     * Thresholds/params must match the door's sink wiring (same defaults)
     * or the verdicts answer a different question than ingest asks. Safe
     * concurrent with a live sink between ITS epochs (reads heal compact
-    * asides like every store read); not a sink replacement — it admits
-    * nothing. */
+    * asides and finish a committed log fold, never touching a fold still
+    * in progress); not a sink replacement — it admits nothing. A fold
+    * deletes the log files it moved into the base, so collect the result
+    * within one fold window of the sink: a probe planned before a fold and
+    * run after it fails on a missing file — retry it. */
   def probe(spark: SparkSession, fpDir: String, sigDir: String,
             ivfDir: String, docs: DataFrame, idCol: String, textCol: String,
             vecCol: String, sigThreshold: Double = 0.5,

@@ -17,6 +17,12 @@ class DedupSimilaritySpec extends AnyFunSuite {
     (4L, "another unrelated document mentioning large clusters only"))
     .toDF("doc_id", "text")
 
+  /** Data files in a signature store's epoch logs (`sigs_log`, `bands_log`). */
+  private def logFileCount(dir: String): Int =
+    Seq("sigs_log", "bands_log").map(sub => new java.io.File(s"$dir/$sub"))
+      .filter(_.isDirectory)
+      .map(_.listFiles().count(_.getName.endsWith(".parquet"))).sum
+
   test("exact dedup groups identical texts (min id representative)") {
     val out = Dedup.exact(docs, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -425,6 +431,29 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(admitted.isEmpty, s"re-admitted ${admitted.mkString(",")}")
   }
 
+  test("signature store: a read leaves an uncommitted fold stage alone (it " +
+    "may be a live sink's fold); the writer's mount discards it") {
+    import graft.operators.SignatureStore
+    val dir = java.nio.file.Files.createTempDirectory("sigfoldlive").toString
+    val stage = new java.io.File(s"$dir/.fold_stage")
+    val app = SignatureStore.appender(spark, dir, "doc_id", "text",
+      streamTag = "l", autoCompactEvery = 1000000)
+    Seq((1L, "the quick brown fox jumps over the lazy dog"),
+      (2L, "completely different content about spark engines"))
+      .zipWithIndex.foreach { case (d, e) =>
+        app(Seq(d).toDF("doc_id", "text"), e.toLong) }
+    // a fold that has written its stage but not yet committed its marker
+    SignatureStore.read(spark, dir).write.partitionBy("shard")
+      .parquet(s"${stage.getPath}/sigs")
+    def ids() = SignatureStore.read(spark, dir).select("id")
+      .collect().map(_.getLong(0)).sorted.toSeq
+    assert(ids() == Seq(1L, 2L))
+    assert(stage.isDirectory, "a reader must not discard a fold in progress")
+    SignatureStore.appender(spark, dir, "doc_id", "text", streamTag = "l")
+    assert(!stage.exists(), "the writer's mount discards an uncommitted fold")
+    assert(ids() == Seq(1L, 2L))
+  }
+
   test("signature store: appender and screen marker namespaces are disjoint — " +
     "same tag, same epoch, neither suppresses the other") {
     import graft.operators.SignatureStore
@@ -473,15 +502,19 @@ class DedupSimilaritySpec extends AnyFunSuite {
     eps.zipWithIndex.foreach { case ((id, t), e) =>
       app(Seq((id, t)).toDF("doc_id", "text"), e.toLong)
     }
-    val before = SignatureStore.fileCount(spark, dir)
+    // the appended epochs sit in the log, one file per table per epoch
+    assert(logFileCount(dir) == 2 * eps.size)
     def probe(id: Long, text: String) = SignatureStore.probeStored(spark, dir,
         Dedup.minHashSignatures(Seq((id, text)).toDF("doc_id", "text"),
           "doc_id", "text", 32, 3), 32, 8, 0.3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val hitsBefore = probe(90L, eps(1)._2)
     SignatureStore.compact(spark, dir)
+    // compaction folds the log and leaves one file per base partition
     val after = SignatureStore.fileCount(spark, dir)
-    assert(after < before, s"compaction must fold files: $before -> $after")
+    val parts = SignatureStore.partitionDirCount(spark, dir)
+    assert(logFileCount(dir) == 0, "compaction must fold the log")
+    assert(after == parts, s"compacted: $after files, $parts partitions")
     assert(SignatureStore.read(spark, dir).count() == 4)
     assert(probe(90L, eps(1)._2) == hitsBefore)
     // replay markers survive compaction: re-delivering epoch 0 is a no-op
@@ -515,10 +548,14 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val filesOff = SignatureStore.fileCount(spark, offDir)
     val partsAuto = SignatureStore.partitionDirCount(spark, autoDir)
     // epoch 16 is a check boundary and the bound was exceeded, so the run
-    // ends freshly compacted: exactly one file per live partition —
-    // while the disabled run piled ~9 files per epoch into ~24 partitions
+    // ends folded and freshly compacted: an empty log and exactly one file
+    // per live partition — while the disabled run never folded, so its
+    // log holds one file per table per epoch and it has no base at all
     assert(filesAuto == partsAuto, s"auto: $filesAuto files, $partsAuto parts")
-    assert(filesOff > 3 * filesAuto, s"off=$filesOff auto=$filesAuto")
+    assert(logFileCount(autoDir) == 0)
+    assert(logFileCount(offDir) == 2 * 16 && filesOff == 2 * 16,
+      s"off: ${logFileCount(offDir)} log files, $filesOff files")
+    assert(SignatureStore.partitionDirCount(spark, offDir) == 0)
     // content identical to the never-compacted store
     def ids(d: String) = SignatureStore.read(spark, d).select("id")
       .collect().map(_.getLong(0)).sorted.toSeq

@@ -619,4 +619,18 @@ class PlanSpec extends AnyFunSuite {
     SparkEntry.queries("a1_word_count")(spark, sf).count()
     assert(spark.conf.get(Tuning.ListingThresholdKey) == "4096")
   }
+
+  test("file-listing threshold at a store-sink mount: the local default " +
+    "applies only when the session has not set the threshold itself") {
+    assume(sys.env.get("SPARK_GRAFT_LIST_PARALLEL_THRESHOLD").isEmpty)
+    val unset = spark.newSession()
+    unset.conf.unset(Tuning.ListingThresholdKey)
+    Tuning.mountDefaults(unset)
+    assert(unset.conf.get(Tuning.ListingThresholdKey) == "4096")
+    // an object-store deployment that kept distributed listing keeps it
+    val explicit = spark.newSession()
+    explicit.conf.set(Tuning.ListingThresholdKey, "32")
+    Tuning.mountDefaults(explicit)
+    assert(explicit.conf.get(Tuning.ListingThresholdKey) == "32")
+  }
 }
