@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** DDM concept-drift detection (SURVEY ST1/ST2).
@@ -15,16 +14,16 @@ import org.apache.spark.sql.functions._
   * warning when p_i+σ_i > p_min + 2·σ_min, drift when > p_min + 3·σ_min, with a
   * 30-sample warm-up and a full state reset after each drift.
   *
-  * Two implementations:
-  *  - [[ddmSequential]]: faithful order-sensitive scan *with reset* — the exact
-  *    reference semantics. The input is per-batch error rates, i.e. already
-  *    aggregated upstream to one row per batch; a detector is inherently a
-  *    single sequential state machine, so we sort each detector's (tiny) feed
-  *    into one partition per detector key and scan it. This is the batch twin of
-  *    the streaming `flatMapGroupsWithState` version (graft.streaming.DdmStream).
-  *  - [[ddmScan]]: relational *no-reset* variant (prefix-scan formulation) that is
-  *    expressible in ANSI SQL — used for the DuckDB oracle gate; identical to the
-  *    faithful detector up to and including the first drift signal.
+  * One detector, two drivers of it:
+  *  - [[ddmSequential]]: the batch form — an order-sensitive scan *with reset*,
+  *    the exact reference semantics. The input is per-batch error rates, i.e.
+  *    already aggregated upstream to one row per batch; a detector is inherently
+  *    a single sequential state machine, so we sort each detector's (tiny) feed
+  *    into one partition per detector key and scan it.
+  *  - graft.streaming.DdmStream: the streaming twin, the same [[Ddm]] state
+  *    carried across micro-batches by `flatMapGroupsWithState`.
+  * The DuckDB oracle replays the same recurrence as a recursive CTE
+  * (graft.queries.Duck.ddmRecursive), bit for bit.
   */
 object Drift {
 
@@ -130,53 +129,5 @@ object Drift {
         DdmOut(det, bid, err, ddm.missProb, ddm.missStd, sig)
       }
     }.toDF()
-  }
-
-  /** Relational no-reset DDM (prefix-scan form, SQL-expressible for the oracle).
-    *
-    * For row i (1-based over batch order): p_i = avg error over rows 1..i,
-    * s_i = sqrt(p_i(1-p_i)/i); the minimum of p_j+s_j is tracked over
-    * j ∈ [MinNumInstances-1, i] (the warm-up gate: skmultiflow checks
-    * sample_count = i+1 ≥ 30), ties resolved toward the latest j (skmultiflow
-    * updates on `<=`). Emits (batch_id, p, s, signal) rounded for comparison.
-    */
-  def ddmScan(errors: DataFrame, batchIdCol: String, errCol: String,
-              scale: Int = 6): DataFrame = {
-    // Single-partition window BY DESIGN, and bounded by contract: DDM's
-    // running (p, s, min) state is inherently sequential over the feed, and
-    // every caller feeds one row per REPORTING BATCH (corpus rows /
-    // DetectorBatch — the per-row scoring that is corpus-sized stays fully
-    // distributed upstream of this scan). A feed that grew to corpus scale
-    // would be a caller bug; detector feeds are telemetry-sized at any SF.
-    val wOrd = Window.orderBy("batch_id")
-    val st = errors.select(
-        col(batchIdCol).cast("long").as("batch_id"),
-        col(errCol).cast("double").as("err"))
-      .withColumn("i", row_number().over(wOrd))
-      .withColumn("p", avg("err").over(wOrd.rowsBetween(Window.unboundedPreceding, 0)))
-      .withColumn("s", sqrt(col("p") * (lit(1.0) - col("p")) / col("i")))
-    val minGate = MinNumInstances - 1 // j with sample_count ≥ 30 post-increment
-    // Cumulative argmin over the gated prefix: min of struct(p+s, -j, p, s) is
-    // lexicographic, so equal p+s resolves toward the *latest* j (skmultiflow
-    // updates its minimum on <=). Pre-warm-up rows contribute null, which min()
-    // skips — one O(n) window pass instead of the previous O(n²) triangular
-    // self-join, so the scan is safe to feed per-row (not just per-batch) data.
-    val cand = when(col("i") >= minGate, struct(
-      (col("p") + col("s")).as("ps"), (-col("i")).as("negj"),
-      col("p").as("pmin"), col("s").as("smin")))
-    st.withColumn("best",
-        min(cand).over(wOrd.rowsBetween(Window.unboundedPreceding, 0)))
-      .withColumn("signal",
-        when(col("best").isNull, "N")
-          .when(col("p") + col("s") >
-            col("best.pmin") + lit(OutControlLevel) * col("best.smin"), "D")
-          .when(col("p") + col("s") >
-            col("best.pmin") + lit(WarningLevel) * col("best.smin"), "W")
-          .otherwise("N"))
-      .select(col("batch_id"),
-        round(col("p"), scale).as("p"),
-        round(col("s"), scale).as("s"),
-        col("signal"))
-      .orderBy("batch_id")
   }
 }

@@ -13,11 +13,16 @@ import org.apache.spark.sql.functions._
   * detector. One table with a `detection` column subsumes both frames
   * (scatter = WHERE detection <> 'None').
   *
+  * Detections come from the reference's detector, [[Drift.ddmSequential]]
+  * (skmultiflow's DDM, which resets after every drift), run as one detector
+  * over the whole timeline in `time` order — its state carries across the
+  * stream switch, as the reference feeds one DDM across streams.
+  *
   * Scale: the per-batch feed is tiny by construction (one row per reporting
   * batch — the heavy scoring stays upstream), so the within-stream rank and
-  * the no-reset DDM scan operate on detector-feed-sized data; the timeline
-  * offset is composed from per-stream counts, never a global window over an
-  * unpartitioned table. */
+  * the one-key detector scan operate on detector-feed-sized data; the
+  * timeline offset is composed from per-stream counts, never a global window
+  * over an unpartitioned table. */
 object Report {
 
   /** Reshape per-stream accuracy feeds into the report table.
@@ -32,7 +37,7 @@ object Report {
     */
   def experimentReport(feed: DataFrame, detectorEnd: Option[Int] = None): DataFrame = {
     // Eager materialization: the feed plan fans out into the offsets agg, the
-    // ranked timeline, and the detector scan (which self-joins) — without
+    // ranked timeline, and the detector scan joined back onto it — without
     // pinning it, an expensive upstream (e.g. two GNB scoring passes) would
     // re-execute once per branch. The feed is one row per reporting batch by
     // contract, so the checkpoint is tiny. (At cluster scale: persist() or a
@@ -54,10 +59,15 @@ object Report {
       .withColumn("time", col("offset") + col("rk"))
     val detectorFeed = detectorEnd.fold(timed)(end =>
       timed.filter(col("stream_ord") < end))
-    val signals = Drift.ddmScan(
-        detectorFeed.select(col("time"), (lit(1.0) - col("accuracy")).as("err")),
-        "time", "err")
-      .select(col("batch_id").as("time"), col("signal"))
+    // Keyed by `time` (one row per point; the one-key scan's output is one
+    // partition, so the groupBy adds no exchange). The unique key lets
+    // Catalyst drop the outer join, and with it the typed scan it cannot
+    // otherwise prune, when nothing reads `detection` (a row count).
+    val signals = Drift.ddmSequential(
+        detectorFeed.select(lit("report").as("det"), col("time"),
+          (lit(1.0) - col("accuracy")).as("err")),
+        "det", "time", "err")
+      .groupBy(col("batch_id").as("time")).agg(max("signal").as("signal"))
     timed.join(signals, Seq("time"), "left")
       .select(col("time"), col("stream"), round(col("accuracy"), 6).as("accuracy"),
         when(col("signal") === "D", "Drift")

@@ -398,47 +398,19 @@ object AdaptQueries {
        |FROM $adaptBatchesSql
        |CROSS JOIN (SELECT unnest([1, 2, 3]) AS phase)""".stripMargin, "seq")
 
-  /** [[qReportAdapt]] twin: same timeline reshape as q_report_abrupt's, over
-    * the pinned 1|0|1 feed, with the detector scan cut at the mapped stream
+  /** [[qReportAdapt]] twin: the same report reshape as q_report_abrupt's,
+    * over the pinned 1|0|1 feed, with the detector cut at the mapped stream
     * (stream_ord < 2 — its rows LEFT-JOIN to NULL → detection 'None',
     * exactly the post-hoc contract). */
-  private val qReportAdaptSql: String =
-    s"""WITH RECURSIVE feed AS (SELECT CAST(phase - 1 AS INT) AS stream_ord,
-       |    CASE WHEN phase = 1 THEN 'source' WHEN phase = 2 THEN 'drifted'
-       |         ELSE 'mapped' END AS stream,
-       |    batch_id,
-       |    CASE WHEN phase = 2 THEN 0.0 ELSE 1.0 END AS accuracy
-       |  FROM $adaptBatchesSql
-       |  CROSS JOIN (SELECT unnest([1, 2, 3]) AS phase)),
-       |offs AS (SELECT stream_ord, count(*) AS c FROM feed GROUP BY 1),
-       |offs2 AS (SELECT stream_ord, CAST(coalesce(sum(c) OVER (ORDER BY stream_ord
-       |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS off FROM offs),
-       |timed AS (SELECT f.stream_ord, f.stream, f.accuracy,
-       |    CAST(o.off + row_number() OVER (PARTITION BY f.stream_ord ORDER BY f.batch_id) - 1
-       |      AS BIGINT) AS time
-       |  FROM feed f JOIN offs2 o USING (stream_ord)),
-       |seq AS (SELECT time, 1.0 - accuracy AS err,
-       |    row_number() OVER (ORDER BY time) AS i FROM timed WHERE stream_ord < 2),
-       |rs AS (SELECT time, i, err, CAST(err AS DOUBLE) AS rsum
-       |    FROM seq WHERE i = 1
-       |  UNION ALL SELECT q.time, q.i, q.err, r.rsum + q.err
-       |    FROM rs r JOIN seq q ON q.i = r.i + 1),
-       |st AS (SELECT time, i, rsum / i AS p FROM rs),
-       |st2 AS (SELECT time, i, p, sqrt(p * (1 - p) / i) AS s FROM st),
-       |best AS (SELECT a.i AS ai, b.p AS bp, b.s AS bs,
-       |    row_number() OVER (PARTITION BY a.i ORDER BY b.p + b.s ASC, b.i DESC) AS rk
-       |  FROM st2 a JOIN st2 b ON b.i <= a.i AND b.i >= ${graft.operators.Drift.MinNumInstances - 1}),
-       |m AS (SELECT ai, bp AS pmin, bs AS smin FROM best WHERE rk = 1),
-       |sig AS (SELECT st2.time,
-       |    CASE WHEN m.pmin IS NULL THEN 'None'
-       |         WHEN st2.p + st2.s > m.pmin + 3.0 * m.smin THEN 'Drift'
-       |         WHEN st2.p + st2.s > m.pmin + 2.0 * m.smin THEN 'Warning'
-       |         ELSE 'None' END AS detection
-       |  FROM st2 LEFT JOIN m ON st2.i = m.ai)
-       |SELECT t.time, t.stream, round(t.accuracy, 6) AS accuracy,
-       |  coalesce(sig.detection, 'None') AS detection
-       |FROM timed t LEFT JOIN sig USING (time)
-       |ORDER BY time""".stripMargin
+  private val qReportAdaptSql: String = Duck.experimentReport(
+    s"""SELECT CAST(phase - 1 AS INT) AS stream_ord,
+       |  CASE WHEN phase = 1 THEN 'source' WHEN phase = 2 THEN 'drifted'
+       |       ELSE 'mapped' END AS stream,
+       |  batch_id,
+       |  CASE WHEN phase = 2 THEN 0.0 ELSE 1.0 END AS accuracy
+       |FROM $adaptBatchesSql
+       |CROSS JOIN (SELECT unnest([1, 2, 3]) AS phase)""".stripMargin,
+    detectorEnd = Some(2))
 
   val oracles: Map[String, String] = Map(
     "w2v_top_word_sims" -> w2vTopWordSimsSql,

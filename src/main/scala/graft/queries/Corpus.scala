@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TextFns, VecFns}
-import graft.operators.{Drift, Metrics}
+import graft.operators.Metrics
 import graft.sources.Tables
 
 /** Reference-shaped corpus queries — the [SQL] rows of SURVEY §2 over the
@@ -221,33 +221,6 @@ object Corpus {
   val a4Sql: String =
     s"SELECT batch_id, round(accuracy, 6) AS accuracy FROM $accSub a ORDER BY batch_id"
 
-  // ---- ST1 (prefix-scan form): no-reset DDM over the detector feed ----------
-  val st1DdmScan: Q = (s, dir) =>
-    Drift.ddmScan(
-      batchAccuracyDf(s, dir).withColumn("err", lit(1.0) - col("accuracy")),
-      "batch_id", "err")
-
-  val st1Sql: String =
-    s"""WITH RECURSIVE acc AS (SELECT batch_id, accuracy FROM $accSub a),
-       |seq AS (SELECT batch_id, 1.0 - accuracy AS err,
-       |  row_number() OVER (ORDER BY batch_id) AS i FROM acc),
-       |rs AS (SELECT batch_id, i, err, CAST(err AS DOUBLE) AS rsum
-       |    FROM seq WHERE i = 1
-       |  UNION ALL SELECT q.batch_id, q.i, q.err, r.rsum + q.err
-       |    FROM rs r JOIN seq q ON q.i = r.i + 1),
-       |st AS (SELECT batch_id, i, err, rsum / i AS p FROM rs),
-       |st2 AS (SELECT batch_id, i, p, sqrt(p * (1 - p) / i) AS s FROM st),
-       |best AS (SELECT a.i AS ai, b.p AS bp, b.s AS bs,
-       |  row_number() OVER (PARTITION BY a.i ORDER BY b.p + b.s ASC, b.i DESC) AS rk
-       |  FROM st2 a JOIN st2 b ON b.i <= a.i AND b.i >= ${Drift.MinNumInstances - 1}),
-       |m AS (SELECT ai, bp AS pmin, bs AS smin FROM best WHERE rk = 1)
-       |SELECT st2.batch_id, round(st2.p, 6) AS p, round(st2.s, 6) AS s,
-       |  CASE WHEN m.pmin IS NULL THEN 'N'
-       |       WHEN st2.p + st2.s > m.pmin + 3.0 * m.smin THEN 'D'
-       |       WHEN st2.p + st2.s > m.pmin + 2.0 * m.smin THEN 'W'
-       |       ELSE 'N' END AS signal
-       |FROM st2 LEFT JOIN m ON st2.i = m.ai ORDER BY st2.batch_id""".stripMargin
-
   // ---- P7+A6: deterministic noise injection + MSE ---------------------------
   val NoiseWarm = 5
   val NoiseNIter = 64
@@ -298,7 +271,6 @@ object Corpus {
     "p6_absmax" -> p6AbsMax,
     "a5_metrics" -> a5Metrics,
     "a4_batch_accuracy" -> a4BatchAccuracy,
-    "st1_ddm_scan" -> st1DdmScan,
     "p7_noise_mse" -> p7NoiseMse)
 
   val oracles: Map[String, String] = Map(
@@ -313,6 +285,5 @@ object Corpus {
     "p5_pool_scalars" -> p5Sql,
     "a5_metrics" -> a5Sql,
     "a4_batch_accuracy" -> a4Sql,
-    "st1_ddm_scan" -> st1Sql,
     "p7_noise_mse" -> p7Sql)
 }

@@ -348,4 +348,33 @@ private[queries] object Duck {
        |)
        |SELECT ord AS $outOrd, err AS error, p, s, signal
        |FROM ddm WHERE i > 0 ORDER BY 1""".stripMargin
+
+  /** DuckDB twin of graft.operators.Report.experimentReport: the global
+    * `time` is the per-stream offset (count of all earlier streams' rows)
+    * plus the rank within the stream by batch_id; the reset DDM
+    * ([[ddmRecursive]]) runs over err = 1 - accuracy in `time` order on the
+    * streams before `detectorEnd` (every stream when None), and its signal
+    * maps D → 'Drift', W → 'Warning', anything else (and the post-hoc
+    * streams' missing signal) → 'None'.
+    *
+    * @param feedSql SELECT producing (stream_ord, stream, batch_id, accuracy).
+    * @return SQL yielding (time, stream, accuracy, detection) ordered by time.
+    */
+  def experimentReport(feedSql: String, detectorEnd: Option[Int] = None): String = {
+    val cut = detectorEnd.fold("")(end => s" WHERE stream_ord < $end")
+    s"""WITH feed AS ($feedSql),
+       |offs AS (SELECT stream_ord, count(*) AS c FROM feed GROUP BY 1),
+       |offs2 AS (SELECT stream_ord, CAST(coalesce(sum(c) OVER (ORDER BY stream_ord
+       |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS off FROM offs),
+       |timed AS (SELECT f.stream_ord, f.stream, f.accuracy,
+       |    CAST(o.off + row_number() OVER (PARTITION BY f.stream_ord ORDER BY f.batch_id) - 1
+       |      AS BIGINT) AS time
+       |  FROM feed f JOIN offs2 o USING (stream_ord)),
+       |sig AS (${ddmRecursive(s"SELECT time AS ord, 1.0 - accuracy AS err FROM timed$cut", "time")})
+       |SELECT t.time, t.stream, round(t.accuracy, 6) AS accuracy,
+       |  CASE sig.signal WHEN 'D' THEN 'Drift' WHEN 'W' THEN 'Warning'
+       |    ELSE 'None' END AS detection
+       |FROM timed t LEFT JOIN sig USING (time)
+       |ORDER BY time""".stripMargin
+  }
 }

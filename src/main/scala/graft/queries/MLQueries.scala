@@ -201,8 +201,9 @@ object MLQueries {
   /** Q-report (reference utils/visualization.py:38-107): the per-stream
     * accuracy/detection table behind the abrupt-drift figures — trained and
     * untrained streams concatenated on one global timeline, detector firings
-    * attached per point (no-reset scan form, as in st1; scatter frame =
-    * WHERE detection <> 'None'). [SQL] */
+    * attached per point by the reset detector, the same scan as
+    * drift_abrupt_signals (scatter frame = WHERE detection <> 'None').
+    * [SQL: Duck.experimentReport] */
   val qReportAbrupt: Q = (s, dir) => {
     val feed = driftAbruptFeed(s, dir).select(
       (col("phase") - 1).cast("int").as("streamOrd"),
@@ -211,39 +212,10 @@ object MLQueries {
     graft.operators.Report.experimentReport(feed)
   }
 
-  val qReportAbruptSql: String =
-    s"""WITH RECURSIVE feed AS (SELECT CAST(phase - 1 AS INT) AS stream_ord,
-       |    CASE WHEN phase = 1 THEN 'trained' ELSE 'untrained' END AS stream,
-       |    batch_id, accuracy FROM ($driftAbruptFeedSql) f),
-       |offs AS (SELECT stream_ord, count(*) AS c FROM feed GROUP BY 1),
-       |offs2 AS (SELECT stream_ord, CAST(coalesce(sum(c) OVER (ORDER BY stream_ord
-       |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS off FROM offs),
-       |timed AS (SELECT f.stream_ord, f.stream, f.accuracy,
-       |    CAST(o.off + row_number() OVER (PARTITION BY f.stream_ord ORDER BY f.batch_id) - 1
-       |      AS BIGINT) AS time
-       |  FROM feed f JOIN offs2 o USING (stream_ord)),
-       |seq AS (SELECT time, 1.0 - accuracy AS err,
-       |    row_number() OVER (ORDER BY time) AS i FROM timed),
-       |rs AS (SELECT time, i, err, CAST(err AS DOUBLE) AS rsum
-       |    FROM seq WHERE i = 1
-       |  UNION ALL SELECT q.time, q.i, q.err, r.rsum + q.err
-       |    FROM rs r JOIN seq q ON q.i = r.i + 1),
-       |st AS (SELECT time, i, rsum / i AS p FROM rs),
-       |st2 AS (SELECT time, i, p, sqrt(p * (1 - p) / i) AS s FROM st),
-       |best AS (SELECT a.i AS ai, b.p AS bp, b.s AS bs,
-       |    row_number() OVER (PARTITION BY a.i ORDER BY b.p + b.s ASC, b.i DESC) AS rk
-       |  FROM st2 a JOIN st2 b ON b.i <= a.i AND b.i >= ${graft.operators.Drift.MinNumInstances - 1}),
-       |m AS (SELECT ai, bp AS pmin, bs AS smin FROM best WHERE rk = 1),
-       |sig AS (SELECT st2.time,
-       |    CASE WHEN m.pmin IS NULL THEN 'None'
-       |         WHEN st2.p + st2.s > m.pmin + 3.0 * m.smin THEN 'Drift'
-       |         WHEN st2.p + st2.s > m.pmin + 2.0 * m.smin THEN 'Warning'
-       |         ELSE 'None' END AS detection
-       |  FROM st2 LEFT JOIN m ON st2.i = m.ai)
-       |SELECT t.time, t.stream, round(t.accuracy, 6) AS accuracy,
-       |  coalesce(sig.detection, 'None') AS detection
-       |FROM timed t LEFT JOIN sig USING (time)
-       |ORDER BY time""".stripMargin
+  val qReportAbruptSql: String = Duck.experimentReport(
+    s"""SELECT CAST(phase - 1 AS INT) AS stream_ord,
+       |  CASE WHEN phase = 1 THEN 'trained' ELSE 'untrained' END AS stream,
+       |  batch_id, accuracy FROM ($driftAbruptFeedSql) f""".stripMargin)
 
   // ---- ST3: unsupervised (model-as-oracle) drift ----------------------------
   //

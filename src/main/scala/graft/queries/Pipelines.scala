@@ -2076,8 +2076,7 @@ object Pipelines {
   // ---- Faithful DDM (sequential, with reset) --------------------------------
 
   /** The exact reference detector semantics over the a4 feed [SQL: recursive
-    * reset-DDM replay; the no-reset prefix-scan twin st1_ddm_scan is also
-    * asserted equal up to the first drift in ScalaTest]. */
+    * reset-DDM replay]. */
   val driftDdm: Q = (s, dir) => {
     val feed = Corpus.batchAccuracyDf(s, dir)
       .withColumn("err", lit(1.0) - col("accuracy"))

@@ -14,6 +14,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * query's `cum_before < budget` prefix — the doc that CROSSES the boundary
   * is admitted, everything after is not — so on identically-ordered input the
   * stream and the batch window agree row-for-row (pinned in StreamingSpec).
+  * The streaming form, [[admit]], is `flatMapGroupsWithState` on the default
+  * state store; [[budgetSink]] is the durable foreachBatch form.
   *
   * State/scale contract: ONE `Fill(filled)` long per source key lives in the
   * state store — state size tracks |sources| (dozens), never corpus size, so
@@ -68,49 +70,6 @@ object BudgetGate {
     docs.groupByKey(_.source)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
         gateGroup(budgets))
-  }
-
-  /** The same gate on Spark 4's `transformWithState` arbitrary-state API
-    * (the [[DdmStream.DdmProcessor]] pattern: typed per-key state handle,
-    * RocksDB state store provider required). Semantically identical to
-    * [[admit]] — pinned equal over the same micro-batched feed. */
-  class GateProcessor(budgets: Map[String, Long])
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        String, Doc, Admitted] {
-    @transient private var state:
-      org.apache.spark.sql.streaming.ValueState[Fill] = _
-
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      state = getHandle.getValueState[Fill]("fill",
-        org.apache.spark.sql.Encoders.product[Fill],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    override def handleInputRows(source: String, rows: Iterator[Doc],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[Admitted] = {
-      val budget = budgets.getOrElse(source, 0L)
-      var filled = if (state.exists()) state.get().filled else 0L
-      // trigger-sized buffer, same bounded contract as [[gateGroup]]
-      val out = rows.toSeq.sortBy(_.doc_id).flatMap { d =>
-        if (filled < budget) {
-          filled += d.n_toks
-          Some(Admitted(source, d.doc_id, d.n_toks, filled))
-        } else None
-      }
-      state.update(Fill(filled))
-      out.iterator
-    }
-  }
-
-  /** Streaming form on the transformWithState API. */
-  def admitTws(docs: Dataset[Doc],
-               budgets: Map[String, Long]): Dataset[Admitted] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.groupByKey(_.source)
-      .transformWithState(new GateProcessor(budgets),
-        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append())
   }
 
   // ---- Durable form: the foreachBatch sink with a persisted fill store ----

@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.operators.Drift
 
@@ -15,8 +15,10 @@ import graft.operators.Drift
   * detectors scale horizontally across executors; one detector's feed is tiny
   * by construction (one row per reporting batch, ST2).
   *
-  * The batch twin is [[graft.operators.Drift.ddmSequential]]; the spec asserts
-  * the streaming scan over multiple micro-batches equals the batch scan.
+  * This is the one streaming DDM; it runs on the default state store. The
+  * batch twin is [[graft.operators.Drift.ddmSequential]] (the same [[Drift.Ddm]]
+  * state machine); the spec asserts the streaming scan over multiple
+  * micro-batches equals the batch scan.
   */
 object DdmStream {
 
@@ -61,37 +63,5 @@ object DdmStream {
     import spark.implicits._
     feeds.groupByKey(_.detector)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(scanGroup)
-  }
-
-  /** The same detector on the `transformWithState` arbitrary-state API
-    * (Spark 4's successor to flatMapGroupsWithState: typed per-key state
-    * handles, timers, TTL; requires the RocksDB state store provider). Kept
-    * semantically identical to [[signals]] — the spec runs both over the same
-    * micro-batched feed and asserts equal output. */
-  class DdmProcessor extends StatefulProcessor[String, Feed, Signal] {
-    @transient private var state: ValueState[DdmState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[DdmState]("ddm",
-        Encoders.product[DdmState], TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[Feed],
-                                 timerValues: TimerValues): Iterator[Signal] = {
-      val ddm = if (state.exists()) restore(state.get()) else new Drift.Ddm()
-      val out = rows.toSeq.sortBy(_.batch_id).map { f =>
-        val sig = ddm.addElement(f.error)
-        Signal(key, f.batch_id, f.error, ddm.missProb, ddm.missStd, sig)
-      }
-      state.update(snapshot(ddm))
-      out.iterator
-    }
-  }
-
-  /** Streaming form on the transformWithState API. */
-  def signalsTws(feeds: Dataset[Feed]): Dataset[Signal] = {
-    val spark = feeds.sparkSession
-    import spark.implicits._
-    feeds.groupByKey(_.detector)
-      .transformWithState(new DdmProcessor, TimeMode.None(), OutputMode.Append())
   }
 }

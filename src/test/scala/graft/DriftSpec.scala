@@ -52,17 +52,6 @@ class DriftSpec extends AnyFunSuite {
     }
   }
 
-  test("ddmScan (no-reset prefix form) agrees with the sequential detector up to the first drift") {
-    val feed = errs.zipWithIndex.map { case (e, i) => (i.toLong, e) }
-      .toDF("batch_id", "err")
-    val scan = Drift.ddmScan(feed, "batch_id", "err")
-      .collect().map(r => r.getLong(0) -> r.getString(3)).toMap
-    val firstDrift = 55
-    (0 to firstDrift).foreach { i =>
-      assert(scan(i.toLong) == expectedSignals.getOrElse(i, "N"), s"scan at $i")
-    }
-  }
-
   test("warning zone precedes drift in any monotone error ramp (property)") {
     // A slow ramp must pass through W before D (Gama et al. zones are nested).
     val ramp = (0 until 120).map(i => 0.05 + 0.006 * i)

@@ -190,15 +190,12 @@ class PlanSpec extends AnyFunSuite {
       .toDF("streamOrd", "stream", "batch_id", "accuracy")
     val p = plan(graft.operators.Report.experimentReport(feed))
     // the big-side window is the within-stream rank — always keyed by
-    // stream_ord. The only permissible unpartitioned windows are ddmScan
-    // internals, which operate on the per-batch detector feed (one row per
-    // reporting batch by construction): those all order or key on the scan's
-    // batch_id / ai columns, never rank the raw feed globally.
+    // stream_ord; the detector is a keyed scan, not a window, so no
+    // row_number window ever ranks the feed globally.
     val rankWindows = p.linesIterator.filter(_.contains("Window [row_number()")).toSeq
     assert(rankWindows.nonEmpty, p)
     rankWindows.foreach { w =>
-      assert(w.matches(""".*\], \[stream_ord#\d+\], \[.*""") ||
-        w.matches(""".*\], \[(ai|batch_id)#\d+L?.*"""), w)
+      assert(w.matches(""".*\], \[stream_ord#\d+\], \[.*"""), w)
     }
     assert(p.contains("BroadcastHashJoin"), p) // offsets reach the feed via broadcast
   }

@@ -24,6 +24,19 @@ class QueriesSpec extends AnyFunSuite {
     }
   }
 
+  test("q_report_abrupt's detection is drift_abrupt_signals' signal, point for point") {
+    val report = SparkEntry.queries("q_report_abrupt")(spark, dir)
+      .select("time", "detection").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).sortBy(_._1)
+    val signals = SparkEntry.queries("drift_abrupt_signals")(spark, dir)
+      .select("seq", "signal").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).sortBy(_._1)
+    assert(report.length == signals.length && report.nonEmpty)
+    assert(report.map(_._1).toSeq == report.indices.map(_.toLong))
+    val label = Map("D" -> "Drift", "W" -> "Warning", "N" -> "None")
+    assert(report.map(_._2).toSeq == signals.map(p => label(p._2)).toSeq)
+  }
+
   test("q15: approximate aggregates land within their accuracy bounds") {
     val rows = graft.queries.Relational.q15Approx(spark, dir).collect()
     assert(rows.nonEmpty)

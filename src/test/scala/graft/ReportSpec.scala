@@ -60,6 +60,13 @@ class ReportSpec extends AnyFunSuite {
     val ramp = (40L until 80L).map(det)
     assert(ramp.contains("Warning") && ramp.contains("Drift"))
     assert(ramp.indexOf("Warning") < ramp.indexOf("Drift"))
+    // the detector resets after a Drift (skmultiflow's DDM): its 30-sample
+    // warm-up restarts, and fewer than 30 points remain, so every later
+    // point reads None
+    val firstDrift = 40 + ramp.indexOf("Drift")
+    assert(80 - (firstDrift + 1) < graft.operators.Drift.MinNumInstances)
+    assert(((firstDrift + 1L) until 80L).forall(t => det(t) == "None"),
+      (firstDrift until 80).map(t => det(t.toLong)))
     assert(out.forall(r => Set("None", "Warning", "Drift")(r.getString(3))))
   }
 

@@ -39,38 +39,6 @@ class StreamingSpec extends AnyFunSuite {
     } finally query.stop()
   }
 
-  test("transformWithState DDM equals the flatMapGroupsWithState scan") {
-    implicit val sqlCtx = spark.sqlContext
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    // transformWithState requires the RocksDB state store
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val mem = MemoryStream[DdmStream.Feed]
-    val query = DdmStream.signalsTws(mem.toDS())
-      .writeStream.format("memory").queryName("ddm_tws_out")
-      .outputMode("append").start()
-    try {
-      val feeds = errs.zipWithIndex.map { case (e, i) => DdmStream.Feed("d", i, e) }
-      val chunks = Seq(feeds.slice(0, 13).reverse, feeds.slice(13, 47),
-        feeds.slice(47, 48), feeds.slice(48, 90).reverse)
-      chunks.foreach { c => mem.addData(c: _*); query.processAllAvailable() }
-      val streamed = spark.table("ddm_tws_out")
-        .select("batch_id", "signal").collect()
-        .map(r => r.getLong(0) -> r.getString(1)).toMap
-      val batch = Drift.ddmSequential(
-          feeds.toDF("detector", "batch_id", "error"), "detector", "batch_id", "error")
-        .collect().map(r => r.getLong(1) -> r.getString(5)).toMap
-      assert(streamed.size == errs.size)
-      assert(streamed == batch)
-    } finally {
-      query.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
   test("watermarked tumbling windows emit finalized groups (event-time capability)") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(java.sql.Timestamp, String, Double)]
@@ -2151,8 +2119,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(admC == Set((1L, 30L), (3L, 55L), (5L, 80L)))
   }
 
-  test("transformWithState budget gate equals the flatMapGroupsWithState " +
-    "form over the same micro-batched feed") {
+  test("budget gate: three micro-batches admit each source's prefix") {
     import graft.streaming.BudgetGate
     implicit val sqlCtx = spark.sqlContext
     val budgets = Map("web" -> 100L, "books" -> 55L, "code" -> 0L)
@@ -2160,48 +2127,23 @@ class StreamingSpec extends AnyFunSuite {
       Seq(("web", 1L, 30L), ("books", 2L, 25L), ("code", 3L, 10L)),
       Seq(("web", 4L, 40L), ("web", 5L, 35L), ("books", 6L, 30L)),
       Seq(("web", 7L, 20L), ("books", 8L, 5L), ("code", 9L, 1L)))
-    val prevProvider =
-      spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val mem = MemoryStream[BudgetGate.Doc]
-    val query = BudgetGate.admitTws(mem.toDS(), budgets)
-      .writeStream.format("memory").queryName("bg_tws_out")
+    val query = BudgetGate.admit(mem.toDS(), budgets)
+      .writeStream.format("memory").queryName("bg_fm_out")
       .outputMode("append").start()
     try {
       epochs.foreach { e =>
         mem.addData(e.map(BudgetGate.Doc.tupled): _*)
         query.processAllAvailable()
       }
-      val tws = spark.table("bg_tws_out").collect()
+      val admitted = spark.table("bg_fm_out").collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
         .toSet
-      // fMGWS twin over the same epochs (fresh stream, default provider
-      // semantics are identical)
-      val mem2 = MemoryStream[BudgetGate.Doc]
-      val q2 = BudgetGate.admit(mem2.toDS(), budgets)
-        .writeStream.format("memory").queryName("bg_fm_out")
-        .outputMode("append").start()
-      try {
-        epochs.foreach { e =>
-          mem2.addData(e.map(BudgetGate.Doc.tupled): _*)
-          q2.processAllAvailable()
-        }
-        val fm = spark.table("bg_fm_out").collect()
-          .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-          .toSet
-        assert(tws == fm)
-        assert(tws.map(_._2) == Set(1L, 2L, 4L, 5L, 6L))
-      } finally q2.stop()
-    } finally {
-      query.stop()
-      prevProvider match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+      assert(admitted.map(_._2) == Set(1L, 2L, 4L, 5L, 6L))
+      // the doc that crosses a budget is admitted; the fill is cumulative
+      assert(admitted == Set(("web", 1L, 30L, 30L), ("books", 2L, 25L, 25L),
+        ("web", 4L, 40L, 70L), ("web", 5L, 35L, 105L), ("books", 6L, 30L, 55L)))
+    } finally query.stop()
   }
 
   test("fingerprint store retract: a taken-down text is re-admitted as new, " +

@@ -39,7 +39,7 @@ FAMILY_RULES = [
     ("stores", ["text_bm25", "lm_fluency", "bpe_", "pack_", "export_",
                 "gate_admission", "layout_zorder", "bucketed_join",
                 "store_fsck"]),
-    ("ml", ["ml_", "adapt_", "drift_", "st1_", "st2_", "m7_", "w2v_",
+    ("ml", ["ml_", "adapt_", "drift_", "st2_", "m7_", "w2v_",
             "a4_", "a5_", "a9_", "j3_", "q_report_"]),
     ("corpus", ["corpus_", "mix_", "quality_", "text_", "sketch_",
                 "dsir_", "sample_", "pipeline_", "chunk_", "p1_", "p2_",
