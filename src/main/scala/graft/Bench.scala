@@ -1,15 +1,208 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+  SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** The one measurement `main`.
+  *
+  *  - `graft.Bench` times the declared query surface (`SPARK_GRAFT_SF_DIR`,
+  *    optional `SPARK_GRAFT_QUERIES` subset) and writes `bench_out.json`:
+  *    min-of-pairs seconds per query, both raw passes, the failed list and a
+  *    per-query `breakdown` of what the scheduler ran.
+  *  - `graft.Bench <scenario>` runs one store scenario ([[scenarios]]) and
+  *    writes its JSON line to `BENCH_<scenario>.json`.
+  *
+  * `SPARK_GRAFT_BENCH_OUT` overrides either output path. Every run prints
+  * one JSON line on stdout, after the session stops. */
 object Bench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  type Query = (SparkSession, String) => DataFrame
+
+  /** Store scenarios: each body seeds its own stores, times them and returns
+    * its JSON line. */
+  val scenarios: Seq[(String, SparkSession => String)] = Seq(
+    "screen" -> BenchScreen.run,
+    "semscreen" -> BenchSemScreen.run,
+    "probe" -> BenchProbe.run,
+    "maint" -> BenchMaint.run,
+    "skew" -> BenchSkew.run,
+    "skew_sig" -> BenchSkewSig.run,
+    "forget_queue" -> BenchForgetQueue.run,
+    "door_probe" -> BenchDoorProbe.run)
+
+  /** The scenario named `name`; an unknown name throws, listing the known
+    * ones. */
+  def scenario(name: String): SparkSession => String =
+    scenarios.collectFirst { case (`name`, run) => run }.getOrElse(
+      throw new IllegalArgumentException(s"unknown scenario '$name'; known: " +
+        scenarios.map(_._1).mkString(", ")))
+
+  /** Cores of every harness session: `SPARK_GRAFT_CPUS`, else the JVM's
+    * available processors. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  def main(args: Array[String]): Unit = args match {
+    case Array() => surface()
+    case Array(name) =>
+      val run = try scenario(name) catch {
+        case e: IllegalArgumentException =>
+          System.err.println(e.getMessage); sys.exit(2)
+      }
+      val spark = session()
+      val json = try run(spark) finally spark.stop()
+      write(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", s"BENCH_$name.json"),
+        json)
+      println(json)
+    case _ =>
+      System.err.println("usage: graft.Bench [" +
+        scenarios.map(_._1).mkString("|") + "]")
+      sys.exit(2)
+  }
+
+  private def session(): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  private def write(path: String, line: String): Unit =
+    Files.write(Paths.get(path), (line + "\n").getBytes("UTF-8"))
+
+  def timed(body: => Unit): Double = {
+    val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
+  }
+
+  def tmp(prefix: String): String =
+    Files.createTempDirectory(prefix).toString
+
+  /** Iterative queries (connected components, Lloyd's) pin localCheckpoint
+    * blocks until their RDDs are GC'd; without a nudge those blocks survive
+    * into later queries' timings (r4 measured dedup_minhash_lsh 4.5 s
+    * in-suite vs 1.4 s isolated). A GC between queries lets ContextCleaner
+    * release them so each timing starts from a quiet block manager. */
+  def releaseBlocks(): Unit = { System.gc(); Thread.sleep(50) }
+
+  /** Codegen warm-up dir: `SPARK_GRAFT_WARM_DIR` (default sf0.001) if it
+    * exists, else `fallback`. */
+  def warmDir(fallback: String): String = {
+    val d = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
+    if (new java.io.File(d).isDirectory) d else fallback
+  }
+
+  /** What the scheduler ran for one query: jobs, the stages they declared
+    * (skipped ones included), summed task CPU and run time, shuffle and
+    * spill megabytes, and the wall time no job covered (driver gap). */
+  final case class Breakdown(jobs: Int, stages: Int, taskCpuS: Double,
+                             taskRunS: Double, shuffleReadMb: Double,
+                             shuffleWriteMb: Double, spillMb: Double,
+                             driverGapS: Double) {
+    def json: String =
+      f"""{"jobs":$jobs,"stages":$stages,"task_cpu_s":$taskCpuS%.3f,""" +
+      f""""task_run_s":$taskRunS%.3f,"shuffle_read_mb":$shuffleReadMb%.3f,""" +
+      f""""shuffle_write_mb":$shuffleWriteMb%.3f,"spill_mb":$spillMb%.3f,""" +
+      f""""driver_gap_s":$driverGapS%.3f}"""
+  }
+
+  /** One timed run of a query. */
+  final case class Timing(wallS: Double, ok: Boolean, breakdown: Breakdown)
+
+  private final case class Task(cpuNs: Long, runMs: Long, shuffleRead: Long,
+                                shuffleWrite: Long, spill: Long)
+
+  /** Records every job and finished task between two [[take]]s. */
+  private final class BreakdownListener extends SparkListener {
+    private val open = new ConcurrentHashMap[Int, (Long, Int)]()
+    private val jobs = new ConcurrentLinkedQueue[(Long, Long, Int)]()
+    private val tasks = new ConcurrentLinkedQueue[Task]()
+    @volatile private var lastEventMs = System.currentTimeMillis()
+    private def touch(): Unit = lastEventMs = System.currentTimeMillis()
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      open.put(e.jobId, (e.time, e.stageInfos.size)); touch()
+    }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = {
+      val (t0, n) = Option(open.remove(e.jobId)).getOrElse((e.time, 0))
+      jobs.add((t0, e.time, n)); touch()
+    }
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      touch()
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+      val m = e.taskMetrics
+      if (m != null) tasks.add(Task(m.executorCpuTime, m.executorRunTime,
+        m.shuffleReadMetrics.totalBytesRead,
+        m.shuffleWriteMetrics.bytesWritten,
+        m.memoryBytesSpilled + m.diskBytesSpilled))
+      touch()
+    }
+
+    /** Waits until no job is open and the bus has been quiet for 200 ms;
+      * gives up after 20 s. */
+    def drain(): Unit = {
+      val deadline = System.currentTimeMillis() + 20000
+      while (System.currentTimeMillis() < deadline && (!open.isEmpty ||
+          System.currentTimeMillis() - lastEventMs < 200))
+        Thread.sleep(20)
+    }
+
+    /** Drains, then forgets everything recorded so far. */
+    def clear(): Unit = { drain(); jobs.clear(); tasks.clear() }
+
+    /** Drains, then sums everything recorded since the last take or clear
+      * for a run over `[fromMs, toMs]` that took `wallS`, and clears. */
+    def take(fromMs: Long, toMs: Long, wallS: Double): Breakdown = {
+      drain()
+      val js = jobs.asScala.toSeq
+      val ts = tasks.asScala.toSeq
+      jobs.clear(); tasks.clear()
+      // wall time of the run that no job covers
+      val coveredMs = js.map(j => (math.max(j._1, fromMs), math.min(j._2, toMs)))
+        .filter(c => c._2 > c._1).sortBy(_._1)
+        .foldLeft((0L, fromMs)) { case ((acc, reach), (a, b)) =>
+          if (b <= reach) (acc, reach) else (acc + b - math.max(a, reach), b)
+        }._1
+      val mb = 1024.0 * 1024.0
+      Breakdown(js.size, js.map(_._3).sum, ts.map(_.cpuNs).sum / 1e9,
+        ts.map(_.runMs).sum / 1e3, ts.map(_.shuffleRead).sum / mb,
+        ts.map(_.shuffleWrite).sum / mb, ts.map(_.spill).sum / mb,
+        math.max(0.0, wallS - coveredMs / 1e3))
+    }
+  }
+
+  /** Runs the queries `passes` times back to back against `sfDir`, each
+    * counted once and timed with its breakdown. The listener lives only for
+    * these passes. */
+  def timedPasses(spark: SparkSession, queries: Seq[(String, Query)],
+                  sfDir: String, passes: Int): Seq[Seq[(String, Timing)]] = {
+    val l = new BreakdownListener
+    spark.sparkContext.addSparkListener(l)
+    try {
+      l.clear()
+      Seq.fill(passes)(queries.map { case (name, fn) =>
+        val fromMs = System.currentTimeMillis()
+        val t0 = System.nanoTime()
+        val ok = try { fn(spark, sfDir).count(); true }
+          catch { case _: Throwable => false }
+        val dt = (System.nanoTime() - t0) / 1e9
+        val b = l.take(fromMs, System.currentTimeMillis(), dt)
+        releaseBlocks()
+        name -> Timing(dt, ok, b)
+      })
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  private def surface(): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = session()
     // Optional subset (comma-separated names): the sf10 decade benches the
     // scale-critical set without paying the full declared surface at 100×.
     val subset = sys.env.get("SPARK_GRAFT_QUERIES")
@@ -27,10 +220,9 @@ object Bench {
     // dir if the warmup dir is absent.
     spark.read.parquet(s"$sfDir/lineitem.parquet")
       .groupBy("l_returnflag").count().count()
-    val warmDir0 = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-    val warmDir = if (new java.io.File(warmDir0).isDirectory) warmDir0 else sfDir
+    val warm = warmDir(sfDir)
     queries.foreach { case (_, fn) =>
-      try { fn(spark, warmDir).count() } catch { case _: Throwable => () }
+      try { fn(spark, warm).count() } catch { case _: Throwable => () }
     }
     // Second untimed pass at the TARGET dir: content-keyed artifacts
     // (bucketed tables, IVF/IVFPQ indexes, quality-gate / pair-graph /
@@ -43,12 +235,6 @@ object Bench {
     queries.foreach { case (_, fn) =>
       try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
     }
-    // Iterative queries (connected components, Lloyd's) pin localCheckpoint
-    // blocks until their RDDs are GC'd; without a nudge those blocks survive
-    // into later queries' timings (r4 measured dedup_minhash_lsh 4.5 s
-    // in-suite vs 1.4 s isolated). A GC between queries lets ContextCleaner
-    // release them so each timing starts from a quiet block manager.
-    def releaseBlocks(): Unit = { System.gc(); Thread.sleep(50) }
     releaseBlocks()
     // PAIRED timing: the whole timed pass runs TWICE back-to-back and each
     // query reports the MIN of its two runs. Three rounds of driver benches
@@ -58,27 +244,21 @@ object Bench {
     // single-shot variance on a shared box. Min-of-pairs makes a phantom
     // require the SAME query to stall in BOTH passes, which noise doesn't
     // do; a real regression still shows in both. Both raw passes persist in
-    // the file output (pairs) for forensics.
-    var failed = List.empty[String]
-    def timedPass(): Map[String, Double] =
-      queries.map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() }
-        catch { case _: Throwable => failed ::= name }
-        val dt = (System.nanoTime() - t0) / 1e9
-        releaseBlocks()
-        name -> dt
-      }
-    val pass1 = timedPass()
-    val pass2 = timedPass()
-    val results = pass1.map { case (k, v) =>
-      k -> math.min(v, pass2.getOrElse(k, v)) }
+    // the file output (pairs) for forensics; the breakdown is the faster
+    // run's.
+    val Seq(pass1, pass2) = timedPasses(spark, queries.toSeq, sfDir, 2)
+    val second = pass2.toMap
+    val best = pass1.map { case (k, t1) =>
+      k -> second.get(k).filter(_.wallS < t1.wallS).getOrElse(t1)
+    }
+    val results = best.map { case (k, t) => k -> t.wallS }
+    val failed = (pass1 ++ pass2).collect { case (k, t) if !t.ok => k }.distinct
     def render(entries: Iterable[(String, Double)], fmt: Double => String,
                extra: String = ""): String = {
       val qs = entries.map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
         .mkString("{", ",", "}")
-      val fs = failed.reverse.distinct.map("\"" + _ + "\"").mkString("[", ",", "]")
-      val total = if (results.nonEmpty) results.values.sum else 0.0
+      val fs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+      val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,$extra"failed":$fs,"sf":"$sfDir"}"""
     }
     // The file is the durable, machine-readable record: EVERY query, full
@@ -87,13 +267,14 @@ object Bench {
     // a partial map — it only writes when an explicit output is named.
     val outOverride = sys.env.get("SPARK_GRAFT_BENCH_OUT")
     if (subset.isEmpty || outOverride.isDefined) {
-      val out = java.nio.file.Paths.get(outOverride.getOrElse("bench_out.json"))
-      val pairsJson = pass1.keys.map { k =>
-        s"\"" + k + s"\":[${pass1(k)},${pass2.getOrElse(k, -1.0)}]"
+      val pairsJson = pass1.map { case (k, t1) =>
+        s"\"" + k + s"\":[${t1.wallS},${second.get(k).map(_.wallS).getOrElse(-1.0)}]"
       }.mkString("{", ",", "}")
-      java.nio.file.Files.write(out,
-        (render(results, _.toString, s""""pairs":$pairsJson,""") + "\n")
-          .getBytes("UTF-8"))
+      val breakdownJson = best.map { case (k, t) =>
+        s"\"" + k + "\":" + t.breakdown.json
+      }.mkString("{", ",", "}")
+      write(outOverride.getOrElse("bench_out.json"), render(results,
+        _.toString, s""""pairs":$pairsJson,"breakdown":$breakdownJson,"""))
     }
     // The stdout copy must survive a LAST-2000-CHARS tail: the driver keeps
     // only the tail of stdout, and a 104-entry ms-precision line is ~2.6 KB —
@@ -102,7 +283,7 @@ object Bench {
     // stays under 1800 chars; total/failed/sf always present, the full map
     // lives in the file.
     val headline = {
-      val bySlow = results.toSeq.sortBy(-_._2)
+      val bySlow = results.sortBy(-_._2)
       var keep = Vector.empty[(String, Double)]
       for (e <- bySlow)
         if (render(keep :+ e, v => f"$v%.3f").length <= 1800) keep :+= e

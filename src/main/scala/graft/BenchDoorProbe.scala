@@ -12,26 +12,16 @@ import graft.streaming.{FrontDoor, ShardedDoor}
   * sharded probe should cost well under 4× the single-door probe on the
   * same corpus and batch (each shard's stores are 1/k the size, and the
   * shard-invariant prep is shared). Same verdict semantics on both paths
-  * (cross-checked here row-for-row before timing). Emits ONE JSON line to
-  * `SPARK_GRAFT_BENCH_OUT` (default BENCH_door_probe.json). */
+  * (cross-checked here row-for-row before timing). Returns ONE JSON line
+  * (`graft.Bench door_probe` writes BENCH_door_probe.json). */
 object BenchDoorProbe {
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/bench-sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val reps = sys.env.getOrElse("SPARK_GRAFT_PROBE_REPS", "5").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
+  private val Reps = 5
 
-    def timed(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
-    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+  def run(spark: SparkSession): String = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/bench-sf1")
+    import spark.implicits._
+    import Bench.{timed, tmp}
 
     // corpus: docs paired with embedding vectors by id (the door stores
     // text AND vector per admitted doc)
@@ -104,12 +94,12 @@ object BenchDoorProbe {
     val semSingle = vs.count(_._2._3)
     val semSharded = vk.count(_._2._3)
 
-    val singleSecs = (1 to reps).map(_ => timed(single().collect()))
-    val shardSecs = (1 to reps).map(_ => timed(sharded().collect()))
+    val singleSecs = (1 to Reps).map(_ => timed(single().collect()))
+    val shardSecs = (1 to Reps).map(_ => timed(sharded().collect()))
     def med(xs: Seq[Double]) = xs.sorted.apply(xs.size / 2)
 
     def f(v: Double) = f"$v%.3f"
-    val json = s"""{"metric":"door_probe","unit":"sec","sf":"$sfDir",""" +
+    s"""{"metric":"door_probe","unit":"sec","sf":"$sfDir",""" +
       s""""store_docs":$nDocs,"batch_docs":${2 * half},""" +
       s""""near_dups_flagged":$flagged,"sem_flagged_single":$semSingle,""" +
       s""""sem_flagged_sharded":$semSharded,"sharded_k":$K,""" +
@@ -118,10 +108,5 @@ object BenchDoorProbe {
       s""""single_median":${f(med(singleSecs))},""" +
       s""""sharded_median":${f(med(shardSecs))},""" +
       s""""sharded_over_single":${f(med(shardSecs) / med(singleSecs))}}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_door_probe.json")),
-      (json + "\n").getBytes("UTF-8"))
-    spark.stop()
-    println(json)
   }
 }

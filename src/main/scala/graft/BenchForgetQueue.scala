@@ -17,26 +17,16 @@ import graft.operators.{Bm25Store, CorpusStores, FingerprintStore, Forget,
   * The honest claim shape: a composed walk's cost is dominated by
   * per-store whole-table rewrites, so N requests coalesced into one walk
   * should cost ~1/N of N sequential walks — while `submit` (the half
-  * that runs with ingest live) stays milliseconds. Emits ONE JSON line
-  * to `SPARK_GRAFT_BENCH_OUT` (default BENCH_forget_queue.json). */
+  * that runs with ingest live) stays milliseconds. Returns ONE JSON line
+  * (`graft.Bench forget_queue` writes BENCH_forget_queue.json). */
 object BenchForgetQueue {
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/bench-sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val requests = sys.env.getOrElse("SPARK_GRAFT_FQ_REQUESTS", "8").toInt
-    val perReq = sys.env.getOrElse("SPARK_GRAFT_FQ_IDS", "25").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  private val Requests = 8
+  private val IdsPerRequest = 25
 
-    def timed(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
-    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+  def run(spark: SparkSession): String = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/bench-sf1")
+    import Bench.{timed, tmp}
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "text").localCheckpoint()
@@ -44,12 +34,12 @@ object BenchForgetQueue {
     def pool(res: Long) = docs
       .filter(col("doc_id") < ScaleCorpus.Offset &&
         pmod(col("doc_id"), lit(29L)) === res)
-      .limit(requests * perReq).localCheckpoint()
+      .limit(Requests * IdsPerRequest).localCheckpoint()
     val seqPool = pool(0L)
     val coalPool = pool(1L)
     def chunks(poolDf: org.apache.spark.sql.DataFrame) = {
       val ids = poolDf.select("doc_id").collect().map(_.getLong(0)).sorted
-      ids.grouped(perReq).take(requests).toSeq.map { g =>
+      ids.grouped(IdsPerRequest).take(Requests).toSeq.map { g =>
         poolDf.filter(col("doc_id").isin(g.map(Long.box): _*))
       }
     }
@@ -88,18 +78,13 @@ object BenchForgetQueue {
     }
 
     def f(v: Double) = f"$v%.3f"
-    val json = s"""{"metric":"forget_queue","unit":"sec","sf":"$sfDir",""" +
-      s""""requests":$nReq,"ids_per_request":$perReq,""" +
+    s"""{"metric":"forget_queue","unit":"sec","sf":"$sfDir",""" +
+      s""""requests":$nReq,"ids_per_request":$IdsPerRequest,""" +
       s""""sequential_total":${f(seqTotal)},""" +
       s""""sequential_per_walk":[${perWalk.map(f).mkString(",")}],""" +
       s""""submit_total":${f(submitSecs.sum)},""" +
       s""""submit_max":${f(submitSecs.max)},""" +
       s""""drain":${f(drainSec)},""" +
       s""""amortization":${f(seqTotal / math.max(1e-9, submitSecs.sum + drainSec))}}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_forget_queue.json")),
-      (json + "\n").getBytes("UTF-8"))
-    spark.stop()
-    println(json)
   }
 }

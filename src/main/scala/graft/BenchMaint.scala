@@ -17,28 +17,18 @@ import graft.operators.{AnnIndex, Bm25Store, FingerprintStore, LmStore,
   * naively invites (per-id scans). The fixed 200-id/doc takedown batch is
   * identical at both decades; only store size grows.
   *
-  * Emits ONE JSON line to `SPARK_GRAFT_BENCH_OUT` (default
-  * BENCH_maint.json): per store and decade, seed/retract/compact seconds
+  * Returns ONE JSON line (`graft.Bench maint` writes BENCH_maint.json)
+  * over the two decades `SPARK_GRAFT_SF1_DIR` and `SPARK_GRAFT_SF10_DIR`:
+  * per store and decade, seed/retract/compact seconds
   * plus the retract and compact sf10/sf1 ratios (store-size scaling, 10×
   * data → the linearity envelope is ~≤10× with file-count fixed costs
   * keeping small stores flat). */
 object BenchMaint {
 
-  def main(args: Array[String]): Unit = {
-    val dirs = if (args.nonEmpty) args.toSeq
-      else Seq(sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "/tmp/bench-sf1"),
-        sys.env.getOrElse("SPARK_GRAFT_SF10_DIR", "/tmp/bench-sf10"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def timed(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
+  def run(spark: SparkSession): String = {
+    val dirs = Seq(sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "/tmp/bench-sf1"),
+      sys.env.getOrElse("SPARK_GRAFT_SF10_DIR", "/tmp/bench-sf10"))
+    import Bench.{timed, tmp}
 
     // one decade's measurements: Map(store -> (seed, retract, compact)),
     // plus the ANN recenter walls (raw + PQ — their own verbs)
@@ -59,8 +49,6 @@ object BenchMaint {
       val goneDocs = docs
         .join(broadcast(idsDf(spark, goneIds)), Seq("doc_id"), "left_semi")
         .localCheckpoint()
-      def tmp(p: String) =
-        java.nio.file.Files.createTempDirectory(p).toString
       val out = scala.collection.mutable.Map[String, (Double, Double, Double)]()
 
       val fpDir = tmp("maint_fp")
@@ -167,14 +155,9 @@ object BenchMaint {
           s""""ann_pq_recenter":{"sf1":${f(p1)},"sf10":${f(p10)},""" +
           s""""decade_ratio":${f(p10 / math.max(1e-9, p1))}}"""
       } else ""
-    val json = s"""{"metric":"store_maintenance","unit":"sec",""" +
+    s"""{"metric":"store_maintenance","unit":"sec",""" +
       s""""batch_ids":200,"dirs":$dirJson,"decade_ratios":$ratios""" +
       recenterJson + "}"
-    java.nio.file.Files.write(java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_maint.json")),
-      (json + "\n").getBytes("UTF-8"))
-    spark.stop()
-    println(json)
   }
 
   /** Seq[Long] -> single-column DataFrame("doc_id"). */

@@ -22,31 +22,22 @@ import graft.operators.{Bm25Store, LmStore}
   * postings/count rows per term stay bounded by the input's vocabulary).
   * Times are min-of-`Reps` after an untimed warm probe per store.
   *
-  * Emits ONE JSON line to `SPARK_GRAFT_BENCH_OUT` (default
-  * BENCH_probe.json). */
+  * Returns ONE JSON line (`graft.Bench probe` writes BENCH_probe.json). */
 object BenchProbe {
   private val Reps = 5
 
-  def main(args: Array[String]): Unit = {
+  def run(spark: SparkSession): String = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/bench-sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "text")
     val small = docs.filter(col("doc_id") < ScaleCorpus.Offset)
 
-    val bmS = java.nio.file.Files.createTempDirectory("bm_small").toString
-    val bmL = java.nio.file.Files.createTempDirectory("bm_large").toString
+    val bmS = Bench.tmp("bm_small")
+    val bmL = Bench.tmp("bm_large")
     Bm25Store.seed(small, "doc_id", "text", bmS)
     Bm25Store.seed(docs, "doc_id", "text", bmL)
-    val lmS = java.nio.file.Files.createTempDirectory("lm_small").toString
-    val lmL = java.nio.file.Files.createTempDirectory("lm_large").toString
+    val lmS = Bench.tmp("lm_small")
+    val lmL = Bench.tmp("lm_large")
     LmStore.seed(small, "doc_id", "text", lmS)
     LmStore.seed(docs, "doc_id", "text", lmL)
     // measure the steady state: a production store is compacted (the
@@ -158,15 +149,9 @@ object BenchProbe {
     val lmSm = lmRegime("lm_score_small_batch", lmSmallBatch)
     val lm = lmRegime("lm_score_large_batch", lmBatch)
 
-    val json =
-      f"""{"metric":"text_index_probe_flatness","unit":"sec","sf":"$sfDir",""" +
+    f"""{"metric":"text_index_probe_flatness","unit":"sec","sf":"$sfDir",""" +
       f""""store_ratio":10.0,""" +
       f""""lm_catalog_control":{"small_store_sec":$ctlS%.4f,""" +
       f""""large_store_sec":$ctlL%.4f},$bm,$lmNv,$lmSm,$lm}"""
-    val out = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_probe.json"))
-    java.nio.file.Files.write(out, (json + "\n").getBytes("UTF-8"))
-    spark.stop()
-    println(json)
   }
 }

@@ -33,28 +33,20 @@ import graft.operators.{Dedup, SignatureStore}
   *    NumShards must grow with the store so a trigger batch keeps touching
   *    a fraction (the same sizing rule as any LSH/IVF partition count).
   *
-  * Emits ONE JSON line and writes it to `SPARK_GRAFT_BENCH_OUT`
-  * (default BENCH_screen.json): per-store sig rows and per-regime probe
-  * seconds + large/small-store ratios. */
+  * Returns ONE JSON line (`graft.Bench screen` writes BENCH_screen.json):
+  * per-store sig rows and per-regime probe seconds + large/small-store
+  * ratios. */
 object BenchScreen {
   private val Reps = 5
 
-  def main(args: Array[String]): Unit = {
+  def run(spark: SparkSession): String = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/bench-sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "text")
     val small = docs.filter(col("doc_id") < ScaleCorpus.Offset)
 
-    val dirS = java.nio.file.Files.createTempDirectory("scr_small").toString
-    val dirL = java.nio.file.Files.createTempDirectory("scr_large").toString
+    val dirS = Bench.tmp("scr_small")
+    val dirL = Bench.tmp("scr_large")
     SignatureStore.seed(small, "doc_id", "text", dirS)
     SignatureStore.seed(docs, "doc_id", "text", dirL)
 
@@ -107,16 +99,10 @@ object BenchScreen {
     }
 
     val rows = SignatureStore.read(spark, dirS).count()
-    val json =
-      f"""{"metric":"screen_probe_flatness","unit":"sec","sf":"$sfDir",""" +
+    f"""{"metric":"screen_probe_flatness","unit":"sec","sf":"$sfDir",""" +
       f""""small_store_rows":$rows,"large_store_rows":${rows * 10},""" +
       f""""store_ratio":10.0,""" +
       regime("small_batch", 10, sigsS) + "," +
       regime("large_batch", 200, sigsL) + "}"
-    val out = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_screen.json"))
-    java.nio.file.Files.write(out, (json + "\n").getBytes("UTF-8"))
-    spark.stop()
-    println(json)
   }
 }

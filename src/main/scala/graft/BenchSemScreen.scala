@@ -29,7 +29,7 @@ import graft.operators.AnnIndex
   * copy-0 vectors (+1e-3 nudge on one dim — flagged in BOTH stores, cos
   * ~1 vs the 0.95 copy-twin / 0.65 stranger ceilings) plus novel vectors
   * (flag nowhere). Times are min-of-`Reps` after an untimed warm probe.
-  * Emits ONE JSON line to `SPARK_GRAFT_BENCH_OUT` (default
+  * Returns ONE JSON line (`graft.Bench semscreen` writes
   * BENCH_semscreen.json). */
 object BenchSemScreen {
   private val Reps = 5
@@ -37,16 +37,8 @@ object BenchSemScreen {
   private val NList = 64
   private val NProbe = 4
 
-  def main(args: Array[String]): Unit = {
+  def run(spark: SparkSession): String = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/bench-sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select("vec_id", "embedding").localCheckpoint()
     val small = emb.filter(col("vec_id") < ScaleCorpus.Offset)
@@ -109,17 +101,11 @@ object BenchSemScreen {
     }
 
     val rows = spark.read.parquet(s"$dirS/lists").count()
-    val json =
-      f"""{"metric":"semantic_screen_probe","unit":"sec","sf":"$sfDir",""" +
+    f"""{"metric":"semantic_screen_probe","unit":"sec","sf":"$sfDir",""" +
       f""""nlist":$NList,"nprobe":$NProbe,"threshold":$Threshold,""" +
       f""""small_store_rows":$rows,"large_store_rows":${rows * 10},""" +
       f""""store_ratio":10.0,""" +
       regime("small_batch", batchS) + "," +
       regime("large_batch", batchL) + "}"
-    val out = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_semscreen.json"))
-    java.nio.file.Files.write(out, (json + "\n").getBytes("UTF-8"))
-    spark.stop()
-    println(json)
   }
 }

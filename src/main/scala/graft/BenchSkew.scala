@@ -13,9 +13,9 @@ import org.apache.spark.sql.SparkSession
   *
   * Methodology = [[Bench]]: untimed warm passes (codegen at sf0.001, then
   * both target dirs so content-keyed session artifacts build untimed),
-  * GC between timings, min-of-pairs. Output: one JSON line to stdout and
-  * `BENCH_skew.json` — per-query uniform/skew seconds + ratio, both raw
-  * pairs in the file. */
+  * GC between timings, min-of-pairs. Returns one JSON line (`graft.Bench
+  * skew` writes BENCH_skew.json): per-query uniform/skew seconds + ratio
+  * and both raw pairs. */
 object BenchSkew {
 
   /** The queries whose plans key on lang/source — the skew-sensitive set. */
@@ -23,35 +23,25 @@ object BenchSkew {
     "corpus_build", "mix_token_fill", "export_curriculum",
     "quality_quantiles", "gate_admission")
 
-  def main(args: Array[String]): Unit = {
+  /** Copies of the source dir in each generated corpus. */
+  private val Copies = 10
+
+  def run(spark: SparkSession): String = {
     val src = sys.env.getOrElse("SPARK_GRAFT_SRC", "/root/testdata/sf0.1")
     val uniformDir = sys.env.getOrElse("SPARK_GRAFT_UNIFORM_DIR",
       "/tmp/bench-sf1")
     val skewDir = sys.env.getOrElse("SPARK_GRAFT_SKEW_DIR",
       "/tmp/bench-sf1-skew")
-    val copies = sys.env.getOrElse("SPARK_GRAFT_COPIES", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    ScaleCorpus.generate(spark, src, uniformDir, copies)
-    ScaleCorpus.generate(spark, src, skewDir, copies, skew = true)
+    ScaleCorpus.generate(spark, src, uniformDir, Copies)
+    ScaleCorpus.generate(spark, src, skewDir, Copies, skew = true)
     val queries = Names.map(n => n -> SparkEntry.queries(n))
     // codegen warmup (small), then content-keyed artifact warmup per dir
-    val warmDir0 = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR",
-      "/root/testdata/sf0.001")
-    val warmDir =
-      if (new java.io.File(warmDir0).isDirectory) warmDir0 else uniformDir
-    Seq(warmDir, uniformDir, skewDir).foreach { d =>
+    Seq(Bench.warmDir(uniformDir), uniformDir, skewDir).foreach { d =>
       queries.foreach { case (_, fn) =>
         try { fn(spark, d).count() } catch { case _: Throwable => () }
       }
     }
-    def releaseBlocks(): Unit = { System.gc(); Thread.sleep(50) }
-    releaseBlocks()
+    Bench.releaseBlocks()
     var failed = List.empty[String]
     // A throwing query must NOT contribute a timing: a near-zero "elapsed"
     // from an early failure would silently flatten the skew/uniform ratio
@@ -63,7 +53,7 @@ object BenchSkew {
         val ok = try { fn(spark, dir).count(); true }
         catch { case _: Throwable => failed ::= s"$name@$dir"; false }
         val dt = if (ok) (System.nanoTime() - t0) / 1e9 else Double.NaN
-        releaseBlocks()
+        Bench.releaseBlocks()
         name -> dt
       }.toMap
     val u1 = timedPass(uniformDir); val s1 = timedPass(skewDir)
@@ -85,13 +75,9 @@ object BenchSkew {
     val fs = failed.reverse.distinct.map("\"" + _ + "\"")
       .mkString("[", ",", "]")
     val ratio = if (uTot > 0) sTot / uTot else 0.0
-    val line = s"""{"metric":"skew_over_uniform","value":${f(ratio)},""" +
+    s"""{"metric":"skew_over_uniform","value":${f(ratio)},""" +
       s""""unit":"ratio","uniform_total":${f(uTot)},"skew_total":${f(sTot)},""" +
-      s""""queries":$perQ,"failed":$fs,"copies":$copies,"src":"$src"}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_SKEW_OUT", "BENCH_skew.json")),
-      (line.dropRight(1) + s""","pairs":$pairs}""" + "\n").getBytes("UTF-8"))
-    spark.stop()
-    println(line)
+      s""""queries":$perQ,"failed":$fs,"copies":$Copies,"src":"$src",""" +
+      s""""pairs":$pairs}"""
   }
 }

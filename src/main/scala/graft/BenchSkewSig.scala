@@ -32,7 +32,7 @@ import graft.operators.{Dedup, SignatureStore}
   *     NON-template doc must flag in every configuration (its band groups
   *     are cold — the cap's recall trade never touches it).
   *
-  * Emits ONE JSON line to `SPARK_GRAFT_BENCH_OUT` (default
+  * Returns ONE JSON line (`graft.Bench skew_sig` writes
   * BENCH_skew_sig.json). Synthetic frames — no scale dir needed. */
 object BenchSkewSig {
   private val Reps = 3
@@ -44,15 +44,7 @@ object BenchSkewSig {
   private val BandCap = 200
   private val Threshold = 0.7
 
-  def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
+  def run(spark: SparkSession): String = {
     def minOf(body: => Long): (Double, Long) = {
       body // warm
       var n = 0L
@@ -118,8 +110,8 @@ object BenchSkewSig {
       .localCheckpoint()
     val xText = hotStore.filter(col("doc_id") === 4L)
       .select("text").head().getString(0) // ids ≡ 4 (mod 5): unique branch
-    val uniDir = java.nio.file.Files.createTempDirectory("sks_uni").toString
-    val hotDir = java.nio.file.Files.createTempDirectory("sks_hot").toString
+    val uniDir = Bench.tmp("sks_uni")
+    val hotDir = Bench.tmp("sks_hot")
     SignatureStore.seed(uniStore, "doc_id", "text", uniDir)
     SignatureStore.seed(hotStore, "doc_id", "text", hotDir)
     // probe: 50 fresh template-family docs + 49 novels + X re-delivered
@@ -158,7 +150,7 @@ object BenchSkewSig {
     // runs, so only the per-epoch incremental census fold can surface the
     // hot bands to the capped probe. Before the fold existed this probe
     // measured at the uncapped figure until the next compact.
-    val appDir = java.nio.file.Files.createTempDirectory("sks_app").toString
+    val appDir = Bench.tmp("sks_app")
     SignatureStore.seed(hotStore.filter(pmod(col("doc_id"), lit(5L)) === 4L),
       "doc_id", "text", appDir)
     val appSink = SignatureStore.appender(spark, appDir, "doc_id", "text",
@@ -173,8 +165,7 @@ object BenchSkewSig {
     val (jAU, tAU) = probeJson("probe_append_grown_uncapped", appDir,
       Int.MaxValue)
 
-    val json =
-      f"""{"metric":"skew_sig","unit":"sec",""" +
+    f"""{"metric":"skew_sig","unit":"sec",""" +
       h416 + "," + h321 + "," + hUnc + "," +
       f""""band_probe":{"store_docs":$StoreDocs,"cap":$BandCap,""" +
       f""""threshold":$Threshold,""" +
@@ -183,10 +174,5 @@ object BenchSkewSig {
       f""""templated_uncapped_over_uniform":${tHU / tUU}%.3f,""" +
       f""""append_grown_capped_over_uniform":${tAC / tUU}%.3f,""" +
       f""""append_grown_capped_over_uncapped":${tAC / tAU}%.3f}}"""
-    val out = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_skew_sig.json"))
-    java.nio.file.Files.write(out, (json + "\n").getBytes("UTF-8"))
-    spark.stop()
-    println(json)
   }
 }

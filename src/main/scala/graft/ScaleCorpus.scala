@@ -104,9 +104,8 @@ object ScaleCorpus {
     val n = if (args.length > 2) args(2).toInt else 10
     val skew = args.length > 3 && args(3) == "skew"
     val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+      .master(s"local[${Bench.cpus}]")
+      .config("spark.sql.shuffle.partitions", Bench.cpus.toString)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -46,23 +46,6 @@ object TextFns {
   /** Whitespace token count (text-analysis extension; BASELINE.json north star). */
   def tokenCount(c: Column): Column = size(split(c, "\\s+"))
 
-  /** BPE-ish subword-piece count: tokens are runs of letters, digits, or single
-    * punctuation marks — a deterministic stand-in for a real BPE vocab. */
-  def bpeishTokenCount(c: Column): Column =
-    size(regexp_extract_all(c, lit("[a-z]+|[A-Z]+|[0-9]+|[^A-Za-z0-9\\s]"), lit(0)))
-
-  /** Character n-gram shingles of the whitespace-normalized text (dedup building
-    * block). Returns ARRAY<STRING> of the distinct `n`-grams. */
-  def charShingles(c: Column, n: Int): Column = {
-    val norm = regexp_replace(trim(c), "\\s+", " ")
-    array_distinct(
-      filter(
-        transform(
-          sequence(lit(0), greatest(length(norm) - n, lit(0))),
-          i => substring(norm, lit(1) + i, lit(n))),
-        s => length(s) === n))
-  }
-
   /** Normalized whitespace token array (the shingle base). */
   def normTokens(c: Column): Column =
     split(regexp_replace(trim(c), "\\s+", " "), " ")

@@ -47,11 +47,6 @@ object Lstm {
   }
 
   final case class Model(params: Params) extends Serializable {
-    /** Log-softmax class scores for one sequence of token vectors. */
-    def logProba(seq: Array[Array[Double]]): Array[Double] = {
-      val z = forwardLogits(params, seq)
-      logSoftmaxInPlace(z); z
-    }
     def predict(seq: Array[Array[Double]]): Int = {
       val z = forwardLogits(params, seq)
       var best = 0; var k = 1

@@ -141,12 +141,6 @@ object Adaptation {
     (model, losses)
   }
 
-  /** P8: apply a fitted linear mapping W to an embedding column (broadcast as a
-    * plan literal — the reference's `x·Wᵀ`, adaptation/stream.py:49-54 intended
-    * semantics; see SURVEY P8 faithfulness note on the dead matmul branch). */
-  def applyMapping(w: Array[Array[Double]], vec: org.apache.spark.sql.Column) =
-    VecFns.matApply(w, vec)
-
   /** Evaluation: mean per-row MSE between (mapped) source and target. */
   def mappingMse(pairs: DataFrame, sourceCol: String, targetCol: String,
                  w: Option[Array[Array[Double]]]): Double = {

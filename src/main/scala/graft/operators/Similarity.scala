@@ -163,19 +163,6 @@ object Similarity {
     pqTopKWith(queries, corpus, qidCol, idCol, vecCol, k, None, m, ksub)
   }
 
-  /** PQ top-k with a seeded-k-means-trained codebook
-    * ([[graft.ml.KMeansQuantizer.fitProduct]]): subspace centroids adapt to
-    * the corpus distribution instead of the hash family — the recall path for
-    * real (clustered) data. Verified by recall gates, not bit-replay. */
-  def pqTopKTrained(queries: DataFrame, corpus: DataFrame, qidCol: String,
-                    idCol: String, vecCol: String, k: Int,
-                    m: Int = 8, ksub: Int = 16, iters: Int = 5,
-                    seed: Long = 42L): DataFrame = {
-    val cb = graft.ml.KMeansQuantizer.fitProduct(corpus, idCol, vecCol, m,
-      ksub, iters, seed)
-    pqTopKWith(queries, corpus, qidCol, idCol, vecCol, k, Some(cb))
-  }
-
   /** ADC shortlist + exact re-rank (the FAISS "refine" stage): PQ codes give a
     * cheap `rerank`-deep candidate shortlist per query; the shortlist — and
     * only the shortlist — is re-scored with exact cosine. The shortlist is

@@ -48,16 +48,6 @@ object StreamOps {
       .withWatermark("ts", watermark)
       .dropDuplicatesWithinWatermark(idCol)
 
-  /** Sliding-window per-user activity with late-data tolerance. */
-  def slidingUserActivity(events: DataFrame, watermark: String = "10 minutes",
-                          win: String = "10 minutes", slide: String = "5 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), win, slide), col("user_id"))
-      .agg(count(lit(1)).as("n_events"), avg("value").as("avg_value"))
-      .select(col("window.start").as("win_start"), col("user_id"),
-        col("n_events"), col("avg_value"))
-
   /** ST4: prequential (test-then-train) Gaussian-NB over a micro-batched
     * stream — the reference's `predict; partial_fit` loop
     * (models/wos_train_nb.py:65-114) in `foreachBatch` form.
@@ -79,7 +69,6 @@ object StreamOps {
     private val mean = Array.fill(nClasses)(DenseVector.zeros[Double](dim))
     private val m2 = Array.fill(nClasses)(DenseVector.zeros[Double](dim))
 
-    def classCount(c: Int): Long = n(c)
     def totalCount: Long = n.sum
 
     def stats(c: Int): (Long, Array[Double], Array[Double]) =

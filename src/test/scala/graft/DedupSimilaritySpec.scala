@@ -156,7 +156,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       !pruned.exists(_._1 == 102L), pruned.toString)
     // plan pin: with checkpoints off, the probe's plan must show BOTH store
     // scans statically partition-pruned — bands by bucket, sigs by shard.
-    // Empirical twin: graft.BenchScreen / BENCH_screen.json measures this
+    // Empirical twin: graft.Bench screen / BENCH_screen.json measures this
     // pruning's payoff — the SAME probe batch against a store and a 10×
     // store costs ~the same wall time (ratio 1.05) while the batch touches
     // a fraction of the 256 buckets / 64 shards, degrading only when the
