@@ -11,8 +11,8 @@ import graft.operators.{Bm25Store, CorpusStores, FingerprintStore, Forget,
   * sequential walks over the same deployment (fp + BM25 + LM — the
   * stores whose retracts are whole-store rewrites). Same total id count
   * on both paths, disjoint id sets (a store can only forget a doc once),
-  * same store instance (the 400 retracted ids are ~1% of the corpus, so
-  * store size is effectively constant across the comparison).
+  * same store instance (the 400 retracted ids are the JSON's
+  * `retracted_share` of the corpus: 8% of a 10-copy sf0.01 corpus).
   *
   * The honest claim shape: a composed walk's cost is dominated by
   * per-store whole-table rewrites, so N requests coalesced into one walk
@@ -23,26 +23,39 @@ object BenchForgetQueue {
 
   private val Requests = 8
   private val IdsPerRequest = 25
+  /** The pools are the residues 0 and 1 of `doc_id` mod this: a 10-copy
+    * sf0.01 corpus (5,000 docs) gives 250 ids per pool, enough for every
+    * request. */
+  private val PoolModulus = 20L
+
+  /** The two disjoint request pools (sequential, coalesced), each
+    * `Requests` chunks of `IdsPerRequest` ids. Throws, naming the shortfall
+    * and the corpus, when a pool is short: a comparison over fewer requests
+    * does not measure the coalescing. */
+  def requestPools(spark: SparkSession, sfDir: String): Seq[Seq[Array[Long]]] = {
+    val want = Requests * IdsPerRequest
+    val ids = spark.read.parquet(s"$sfDir/documents.parquet").select("doc_id")
+    Seq(0L, 1L).map { res =>
+      val pool = ids.filter(pmod(col("doc_id"), lit(PoolModulus)) === res)
+        .orderBy("doc_id").limit(want).collect().map(_.getLong(0))
+      require(pool.length == want,
+        s"forget_queue: $sfDir holds ${pool.length} ids with doc_id mod " +
+          s"$PoolModulus = $res, ${want - pool.length} short of the $want " +
+          s"that $Requests requests of $IdsPerRequest ids need")
+      pool.grouped(IdsPerRequest).toSeq
+    }
+  }
 
   def run(spark: SparkSession): String = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/bench-sf1")
     import Bench.{timed, tmp}
 
+    val pools = requestPools(spark, sfDir)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "text").localCheckpoint()
-    // two disjoint request pools from copy-0 ids (present at any decade)
-    def pool(res: Long) = docs
-      .filter(col("doc_id") < ScaleCorpus.Offset &&
-        pmod(col("doc_id"), lit(29L)) === res)
-      .limit(Requests * IdsPerRequest).localCheckpoint()
-    val seqPool = pool(0L)
-    val coalPool = pool(1L)
-    def chunks(poolDf: org.apache.spark.sql.DataFrame) = {
-      val ids = poolDf.select("doc_id").collect().map(_.getLong(0)).sorted
-      ids.grouped(IdsPerRequest).take(Requests).toSeq.map { g =>
-        poolDf.filter(col("doc_id").isin(g.map(Long.box): _*))
-      }
-    }
+    val nDocs = docs.count()
+    val Seq(chunksSeq, chunksCoal) = pools.map(_.map(g =>
+      docs.filter(col("doc_id").isin(g.map(Long.box): _*))))
 
     val fpDir = tmp("fq_fp"); val bmDir = tmp("fq_bm25")
     val lmDir = tmp("fq_lm")
@@ -51,14 +64,6 @@ object BenchForgetQueue {
     LmStore.seed(docs, "doc_id", "text", lmDir)
     val stores = CorpusStores(fpDir = Some(fpDir), bm25Dir = Some(bmDir),
       lmDir = Some(lmDir))
-
-    // the copy-0 residue pools may run short of requests×perReq at small
-    // corpora — size the comparison to the full chunks both pools support
-    val chunksSeq0 = chunks(seqPool)
-    val chunksCoal0 = chunks(coalPool)
-    val nReq = math.min(chunksSeq0.size, chunksCoal0.size)
-    val chunksSeq = chunksSeq0.take(nReq)
-    val chunksCoal = chunksCoal0.take(nReq)
 
     // N sequential composed walks, one per request
     val ledgerSeq = tmp("fq_ledger_seq")
@@ -74,12 +79,13 @@ object BenchForgetQueue {
     }
     val drainSec = timed {
       val drained = ForgetQueue.drain(spark, queueDir, ledgerQ, stores)
-      require(drained.size == nReq, s"drained ${drained.size}, want $nReq")
+      require(drained.size == Requests, s"drained ${drained.size}, want $Requests")
     }
 
     def f(v: Double) = f"$v%.3f"
     s"""{"metric":"forget_queue","unit":"sec","sf":"$sfDir",""" +
-      s""""requests":$nReq,"ids_per_request":$IdsPerRequest,""" +
+      s""""requests":$Requests,"ids_per_request":$IdsPerRequest,""" +
+      s""""retracted_share":${f(2.0 * Requests * IdsPerRequest / nDocs)},""" +
       s""""sequential_total":${f(seqTotal)},""" +
       s""""sequential_per_walk":[${perWalk.map(f).mkString(",")}],""" +
       s""""submit_total":${f(submitSecs.sum)},""" +

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSession}
 
 /** Native Catalyst expressions for the hot per-row vector kernels (SURVEY §4
   * item 2: "custom expressions … instead of Scala UDFs").
@@ -183,32 +183,16 @@ object VectorFunctions {
   def vecCosine(a: Column, b: Column): Column = column(VecCosine(expression(a), expression(b)))
   def vecL2Sq(a: Column, b: Column): Column = column(VecL2Sq(expression(a), expression(b)))
 
-  /** (name, builder) for each SQL-callable kernel. */
-  val sqlFunctions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
+  /** Register the kernels as SQL functions on a session:
+    * `SELECT vec_cosine(a, b) FROM …`. */
+  def register(spark: SparkSession): Unit =
     Seq[(String, String, Seq[Expression] => Expression)](
       ("vec_dot", "dot product of two numeric arrays", es => VecDot(es(0), es(1))),
       ("vec_cosine", "cosine similarity of two numeric arrays", es => VecCosine(es(0), es(1))),
       ("vec_l2sq", "squared L2 distance of two numeric arrays", es => VecL2Sq(es(0), es(1)))
-    ).map { case (name, usage, builder) =>
-      (FunctionIdentifier(name),
+    ).foreach { case (name, usage, builder) =>
+      spark.sessionState.functionRegistry.registerFunction(FunctionIdentifier(name),
         new ExpressionInfo("graft.expressions.VectorExpressions", null, name, usage, ""),
         builder)
     }
-
-  /** Register the kernels on an existing session (e.g. one the driver built
-    * without `spark.sql.extensions`): `SELECT vec_cosine(a, b) FROM …`. */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    sqlFunctions.foreach { case (ident, info, builder) =>
-      registry.registerFunction(ident, info, builder)
-    }
-  }
-}
-
-/** `SparkSessionExtensions` hook: sessions built with
-  * `.config("spark.sql.extensions", "graft.expressions.GraftExtensions")` get the vector
-  * kernels as native SQL functions at session construction. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
-    VectorFunctions.sqlFunctions.foreach(ext.injectFunction)
 }

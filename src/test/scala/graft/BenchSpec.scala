@@ -3,7 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** graft.Bench's per-query breakdown: what its listener attributes to a
-  * query is that query's own work, and only a known scenario runs. */
+  * query is that query's own work; only a known scenario runs, and
+  * forget_queue runs only on a corpus that holds its full requests. */
 class BenchSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   val dir = "/root/testdata/sf0.001"
@@ -32,5 +33,13 @@ class BenchSpec extends AnyFunSuite {
     val e = intercept[IllegalArgumentException](Bench.scenario("no_such"))
     Bench.scenarios.foreach { case (n, _) => assert(e.getMessage.contains(n)) }
     assert(Bench.scenario("screen") eq Bench.scenarios.head._2)
+  }
+
+  test("forget_queue's pool check refuses a corpus too small for its full requests") {
+    val e = intercept[IllegalArgumentException](
+      BenchForgetQueue.requestPools(spark, dir))
+    assert(e.getMessage.contains(dir), e.getMessage)
+    assert(e.getMessage.contains("holds 25 ids") &&
+      e.getMessage.contains("175 short of the 200"), e.getMessage)
   }
 }
