@@ -230,6 +230,31 @@ object AnnIndex {
     TopK.topKPerQuery(rescored, k)
   }
 
+  /** Where every sink's epoch stage publishes: the `lists/list_id=K/`
+    * partitions. */
+  private val Lists = Seq("lists" -> "list_id")
+
+  /** Mount a sink on its epoch namespace: heal a crashed compact's aside,
+    * then publish or discard what a crashed epoch left staged. */
+  private def mount(spark: SparkSession,
+                    commit: EpochLog.Commit): EpochLog.Commit = {
+    graft.Tuning.mountDefaults(spark) // the index reads list on the driver
+    val fs = fsOf(spark, commit.dir)
+    TableSwap.heal(fs, commit.dir, "lists")
+    commit.heal(fs)
+    commit
+  }
+
+  /** The appenders' epoch namespace: stages `.ingested_stage_<e>`, markers
+    * `_ingested_epoch_<e>` (one maintainer stream per index, so no tag). */
+  private def mountAppender(spark: SparkSession,
+                            indexDir: String): EpochLog.Commit =
+    mount(spark, EpochLog.Commit(indexDir, ".ingested_stage_",
+      "_ingested_epoch_", Lists))
+
+  private def fsOf(spark: SparkSession, dir: String) =
+    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
   /** Streaming index maintenance: a `writeStream.foreachBatch` sink that
     * assigns each newly ingested micro-batch with the index's own coarse
     * centroids (read once per sink, model-sized) and appends it into the
@@ -240,12 +265,13 @@ object AnnIndex {
     * partition-discovery semantics — no index rebuild). Vectors are cast to
     * `array<double>`, the lists' built schema.
     *
-    * Idempotent under foreachBatch's at-least-once re-delivery: each epoch
-    * leaves a marker file after its append commits, and a re-delivered (or
-    * restarted-without-checkpoint) epoch that finds its marker is skipped —
-    * without this, a replayed batch would double its vectors in the lists and
-    * duplicate ids would crowd true neighbors out of top-k results. One
-    * maintainer stream per index (epoch ids are the stream's own).
+    * Exactly-once under foreachBatch's at-least-once re-delivery through
+    * [[EpochLog.Commit]]: the epoch's list files stage, its marker commits,
+    * then they move into the lists. A replayed epoch that finds its marker
+    * is skipped, and a crash before the marker discards the stage at the
+    * next mount — a replayed batch never doubles its vectors in the lists,
+    * where duplicate ids would crowd true neighbors out of top-k results.
+    * One maintainer stream per index (epoch ids are the stream's own).
     * Re-centering over drift: watch with
     * [[graft.streaming.StreamOps.StreamingKMeans]] and either rebuild under
     * a new variant token or swap in place with [[recenter]] (between
@@ -255,15 +281,11 @@ object AnnIndex {
                   autoCompactEvery: Int = AutoCompact.DefaultCheckEvery,
                   autoCompactFactor: Int = AutoCompact.DefaultFactor):
       (DataFrame, Long) => Unit = {
-    graft.Tuning.mountDefaults(spark) // the index reads list on the driver
-    healPrecompact(spark, indexDir)
+    val commit = mountAppender(spark, indexDir)
     val cents = loadCentroids(spark, indexDir)
     val auto = new AutoCompact(autoCompactEvery, autoCompactFactor)
     (batch: DataFrame, epoch: Long) => {
-      val marker = new Path(s"$indexDir/_ingested_epoch_$epoch")
-      val fs = marker.getFileSystem(
-        batch.sparkSession.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker) && !batch.isEmpty) {
+      commit.run(fsOf(batch.sparkSession, indexDir), batch, epoch) { stage =>
         batch.select(col(idCol).cast("long").as("cid"),
             col(vecCol).cast("array<double>").as("cvec"))
           .select(
@@ -271,9 +293,8 @@ object AnnIndex {
               .as("list_id"),
             col("cid"), col("cvec"))
           .repartition(col("list_id")) // one file per touched list per epoch
-          .write.mode("append").partitionBy("list_id")
-          .parquet(s"$indexDir/lists")
-        fs.create(marker, true).close()
+          .write.partitionBy("list_id").parquet(s"$stage/lists")
+      } { _ =>
         // epoch fully committed: the between-epochs single-writer window
         auto.tick(listFileCount(spark, indexDir), cents.length)(
           compact(spark, indexDir))
@@ -282,7 +303,7 @@ object AnnIndex {
   }
 
   /** Streaming maintenance for the PQ-coded index ([[ivfPqIndexDir]]): same
-    * epoch-marker idempotence protocol as [[ivfAppender]], but each appended
+    * epoch protocol and marker namespace as [[ivfAppender]], but each appended
     * row is the coarse list assignment plus `m` sub-quantizer codes — the
     * ingested vector itself never lands in the index, so on-disk growth
     * stays ~50–100× below raw-vector appends at ingest rate. The refine
@@ -299,16 +320,12 @@ object AnnIndex {
                     autoCompactEvery: Int = AutoCompact.DefaultCheckEvery,
                     autoCompactFactor: Int = AutoCompact.DefaultFactor):
       (DataFrame, Long) => Unit = {
-    graft.Tuning.mountDefaults(spark) // the index reads list on the driver
-    healPrecompact(spark, indexDir)
+    val commit = mountAppender(spark, indexDir)
     val cents = loadCentroids(spark, indexDir)
     val cb = loadCodebook(spark, indexDir)
     val auto = new AutoCompact(autoCompactEvery, autoCompactFactor)
     (batch: DataFrame, epoch: Long) => {
-      val marker = new Path(s"$indexDir/_ingested_epoch_$epoch")
-      val fs = marker.getFileSystem(
-        batch.sparkSession.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker) && !batch.isEmpty) {
+      commit.run(fsOf(batch.sparkSession, indexDir), batch, epoch) { stage =>
         val vec = col(vecCol).cast("array<double>")
         val assigned = batch.select(
             element_at(NearestCentroids.column(vec, cents, 1), 1)
@@ -318,9 +335,8 @@ object AnnIndex {
         val codeCols = Similarity.pqCodeCols(col("res"), cb).map(_.cast("int"))
         assigned.select(Seq(col("list_id"), col("cid")) ++ codeCols: _*)
           .repartition(col("list_id")) // one file per touched list per epoch
-          .write.mode("append").partitionBy("list_id")
-          .parquet(s"$indexDir/lists")
-        fs.create(marker, true).close()
+          .write.partitionBy("list_id").parquet(s"$stage/lists")
+      } { _ =>
         // epoch fully committed: the between-epochs single-writer window
         auto.tick(listFileCount(spark, indexDir), cents.length)(
           compact(spark, indexDir))
@@ -338,7 +354,7 @@ object AnnIndex {
     * Drift signal: per ingested vector, a quantization-miss Bernoulli —
     * cosine to its nearest coarse centroid < `fitCosine` — folded into a
     * driver-side [[Drift.Ddm]] as two deterministic runs (zeros before
-    * ones). The feed runs AFTER the epoch marker commits: a re-delivered
+    * ones). The feed is the epoch's post-commit step: a re-delivered
     * epoch feeds nothing, and a crash between the append commit and the
     * feed loses only that epoch's detector samples (an undercount the
     * detector absorbs — it just fires an epoch later). On a DDM fire whose
@@ -359,9 +375,8 @@ object AnnIndex {
                             autoCompactFactor: Int = AutoCompact.DefaultFactor,
                             onRebuild: Long => Unit = _ => ()):
       (DataFrame, Long) => Unit = {
-    graft.Tuning.mountDefaults(spark) // the index reads list on the driver
     Takedown.heal(spark, indexDir) // a crashed recenter owns all three subs
-    healPrecompact(spark, indexDir)
+    val commit = mountAppender(spark, indexDir)
     val cents = new java.util.concurrent.atomic.AtomicReference(
       loadCentroids(spark, indexDir))
     val cb = new java.util.concurrent.atomic.AtomicReference(
@@ -369,10 +384,7 @@ object AnnIndex {
     val ddm = new Drift.Ddm()
     val auto = new AutoCompact(autoCompactEvery, autoCompactFactor)
     (batch: DataFrame, epoch: Long) => {
-      val marker = new Path(s"$indexDir/_ingested_epoch_$epoch")
-      val fs = marker.getFileSystem(
-        batch.sparkSession.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker) && !batch.isEmpty) {
+      commit.run(fsOf(batch.sparkSession, indexDir), batch, epoch) { stage =>
         val c = cents.get()
         val vec = col(vecCol).cast("array<double>")
         val assigned = batch.select(
@@ -384,9 +396,9 @@ object AnnIndex {
           .map(_.cast("int"))
         assigned.select(Seq(col("list_id"), col("cid")) ++ codeCols: _*)
           .repartition(col("list_id")) // one file per touched list per epoch
-          .write.mode("append").partitionBy("list_id")
-          .parquet(s"$indexDir/lists")
-        fs.create(marker, true).close()
+          .write.partitionBy("list_id").parquet(s"$stage/lists")
+        (assigned, c)
+      } { case (assigned, c) =>
         // epoch committed — now the drift feed (see scaladoc for ordering)
         val centTable = typedLit(c.map(_.toSeq).toSeq)
         val fitRow = assigned.select(
@@ -416,59 +428,6 @@ object AnnIndex {
   }
 
   // ------------------------------------------------------ semantic screen
-
-  private def screenMarkerPath(indexDir: String, tag: String,
-                               epoch: Long): String =
-    s"$indexDir/_annscr_${tag}_epoch_$epoch"
-
-  private def screenStagePath(indexDir: String, tag: String,
-                              epoch: Long): String =
-    s"$indexDir/.annscr_stage_${tag}_$epoch"
-
-  /** Move a committed screen-epoch staging dir's list files into the live
-    * inverted file, then drop the staging dir. Idempotent: per-file atomic
-    * renames (Spark part-file names are UUID-unique); already-moved files
-    * are simply absent on a re-sweep. The [[SignatureStore]] publishStage
-    * shape, applied to the `lists/list_id=` layout. */
-  private def publishScreenStage(fs: org.apache.hadoop.fs.FileSystem,
-                                 indexDir: String, stage: Path): Unit = {
-    if (!fs.exists(stage)) return
-    val staged = new Path(stage, "lists")
-    if (fs.exists(staged))
-      fs.listStatus(staged).map(_.getPath)
-        .filter(_.getName.startsWith("list_id=")).foreach { pd =>
-          val dest = new Path(s"$indexDir/lists/${pd.getName}")
-          fs.mkdirs(dest)
-          fs.listStatus(pd).map(_.getPath)
-            .filter(_.getName.endsWith(".parquet")).foreach { f =>
-              require(fs.rename(f, new Path(dest, f.getName)),
-                s"AnnIndex: cannot publish $f")
-            }
-        }
-    fs.delete(stage, true)
-  }
-
-  /** Crash-recovery sweep over leftover screen staging dirs of `tag`: a
-    * stage whose epoch marker exists is committed — finish its publish; one
-    * without a marker is a pre-commit orphan — discard it (its epoch
-    * replays whole). Only purely-numeric epoch suffixes match, so a tag
-    * that prefixes another tag never claims the longer tag's staging. */
-  private def healScreenStaging(fs: org.apache.hadoop.fs.FileSystem,
-                                indexDir: String, tag: String): Unit = {
-    val root = new Path(indexDir)
-    if (!fs.exists(root)) return
-    val prefix = s".annscr_stage_${tag}_"
-    fs.listStatus(root).map(_.getPath)
-      .filter(_.getName.startsWith(prefix)).foreach { stage =>
-        val epoch = stage.getName.drop(prefix.length)
-        if (epoch.nonEmpty && epoch.forall(_.isDigit)) {
-          if (fs.exists(new Path(screenMarkerPath(indexDir, tag,
-              epoch.toLong))))
-            publishScreenStage(fs, indexDir, stage)
-          else fs.delete(stage, true)
-        }
-      }
-  }
 
   /** Batch-vs-store SEMANTIC near-dup probe on the pruned path: assign each
     * probe vector its `nprobe` nearest coarse cells, read ONLY those list
@@ -516,10 +475,10 @@ object AnnIndex {
     *
     * Per epoch the batch probes via [[probeStoredVectors]] (statically
     * pruned list scan, probe cost tracks the batch's cell footprint × list
-    * depth, never whole-store age) and survivors append under the
-    * [[SignatureStore.screenSink]] stage→marker→publish discipline — NOT
-    * [[ivfAppender]]'s direct append, because a screen must never re-probe
-    * a store containing its own epoch's staged vectors: a replay from any
+    * depth, never whole-store age) and survivors append under the shared
+    * stage→marker→publish protocol ([[EpochLog.Commit]]), because a screen
+    * must never re-probe a store containing its own epoch's staged
+    * vectors: a replay from any
     * pre-marker crash re-probes a store WITHOUT this epoch's vectors and
     * recomputes identical survivors (never a self-match); a post-marker
     * crash replays as a heal that finishes the publish. Near-dups WITHIN
@@ -533,41 +492,32 @@ object AnnIndex {
                          autoCompactEvery: Int = AutoCompact.DefaultCheckEvery,
                          autoCompactFactor: Int = AutoCompact.DefaultFactor)
                         (out: DataFrame => Unit): (DataFrame, Long) => Unit = {
-    graft.Tuning.mountDefaults(spark) // the index reads list on the driver
-    val fs0 = new Path(indexDir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    healPrecompact(spark, indexDir)
-    healScreenStaging(fs0, indexDir, streamTag)
+    val commit = mountScreen(spark, indexDir, streamTag)
     val cents = loadCentroids(spark, indexDir)
     val auto = new AutoCompact(autoCompactEvery, autoCompactFactor)
-    (batch: DataFrame, epoch: Long) => {
-      screenEpoch(spark, indexDir, idCol, vecCol, threshold, nprobe,
-        streamTag, cents, auto)(out)(batch, epoch)
-      ()
-    }
+    screenEpoch(spark, idCol, vecCol, threshold, nprobe, commit, cents,
+      auto)(out, _ => ())
   }
 
+  /** The screens' epoch namespace on stream `tag`:
+    * `.annscr_stage_<tag>_<e>`, `_annscr_<tag>_epoch_<e>`. */
+  private def mountScreen(spark: SparkSession, indexDir: String,
+                          tag: String): EpochLog.Commit =
+    mount(spark, EpochLog.commit(indexDir, "annscr", tag, Lists))
+
   /** One screen trigger (shared by [[semanticScreenSink]] and
-    * [[recenteringScreenSink]]): probe → `out(survivors)` →
-    * stage→marker→publish → auto-compact tick. Returns the survivors when
-    * the epoch actually ran, None when its marker said skip (or the batch
-    * was empty) — so a caller's post-epoch bookkeeping (the recentering
-    * sink's drift feed) never double-counts a re-delivered epoch. */
-  private def screenEpoch(spark: SparkSession, indexDir: String,
-                          idCol: String, vecCol: String, threshold: Double,
-                          nprobe: Int, streamTag: String,
+    * [[recenteringScreenSink]]): probe → `out(survivors)` → stage, commit,
+    * publish → auto-compact tick → `after(survivors)`. A re-delivered (or
+    * empty) epoch reaches neither, so a caller's post-epoch bookkeeping
+    * (the recentering sink's drift feed) never double-counts it. */
+  private def screenEpoch(spark: SparkSession, idCol: String, vecCol: String,
+                          threshold: Double, nprobe: Int,
+                          commit: EpochLog.Commit,
                           cents: Array[Array[Double]], auto: AutoCompact)
-                         (out: DataFrame => Unit)
-                         (batch: DataFrame, epoch: Long): Option[DataFrame] = {
-    val fs = new Path(indexDir).getFileSystem(
-      batch.sparkSession.sparkContext.hadoopConfiguration)
-    val marker = new Path(screenMarkerPath(indexDir, streamTag, epoch))
-    if (fs.exists(marker)) {
-      healScreenStaging(fs, indexDir, streamTag)
-      None
-    } else if (!batch.isEmpty) {
-      val stage = new Path(screenStagePath(indexDir, streamTag, epoch))
-      fs.delete(stage, true)
+                         (out: DataFrame => Unit, after: DataFrame => Unit)
+                         (batch: DataFrame, epoch: Long): Unit = {
+    val indexDir = commit.dir
+    commit.run(fsOf(batch.sparkSession, indexDir), batch, epoch) { stage =>
       val b = batch.localCheckpoint()
       val flagged = probeStoredVectors(spark, indexDir, b, idCol, vecCol,
           threshold, nprobe)
@@ -586,13 +536,13 @@ object AnnIndex {
           col("cid"), col("cvec"))
         .repartition(col("list_id")) // one file per touched list per epoch
         .write.partitionBy("list_id").parquet(s"$stage/lists")
-      fs.create(marker, true).close()
-      publishScreenStage(fs, indexDir, stage)
+      survivors
+    } { survivors =>
       // epoch fully committed: the between-epochs single-writer window
       auto.tick(listFileCount(spark, indexDir), cents.length)(
         compact(spark, indexDir))
-      Some(survivors)
-    } else None
+      after(survivors)
+    }
   }
 
   /** [[semanticScreenSink]] that RECENTERS ITSELF under embedding drift —
@@ -609,8 +559,9 @@ object AnnIndex {
     * — cosine to its nearest coarse centroid < `fitCosine` — fed into a
     * driver-side [[Drift.Ddm]] (zeros before ones within a trigger, a
     * fixed order so the scan is deterministic). Re-delivered epochs feed
-    * NOTHING ([[screenEpoch]] returns None), so the detector composes with
-    * the marker replay discipline. On a DDM drift signal whose trigger
+    * NOTHING ([[screenEpoch]] skips its post-commit step), so the
+    * detector composes with the marker replay discipline. On a DDM drift
+    * signal whose trigger
     * error rate also clears `minErrRate` (one bad doc after a long clean
     * run must not thrash a petabyte index), the sink — in the SAME
     * between-epochs single-writer window auto-compaction already owns —
@@ -637,20 +588,16 @@ object AnnIndex {
                             autoCompactFactor: Int = AutoCompact.DefaultFactor,
                             onRebuild: Long => Unit = _ => ())
                            (out: DataFrame => Unit): (DataFrame, Long) => Unit = {
-    graft.Tuning.mountDefaults(spark) // the index reads list on the driver
-    val fs0 = new Path(indexDir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
     Takedown.heal(spark, indexDir) // a crashed recenter owns lists+centroids
-    healPrecompact(spark, indexDir)
-    healScreenStaging(fs0, indexDir, streamTag)
+    val commit = mountScreen(spark, indexDir, streamTag)
     val cents = new java.util.concurrent.atomic.AtomicReference(
       loadCentroids(spark, indexDir))
     val ddm = new Drift.Ddm()
     val auto = new AutoCompact(autoCompactEvery, autoCompactFactor)
     (batch: DataFrame, epoch: Long) => {
       val c = cents.get()
-      screenEpoch(spark, indexDir, idCol, vecCol, threshold, nprobe,
-          streamTag, c, auto)(out)(batch, epoch).foreach { survivors =>
+      screenEpoch(spark, idCol, vecCol, threshold, nprobe, commit, c,
+          auto)(out, { survivors =>
         val vec = col(vecCol).cast("array<double>")
         val centTable = typedLit(c.map(_.toSeq).toSeq)
         val fitRow = survivors.select(
@@ -670,7 +617,7 @@ object AnnIndex {
           ddm.reset()
           onRebuild(epoch)
         }
-      }
+      })(batch, epoch)
     }
   }
 
@@ -686,7 +633,7 @@ object AnnIndex {
   def recenter(spark: SparkSession, indexDir: String, kmIters: Int = 3,
                seed: Long = 42L): Array[Array[Double]] = {
     Takedown.heal(spark, indexDir)
-    healPrecompact(spark, indexDir)
+    TableSwap.heal(fsOf(spark, indexDir), indexDir, "lists")
     val nlist = loadCentroids(spark, indexDir).length
     rebuildScreen(spark, indexDir, nlist, kmIters, seed)
   }
@@ -721,7 +668,7 @@ object AnnIndex {
   def recenterPq(spark: SparkSession, indexDir: String, kmIters: Int = 3,
                  seed: Long = 42L): Array[Array[Double]] = {
     Takedown.heal(spark, indexDir)
-    healPrecompact(spark, indexDir)
+    TableSwap.heal(fsOf(spark, indexDir), indexDir, "lists")
     val cents = loadCentroids(spark, indexDir)
     val cb = loadCodebook(spark, indexDir)
     val m = cb.length
@@ -818,10 +765,11 @@ object AnnIndex {
     * the write emits one file per (task, list). Schema-agnostic — raw
     * (cid, cvec) and PQ-coded (cid, c0..cm) layouts compact identically.
     *
-    * Swap protocol: the full rewrite lands in a temp dir first, then two
-    * renames publish it; a crash between them is healed by the recovery
-    * check on the next call. Run from the maintenance path that owns the
-    * index while no appender is active — same single-writer contract as
+    * Swap protocol ([[TableSwap]]): the full rewrite lands in a temp dir
+    * first, then two renames publish it; a crash between them is healed by
+    * the recovery check on the next call or mount. Run from the maintenance
+    * path that owns the index while no appender is active — same
+    * single-writer contract as
     * rebuilding under a new variant; epoch markers are untouched, so an
     * appender restarted afterwards still skips ingested epochs. */
   def compact(spark: SparkSession, indexDir: String): Unit =
@@ -837,33 +785,13 @@ object AnnIndex {
   def retract(spark: SparkSession, indexDir: String, ids: Seq[Long]): Unit =
     if (ids.nonEmpty) rewriteLists(spark, indexDir, exclude = ids)
 
-  /** Crash recovery for [[rewriteLists]]' swap: a previous compact/retract
-    * moved `lists/` aside but died before publishing the rewrite — the
-    * original data is intact under `.lists_precompact`; restore it. Wired
-    * into every mount ([[ivfAppender]]/[[ivfPqAppender]]/
-    * [[semanticScreenSink]]) so an auto-compact that dies between the two
-    * renames never leaves a store whose probes throw until a manual
-    * compact/retract runs. */
-  private def healPrecompact(spark: SparkSession, indexDir: String): Unit = {
-    val lists = new Path(s"$indexDir/lists")
-    val fs = lists.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prev = new Path(s"$indexDir/.lists_precompact")
-    if (!fs.exists(lists) && fs.exists(prev))
-      require(fs.rename(prev, lists), s"AnnIndex: cannot heal $prev")
-  }
-
   private def rewriteLists(spark: SparkSession, indexDir: String,
                            exclude: Seq[Long]): Unit = {
-    val lists = new Path(s"$indexDir/lists")
-    val fs = lists.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prev = new Path(s"$indexDir/.lists_precompact")
+    val fs = fsOf(spark, indexDir)
     // crash recovery: a previous compact moved lists/ aside but died before
-    // publishing the rewrite — the original data is intact under prev
-    healPrecompact(spark, indexDir)
-    val tmp = new Path(s"$indexDir/.lists_compact.tmp")
-    fs.delete(tmp, true)
-    fs.delete(prev, true)
-    val kept0 = spark.read.parquet(lists.toString)
+    // publishing the rewrite — the original data is intact under the aside
+    TableSwap.heal(fs, indexDir, "lists")
+    val kept0 = spark.read.parquet(s"$indexDir/lists")
     val kept =
       if (exclude.isEmpty) kept0
       // bounded takedown batch: the id list rides as a NOT-IN predicate
@@ -878,14 +806,9 @@ object AnnIndex {
       require(!kept.isEmpty,
         s"AnnIndex.retract would remove $indexDir's every vector — delete " +
           "the index dir and reseed instead of retracting the whole store")
-    kept.repartition(col("list_id"))
-      .write.partitionBy("list_id").parquet(tmp.toString)
-    require(fs.rename(lists, prev), s"compact: cannot move $lists aside")
-    if (!fs.rename(tmp, lists)) {
-      fs.rename(prev, lists) // roll back; the old multi-file layout still works
-      throw new IllegalStateException(s"compact: cannot publish $tmp")
-    }
-    fs.delete(prev, true)
+    TableSwap.rewrite(fs, indexDir, "lists")(tmp =>
+      kept.repartition(col("list_id"))
+        .write.partitionBy("list_id").parquet(tmp.toString))
   }
 
   /** Data-file count of the index's inverted file (compaction telemetry —

@@ -40,10 +40,11 @@ import org.apache.spark.sql.functions._
   *
   * Maintenance contract (shared with the other persisted stores): ONE
   * appender stream per store; epochs are exactly-once under at-least-once
-  * re-delivery (stage → marker → publish, numeric-suffix-scoped staging
-  * heal); compaction runs between epochs under the single-writer contract
-  * — manually or via the [[AutoCompact]] hook — with the whole-table
-  * aside-publish-heal swap, reads healing a mid-compact crash window. */
+  * re-delivery (the shared [[EpochLog.Commit]]: stage → marker → publish,
+  * numeric-suffix-scoped staging heal); compaction runs between epochs
+  * under the single-writer contract — manually or via the [[AutoCompact]]
+  * hook — with the [[TableSwap]] whole-table swap, reads healing a
+  * mid-compact crash window. */
 object Bm25Store {
 
   /** Word-hash partition fan-out. Fixed for the store's lifetime (it is
@@ -127,7 +128,7 @@ object Bm25Store {
     * Bounded
     * by epochs-since-compact ([[compact]] folds the ledger to one file). */
   private def readScalars(fs: FileSystem, dir: String): (Long, Long) = {
-    healCompactAside(fs, dir, "scalars")
+    TableSwap.heal(fs, dir, "scalars")
     val root = new Path(s"$dir/scalars")
     if (!fs.exists(root)) (0L, 0L)
     else fs.listStatus(root).map(_.getPath).filterNot(_.getName.startsWith("."))
@@ -151,8 +152,8 @@ object Bm25Store {
     val fs = fsOf(spark, dir)
     checkParams(fs, dir)
     val (nDocs, nTok) = readScalars(fs, dir)
-    healCompactAside(fs, dir, "postings")
-    healCompactAside(fs, dir, "df")
+    TableSwap.heal(fs, dir, "postings")
+    TableSwap.heal(fs, dir, "df")
     // Query terms, buckets and the term IN-list all derive from the
     // caller-typed literal query strings — computed on the driver (zero
     // jobs; the old shape paid a checkpoint + two collect jobs for ~10
@@ -184,62 +185,13 @@ object Bm25Store {
 
   // ------------------------------------------------------------- incremental
 
-  private def markerPath(dir: String, tag: String, epoch: Long): String =
-    s"$dir/_bm25app_${tag}_epoch_$epoch"
-
-  private def stagePath(dir: String, tag: String, epoch: Long): String =
-    s"$dir/.bm25app_stage_${tag}_$epoch"
-
-  /** Move a committed staging dir's files into the store's partitioned
-    * tables and its scalar delta into the ledger, then drop the staging
-    * dir. Idempotent: per-file atomic renames; already-moved files are
-    * simply absent on a re-sweep. */
-  private def publishStage(fs: FileSystem, dir: String, stage: Path,
-                           tag: String, epoch: Long): Unit = {
-    if (!fs.exists(stage)) return
-    Seq("postings", "df").foreach { sub =>
-      val subDir = new Path(stage, sub)
-      if (fs.exists(subDir))
-        fs.listStatus(subDir).map(_.getPath)
-          .filter(_.getName.startsWith("wb=")).foreach { pd =>
-            val dest = new Path(s"$dir/$sub/${pd.getName}")
-            fs.mkdirs(dest)
-            fs.listStatus(pd).map(_.getPath)
-              .filter(_.getName.endsWith(".parquet")).foreach { f =>
-                require(fs.rename(f, new Path(dest, f.getName)),
-                  s"Bm25Store: cannot publish $f")
-              }
-          }
-    }
-    val delta = new Path(stage, "scalars_delta")
-    if (fs.exists(delta)) {
-      fs.mkdirs(new Path(s"$dir/scalars"))
-      require(fs.rename(delta, new Path(s"$dir/scalars/${tag}_$epoch")),
-        s"Bm25Store: cannot publish $delta")
-    }
-    fs.delete(stage, true)
-  }
-
-  /** Crash-recovery sweep over leftover staging dirs of `tag`: a stage
-    * whose epoch marker exists is committed — finish its publish; one
-    * without a marker is a pre-commit orphan — discard it (its epoch
-    * replays whole). Only purely-numeric epoch suffixes match, so a tag
-    * that prefixes another tag can never claim (and destroy) the longer
-    * tag's staging. */
-  private def healStaging(fs: FileSystem, dir: String, tag: String): Unit = {
-    val root = new Path(dir)
-    if (!fs.exists(root)) return
-    val prefix = s".bm25app_stage_${tag}_"
-    fs.listStatus(root).map(_.getPath)
-      .filter(_.getName.startsWith(prefix)).foreach { stage =>
-        val epoch = stage.getName.drop(prefix.length)
-        if (epoch.nonEmpty && epoch.forall(_.isDigit)) {
-          if (fs.exists(new Path(markerPath(dir, tag, epoch.toLong))))
-            publishStage(fs, dir, stage, tag, epoch.toLong)
-          else fs.delete(stage, true)
-        }
-      }
-  }
+  /** [[appender]]'s epoch namespace on stream `tag`:
+    * `.bm25app_stage_<tag>_<e>`, `_bm25app_<tag>_epoch_<e>`. A committed
+    * stage's `wb=` files move into postings and df, and its `scalars_delta`
+    * becomes the ledger file `scalars/<tag>_<e>`. */
+  private def appendCommit(dir: String, tag: String): EpochLog.Commit =
+    EpochLog.commit(dir, "bm25app", tag, Seq("postings" -> "wb", "df" -> "wb"),
+      files = Seq("scalars_delta" -> s"scalars/${tag}_"))
 
   /** foreachBatch sink extending the store with each crawl epoch's docs:
     * the batch's postings, df partials, and scalar delta stage, commit
@@ -253,17 +205,13 @@ object Bm25Store {
                autoCompactEvery: Int = AutoCompact.DefaultCheckEvery,
                autoCompactFactor: Int = AutoCompact.DefaultFactor):
       (DataFrame, Long) => Unit = {
-    healStaging(fsOf(spark, dir), dir, streamTag)
+    val commit = appendCommit(dir, streamTag)
+    commit.heal(fsOf(spark, dir))
     val auto = new AutoCompact(autoCompactEvery, autoCompactFactor)
     (batch: DataFrame, epoch: Long) => {
       val fs = fsOf(batch.sparkSession, dir)
       checkParams(fs, dir)
-      val marker = new Path(markerPath(dir, streamTag, epoch))
-      if (fs.exists(marker)) {
-        healStaging(fs, dir, streamTag)
-      } else if (!batch.isEmpty) {
-        val stage = new Path(stagePath(dir, streamTag, epoch))
-        fs.delete(stage, true)
+      commit.run(fs, batch, epoch) { stage =>
         val (postings, dfPart, nDocs, nTok) =
           batchParts(batch, idCol, textCol)
         postings.repartition(col("wb")).sortWithinPartitions("word")
@@ -271,8 +219,7 @@ object Bm25Store {
         dfPart.repartition(col("wb")).sortWithinPartitions("word")
           .write.partitionBy("wb").parquet(s"$stage/df")
         writeText(fs, new Path(stage, "scalars_delta"), s"$nDocs,$nTok")
-        fs.create(marker, true).close()
-        publishStage(fs, dir, stage, streamTag, epoch)
+      } { _ =>
         // epoch fully committed: the between-epochs single-writer window
         auto.tick(fileCount(spark, dir), partitionDirCount(spark, dir))(
           compact(spark, dir))
@@ -282,65 +229,33 @@ object Bm25Store {
 
   // -------------------------------------------------------------- compaction
 
-  private def healCompactAside(fs: FileSystem, dir: String,
-                               sub: String): Unit = {
-    val root = new Path(s"$dir/$sub")
-    val prev = new Path(s"$dir/.${sub}_precompact")
-    if (!fs.exists(root) && fs.exists(prev))
-      require(fs.rename(prev, root), s"Bm25Store: cannot heal $prev")
-  }
-
-  private def swapIn(fs: FileSystem, dir: String, sub: String,
-                     tmp: Path): Unit = {
-    val root = new Path(s"$dir/$sub")
-    val prev = new Path(s"$dir/.${sub}_precompact")
-    // a COMPLETED compact that crashed before deleting its aside leaves
-    // root AND prev: the aside is disposable (root is live), and renaming
-    // onto an existing dir would fail or nest — clear it first
-    fs.delete(prev, true)
-    require(fs.rename(root, prev), s"compact: cannot move $root aside")
-    if (!fs.rename(tmp, root)) {
-      fs.rename(prev, root)
-      throw new IllegalStateException(s"compact: cannot publish $tmp")
-    }
-    fs.delete(prev, true)
-  }
-
   /** Compact the store: fold each `postings/wb=` partition back toward one
     * file, MERGE df partials per word, and fold the scalar ledger to one
-    * line — each sub-table via the whole-table aside-publish-heal swap
-    * ([[SignatureStore.compact]] protocol; reads heal the crash window).
+    * line — each sub-table swapped in whole through [[TableSwap]] (reads
+    * heal the crash window).
     * Markers and staging dirs are untouched — epoch idempotence survives.
     * Single-writer: run between epochs of a live sink (the [[AutoCompact]]
     * hook's window), never racing an in-flight one. */
   def compact(spark: SparkSession, dir: String): Unit = {
     val fs = fsOf(spark, dir)
     Takedown.heal(spark, dir) // a crashed retract finishes before we rewrite
-    Seq("postings", "df", "scalars").foreach(healCompactAside(fs, dir, _))
-    if (fs.exists(new Path(s"$dir/postings"))) {
-      val tmp = new Path(s"$dir/.postings_compact.tmp")
-      fs.delete(tmp, true)
-      spark.read.parquet(s"$dir/postings").repartition(col("wb"))
-        .sortWithinPartitions("word")  // word-sorted row groups: the probe's
-        .write.partitionBy("wb").parquet(tmp.toString)  // IN pushdown prunes
-      swapIn(fs, dir, "postings", tmp)
-    }
-    if (fs.exists(new Path(s"$dir/df"))) {
-      val tmp = new Path(s"$dir/.df_compact.tmp")
-      fs.delete(tmp, true)
-      spark.read.parquet(s"$dir/df")
-        .groupBy("wb", "word").agg(sum("df").as("df"))
-        .repartition(col("wb"))
-        .sortWithinPartitions("word")
-        .write.partitionBy("wb").parquet(tmp.toString)
-      swapIn(fs, dir, "df", tmp)
-    }
+    Seq("postings", "df", "scalars").foreach(TableSwap.heal(fs, dir, _))
+    if (fs.exists(new Path(s"$dir/postings")))
+      TableSwap.rewrite(fs, dir, "postings")(tmp =>
+        spark.read.parquet(s"$dir/postings").repartition(col("wb"))
+          .sortWithinPartitions("word")  // word-sorted row groups: the probe's
+          .write.partitionBy("wb").parquet(tmp.toString))  // IN pushdown prunes
+    if (fs.exists(new Path(s"$dir/df")))
+      TableSwap.rewrite(fs, dir, "df")(tmp =>
+        spark.read.parquet(s"$dir/df")
+          .groupBy("wb", "word").agg(sum("df").as("df"))
+          .repartition(col("wb"))
+          .sortWithinPartitions("word")
+          .write.partitionBy("wb").parquet(tmp.toString))
     if (fs.exists(new Path(s"$dir/scalars"))) {
       val (nDocs, nTok) = readScalars(fs, dir)
-      val tmp = new Path(s"$dir/.scalars_compact.tmp")
-      fs.delete(tmp, true)
-      writeText(fs, new Path(tmp, "base"), s"$nDocs,$nTok")
-      swapIn(fs, dir, "scalars", tmp)
+      TableSwap.rewrite(fs, dir, "scalars")(tmp =>
+        writeText(fs, new Path(tmp, "base"), s"$nDocs,$nTok"))
     }
   }
 
@@ -366,7 +281,7 @@ object Bm25Store {
     if (ids.isEmpty) return
     val fs = fsOf(spark, dir)
     checkParams(fs, dir)
-    Seq("postings", "df", "scalars").foreach(healCompactAside(fs, dir, _))
+    Seq("postings", "df", "scalars").foreach(TableSwap.heal(fs, dir, _))
     if (!fs.exists(new Path(s"$dir/postings"))) return
     import spark.implicits._
     val gone = ids.toDF("doc_id") // request-sized by contract: broadcast

@@ -7,11 +7,25 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-/** Base + epoch log layout shared by the stores the ingest door extends
-  * every trigger ([[FingerprintStore]] `fps`, [[SignatureStore]] `sigs` and
-  * `bands`).
+/** The engine's one epoch-commit protocol, plus the base + epoch log layout
+  * of the stores the ingest door extends every trigger.
   *
-  * Each table is a partitioned BASE, `<table>/<part>=K/` (written by seed,
+  * Epoch protocol ([[EpochLog.Commit]]): every store sink stages its
+  * epoch's rows under a dot-dir, creates the epoch's marker (the commit
+  * point), publishes the stage into the store, then runs its post-commit
+  * step. A replayed epoch whose marker exists only heals; a crash before
+  * the marker discards the stage at the next heal (the epoch replays
+  * whole); after it, the heal finishes the publish. Its ten callers:
+  * [[FingerprintStore.dedupSink]], [[SignatureStore.appender]] and
+  * `screenSink`, [[AnnIndex]]'s `screenEpoch` (serving
+  * `semanticScreenSink` and `recenteringScreenSink`), `ivfAppender`,
+  * `ivfPqAppender` and `recenteringPqAppender`, [[Bm25Store.appender]],
+  * [[LmStore.appender]] and [[Pack.shardAppender]]. The whole-table swap
+  * their compactions share is [[TableSwap]].
+  *
+  * Layout (the [[EpochLog]] instances: [[FingerprintStore]] `fps`,
+  * [[SignatureStore]] `sigs` and `bands`): each table is a partitioned
+  * BASE, `<table>/<part>=K/` (written by seed,
   * fold, compact and retract), plus a flat LOG, `<table>_log/`, holding ONE
   * parquet file per committed epoch whose rows carry their partition value
   * as a plain column. Why a log: an epoch's few dozen rows spread over a
@@ -26,10 +40,8 @@ import org.apache.spark.sql.types.StructType
   * still prunes the base's partition dirs and becomes a row-group filter on
   * the log's few files.
   *
-  * Epoch protocol (the sinks): the epoch's rows [[stage]] under the sink's
-  * dot-dir, the sink's marker commits, [[publish]] renames the staged file
-  * into the log. A crash before the marker discards the stage
-  * ([[healStaging]]); after it, the heal finishes the renames.
+  * An epoch of these tables [[stage]]s one file per table, and its
+  * publish renames that file into the table's log.
   *
   * Fold ([[fold]]): the log's rows are rewritten partitioned into a stage
   * (the per-partition write the old per-epoch append did, now once per
@@ -53,10 +65,6 @@ private[operators] final class EpochLog(tables: Seq[EpochLog.Table]) {
 
   private def fsOf(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def logDir(dir: String, name: String): Path = new Path(s"$dir/${name}_log")
-
-  private def isData(p: Path): Boolean = p.getName.endsWith(".parquet")
 
   private def logFiles(fs: FileSystem, dir: String, name: String): Seq[Path] = {
     val d = logDir(dir, name)
@@ -92,62 +100,9 @@ private[operators] final class EpochLog(tables: Seq[EpochLog.Table]) {
   def stage(rows: DataFrame, stage: Path, name: String): Unit =
     rows.coalesce(1).write.parquet(new Path(stage, name).toString)
 
-  /** Move a committed stage's files into the store, then drop the stage.
-    * Flat files go to the table's log; `<part>=K/` dirs (a fold's stage,
-    * or an epoch stage written by the earlier partitioned layout) go to
-    * the base partition. Idempotent: per-file atomic renames, files
-    * already moved are simply absent on a re-sweep — or vanish under a
-    * concurrent finisher of the same committed fold, which is not an
-    * error either. */
-  def publish(fs: FileSystem, dir: String, stage: Path): Unit = {
-    if (!fs.exists(stage)) return
-    tables.foreach { t =>
-      list(fs, new Path(stage, t.name)).foreach { st =>
-        val p = st.getPath
-        if (st.isDirectory && p.getName.startsWith(s"${t.partCol}=")) {
-          val dest = new Path(s"$dir/${t.name}/${p.getName}")
-          fs.mkdirs(dest)
-          list(fs, p).map(_.getPath).filter(isData)
-            .foreach(f => move(fs, f, new Path(dest, f.getName)))
-        } else if (isData(p)) {
-          val dest = logDir(dir, t.name)
-          fs.mkdirs(dest)
-          move(fs, p, new Path(dest, p.getName))
-        }
-      }
-    }
-    fs.delete(stage, true)
-  }
-
-  private def list(fs: FileSystem, p: Path): Array[FileStatus] =
-    try fs.listStatus(p) catch { case _: FileNotFoundException => Array.empty }
-
-  /** Rename, or find it already renamed by a concurrent finisher. */
-  private def move(fs: FileSystem, from: Path, to: Path): Unit =
-    require(fs.rename(from, to) || (!fs.exists(from) && fs.exists(to)),
-      s"EpochLog: cannot publish $from")
-
-  /** Crash-recovery sweep over leftover epoch stages of (kind, tag): a
-    * stage whose epoch marker exists is committed — finish its publish;
-    * one without a marker is a pre-commit orphan — discard it (its epoch
-    * replays whole). Only purely-numeric epoch suffixes match, so a tag
-    * that prefixes another tag can never claim (and destroy) the longer
-    * tag's staging. */
-  def healStaging(fs: FileSystem, dir: String, kind: String,
-                  tag: String): Unit = {
-    val root = new Path(dir)
-    if (!fs.exists(root)) return
-    val prefix = s".${kind}_stage_${tag}_"
-    fs.listStatus(root).map(_.getPath)
-      .filter(_.getName.startsWith(prefix)).foreach { stage =>
-        val epoch = stage.getName.drop(prefix.length)
-        if (epoch.nonEmpty && epoch.forall(_.isDigit)) {
-          if (fs.exists(new Path(markerPath(dir, kind, tag, epoch.toLong))))
-            publish(fs, dir, stage)
-          else fs.delete(stage, true)
-        }
-      }
-  }
+  /** The tables as [[Commit]] publish targets: an epoch stage's flat
+    * files go to the logs, a fold stage's partition dirs to the bases. */
+  val subs: Seq[(String, String)] = tables.map(t => t.name -> t.partCol)
 
   /** Fold the log into the base: one partitioned write of every log row
     * (one file per touched partition), committed by `_fold_pending`, then
@@ -186,7 +141,7 @@ private[operators] final class EpochLog(tables: Seq[EpochLog.Table]) {
   def finishFold(fs: FileSystem, dir: String): Unit = {
     val marker = new Path(dir, FoldMarker)
     if (!fs.exists(marker)) return
-    publish(fs, dir, new Path(dir, FoldStage))
+    publish(fs, dir, new Path(dir, FoldStage), subs)
     val names =
       try {
         val in = fs.open(marker)
@@ -241,9 +196,132 @@ private[operators] object EpochLog {
   val FoldMarker = "_fold_pending"
   val FoldStage = ".fold_stage"
 
-  def markerPath(dir: String, kind: String, tag: String, epoch: Long): String =
-    s"$dir/_${kind}_${tag}_epoch_$epoch"
+  private def logDir(dir: String, name: String): Path = new Path(s"$dir/${name}_log")
 
-  def stagePath(dir: String, kind: String, tag: String, epoch: Long): String =
-    s"$dir/.${kind}_stage_${tag}_$epoch"
+  private def isData(p: Path): Boolean = p.getName.endsWith(".parquet")
+
+  /** `sub` under `root`; the empty name is `root` itself. */
+  private def under(root: Path, sub: String): Path =
+    if (sub.isEmpty) root else new Path(root, sub)
+
+  private def list(fs: FileSystem, p: Path): Array[FileStatus] =
+    try fs.listStatus(p) catch { case _: FileNotFoundException => Array.empty }
+
+  /** Rename, or find it already renamed by a concurrent finisher. */
+  private def move(fs: FileSystem, from: Path, to: Path): Unit =
+    require(fs.rename(from, to) || (!fs.exists(from) && fs.exists(to)),
+      s"EpochLog: cannot publish $from")
+
+  private def isEpoch(s: String): Boolean = s.nonEmpty && s.forall(_.isDigit)
+
+  /** True for an epoch stage's name, `.<kind>_stage_[<tag>_]<epoch>`: the
+    * purely numeric epoch suffix is what [[Commit.heal]] matches on, and
+    * what [[Fsck.residue]] lists. */
+  def isEpochStage(name: String): Boolean =
+    name.startsWith(".") && name.contains("_stage_") &&
+      isEpoch(name.substring(name.lastIndexOf('_') + 1))
+
+  /** Move a committed stage's files into the store, then drop the stage.
+    * Per staged sub-table `(sub, partCol)`: `<partCol>=K/` dirs go to the
+    * base partition `<dir>/<sub>/<partCol>=K/`, and flat data files (an
+    * [[EpochLog]] epoch's one file per table) go to the table's log
+    * `<dir>/<sub>_log/`. The empty `sub` is the stage and store root (the
+    * packed-shard store's `shard=K/` dirs). Each `(staged, published)`
+    * pair of `files` then moves as named. Idempotent: per-file atomic
+    * renames, files already moved are simply absent on a re-sweep — or
+    * vanish under a concurrent finisher of the same committed fold, which
+    * is not an error either. */
+  def publish(fs: FileSystem, dir: String, stage: Path,
+              subs: Seq[(String, String)],
+              files: Seq[(Path, Path)] = Nil): Unit = {
+    if (!fs.exists(stage)) return
+    subs.foreach { case (sub, partCol) =>
+      list(fs, under(stage, sub)).foreach { st =>
+        val p = st.getPath
+        if (st.isDirectory && p.getName.startsWith(s"$partCol=")) {
+          val dest = new Path(under(new Path(dir), sub), p.getName)
+          fs.mkdirs(dest)
+          list(fs, p).map(_.getPath).filter(isData)
+            .foreach(f => move(fs, f, new Path(dest, f.getName)))
+        } else if (isData(p)) {
+          val dest = logDir(dir, sub)
+          fs.mkdirs(dest)
+          move(fs, p, new Path(dest, p.getName))
+        }
+      }
+    }
+    files.foreach { case (from, to) =>
+      if (fs.exists(from)) {
+        fs.mkdirs(to.getParent)
+        move(fs, from, to)
+      }
+    }
+    fs.delete(stage, true)
+  }
+
+  /** One sink's epoch namespace under `dir`: epoch `e` stages under
+    * `<dir>/<stagePrefix><e>` and commits by creating
+    * `<dir>/<markerPrefix><e>`. `subs` say where a committed stage
+    * publishes ([[publish]]); each `(staged name, published prefix)` of
+    * `files` moves one staged file to `<dir>/<published prefix><e>`. */
+  final case class Commit(dir: String, stagePrefix: String,
+                          markerPrefix: String, subs: Seq[(String, String)],
+                          files: Seq[(String, String)] = Nil) {
+
+    private def stage(epoch: Long): Path = new Path(s"$dir/$stagePrefix$epoch")
+
+    private def marker(epoch: Long): Path = new Path(s"$dir/$markerPrefix$epoch")
+
+    private def publishEpoch(fs: FileSystem, st: Path, epoch: Long): Unit =
+      publish(fs, dir, st, subs, files.map { case (f, to) =>
+        new Path(st, f) -> new Path(s"$dir/$to$epoch") })
+
+    /** Crash-recovery sweep over this namespace's leftover stages: a stage
+      * whose marker exists is committed — finish its publish; one without
+      * a marker is a pre-commit orphan — discard it (its epoch replays
+      * whole). Only purely-numeric epoch suffixes match, so a tag that
+      * prefixes another tag can never claim (and destroy) the longer tag's
+      * staging. */
+    def heal(fs: FileSystem): Unit = {
+      val root = new Path(dir)
+      if (!fs.exists(root)) return
+      fs.listStatus(root).map(_.getPath)
+        .filter(_.getName.startsWith(stagePrefix)).foreach { st =>
+          val e = st.getName.drop(stagePrefix.length)
+          if (isEpoch(e)) {
+            if (fs.exists(marker(e.toLong))) publishEpoch(fs, st, e.toLong)
+            else fs.delete(st, true)
+          }
+        }
+    }
+
+    /** Run one epoch: a replay whose marker exists only heals; an empty
+      * batch is skipped; otherwise any leftover stage is deleted, `write`
+      * fills the stage, the marker is created holding `markerText`
+      * (evaluated after `write`), the stage publishes, and `afterCommit`
+      * gets `write`'s result — the between-epochs single-writer window. */
+    def run[A](fs: FileSystem, batch: DataFrame, epoch: Long,
+               markerText: => String = "")
+              (write: Path => A)(afterCommit: A => Unit): Unit = {
+      val m = marker(epoch)
+      if (fs.exists(m)) heal(fs)
+      else if (!batch.isEmpty) {
+        val st = stage(epoch)
+        fs.delete(st, true)
+        val written = write(st)
+        val out = fs.create(m, true)
+        try out.write(markerText.getBytes("UTF-8")) finally out.close()
+        publishEpoch(fs, st, epoch)
+        afterCommit(written)
+      }
+    }
+  }
+
+  /** The standard namespace of sink kind `kind` on stream `tag`: stages
+    * `.<kind>_stage_<tag>_<e>`, markers `_<kind>_<tag>_epoch_<e>`. */
+  def commit(dir: String, kind: String, tag: String,
+             subs: Seq[(String, String)],
+             files: Seq[(String, String)] = Nil): Commit =
+    Commit(dir, s".${kind}_stage_${tag}_", s"_${kind}_${tag}_epoch_", subs,
+      files)
 }

@@ -61,8 +61,9 @@ object FingerprintStore {
 
   private val Log = new EpochLog(Seq(EpochLog.Table("fps", "shard", FpsSchema)))
 
-  /** Marker/stage kind of [[dedupSink]] epochs. */
-  private val SinkKind = "ingested"
+  /** [[dedupSink]]'s epoch namespace: `_ingested_<tag>_epoch_<e>`. */
+  private def sinkCommit(dir: String, tag: String): EpochLog.Commit =
+    EpochLog.commit(dir, "ingested", tag, Log.subs)
 
   private def fsOf(spark: SparkSession, dir: String) =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -73,16 +74,9 @@ object FingerprintStore {
     * rows. */
   def read(spark: SparkSession, dir: String): DataFrame = {
     val fs = fsOf(spark, dir)
-    healCompactAside(fs, dir)
+    TableSwap.heal(fs, dir, "fps")
     Log.finishFold(fs, dir)
     Log.read(spark, dir, "fps")
-  }
-
-  private def healCompactAside(fs: org.apache.hadoop.fs.FileSystem,
-                               dir: String): Unit = {
-    val fpsDir = new Path(s"$dir/fps")
-    val prev = new Path(s"$dir/.fps_precompact")
-    if (!fs.exists(fpsDir) && fs.exists(prev)) require(fs.rename(prev, fpsDir))
   }
 
   /** Fingerprint = xxhash64 of the raw text (the [[Dedup.fingerprint]]
@@ -197,8 +191,8 @@ object FingerprintStore {
     * deleted — at every instant the union of on-disk filters covers every
     * stored fingerprint (extra filters only cost false positives, which the
     * disk verify absorbs; a coverage GAP would let true dups through
-    * unverified). The fps rewrite then swaps via the
-    * aside-publish-heal protocol, after the log has folded under its own
+    * unverified). The fps rewrite then swaps in through [[TableSwap]]
+    * (aside, publish, heal on read), after the log has folded under its own
     * marker (so the swap only ever replaces the base: no crash point can
     * resurrect or double a logged row). Single-writer: run while no sink
     * is active, like the index compactor; epoch markers are untouched. */
@@ -210,8 +204,8 @@ object FingerprintStore {
     val root = new Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val fpsDir = new Path(s"$dir/fps")
-    val prev = new Path(s"$dir/.fps_precompact")
-    healCompactAside(fs, dir) // before the fold: it must not publish over an aside
+    // before the fold: it must not publish over an aside
+    TableSwap.heal(fs, dir, "fps")
     Log.fold(spark, dir)
     if (!fs.exists(fpsDir)) return
     val kept0 = spark.read.schema(FpsSchema).parquet(fpsDir.toString)
@@ -232,22 +226,14 @@ object FingerprintStore {
     writeBloom(fs, dir,
       s"compact_${java.util.UUID.randomUUID().toString.take(8)}", bloom)
     oldBlooms.foreach(fs.delete(_, false))
-    val tmp = new Path(s"$dir/.fps_compact.tmp")
-    fs.delete(tmp, true)
-    fs.delete(prev, true)
-    fps.write.partitionBy("shard").parquet(tmp.toString)
-    require(fs.rename(fpsDir, prev), s"compact: cannot move $fpsDir aside")
-    if (!fs.rename(tmp, fpsDir)) {
-      fs.rename(prev, fpsDir)
-      throw new IllegalStateException(s"compact: cannot publish $tmp")
-    }
-    fs.delete(prev, true)
+    TableSwap.rewrite(fs, dir, "fps")(tmp =>
+      fps.write.partitionBy("shard").parquet(tmp.toString))
   }
 
   /** Takedown: remove the given texts' fingerprints from the store — the
     * content-removal request (DMCA/GDPR shape) a long-lived crawl store
     * must honor. Implemented as [[compact]] with an exclusion list: the
-    * whole-table rewrite runs under the SAME aside-publish-heal protocol
+    * whole-table rewrite runs under the SAME [[TableSwap]]
     * (one atomic swap — no window where a partially-drained table admits
     * dups), the merged Bloom is rebuilt WITHOUT the retracted fps first
     * (publish-before-delete, the compact coverage rule), and a re-crawl of
@@ -291,7 +277,8 @@ object FingerprintStore {
     // before it reads anything: committed epochs publish into the log, a
     // committed fold completes.
     val fs0 = fsOf(spark, dir)
-    Log.healStaging(fs0, dir, SinkKind, streamTag)
+    val commit = sinkCommit(dir, streamTag)
+    commit.heal(fs0)
     Log.healFold(fs0, dir)
     // The Bloom list is loaded once per sink start, BROADCAST to executors
     // (a closure-captured filter would re-serialize with every task), and
@@ -307,12 +294,7 @@ object FingerprintStore {
     val auto = new AutoCompact(autoCompactEvery, autoCompactFactor)
     (batch: DataFrame, epoch: Long) => {
       val fs = fsOf(batch.sparkSession, dir)
-      val marker = new Path(EpochLog.markerPath(dir, SinkKind, streamTag, epoch))
-      if (fs.exists(marker)) {
-        Log.healStaging(fs, dir, SinkKind, streamTag)
-      } else if (!batch.isEmpty) {
-        val stage = new Path(EpochLog.stagePath(dir, SinkKind, streamTag, epoch))
-        fs.delete(stage, true)
+      commit.run(fs, batch, epoch) { stage =>
         // one survivor per distinct text within the batch (min id; the
         // dropDuplicates guards against byte-identical re-delivered rows,
         // which the min-id join alone would emit twice)
@@ -374,8 +356,7 @@ object FingerprintStore {
           bloomBc = sc.broadcast(blooms.toArray)
           old.unpersist()
         }
-        fs.create(marker, true).close()
-        Log.publish(fs, dir, stage)
+      } { _ =>
         // epoch fully committed: the between-epochs single-writer window
         auto.tick(bloomCount(spark, dir), 1, Log.fold(spark, dir)) {
           compact(spark, dir)

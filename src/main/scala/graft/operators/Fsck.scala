@@ -307,8 +307,9 @@ object Fsck {
   }
 
   /** Crash residue under each (layer, dir): pending markers, staging
-    * dirs, pre-swap asides, census temp. Driver-side listing — O(#dirs)
-    * status calls, never store-sized. */
+    * dirs (a retract's or fold's, and every sink's epoch stages,
+    * [[EpochLog.isEpochStage]]), pre-swap asides, census temp. Driver-side
+    * listing — O(#dirs) status calls, never store-sized. */
   def residue(spark: SparkSession, dirs: Seq[(String, String)]): DataFrame = {
     val rows = dirs.flatMap { case (layer, dir) =>
       val fs = fsOf(spark, dir)
@@ -318,6 +319,7 @@ object Fsck {
         n == "_retract_pending" || n == ".retract_stage" ||
           n == "_forget_pending" || n == ".hotbands.tmp" ||
           n == EpochLog.FoldMarker || n == EpochLog.FoldStage ||
+          EpochLog.isEpochStage(n) ||
           (n.startsWith(".") && n.endsWith("_precompact")) ||
           n.startsWith(".request_") || n.startsWith(".ivf.tmp") ||
           n.startsWith("._layout")

@@ -44,9 +44,10 @@ import graft.functions.TextFns
   * and `lm_fluency_appended` for the seed+append+replay build).
   *
   * Maintenance contract: ONE appender stream per store; epochs are
-  * exactly-once (stage → marker → publish, numeric-suffix staging heal);
-  * [[compact]] uses the aside-publish-heal swap with reads healing the
-  * crash window; the [[AutoCompact]] hook bounds file growth. */
+  * exactly-once (the shared [[EpochLog.Commit]]: stage → marker → publish,
+  * numeric-suffix staging heal); [[compact]] swaps through [[TableSwap]]
+  * with reads healing the crash window; the [[AutoCompact]] hook bounds
+  * file growth. */
 object LmStore {
 
   /** prev-hash partition fan-out; part of the `_params` layout contract. */
@@ -162,7 +163,7 @@ object LmStore {
                   idCol: String, textCol: String): DataFrame = {
     val fs = fsOf(spark, dir)
     checkParams(fs, dir)
-    Seq("bigrams", "prefix", "vocab").foreach(healCompactAside(fs, dir, _))
+    Seq("bigrams", "prefix", "vocab").foreach(TableSwap.heal(fs, dir, _))
     val arr = tokArr(docs, idCol, textCol).localCheckpoint()
     // Regime gate FIRST (one cheap count over the checkpointed arr): bulk
     // scoring (lm_fluency_stored — the whole corpus) touches essentially
@@ -231,52 +232,7 @@ object LmStore {
 
   // ------------------------------------------------------------- incremental
 
-  private def markerPath(dir: String, tag: String, epoch: Long): String =
-    s"$dir/_lmapp_${tag}_epoch_$epoch"
-
-  private def stagePath(dir: String, tag: String, epoch: Long): String =
-    s"$dir/.lmapp_stage_${tag}_$epoch"
-
   private val Subs = Seq("bigrams", "prefix", "vocab", "vocabrc")
-
-  /** Move a committed staging dir's files into the store's partitioned
-    * tables, then drop the staging dir. Idempotent per-file renames. */
-  private def publishStage(fs: FileSystem, dir: String, stage: Path): Unit = {
-    if (!fs.exists(stage)) return
-    Subs.foreach { sub =>
-      val subDir = new Path(stage, sub)
-      if (fs.exists(subDir))
-        fs.listStatus(subDir).map(_.getPath)
-          .filter(_.getName.startsWith("wb=")).foreach { pd =>
-            val dest = new Path(s"$dir/$sub/${pd.getName}")
-            fs.mkdirs(dest)
-            fs.listStatus(pd).map(_.getPath)
-              .filter(_.getName.endsWith(".parquet")).foreach { f =>
-                require(fs.rename(f, new Path(dest, f.getName)),
-                  s"LmStore: cannot publish $f")
-              }
-          }
-    }
-    fs.delete(stage, true)
-  }
-
-  /** Crash-recovery sweep: marker present → finish the publish; no marker
-    * → discard the orphan (its epoch replays whole). Numeric-suffix-scoped
-    * so a prefixing tag never claims a sibling's staging. */
-  private def healStaging(fs: FileSystem, dir: String, tag: String): Unit = {
-    val root = new Path(dir)
-    if (!fs.exists(root)) return
-    val prefix = s".lmapp_stage_${tag}_"
-    fs.listStatus(root).map(_.getPath)
-      .filter(_.getName.startsWith(prefix)).foreach { stage =>
-        val epoch = stage.getName.drop(prefix.length)
-        if (epoch.nonEmpty && epoch.forall(_.isDigit)) {
-          if (fs.exists(new Path(markerPath(dir, tag, epoch.toLong))))
-            publishStage(fs, dir, stage)
-          else fs.delete(stage, true)
-        }
-      }
-  }
 
   /** foreachBatch sink growing the LM with each crawl epoch's docs —
     * count partials + epoch-distinct vocab stage, commit (marker), and
@@ -288,17 +244,15 @@ object LmStore {
                autoCompactEvery: Int = AutoCompact.DefaultCheckEvery,
                autoCompactFactor: Int = AutoCompact.DefaultFactor):
       (DataFrame, Long) => Unit = {
-    healStaging(fsOf(spark, dir), dir, streamTag)
+    // `.lmapp_stage_<tag>_<e>` / `_lmapp_<tag>_epoch_<e>`, publishing `wb=`
+    // files into every sub-table
+    val commit = EpochLog.commit(dir, "lmapp", streamTag, Subs.map(_ -> "wb"))
+    commit.heal(fsOf(spark, dir))
     val auto = new AutoCompact(autoCompactEvery, autoCompactFactor)
     (batch: DataFrame, epoch: Long) => {
       val fs = fsOf(batch.sparkSession, dir)
       checkParams(fs, dir)
-      val marker = new Path(markerPath(dir, streamTag, epoch))
-      if (fs.exists(marker)) {
-        healStaging(fs, dir, streamTag)
-      } else if (!batch.isEmpty) {
-        val stage = new Path(stagePath(dir, streamTag, epoch))
-        fs.delete(stage, true)
+      commit.run(fs, batch, epoch) { stage =>
         val (bc, pc, words, rc) = batchParts(batch, idCol, textCol)
         bc.write.partitionBy("wb").parquet(s"$stage/bigrams")
         pc.write.partitionBy("wb").parquet(s"$stage/prefix")
@@ -321,8 +275,7 @@ object LmStore {
               .filter(col("wb").isin(wbs: _*)).select("word"),
             Seq("word"), "left_anti")
         newWords.write.partitionBy("wb").parquet(s"$stage/vocab")
-        fs.create(marker, true).close()
-        publishStage(fs, dir, stage)
+      } { _ =>
         auto.tick(fileCount(spark, dir), partitionDirCount(spark, dir))(
           compact(spark, dir))
       }
@@ -331,47 +284,20 @@ object LmStore {
 
   // -------------------------------------------------------------- compaction
 
-  private def healCompactAside(fs: FileSystem, dir: String,
-                               sub: String): Unit = {
-    val root = new Path(s"$dir/$sub")
-    val prev = new Path(s"$dir/.${sub}_precompact")
-    if (!fs.exists(root) && fs.exists(prev))
-      require(fs.rename(prev, root), s"LmStore: cannot heal $prev")
-  }
-
-  private def swapIn(fs: FileSystem, dir: String, sub: String,
-                     tmp: Path): Unit = {
-    val root = new Path(s"$dir/$sub")
-    val prev = new Path(s"$dir/.${sub}_precompact")
-    // a COMPLETED compact that crashed before deleting its aside leaves
-    // root AND prev: the aside is disposable (root is live), and renaming
-    // onto an existing dir would fail or nest — clear it first
-    fs.delete(prev, true)
-    require(fs.rename(root, prev), s"compact: cannot move $root aside")
-    if (!fs.rename(tmp, root)) {
-      fs.rename(prev, root)
-      throw new IllegalStateException(s"compact: cannot publish $tmp")
-    }
-    fs.delete(prev, true)
-  }
-
   /** Compact: MERGE count partials per key, dedup the vocab rows, fold
     * each `wb=` partition back toward one file — per sub-table via the
-    * aside-publish-heal swap; markers/staging untouched. Single-writer:
+    * [[TableSwap]] whole-table swap; markers/staging untouched. Single-writer:
     * run between epochs (the [[AutoCompact]] hook's window). */
   def compact(spark: SparkSession, dir: String): Unit = {
     val fs = fsOf(spark, dir)
     Takedown.heal(spark, dir) // a crashed retract finishes before we rewrite
-    Subs.foreach(healCompactAside(fs, dir, _))
+    Subs.foreach(TableSwap.heal(fs, dir, _))
     def rewrite(sub: String)(fold: DataFrame => DataFrame): Unit =
-      if (fs.exists(new Path(s"$dir/$sub"))) {
-        val tmp = new Path(s"$dir/.${sub}_compact.tmp")
-        fs.delete(tmp, true)
-        fold(spark.read.parquet(s"$dir/$sub"))
-          .repartition(col("wb"))
-          .write.partitionBy("wb").parquet(tmp.toString)
-        swapIn(fs, dir, sub, tmp)
-      }
+      if (fs.exists(new Path(s"$dir/$sub")))
+        TableSwap.rewrite(fs, dir, sub)(tmp =>
+          fold(spark.read.parquet(s"$dir/$sub"))
+            .repartition(col("wb"))
+            .write.partitionBy("wb").parquet(tmp.toString))
     // rows sorted by prev/word inside each bucket file: parquet row-group
     // stats + dictionaries then serve the probe's IN pushdown
     rewrite("bigrams")(df =>
@@ -412,7 +338,7 @@ object LmStore {
     Takedown.heal(spark, dir)
     val fs = fsOf(spark, dir)
     checkParams(fs, dir)
-    Subs.foreach(healCompactAside(fs, dir, _))
+    Subs.foreach(TableSwap.heal(fs, dir, _))
     if (docs.isEmpty || !fs.exists(new Path(s"$dir/bigrams"))) return
     val (bcR, pcR, _, rcR) = batchParts(docs, idCol, textCol)
     def subtracted(sub: String, keys: Seq[String], cnt: String,

@@ -279,19 +279,17 @@ object Pack {
     * The running token total persists in the epoch markers themselves
     * (`_packed_<tag>_epoch_<e>` holds the POST-epoch total), so a restarted
     * sink resumes the stream where it ended. EXACTLY-once under
-    * at-least-once re-delivery — the marker protocol of
-    * [[AnnIndex.ivfAppender]] hardened with stage-then-publish (the
-    * [[compactShards]] aside-publish discipline): the epoch's rows land in
-    * a staging dir first, the marker commits the epoch, and only then do
-    * the files move into the `shard=` dirs. Every crash point replays
-    * clean: before the marker → staging is discarded and the epoch re-runs
-    * whole; after the marker → the epoch is committed, and the heal sweep
-    * (at sink start and on any marker-found replay) finishes the pending
-    * file moves — a direct append-then-marker would instead DOUBLE the
-    * epoch's rows at the same (shard, bin_id, bin_offset) when the crash
-    * fell between append and marker, silently duplicating trainer content.
-    * Single appender stream per store, the maintainer contract of the
-    * other two stores. */
+    * at-least-once re-delivery through the shared [[EpochLog.Commit]]: the
+    * epoch's rows land in a staging dir first, the marker commits the
+    * epoch, and only then do the files move into the `shard=` dirs, which
+    * sit at the store root. Every crash point replays clean: before the
+    * marker → staging is discarded and the epoch re-runs whole; after the
+    * marker → the epoch is committed, and the heal sweep (at sink start and
+    * on any marker-found replay) finishes the pending file moves — a
+    * direct append-then-marker would instead DOUBLE the epoch's rows at the
+    * same (shard, bin_id, bin_offset) when the crash fell between append
+    * and marker, silently duplicating trainer content. Single appender
+    * stream per store, the maintainer contract of the other stores. */
   def shardAppender(spark: SparkSession, dir: String, orderCol: String,
                     tokCol: String, budget: Long, binsPerShard: Long,
                     streamTag: String = "stream",
@@ -303,7 +301,8 @@ object Pack {
     // shard dirs), then committed epochs finish publishing and uncommitted
     // staging is discarded (its epoch will replay in full)
     Takedown.heal(spark, dir)
-    healStaging(spark, dir, streamTag)
+    val commit = appendCommit(dir, streamTag)
+    commit.heal(fsOf(spark, dir))
     checkOrSeedParams(spark, dir, budget, binsPerShard)
     val auto = new AutoCompact(autoCompactEvery, autoCompactFactor)
     // raw marker coordinate vs effective packing position: markers advance
@@ -313,15 +312,9 @@ object Pack {
     val shiftDelta = retractShiftDelta(spark, dir)
     var total = rawTokenMax(spark, dir)
     (batch: DataFrame, epoch: Long) => {
-      val marker = new Path(s"$dir/_packed_${streamTag}_epoch_$epoch")
-      val fs = marker.getFileSystem(
-        batch.sparkSession.sparkContext.hadoopConfiguration)
-      if (fs.exists(marker)) {
-        // replayed epoch: committed — make sure its publish completed
-        healStaging(spark, dir, streamTag)
-      } else if (!batch.isEmpty) {
-        val stage = new Path(stagePath(dir, streamTag, epoch))
-        fs.delete(stage, true) // half-written pre-crash staging, if any
+      // the marker IS the commit point, holding the post-epoch total
+      commit.run(fsOf(batch.sparkSession, dir), batch, epoch,
+          markerText = total.toString) { stage =>
         val b = batch.localCheckpoint()
         val packed = packByBudget(b, orderCol, tokCol, budget,
             startTok = total - shiftDelta)
@@ -334,9 +327,7 @@ object Pack {
           .write.partitionBy("shard").parquet(stage.toString)
         val n = b.agg(sum(col(tokCol).cast("long"))).head().getLong(0)
         total += n
-        // the marker IS the commit point: everything after it is replay-safe
-        writeTokenMarker(spark, dir, s"_packed_${streamTag}_epoch_$epoch", total)
-        publishStage(fs, dir, stage)
+      } { _ =>
         // epoch fully committed: the between-epochs single-writer window
         auto.tick(shardFileCount(spark, dir), shardDirCount(spark, dir))(
           compactShards(spark, dir))
@@ -344,68 +335,32 @@ object Pack {
     }
   }
 
-  private def stagePath(dir: String, tag: String, epoch: Long): String =
-    s"$dir/.pack_stage_${tag}_$epoch"
+  private def fsOf(spark: SparkSession, dir: String) =
+    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Move a committed staging dir's shard files into the store's `shard=`
-    * dirs, then drop the staging dir. Idempotent: per-file atomic renames,
-    * already-moved files are simply absent on a re-sweep. */
-  private def publishStage(fs: org.apache.hadoop.fs.FileSystem, dir: String,
-                           stage: Path): Unit = {
-    if (!fs.exists(stage)) return
-    fs.listStatus(stage).map(_.getPath)
-      .filter(_.getName.startsWith("shard=")).foreach { sd =>
-        val dest = new Path(dir, sd.getName)
-        fs.mkdirs(dest)
-        fs.listStatus(sd).map(_.getPath)
-          .filter(_.getName.endsWith(".parquet")).foreach { f =>
-            require(fs.rename(f, new Path(dest, f.getName)),
-              s"shardAppender: cannot publish $f")
-          }
-      }
-    fs.delete(stage, true)
-  }
+  /** [[shardAppender]]'s epoch namespace on stream `tag`: stages
+    * `.pack_stage_<tag>_<e>`, markers `_packed_<tag>_epoch_<e>`, publishing
+    * the `shard=K/` dirs at the store root. */
+  private def appendCommit(dir: String, tag: String): EpochLog.Commit =
+    EpochLog.Commit(dir, s".pack_stage_${tag}_", s"_packed_${tag}_epoch_",
+      Seq("" -> "shard"))
 
-  /** Crash-recovery sweep over leftover staging dirs of `tag`: a stage
-    * whose epoch marker exists is committed — finish its publish; one
-    * without a marker is a pre-commit orphan — discard it (the epoch will
-    * be re-delivered and re-run whole). Only purely-numeric epoch suffixes
-    * match: tag "stream" must never claim `.pack_stage_stream_b_3` (tag
-    * "stream_b", epoch 3) — a prefix-only match would DELETE the sibling
-    * tag's committed-but-unpublished staging. */
-  private def healStaging(spark: SparkSession, dir: String,
-                          tag: String): Unit = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return
-    val prefix = s".pack_stage_${tag}_"
-    fs.listStatus(root).map(_.getPath)
-      .filter(_.getName.startsWith(prefix)).foreach { stage =>
-        val epoch = stage.getName.drop(prefix.length)
-        if (epoch.nonEmpty && epoch.forall(_.isDigit)) {
-          if (fs.exists(new Path(s"$dir/_packed_${tag}_epoch_$epoch")))
-            publishStage(fs, dir, stage)
-          else fs.delete(stage, true)
-        }
-      }
-  }
-
-  /** [[healStaging]] across EVERY stream tag — the retract entry point must
-    * fold committed-but-unpublished epochs of any appender into the shard
-    * dirs before repacking (their rows are logically in the store), and may
-    * discard uncommitted staging (that epoch never committed; its re-delivery
-    * will pack at the post-retract stream end, which is exactly right). */
+  /** The appender heal across EVERY stream tag — the retract entry point
+    * must fold committed-but-unpublished epochs of any appender into the
+    * shard dirs before repacking (their rows are logically in the store),
+    * and may discard uncommitted staging (that epoch never committed; its
+    * re-delivery will pack at the post-retract stream end, which is
+    * exactly right). */
   private def healAllStaging(spark: SparkSession, dir: String): Unit = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return
-    fs.listStatus(root).map(_.getPath.getName)
+    val fs = fsOf(spark, dir)
+    if (!fs.exists(new Path(dir))) return
+    fs.listStatus(new Path(dir)).map(_.getPath.getName)
       .filter(_.startsWith(".pack_stage_"))
       .map(_.stripPrefix(".pack_stage_"))
       .flatMap { rest =>
         val cut = rest.lastIndexOf('_')
         if (cut <= 0) None else Some(rest.take(cut))
-      }.distinct.foreach(healStaging(spark, dir, _))
+      }.distinct.foreach(appendCommit(dir, _).heal(fs))
   }
 
   /** Drop `shard=` dirs holding no data files — the residue of a retract
@@ -552,7 +507,10 @@ object Pack {
     * call restores any aside shard the root is missing, so no interleaving
     * of crashes loses rows. Markers are untouched — the token stream and
     * epoch idempotence survive compaction. Single-writer: run between
-    * epochs of the live appender, never racing an in-flight one. */
+    * epochs of the live appender, never racing an in-flight one. The one
+    * swap not on [[TableSwap]]: the shards are many dirs at the store root
+    * sharing ONE aside dir, `.shards_precompact/shard=K`, where TableSwap
+    * swaps one named table through its own `.<sub>_precompact`. */
   def compactShards(spark: SparkSession, dir: String): Unit = {
     val root = new Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)

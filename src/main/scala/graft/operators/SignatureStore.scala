@@ -41,7 +41,7 @@ import org.apache.spark.sql.functions._
   *    markers, one namespace PER SINK KIND: an appender and a screen
   *    mounted on the same store can never suppress each other's epochs.
   *  - `.sigapp_stage_<tag>_<e>` / `.sigscr_stage_<tag>_<e>` — per-epoch
-  *    staging dirs (the [[Pack.shardAppender]] stage-then-publish shape).
+  *    staging dirs ([[EpochLog.Commit]], every store sink's protocol).
   *  - `_fold_pending` / `.fold_stage` — a log fold's commit marker and
   *    stage ([[EpochLog.fold]]).
   *
@@ -228,23 +228,6 @@ object SignatureStore {
     readSigsRaw(spark, dir)
   }
 
-  /** Heal a [[compact]] crash window on the READ path: a crash between
-    * moving the live table aside and publishing the rewrite leaves the
-    * table dir absent with the `.<sub>_precompact` aside intact. Restore
-    * the aside here so a reader (in particular a live [[screenSink]], for
-    * which an empty frame means "admit every near-dup") never sees a
-    * silently empty store — the docstring's "heals at the next call (or
-    * read)", now true of reads. Under the single-writer contract nothing
-    * races this; a reader that does race a live compact at worst restores
-    * the aside early and makes that compact fail its publish LOUDLY. */
-  private def healCompactAside(fs: FileSystem, dir: String,
-                               sub: String): Unit = {
-    val root = new Path(s"$dir/$sub")
-    val prev = new Path(s"$dir/.${sub}_precompact")
-    if (!fs.exists(root) && fs.exists(prev))
-      require(fs.rename(prev, root), s"SignatureStore: cannot heal $prev")
-  }
-
   /** The two tables' FIXED schemas, supplied on every read: a takedown
     * that retracts a store's every row swaps in an EMPTY partitioned table
     * (no data files → nothing to infer from), and a schema-less read would
@@ -293,7 +276,7 @@ object SignatureStore {
 
   private def readSigsRaw(spark: SparkSession, dir: String): DataFrame = {
     val fs = fsOf(spark, dir)
-    healCompactAside(fs, dir, "sigs")
+    TableSwap.heal(fs, dir, "sigs")
     Log.finishFold(fs, dir)
     Log.read(spark, dir, "sigs")
   }
@@ -304,8 +287,8 @@ object SignatureStore {
     * every near-dup. [[backfillBands]] migrates such a store in place. */
   def readBands(spark: SparkSession, dir: String): DataFrame = {
     val fs = fsOf(spark, dir)
-    healCompactAside(fs, dir, "bands")
-    healCompactAside(fs, dir, "sigs") // the pre-index check below must not
+    TableSwap.heal(fs, dir, "bands")
+    TableSwap.heal(fs, dir, "sigs") // the pre-index check below must not
                                       // misread a mid-compact sigs table
     Log.finishFold(fs, dir)
     if (!Log.hasRows(fs, dir, "bands") && Log.hasRows(fs, dir, "sigs"))
@@ -356,14 +339,16 @@ object SignatureStore {
       .withColumn("bucket", bucketCol(col("band_hash"))), stage, "bands")
   }
 
-  /** Sink mount: publish committed epoch stages of (kind, tag), discard
-    * uncommitted ones, finish a committed fold. */
-  private def healMount(spark: SparkSession, dir: String, kind: String,
-                        tag: String): Unit = {
+  /** Sink mount: the epoch namespace of (kind, tag), its committed stages
+    * published and uncommitted ones discarded, a committed fold finished. */
+  private def mount(spark: SparkSession, dir: String, kind: String,
+                    tag: String): EpochLog.Commit = {
     graft.Tuning.mountDefaults(spark) // the store reads list on the driver
     val fs = fsOf(spark, dir)
-    Log.healStaging(fs, dir, kind, tag)
+    val commit = EpochLog.commit(dir, kind, tag, Log.subs)
+    commit.heal(fs)
     Log.healFold(fs, dir)
+    commit
   }
 
   /** The between-epochs window after a committed epoch: fold the log at
@@ -386,23 +371,18 @@ object SignatureStore {
                autoCompactFactor: Int = AutoCompact.DefaultFactor):
       (DataFrame, Long) => Unit = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
-    healMount(spark, dir, "sigapp", streamTag)
+    val commit = mount(spark, dir, "sigapp", streamTag)
     val auto = new AutoCompact(autoCompactEvery, autoCompactFactor)
     (batch: DataFrame, epoch: Long) => {
       val fs = fsOf(batch.sparkSession, dir)
       checkParams(fs, dir, numHashes, shingleSize, bands)
-      val marker = new Path(EpochLog.markerPath(dir, "sigapp", streamTag, epoch))
-      if (fs.exists(marker)) {
-        Log.healStaging(fs, dir, "sigapp", streamTag)
-      } else if (!batch.isEmpty) {
-        val stage = new Path(EpochLog.stagePath(dir, "sigapp", streamTag, epoch))
-        fs.delete(stage, true)
+      commit.run(fs, batch, epoch) { stage =>
         val sigs = Dedup.minHashSignatures(batch, idCol, textCol, numHashes,
           shingleSize).localCheckpoint()
         writeStage(sigs, numHashes, bands, stage)
         writeParams(fs, dir, numHashes, shingleSize, bands)
-        fs.create(marker, true).close()
-        Log.publish(fs, dir, stage)
+        sigs
+      } { sigs =>
         // epoch fully committed: fold its band counts into the census (an
         // append-grown hot band must be cappable BEFORE any compact), then
         // the between-epochs single-writer auto-compact window
@@ -532,17 +512,12 @@ object SignatureStore {
                  maxBandDf: Int = Int.MaxValue)
                 (out: DataFrame => Unit): (DataFrame, Long) => Unit = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
-    healMount(spark, dir, "sigscr", streamTag)
+    val commit = mount(spark, dir, "sigscr", streamTag)
     val auto = new AutoCompact(autoCompactEvery, autoCompactFactor)
     (batch: DataFrame, epoch: Long) => {
       val fs = fsOf(batch.sparkSession, dir)
       checkParams(fs, dir, numHashes, shingleSize, bands)
-      val marker = new Path(EpochLog.markerPath(dir, "sigscr", streamTag, epoch))
-      if (fs.exists(marker)) {
-        Log.healStaging(fs, dir, "sigscr", streamTag)
-      } else if (!batch.isEmpty) {
-        val stage = new Path(EpochLog.stagePath(dir, "sigscr", streamTag, epoch))
-        fs.delete(stage, true)
+      commit.run(fs, batch, epoch) { stage =>
         val b = batch.localCheckpoint()
         val sigsI = Dedup.minHashSignatures(b, idCol, textCol, numHashes,
           shingleSize).localCheckpoint()
@@ -562,8 +537,8 @@ object SignatureStore {
             "left_anti")
         writeStage(survSigs, numHashes, bands, stage)
         writeParams(fs, dir, numHashes, shingleSize, bands)
-        fs.create(marker, true).close()
-        Log.publish(fs, dir, stage)
+        survSigs
+      } { survSigs =>
         // epoch fully committed: fold the survivors' band counts into the
         // census (append-grown hot bands cappable before any compact),
         // then the between-epochs single-writer auto-compact window
@@ -582,8 +557,7 @@ object SignatureStore {
     * back to one file (the [[AnnIndex.compact]] disease, same cure). The
     * fold runs first under its own marker, so the swaps below only ever
     * replace the base — base and log never disagree at a crash point.
-    * Whole-table aside-publish-heal swap per
-    * sub-table (the [[FingerprintStore.compact]] protocol): build the
+    * Each sub-table swaps in whole through [[TableSwap]]: build the
     * rewrite in a dot-temp while the live table still serves, move the old
     * table aside, publish, delete the aside; a crash between aside and
     * publish heals at the next call (or read) by restoring the aside.
@@ -602,33 +576,23 @@ object SignatureStore {
     * never publish into a base dir a crashed compact moved aside). */
   private def foldHealed(spark: SparkSession, dir: String): Unit = {
     val fs = fsOf(spark, dir)
-    healCompactAside(fs, dir, "sigs")
-    healCompactAside(fs, dir, "bands")
+    TableSwap.heal(fs, dir, "sigs")
+    TableSwap.heal(fs, dir, "bands")
     Log.fold(spark, dir)
   }
 
   private def compactTable(spark: SparkSession, dir: String, sub: String,
                            partCol: String): Unit = {
     val fs = fsOf(spark, dir)
-    val root = new Path(s"$dir/$sub")
-    val prev = new Path(s"$dir/.${sub}_precompact")
-    healCompactAside(fs, dir, sub)
-    if (!fs.exists(root)) return
-    val tmp = new Path(s"$dir/.${sub}_compact.tmp")
-    fs.delete(tmp, true)
-    fs.delete(prev, true)
+    TableSwap.heal(fs, dir, sub)
+    if (!fs.exists(new Path(s"$dir/$sub"))) return
     // schema supplied: compacting a table a takedown emptied must rewrite
     // zero rows, not fail schema inference
     val schema = if (sub == "sigs") SigsSchema else BandsSchema
-    spark.read.schema(schema).parquet(root.toString)
-      .repartition(col(partCol))
-      .write.partitionBy(partCol).parquet(tmp.toString)
-    require(fs.rename(root, prev), s"compact: cannot move $root aside")
-    if (!fs.rename(tmp, root)) {
-      fs.rename(prev, root)
-      throw new IllegalStateException(s"compact: cannot publish $tmp")
-    }
-    fs.delete(prev, true)
+    TableSwap.rewrite(fs, dir, sub)(tmp =>
+      spark.read.schema(schema).parquet(s"$dir/$sub")
+        .repartition(col(partCol))
+        .write.partitionBy(partCol).parquet(tmp.toString))
   }
 
   /** Takedown: drop the given doc ids' signatures AND band-index rows —
@@ -645,8 +609,8 @@ object SignatureStore {
   def retract(spark: SparkSession, dir: String, ids: Seq[Long]): Unit = {
     Takedown.heal(spark, dir)
     val fs = fsOf(spark, dir)
-    healCompactAside(fs, dir, "sigs")  // a compact/retract crash residue
-    healCompactAside(fs, dir, "bands") // heals before we rewrite
+    TableSwap.heal(fs, dir, "sigs")  // a compact/retract crash residue
+    TableSwap.heal(fs, dir, "bands") // heals before we rewrite
     if (ids.isEmpty) return
     if (!hasSigs(spark, dir)) return
     // the log folds first (its own marker), so the staged swap below

@@ -20,7 +20,7 @@ import org.apache.spark.sql.SparkSession
   *     contribution) builds under `.retract_stage/<sub>` while the live
   *     tables still serve;
   *  2. the `_retract_pending` marker commits, naming the sub-tables;
-  *  3. each table swaps in via the compact aside protocol
+  *  3. each table swaps in through [[TableSwap]], the compaction swap
   *     (root → `.<sub>_precompact`, stage → root, aside deleted — the
   *     aside must go: it retains the retracted content);
   *  4. stage and marker clear.
@@ -50,28 +50,18 @@ object Takedown {
   }
 
   /** Finish (or perform) one sub-table's swap from the staged rewrite.
-    * Handles every crash residue: stage present + root present (swap not
-    * started), stage present + root absent (crashed between aside and
-    * publish — possibly with the aside already restored by a read heal),
-    * stage absent (this sub already swapped; only its aside may remain —
-    * delete it, it retains retracted content). */
+    * Handles every crash residue: stage present (the swap not started, or
+    * crashed between aside and publish — possibly with the aside already
+    * restored by a read heal) → [[TableSwap.swapIn]]; stage absent (this
+    * sub already swapped) → restore the aside if the live table is missing
+    * (defensive: never drop the store's only copy), else delete it — it
+    * retains retracted content. */
   private def finishSwap(fs: FileSystem, dir: String, sub: String): Unit = {
-    val root = new Path(s"$dir/$sub")
-    val prev = new Path(s"$dir/.${sub}_precompact")
     val st = new Path(s"$dir/$StageName/$sub")
-    if (fs.exists(st)) {
-      if (fs.exists(root)) {
-        fs.delete(prev, true)
-        require(fs.rename(root, prev), s"Takedown: cannot move $root aside")
-      }
-      require(fs.rename(st, root), s"Takedown: cannot publish $st")
-      fs.delete(prev, true)
-    } else if (!fs.exists(root) && fs.exists(prev)) {
-      // defensive: no staged rewrite and no live table — restore the aside
-      // rather than dropping the store's only copy
-      require(fs.rename(prev, root), s"Takedown: cannot heal $prev")
-    } else {
-      fs.delete(prev, true)
+    if (fs.exists(st)) TableSwap.swapIn(fs, dir, sub, st)
+    else {
+      TableSwap.heal(fs, dir, sub)
+      fs.delete(TableSwap.aside(dir, sub), true)
     }
   }
 

@@ -90,9 +90,10 @@ final class IngestGate(stats: DataFrame, minAffinity: Double,
   /** Like [[sink]] but threads the trigger's epoch through to both
     * consumers — the composition shape for epoch-idempotent store sinks
     * ([[graft.operators.FingerprintStore.dedupSink]],
-    * [[graft.operators.AnnIndex.ivfAppender]]) mounted DOWNSTREAM of the
-    * gate: gate → dedup store → index appender as one foreachBatch, with
-    * the store's replay markers still keyed by the stream's own epochs. */
+    * [[graft.operators.AnnIndex.ivfAppender]], both on the engine's one
+    * epoch-commit protocol) mounted DOWNSTREAM of the gate: gate → dedup
+    * store → index appender as one foreachBatch, with each store's replay
+    * markers still keyed by the stream's own epochs. */
   def sinkEpoch(idCol: String, textCol: String)
                (accept: (DataFrame, Long) => Unit)
                (quarantine: (DataFrame, Long) => Unit): (DataFrame, Long) => Unit =

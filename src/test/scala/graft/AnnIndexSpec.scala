@@ -193,4 +193,93 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(flagged.collect().map(_.getLong(0)).toSeq == Seq(900L))
     corpus.unpersist()
   }
+
+  /** A fresh index over clusters' first 20 points, the filesystem, and
+    * `stageRows(ids, shift)`: the stored rows of `ids` re-keyed to
+    * `cid + shift` — an epoch's staged list rows, each in the list its
+    * vector already sits in. */
+  private def crashFixture(name: String) = {
+    val dir = AnnIndex.ivfIndexDir(clustered.filter($"vec_id" % 40 < 20),
+      s"mem://$name", "vec_id", "embedding", nlist = 8, iters = 3,
+      seed = 42L,
+      variant = s"${name}_${java.util.UUID.randomUUID().toString.take(8)}")
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    def stageRows(ids: Seq[Long], shift: Long, stage: String): Unit =
+      spark.read.parquet(s"$dir/lists").filter($"cid".isin(ids: _*))
+        .withColumn("cid", $"cid" + shift)
+        .repartition($"list_id")
+        .write.partitionBy("list_id").parquet(s"$stage/lists")
+    (dir, fs, stageRows _)
+  }
+
+  private def storedCids(dir: String): Seq[Long] =
+    spark.read.parquet(s"$dir/lists").select("cid").collect()
+      .map(_.getLong(0)).toSeq
+
+  /** The epoch batch whose staged rows `stageRows(ids, shift)` plants. */
+  private def epochBatch(ids: Seq[Long], shift: Long) =
+    clustered.filter($"vec_id".isin(ids: _*))
+      .select(($"vec_id" + shift).as("vec_id"), $"embedding")
+
+  test("IVF appender crash windows: a pre-marker orphan stage is discarded, " +
+    "a committed stage publishes at mount, and no cid is stored twice") {
+    val (dir, fs, stageRows) = crashFixture("ann_append_crash")
+    def path(p: String) = new org.apache.hadoop.fs.Path(p)
+    val base = storedCids(dir).toSet
+    val committed = Seq(0L, 41L, 82L)
+    val orphaned = Seq(5L, 46L)
+    // committed, unpublished: stage + marker, the crash before the publish
+    stageRows(committed, 1000L, s"$dir/.ingested_stage_3")
+    fs.create(path(s"$dir/_ingested_epoch_3"), true).close()
+    // orphan: staged rows but no marker, the crash before the commit
+    stageRows(orphaned, 2000L, s"$dir/.ingested_stage_7")
+    assert(storedCids(dir).toSet == base, "staging must be invisible")
+    val app = AnnIndex.ivfAppender(spark, dir, "vec_id", "embedding",
+      autoCompactEvery = 0)
+    assert(!fs.exists(path(s"$dir/.ingested_stage_3")),
+      "the committed stage must publish at mount")
+    assert(!fs.exists(path(s"$dir/.ingested_stage_7")),
+      "the orphan stage must be discarded, not published")
+    val healed = storedCids(dir)
+    assert(healed.size == healed.distinct.size, "a cid is stored twice")
+    assert(healed.toSet == base ++ committed.map(_ + 1000L))
+    // the replayed committed epoch is a marker-guarded no-op
+    app(epochBatch(committed, 1000L), 3L)
+    assert(storedCids(dir).sorted == healed.sorted)
+    // the orphan's epoch, re-delivered, appends its rows exactly once
+    app(epochBatch(orphaned, 2000L), 7L)
+    val after = storedCids(dir)
+    assert(after.size == after.distinct.size)
+    assert(after.toSet == healed.toSet ++ orphaned.map(_ + 2000L))
+  }
+
+  test("semantic screen: a committed stage whose publish crashed halfway " +
+    "finishes at mount, stores no row twice, and leaves no stage") {
+    val (dir, fs, stageRows) = crashFixture("ann_halfpub")
+    def path(p: String) = new org.apache.hadoop.fs.Path(p)
+    val base = storedCids(dir).toSet
+    val ids = Seq(0L, 1L, 41L, 82L, 123L, 164L, 205L, 246L, 287L)
+    val stage = s"$dir/.annscr_stage_t_5"
+    stageRows(ids, 1000L, stage)
+    fs.create(path(s"$dir/_annscr_t_epoch_5"), true).close()
+    // the crash fell mid-publish: one list's files already renamed in
+    val listDirs = fs.listStatus(path(s"$stage/lists"))
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith("list_id="))
+    assert(listDirs.length >= 2, "fixture: the epoch must span two lists")
+    val moved = listDirs.head.getPath
+    fs.listStatus(moved).map(_.getPath)
+      .filter(_.getName.endsWith(".parquet")).foreach { f =>
+        assert(fs.rename(f, path(s"$dir/lists/${moved.getName}/${f.getName}")))
+      }
+    val sink = AnnIndex.semanticScreenSink(spark, dir, "vec_id", "embedding",
+      threshold = 0.99, streamTag = "t", autoCompactEvery = 0)(_ => ())
+    assert(!fs.exists(path(stage)), "the healed stage must be removed")
+    val healed = storedCids(dir)
+    assert(healed.size == healed.distinct.size, "a row is stored twice")
+    assert(healed.toSet == base ++ ids.map(_ + 1000L))
+    // the replayed epoch is a marker-guarded no-op
+    sink(epochBatch(ids, 1000L), 5L)
+    assert(storedCids(dir).sorted == healed.sorted)
+  }
 }

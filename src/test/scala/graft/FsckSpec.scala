@@ -136,13 +136,20 @@ class FsckSpec extends AnyFunSuite {
       spark.sparkContext.hadoopConfiguration)
     fs.create(new Path(s"$sigDir/_retract_pending"), true).close()
     fs.mkdirs(new Path(s"$sigDir/.sigs_precompact"))
-    val rep = Fsck.residue(spark, Seq("sig" -> sigDir))
+    // a crashed door epoch's stages: the signature and semantic screens'
+    val annDir = tmp("fsck_ann_residue")
+    fs.mkdirs(new Path(s"$sigDir/.sigscr_stage_door_3"))
+    fs.mkdirs(new Path(s"$annDir/.annscr_stage_door_3"))
+    val rep = Fsck.residue(spark, Seq("sig" -> sigDir, "ann" -> annDir))
     val got = rep.select("detail").collect().map(_.getString(0)).toSet
     assert(got === Set("unhealed: _retract_pending",
-      "unhealed: .sigs_precompact"))
-    // read-only contract: both residues still on disk after the audit
+      "unhealed: .sigs_precompact", "unhealed: .sigscr_stage_door_3",
+      "unhealed: .annscr_stage_door_3"))
+    // read-only contract: every residue still on disk after the audit
     assert(fs.exists(new Path(s"$sigDir/_retract_pending")))
     assert(fs.exists(new Path(s"$sigDir/.sigs_precompact")))
+    assert(fs.exists(new Path(s"$sigDir/.sigscr_stage_door_3")))
+    assert(fs.exists(new Path(s"$annDir/.annscr_stage_door_3")))
   }
 
   test("fsck reads never heal: a crashed-compact aside (root moved away) " +
