@@ -73,7 +73,7 @@ object BenchSemScreen {
 
     def measure(dir: String,
                 batch: org.apache.spark.sql.DataFrame): (Double, Long, Long) = {
-      val stored = spark.read.parquet(s"$dir/lists").count()
+      val stored = AnnIndex.read(spark, dir).count()
       AnnIndex.probeStoredVectors(spark, dir, batch, "vec_id", "embedding",
         Threshold, NProbe).count() // warm
       var flagged = 0L
@@ -100,7 +100,7 @@ object BenchSemScreen {
       f""""probe_ratio":${tL / tS}%.3f}"""
     }
 
-    val rows = spark.read.parquet(s"$dirS/lists").count()
+    val rows = AnnIndex.read(spark, dirS).count()
     f"""{"metric":"semantic_screen_probe","unit":"sec","sf":"$sfDir",""" +
       f""""nlist":$NList,"nprobe":$NProbe,"threshold":$Threshold,""" +
       f""""small_store_rows":$rows,"large_store_rows":${rows * 10},""" +

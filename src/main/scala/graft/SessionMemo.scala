@@ -141,13 +141,19 @@ object SessionMemo {
     * a stopped one the block manager already released them and dropping the
     * reference is the whole job. */
   private def release(v: AnyRef): Unit = v match {
-    case df: DataFrame =>
-      try {
-        if (!df.sparkSession.sparkContext.isStopped)
-          df.queryExecution.logical.collect {
-            case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-          }.foreach(_.unpersist(blocking = false))
-      } catch { case _: Throwable => () }
+    case df: DataFrame => unpersistLeaves(df)
     case _ => ()
   }
+
+  /** Best-effort unpersist of the localCheckpoint blocks `df` pins
+    * (reachable as `LogicalRDD` leaves — the RDD layer, which
+    * `Dataset.unpersist` does not reach). A no-op on a stopped context,
+    * whose block manager already released them. */
+  private[graft] def unpersistLeaves(df: DataFrame): Unit =
+    try {
+      if (!df.sparkSession.sparkContext.isStopped)
+        df.queryExecution.logical.collect {
+          case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+        }.foreach(_.unpersist(blocking = false))
+    } catch { case _: Throwable => () }
 }

@@ -12,8 +12,14 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     def wanted(name: String): Boolean = only.forall(_.contains(name))
+    // a fresh store cache per run: the content-digest builds key on the
+    // corpus and parameters, not on the code, so a reused build would
+    // leave a changed builder, appender or reader untested
+    val cacheDir = Paths.get(outDir, "adapt_cache").toFile
+    org.apache.hadoop.fs.FileUtil.fullyDelete(cacheDir)
     val spark = SparkSession.builder()
       .master(s"local[${Bench.cpus}]")
+      .config("spark.graft.adaptCacheDir", cacheDir.getAbsolutePath)
       .config("spark.sql.shuffle.partitions", Bench.cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
 
 import graft.expressions.NearestCentroids
 import graft.functions.VecFns
@@ -18,12 +21,24 @@ import graft.functions.VecFns
   * atomically (temp dir + rename), keyed by a content digest like the S7
   * cache, so rebuilding is a no-op until the corpus or params change.
   *
-  * Query = read ONLY the probed partitions: the probe set is known on the
+  * Layout: the inverted file is an [[EpochLog]] table, the fingerprint and
+  * signature stores' layout. Its base, `lists/list_id=K/`, is written by the
+  * build, [[compact]], [[retract]] and the recenters; its log, `lists_log/`,
+  * holds ONE parquet file per committed sink epoch whose rows carry
+  * `list_id` as a plain column, and the sinks' auto-compact cadence folds it
+  * into the base. The columns are the index's own — (cid, cvec) for a
+  * raw-vector index, (cid, c0..c{m-1}) for a PQ one — read from a stored
+  * file's footer. Only this object knows that layout: every read goes
+  * through [[read]] (heals, then base ∪ log), or for the audit
+  * [[readNoHeal]].
+  *
+  * Query = read ONLY the probed lists: the probe set is known on the
   * driver (|Q|·nprobe ints, model-sized), so `list_id IN (...)` is a STATIC
-  * partition filter — the scan touches nprobe/nlist of the data files and
-  * the plan shows it (`PartitionFilters` on the parquet scan, pinned in
-  * PlanSpec). Scoring joins the probed lists against the broadcast query
-  * set; the rank is the bounded [[TopK]] aggregator. */
+  * partition filter on the base — the scan touches nprobe/nlist of its data
+  * files and the plan shows it (`PartitionFilters` on the parquet scan,
+  * pinned in PlanSpec) — and a row-group filter on the log's few files.
+  * Scoring joins the probed lists against the broadcast query set; the rank
+  * is the bounded [[TopK]] aggregator. */
 object AnnIndex {
 
   /** Build (or reuse) the persisted index for `corpus`; returns its dir.
@@ -61,32 +76,34 @@ object AnnIndex {
     val spark = corpus.sparkSession
     val cents = graft.ml.KMeansQuantizer.fit(corpus, idCol, vecCol,
       nlist, iters, seed)
-    corpus.select(
-        element_at(NearestCentroids.column(col(vecCol), cents, 1), 1)
-          .as("list_id"),
-        col(idCol).as("cid"), col(vecCol).as("cvec"))
-      .repartition(col("list_id")) // one file per list, not per (task, list)
-      .write.partitionBy("list_id").parquet(s"$dest/lists")
-    val spark2 = spark
-    import spark2.implicits._
-    cents.zipWithIndex
-      .map { case (c, i) => (i + 1, c.toSeq) }.toSeq
-      .toDF("list_id", "cvec")
-      .coalesce(1).write.parquet(s"$dest/centroids")
+    writeBase(corpus.select(nearestList(col(vecCol), cents).as("list_id"),
+      col(idCol).as("cid"), col(vecCol).as("cvec")), s"$dest/lists")
+    writeCentroids(spark, cents, s"$dest/centroids")
   }
 
-  /** Build (or reuse) a persisted IVF+PQ index: the on-disk FAISS IVFPQ
-    * layout. Unlike [[ivfIndexDir]] — whose inverted lists store raw vectors —
-    * the lists here store only (cid, c0..c{m-1}) PQ codes, shrinking on-disk
-    * bytes by ~dim·8 / m (≈ 64× at dim=64, m=8): the layout that makes a
-    * 100 TB corpus' index fit on local disks. Codebook + coarse centroids
-    * ride as model-sized sidecars. One corpus pass: coarse-assign,
-    * residual-compute ([[residualCol]]) and PQ-encode in the SAME narrow
-    * projection, then `partitionBy(list_id)`; the codebook is trained on
-    * the residuals it encodes (IVFADC), so the codes spend their bits on
-    * local displacement, not on position the coarse cells already capture.
-    * Content-digest keyed (format token `res1`) and atomically renamed
-    * like [[ivfIndexDir]]. */
+  /** Write `rows` as a lists base partitioned by `list_id`; the
+    * repartition makes it one file per list, not per (task, list). */
+  private def writeBase(rows: DataFrame, path: String): Unit =
+    rows.repartition(col("list_id")).write.partitionBy("list_id").parquet(path)
+
+  /** The centroids sidecar: (list_id, cvec), list ids 1-based. */
+  private def writeCentroids(spark: SparkSession, cents: Array[Array[Double]],
+                             path: String): Unit = {
+    import spark.implicits._
+    cents.zipWithIndex.map { case (c, i) => (i + 1, c.toSeq) }.toSeq
+      .toDF("list_id", "cvec").coalesce(1).write.parquet(path)
+  }
+
+  /** The codebook sidecar: (b, j, cent), cb(b)(j) = sub-centroid. */
+  private def writeCodebook(spark: SparkSession,
+                            cb: Array[Array[Array[Double]]], path: String): Unit = {
+    import spark.implicits._
+    cb.zipWithIndex.flatMap { case (sub, b) =>
+        sub.zipWithIndex.map { case (cent, j) => (b, j, cent.toSeq) }
+      }.toSeq
+      .toDF("b", "j", "cent").coalesce(1).write.parquet(path)
+  }
+
   /** residual = vec − coarse_centroid(list_id): what the PQ codes encode
     * (Jégou et al. 2011's IVFADC). Residuals cluster around the origin
     * regardless of which cell a vector sits in, so one codebook spends its
@@ -101,6 +118,28 @@ object AnnIndex {
       element_at(typedLit(cents.map(_.toSeq).toSeq), listId.cast("int")),
       (a, c) => a - c)
 
+  /** The nearest coarse list of `vec` (1-based, the `list_id` key). */
+  private def nearestList(vec: Column, cents: Array[Array[Double]]): Column =
+    element_at(NearestCentroids.column(vec, cents, 1), 1)
+
+  /** (list_id, cid, c0..c{m-1}): `assigned`'s residuals PQ-encoded. */
+  private def pqRows(assigned: DataFrame,
+                     cb: Array[Array[Array[Double]]]): DataFrame =
+    assigned.select(Seq(col("list_id"), col("cid")) ++
+      Similarity.pqCodeCols(col("res"), cb).map(_.cast("int")): _*)
+
+  /** Build (or reuse) a persisted IVF+PQ index: the on-disk FAISS IVFPQ
+    * layout. Unlike [[ivfIndexDir]] — whose inverted lists store raw vectors —
+    * the lists here store only (cid, c0..c{m-1}) PQ codes, shrinking on-disk
+    * bytes by ~dim·8 / m (≈ 64× at dim=64, m=8): the layout that makes a
+    * 100 TB corpus' index fit on local disks. Codebook + coarse centroids
+    * ride as model-sized sidecars. One corpus pass: coarse-assign,
+    * residual-compute ([[residualCol]]) and PQ-encode in the SAME narrow
+    * projection, then `partitionBy(list_id)`; the codebook is trained on
+    * the residuals it encodes (IVFADC), so the codes spend their bits on
+    * local displacement, not on position the coarse cells already capture.
+    * Content-digest keyed (format token `res1`) and atomically renamed
+    * like [[ivfIndexDir]]. */
   def ivfPqIndexDir(corpus: DataFrame, corpusPath: String, idCol: String,
                     vecCol: String, nlist: Int = 16, m: Int = 8,
                     ksub: Int = 16, iters: Int = 3, seed: Long = 42L,
@@ -119,9 +158,7 @@ object AnnIndex {
         val tmp = new Path(dir.getParent, s".ivfpq_index_$digest.tmp")
         fs.delete(tmp, true)
         val assigned = corpus.select(
-            element_at(NearestCentroids.column(col(vecCol), cents, 1), 1)
-              .as("list_id"),
-            col(idCol).as("cid"),
+            nearestList(col(vecCol), cents).as("list_id"), col(idCol).as("cid"),
             col(vecCol).cast("array<double>").as("cvec"))
           .withColumn("res", residualCol(col("cvec"), cents, col("list_id")))
           // one corpus pass: fitProduct makes iters+1 passes over its input
@@ -134,34 +171,15 @@ object AnnIndex {
         require(cb.length * cb(0)(0).length == cents(0).length,
           s"trained codebook ${cb.length}x${cb(0)(0).length} does not cover " +
             s"dim ${cents(0).length} — a build must never persist bad codes")
-        val codeCols = Similarity.pqCodeCols(col("res"), cb)
-          .map(_.cast("int"))
-        assigned.select(Seq(col("list_id"), col("cid")) ++ codeCols: _*)
-          .repartition(col("list_id"))
-          .write.partitionBy("list_id").parquet(s"$tmp/lists")
-        val spark2 = spark
-        import spark2.implicits._
-        cents.zipWithIndex
-          .map { case (c, i) => (i + 1, c.toSeq) }.toSeq
-          .toDF("list_id", "cvec")
-          .coalesce(1).write.parquet(s"$tmp/centroids")
-        cb.zipWithIndex.flatMap { case (sub, b) =>
-            sub.zipWithIndex.map { case (cent, j) => (b, j, cent.toSeq) }
-          }.toSeq
-          .toDF("b", "j", "cent")
-          .coalesce(1).write.parquet(s"$tmp/codebook")
+        writeBase(pqRows(assigned, cb), s"$tmp/lists")
+        writeCentroids(spark, cents, s"$tmp/centroids")
+        writeCodebook(spark, cb, s"$tmp/codebook")
         if (!fs.rename(tmp, dir)) fs.delete(tmp, true) // lost a race: reuse
       }
     }
     dir.toString
   }
 
-  /** Top-k over the persisted IVF+PQ index: ADC over the probed lists' codes
-    * builds a `rerank`-deep shortlist per query (the index's raw bytes never
-    * hold a vector), then the shortlist — |Q|·rerank ids, broadcast — is
-    * re-scored with exact cosine against `corpus` (the FAISS refine stage):
-    * one more corpus scan with a broadcast semi-join, raw vectors never
-    * shuffle. Returns (qid, rk, cid, cos). */
   /** The index's coarse centroids, ordered by list id (model-sized). */
   private def loadCentroids(spark: SparkSession,
                             indexDir: String): Array[Array[Double]] =
@@ -182,6 +200,87 @@ object AnnIndex {
     cb
   }
 
+  // ------------------------------------------------------- the lists table
+
+  /** The lists' schema, from one stored file's footer (driver-side, no
+    * job): a base file first, else a log file; `list_id` last, where a
+    * partitioned read puts it. None when the index stores neither. */
+  private def listsSchema(fs: FileSystem, dir: String): Option[StructType] = {
+    def under(p: Path): Iterator[Path] =
+      if (!fs.exists(p)) Iterator.empty
+      else fs.listStatus(p).iterator.map(_.getPath)
+    (under(new Path(dir, "lists")).filter(_.getName.startsWith("list_id="))
+        .flatMap(under) ++ under(new Path(dir, "lists_log")))
+      .find(_.getName.endsWith(".parquet")).map { f =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, fs.getConf))
+        val json =
+          try reader.getFooter.getFileMetaData.getKeyValueMetaData
+            .get("org.apache.spark.sql.parquet.row.metadata")
+          finally reader.close()
+        StructType(DataType.fromJson(json).asInstanceOf[StructType]
+          .filterNot(_.name == "list_id") :+ StructField("list_id", IntegerType))
+      }
+  }
+
+  private def logOf(schema: StructType): EpochLog =
+    new EpochLog(Seq(EpochLog.Table("lists", "list_id", schema)))
+
+  /** The lists table of `dir`, after healing a crashed compact's aside
+    * (the base it restores is where the schema is read). */
+  private def listsLog(fs: FileSystem, dir: String): EpochLog = {
+    TableSwap.heal(fs, dir, "lists")
+    logOf(listsSchema(fs, dir).getOrElse(throw new IllegalStateException(
+      s"AnnIndex: $dir holds no inverted lists")))
+  }
+
+  /** The stored lists, (cid, <vector or codes>, list_id): base ∪ log. Heals
+    * a crashed compact's aside and finishes a committed fold first, so a
+    * reader never sees a silently empty table or a folded row twice. */
+  def read(spark: SparkSession, indexDir: String): DataFrame =
+    listsLog(fsOf(spark, indexDir), indexDir).readHealed(spark, indexDir,
+      "lists")
+
+  /** [[read]] without the heal, for the audit, which mutates nothing (an
+    * aside or a pending fold surfaces as residue). None for an index with
+    * no list files. */
+  private[graft] def readNoHeal(spark: SparkSession,
+                                indexDir: String): Option[DataFrame] =
+    listsSchema(fsOf(spark, indexDir), indexDir)
+      .map(logOf(_).read(spark, indexDir, "lists"))
+
+  /** Fold the log into the base (single writer, between epochs): what
+    * every whole-table rewrite runs before it reads, so no logged row
+    * survives a swap twice. */
+  private def fold(spark: SparkSession, indexDir: String): Unit =
+    listsLog(fsOf(spark, indexDir), indexDir).fold(spark, indexDir)
+
+  /** The stored rows of lists `ids` only — a STATIC `list_id IN (...)`
+    * partition filter on the base. */
+  private def listsIn(spark: SparkSession, indexDir: String,
+                      ids: Seq[Int]): DataFrame =
+    read(spark, indexDir).filter(col("list_id").isin(ids.map(Int.box): _*))
+
+  /** The probe step of [[queryIvf]] and [[probeStoredVectors]]: each query
+    * row (qid, qvec) explodes onto its `nprobe` nearest lists, and the
+    * stored rows of exactly those lists join it (broadcast probe side). The
+    * probe set is collected first (≤ nlist ints), so the list scan is
+    * statically pruned. */
+  private def probeJoin(spark: SparkSession, indexDir: String, q: DataFrame,
+                        cents: Array[Array[Double]], nprobe: Int): DataFrame = {
+    val qLists = q.select(col("qid"), col("qvec"),
+      explode(NearestCentroids.column(col("qvec"), cents,
+        math.min(nprobe, cents.length))).as("list_id"))
+    val probed = qLists.select("list_id").distinct().collect()
+      .map(_.getAs[Number](0).intValue).toSeq
+    listsIn(spark, indexDir, probed).join(broadcast(qLists), Seq("list_id"))
+  }
+
+  /** Top-k over the persisted IVF+PQ index: ADC over the probed lists' codes
+    * builds a `rerank`-deep shortlist per query (the index's raw bytes never
+    * hold a vector), then the shortlist — |Q|·rerank ids, broadcast — is
+    * re-scored with exact cosine against `corpus` (the FAISS refine stage):
+    * one more corpus scan with a broadcast semi-join, raw vectors never
+    * shuffle. Returns (qid, rk, cid, cos). */
   def queryIvfPq(spark: SparkSession, indexDir: String, corpus: DataFrame,
                  queries: DataFrame, qidCol: String, idCol: String,
                  vecCol: String, k: Int, nprobe: Int = 4,
@@ -195,23 +294,19 @@ object AnnIndex {
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
     require(qRows.nonEmpty, "queryIvfPq requires a non-empty query set")
-    // Probe set is driver-known (|Q|·nprobe ints) → static partition filter.
-    val probed = qRows.flatMap { case (_, qv) =>
-      NearestCentroids.nearest(qv, cents, math.min(nprobe, cents.length))
-    }.distinct
-    val lists = spark.read.parquet(s"$indexDir/lists")
-      .filter(col("list_id").isin(probed.map(Int.box): _*))
     // Codes encode residuals, so the ADC table is per (query, probed list):
     // dtable over (q − centroid_l) against the residual codebook. Still
     // |Q|·nprobe·m·ksub doubles — model-sized, broadcastable.
-    val qProbe = spark.createDataFrame(
-        qRows.flatMap { case (qid, qv) =>
-          NearestCentroids.nearest(qv, cents, math.min(nprobe, cents.length))
-            .map { l =>
-              val qres = Array.tabulate(qv.length)(i => qv(i) - cents(l - 1)(i))
-              (qid, l, Similarity.adcTableFor(qres, cb))
-            }
-        }.toSeq).toDF("qid", "list_id", "dtable")
+    val probes = qRows.toSeq.flatMap { case (qid, qv) =>
+      NearestCentroids.nearest(qv, cents, math.min(nprobe, cents.length))
+        .map { l =>
+          val qres = Array.tabulate(qv.length)(i => qv(i) - cents(l - 1)(i))
+          (qid, l, Similarity.adcTableFor(qres, cb))
+        }
+    }
+    val qProbe = spark.createDataFrame(probes).toDF("qid", "list_id", "dtable")
+    // Probe set is driver-known (|Q|·nprobe ints) → static partition filter.
+    val lists = listsIn(spark, indexDir, probes.map(_._2).distinct)
     // ADC over probed codes only: the join key is the partition column, the
     // broadcast side is model-sized, and each row costs m array lookups.
     val scored = lists.join(broadcast(qProbe), Seq("list_id"))
@@ -230,44 +325,80 @@ object AnnIndex {
     TopK.topKPerQuery(rescored, k)
   }
 
-  /** Where every sink's epoch stage publishes: the `lists/list_id=K/`
-    * partitions. */
+  // ------------------------------------------------------------------ sinks
+
+  /** Where every sink's epoch stage publishes: an epoch's one flat file to
+    * `lists_log/`, and `list_id=K/` dirs (a fold's, or a stage written
+    * partitioned) to the base. */
   private val Lists = Seq("lists" -> "list_id")
 
   /** Mount a sink on its epoch namespace: heal a crashed compact's aside,
-    * then publish or discard what a crashed epoch left staged. */
-  private def mount(spark: SparkSession,
-                    commit: EpochLog.Commit): EpochLog.Commit = {
+    * publish or discard what a crashed epoch left staged, then finish or
+    * discard a crashed fold. Returns the lists table the sink stages into. */
+  private def mount(spark: SparkSession, commit: EpochLog.Commit): EpochLog = {
     graft.Tuning.mountDefaults(spark) // the index reads list on the driver
     val fs = fsOf(spark, commit.dir)
-    TableSwap.heal(fs, commit.dir, "lists")
+    val log = listsLog(fs, commit.dir)
     commit.heal(fs)
-    commit
+    log.healFold(fs, commit.dir)
+    log
   }
 
   /** The appenders' epoch namespace: stages `.ingested_stage_<e>`, markers
     * `_ingested_epoch_<e>` (one maintainer stream per index, so no tag). */
-  private def mountAppender(spark: SparkSession,
-                            indexDir: String): EpochLog.Commit =
-    mount(spark, EpochLog.Commit(indexDir, ".ingested_stage_",
-      "_ingested_epoch_", Lists))
+  private def appenderCommit(indexDir: String): EpochLog.Commit =
+    EpochLog.Commit(indexDir, ".ingested_stage_", "_ingested_epoch_", Lists)
 
   private def fsOf(spark: SparkSession, dir: String) =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  /** A sink's post-commit step, the between-epochs single-writer window:
+    * the auto-compact tick, whose cadence boundary folds the log and
+    * compacts the base past the file bound. */
+  private def autoTick(spark: SparkSession, log: EpochLog, indexDir: String,
+                       auto: AutoCompact, nlist: Int): Unit =
+    auto.tick(log.fileCount(fsOf(spark, indexDir), indexDir, "lists"), nlist,
+      log.fold(spark, indexDir))(compact(spark, indexDir))
+
+  /** The recentering sinks' drift feed: per row, a quantization miss is
+    * cosine(`vec`, its list `listId`'s centroid) < `fitCosine`. The epoch's
+    * misses feed `ddm` as two runs, zeros before ones (a fixed order: the
+    * detector's addRun keeps the reference recurrence bit-exact). On a fire
+    * whose miss rate also clears `minErrRate`, `rebuild` runs, the detector
+    * resets (new regime, fresh baseline) and `onRebuild(epoch)` reports it. */
+  private def feedMisses(ddm: Drift.Ddm, rows: DataFrame, vec: Column,
+                         listId: Column, cents: Array[Array[Double]],
+                         fitCosine: Double, minErrRate: Double, epoch: Long,
+                         onRebuild: Long => Unit)(rebuild: => Unit): Unit = {
+    val fitRow = rows.select(
+        (VecFns.cosine(vec, element_at(typedLit(cents.map(_.toSeq).toSeq),
+          listId)) < fitCosine).cast("long").as("miss"))
+      .agg(sum("miss"), count(lit(1))).head()
+    val bad = if (fitRow.isNullAt(0)) 0L else fitRow.getLong(0)
+    val n = fitRow.getLong(1)
+    var fire = ddm.addRun(0.0, n - bad)
+    if (ddm.addRun(1.0, bad)) fire = true
+    if (fire && n > 0 && bad.toDouble / n >= minErrRate) {
+      rebuild
+      ddm.reset()
+      onRebuild(epoch)
+    }
+  }
+
   /** Streaming index maintenance: a `writeStream.foreachBatch` sink that
     * assigns each newly ingested micro-batch with the index's own coarse
-    * centroids (read once per sink, model-sized) and appends it into the
-    * partitioned inverted file — closing the ingest loop on the build-once /
-    * query-many index. Each append adds new parquet files under the matching
-    * `list_id=` partition dirs; existing files are never rewritten, and
-    * queries pick the new rows up on their next scan (plain
-    * partition-discovery semantics — no index rebuild). Vectors are cast to
+    * centroids (read once per sink, model-sized) and appends it to the
+    * inverted file — closing the ingest loop on the build-once /
+    * query-many index. Each epoch stages ONE parquet file (its rows carry
+    * their `list_id`) that publishes into `lists_log/`; nothing is
+    * rewritten between folds, and queries pick the new rows up on their
+    * next [[read]] (base ∪ log — no index rebuild). The auto-compact
+    * cadence folds the log into the base. Vectors are cast to
     * `array<double>`, the lists' built schema.
     *
     * Exactly-once under foreachBatch's at-least-once re-delivery through
-    * [[EpochLog.Commit]]: the epoch's list files stage, its marker commits,
-    * then they move into the lists. A replayed epoch that finds its marker
+    * [[EpochLog.Commit]]: the epoch's list file stages, its marker commits,
+    * then it moves into the log. A replayed epoch that finds its marker
     * is skipped, and a crash before the marker discards the stage at the
     * next mount — a replayed batch never doubles its vectors in the lists,
     * where duplicate ids would crowd true neighbors out of top-k results.
@@ -280,30 +411,29 @@ object AnnIndex {
                   vecCol: String,
                   autoCompactEvery: Int = AutoCompact.DefaultCheckEvery,
                   autoCompactFactor: Int = AutoCompact.DefaultFactor):
+      (DataFrame, Long) => Unit =
+    appendSink(spark, indexDir, autoCompactEvery, autoCompactFactor)(
+      (batch, cents) => assign(batch, idCol, vecCol, cents).drop("res"))
+
+  /** The plain appenders' sink: each epoch stages `rows(batch, centroids)`
+    * into the log, then ticks the auto-compact. */
+  private def appendSink(spark: SparkSession, indexDir: String,
+                         autoCompactEvery: Int, autoCompactFactor: Int)
+                        (rows: (DataFrame, Array[Array[Double]]) => DataFrame):
       (DataFrame, Long) => Unit = {
-    val commit = mountAppender(spark, indexDir)
+    val commit = appenderCommit(indexDir)
+    val log = mount(spark, commit)
     val cents = loadCentroids(spark, indexDir)
     val auto = new AutoCompact(autoCompactEvery, autoCompactFactor)
-    (batch: DataFrame, epoch: Long) => {
-      commit.run(fsOf(batch.sparkSession, indexDir), batch, epoch) { stage =>
-        batch.select(col(idCol).cast("long").as("cid"),
-            col(vecCol).cast("array<double>").as("cvec"))
-          .select(
-            element_at(NearestCentroids.column(col("cvec"), cents, 1), 1)
-              .as("list_id"),
-            col("cid"), col("cvec"))
-          .repartition(col("list_id")) // one file per touched list per epoch
-          .write.partitionBy("list_id").parquet(s"$stage/lists")
-      } { _ =>
-        // epoch fully committed: the between-epochs single-writer window
-        auto.tick(listFileCount(spark, indexDir), cents.length)(
-          compact(spark, indexDir))
-      }
-    }
+    (batch: DataFrame, epoch: Long) =>
+      commit.run(fsOf(batch.sparkSession, indexDir), batch, epoch)(stage =>
+        log.stage(rows(batch, cents), stage, "lists"))(_ =>
+        autoTick(spark, log, indexDir, auto, cents.length))
   }
 
   /** Streaming maintenance for the PQ-coded index ([[ivfPqIndexDir]]): same
-    * epoch protocol and marker namespace as [[ivfAppender]], but each appended
+    * epoch protocol, log file per epoch and marker namespace as
+    * [[ivfAppender]], but each appended
     * row is the coarse list assignment plus `m` sub-quantizer codes — the
     * ingested vector itself never lands in the index, so on-disk growth
     * stays ~50–100× below raw-vector appends at ingest rate. The refine
@@ -320,28 +450,19 @@ object AnnIndex {
                     autoCompactEvery: Int = AutoCompact.DefaultCheckEvery,
                     autoCompactFactor: Int = AutoCompact.DefaultFactor):
       (DataFrame, Long) => Unit = {
-    val commit = mountAppender(spark, indexDir)
-    val cents = loadCentroids(spark, indexDir)
     val cb = loadCodebook(spark, indexDir)
-    val auto = new AutoCompact(autoCompactEvery, autoCompactFactor)
-    (batch: DataFrame, epoch: Long) => {
-      commit.run(fsOf(batch.sparkSession, indexDir), batch, epoch) { stage =>
-        val vec = col(vecCol).cast("array<double>")
-        val assigned = batch.select(
-            element_at(NearestCentroids.column(vec, cents, 1), 1)
-              .as("list_id"),
-            col(idCol).cast("long").as("cid"), vec.as("cvec"))
-          .withColumn("res", residualCol(col("cvec"), cents, col("list_id")))
-        val codeCols = Similarity.pqCodeCols(col("res"), cb).map(_.cast("int"))
-        assigned.select(Seq(col("list_id"), col("cid")) ++ codeCols: _*)
-          .repartition(col("list_id")) // one file per touched list per epoch
-          .write.partitionBy("list_id").parquet(s"$stage/lists")
-      } { _ =>
-        // epoch fully committed: the between-epochs single-writer window
-        auto.tick(listFileCount(spark, indexDir), cents.length)(
-          compact(spark, indexDir))
-      }
-    }
+    appendSink(spark, indexDir, autoCompactEvery, autoCompactFactor)(
+      (batch, cents) => pqRows(assign(batch, idCol, vecCol, cents), cb))
+  }
+
+  /** (list_id, cid, cvec, res): `batch`'s vectors assigned to their
+    * nearest list, with the residual the PQ codes encode. */
+  private def assign(batch: DataFrame, idCol: String, vecCol: String,
+                     cents: Array[Array[Double]]): DataFrame = {
+    val vec = col(vecCol).cast("array<double>")
+    batch.select(nearestList(vec, cents).as("list_id"),
+        col(idCol).cast("long").as("cid"), vec.as("cvec"))
+      .withColumn("res", residualCol(col("cvec"), cents, col("list_id")))
   }
 
   /** [[ivfPqAppender]] that RECENTERS ITSELF under embedding drift — the
@@ -351,20 +472,16 @@ object AnnIndex {
     * the [[recenterPq]] verb, and this sink wires the §2.6 detector to it
     * so the index repairs itself instead of waiting for an operator.
     *
-    * Drift signal: per ingested vector, a quantization-miss Bernoulli —
-    * cosine to its nearest coarse centroid < `fitCosine` — folded into a
-    * driver-side [[Drift.Ddm]] as two deterministic runs (zeros before
-    * ones). The feed is the epoch's post-commit step: a re-delivered
-    * epoch feeds nothing, and a crash between the append commit and the
-    * feed loses only that epoch's detector samples (an undercount the
-    * detector absorbs — it just fires an epoch later). On a DDM fire whose
-    * trigger error rate also clears `minErrRate`, [[recenterPq]] retrains
-    * coarse + codebook + codes in the same between-epochs single-writer
-    * window and swaps all three sub-tables as one staged [[Takedown]]
-    * commit; the sink then reloads both model sidecars and resets the
-    * detector (new regime, fresh baseline). Epoch markers are untouched —
-    * replay idempotence survives the rebuild. Single maintainer stream per
-    * index, sharing [[ivfPqAppender]]'s marker namespace. */
+    * Drift signal: every ingested vector feeds [[feedMisses]] in the
+    * epoch's post-commit step: a re-delivered epoch feeds nothing, and a
+    * crash between the append commit and the feed loses only that epoch's
+    * detector samples (an undercount the detector absorbs — it just fires
+    * an epoch later). On a fire, [[recenterPq]] retrains coarse + codebook
+    * + codes in the same between-epochs single-writer window and swaps all
+    * three sub-tables as one staged [[Takedown]] commit; the sink then
+    * reloads both model sidecars. Epoch markers are untouched — replay
+    * idempotence survives the rebuild. Single maintainer stream per index,
+    * sharing [[ivfPqAppender]]'s marker namespace. */
   def recenteringPqAppender(spark: SparkSession, indexDir: String,
                             idCol: String, vecCol: String,
                             fitCosine: Double = 0.7,
@@ -376,7 +493,8 @@ object AnnIndex {
                             onRebuild: Long => Unit = _ => ()):
       (DataFrame, Long) => Unit = {
     Takedown.heal(spark, indexDir) // a crashed recenter owns all three subs
-    val commit = mountAppender(spark, indexDir)
+    val commit = appenderCommit(indexDir)
+    val log = mount(spark, commit)
     val cents = new java.util.concurrent.atomic.AtomicReference(
       loadCentroids(spark, indexDir))
     val cb = new java.util.concurrent.atomic.AtomicReference(
@@ -386,43 +504,20 @@ object AnnIndex {
     (batch: DataFrame, epoch: Long) => {
       commit.run(fsOf(batch.sparkSession, indexDir), batch, epoch) { stage =>
         val c = cents.get()
-        val vec = col(vecCol).cast("array<double>")
-        val assigned = batch.select(
-            element_at(NearestCentroids.column(vec, c, 1), 1).as("list_id"),
-            col(idCol).cast("long").as("cid"), vec.as("cvec"))
-          .withColumn("res", residualCol(col("cvec"), c, col("list_id")))
+        val assigned = assign(batch, idCol, vecCol, c)
           .localCheckpoint() // two consumers: the append and the drift feed
-        val codeCols = Similarity.pqCodeCols(col("res"), cb.get())
-          .map(_.cast("int"))
-        assigned.select(Seq(col("list_id"), col("cid")) ++ codeCols: _*)
-          .repartition(col("list_id")) // one file per touched list per epoch
-          .write.partitionBy("list_id").parquet(s"$stage/lists")
+        log.stage(pqRows(assigned, cb.get()), stage, "lists")
         (assigned, c)
       } { case (assigned, c) =>
         // epoch committed — now the drift feed (see scaladoc for ordering)
-        val centTable = typedLit(c.map(_.toSeq).toSeq)
-        val fitRow = assigned.select(
-            (VecFns.cosine(col("cvec"),
-              element_at(centTable, col("list_id").cast("int")))
-              < fitCosine).cast("long").as("miss"))
-          .agg(sum("miss"), count(lit(1))).head()
-        val bad = if (fitRow.isNullAt(0)) 0L else fitRow.getLong(0)
-        val n = fitRow.getLong(1)
-        var fire = ddm.addRun(0.0, n - bad)
-        if (ddm.addRun(1.0, bad)) fire = true
-        if (fire && n > 0 && bad.toDouble / n >= minErrRate) {
+        feedMisses(ddm, assigned, col("cvec"), col("list_id").cast("int"), c,
+            fitCosine, minErrRate, epoch, onRebuild) {
           cents.set(recenterPq(spark, indexDir, kmIters, kmSeed + epoch))
           cb.set(loadCodebook(spark, indexDir))
-          ddm.reset()
-          onRebuild(epoch)
         }
-        auto.tick(listFileCount(spark, indexDir), cents.get().length)(
-          compact(spark, indexDir))
+        autoTick(spark, log, indexDir, auto, cents.get().length)
         // release the pinned batch (appends recur on an unbounded stream)
-        try assigned.queryExecution.logical.collect {
-          case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-        }.foreach(_.unpersist(blocking = false))
-        catch { case _: Throwable => () }
+        graft.SessionMemo.unpersistLeaves(assigned)
       }
     }
   }
@@ -430,8 +525,8 @@ object AnnIndex {
   // ------------------------------------------------------ semantic screen
 
   /** Batch-vs-store SEMANTIC near-dup probe on the pruned path: assign each
-    * probe vector its `nprobe` nearest coarse cells, read ONLY those list
-    * partitions (the probe set is driver-known — ≤ nlist ints — so
+    * probe vector its `nprobe` nearest coarse cells, read ONLY those lists
+    * (the probe set is driver-known — ≤ nlist ints — so
     * `list_id IN (...)` is a STATIC partition filter, the [[queryIvf]]
     * discipline), and flag every probe id with ANY stored vector at cosine
     * ≥ `threshold`. Returns distinct flagged ids as (`id`). The probe side
@@ -445,27 +540,28 @@ object AnnIndex {
     * clusters at all). */
   def probeStoredVectors(spark: SparkSession, indexDir: String,
                          queries: DataFrame, qidCol: String, vecCol: String,
-                         threshold: Double, nprobe: Int = 4): DataFrame = {
-    val cents = loadCentroids(spark, indexDir)
-    val qLists = queries.select(
-      col(qidCol).cast("long").as("qid"),
-      col(vecCol).cast("array<double>").as("qvec"),
-      explode(NearestCentroids.column(col(vecCol).cast("array<double>"),
-        cents, math.min(nprobe, cents.length))).as("list_id"))
-    val probed = qLists.select("list_id").distinct().collect()
-      .map(_.getAs[Number](0).intValue) // ≤ nlist rows by construction
-    val lists = spark.read.parquet(s"$indexDir/lists")
-      .filter(col("list_id").isin(probed.map(Int.box): _*))
-    lists.join(broadcast(qLists), Seq("list_id"))
+                         threshold: Double, nprobe: Int = 4): DataFrame =
+    probeWith(spark, indexDir, loadCentroids(spark, indexDir), queries,
+      qidCol, vecCol, threshold, nprobe)
+
+  /** [[probeStoredVectors]] with the caller's centroids (a sink holds
+    * them from its mount). */
+  private def probeWith(spark: SparkSession, indexDir: String,
+                        cents: Array[Array[Double]], queries: DataFrame,
+                        qidCol: String, vecCol: String, threshold: Double,
+                        nprobe: Int): DataFrame =
+    probeJoin(spark, indexDir,
+        queries.select(col(qidCol).cast("long").as("qid"),
+          col(vecCol).cast("array<double>").as("qvec")), cents, nprobe)
       .filter(VecFns.cosine(col("qvec"), col("cvec")) >= threshold)
       .select(col("qid").as("id")).distinct()
-  }
 
   /** foreachBatch sink SCREENING each micro-batch's embeddings against the
     * persisted IVF index before admitting: documents whose vector is a
     * semantic near-duplicate (cosine ≥ `threshold`) of anything already
     * indexed are dropped; survivors' vectors stage-commit-publish into the
-    * inverted file and the surviving rows (original columns) flow to `out`.
+    * inverted file's log and the surviving rows (original columns) flow to
+    * `out`.
     * The third front door: [[FingerprintStore.dedupSink]] kills the
     * byte-identical re-delivery, [[SignatureStore.screenSink]] the
     * one-token re-crawl, and this screen the PARAPHRASE — same meaning,
@@ -473,15 +569,12 @@ object AnnIndex {
     * (the SemDeDup observation, applied at ingest time instead of as a
     * batch sweep).
     *
-    * Per epoch the batch probes via [[probeStoredVectors]] (statically
-    * pruned list scan, probe cost tracks the batch's cell footprint × list
-    * depth, never whole-store age) and survivors append under the shared
-    * stage→marker→publish protocol ([[EpochLog.Commit]]), because a screen
-    * must never re-probe a store containing its own epoch's staged
-    * vectors: a replay from any
-    * pre-marker crash re-probes a store WITHOUT this epoch's vectors and
-    * recomputes identical survivors (never a self-match); a post-marker
-    * crash replays as a heal that finishes the publish. Near-dups WITHIN
+    * Per epoch the batch probes via [[probeStoredVectors]] (probe cost
+    * tracks the batch's cell footprint × list depth, never store age) and
+    * survivors append under [[EpochLog.Commit]]: a replay from a
+    * pre-marker crash re-probes a store WITHOUT this epoch's vectors
+    * (never a self-match); a post-marker one heals the publish. Near-dups
+    * WITHIN
     * one batch admit together (screen compares batch vs store; intra-batch
     * semantic dedup at micro-batch size is the batch pipeline's job —
     * `dedup_semantic`). Single screen stream per index; re-centering over
@@ -492,18 +585,18 @@ object AnnIndex {
                          autoCompactEvery: Int = AutoCompact.DefaultCheckEvery,
                          autoCompactFactor: Int = AutoCompact.DefaultFactor)
                         (out: DataFrame => Unit): (DataFrame, Long) => Unit = {
-    val commit = mountScreen(spark, indexDir, streamTag)
+    val commit = screenCommit(indexDir, streamTag)
+    val log = mount(spark, commit)
     val cents = loadCentroids(spark, indexDir)
     val auto = new AutoCompact(autoCompactEvery, autoCompactFactor)
-    screenEpoch(spark, idCol, vecCol, threshold, nprobe, commit, cents,
+    screenEpoch(spark, idCol, vecCol, threshold, nprobe, commit, log, cents,
       auto)(out, _ => ())
   }
 
   /** The screens' epoch namespace on stream `tag`:
     * `.annscr_stage_<tag>_<e>`, `_annscr_<tag>_epoch_<e>`. */
-  private def mountScreen(spark: SparkSession, indexDir: String,
-                          tag: String): EpochLog.Commit =
-    mount(spark, EpochLog.commit(indexDir, "annscr", tag, Lists))
+  private def screenCommit(indexDir: String, tag: String): EpochLog.Commit =
+    EpochLog.commit(indexDir, "annscr", tag, Lists)
 
   /** One screen trigger (shared by [[semanticScreenSink]] and
     * [[recenteringScreenSink]]): probe → `out(survivors)` → stage, commit,
@@ -512,14 +605,14 @@ object AnnIndex {
     * (the recentering sink's drift feed) never double-counts it. */
   private def screenEpoch(spark: SparkSession, idCol: String, vecCol: String,
                           threshold: Double, nprobe: Int,
-                          commit: EpochLog.Commit,
+                          commit: EpochLog.Commit, log: EpochLog,
                           cents: Array[Array[Double]], auto: AutoCompact)
                          (out: DataFrame => Unit, after: DataFrame => Unit)
                          (batch: DataFrame, epoch: Long): Unit = {
     val indexDir = commit.dir
     commit.run(fsOf(batch.sparkSession, indexDir), batch, epoch) { stage =>
       val b = batch.localCheckpoint()
-      val flagged = probeStoredVectors(spark, indexDir, b, idCol, vecCol,
+      val flagged = probeWith(spark, indexDir, cents, b, idCol, vecCol,
           threshold, nprobe)
         .select(col("id").as(idCol)).localCheckpoint()
       val survivors = b.join(broadcast(flagged), Seq(idCol), "left_anti")
@@ -528,42 +621,28 @@ object AnnIndex {
       // `out` with identical survivors — `out` must be idempotent under
       // epoch re-delivery (marker-protected, like every sink here).
       out(survivors)
-      survivors.select(col(idCol).cast("long").as("cid"),
-          col(vecCol).cast("array<double>").as("cvec"))
-        .select(
-          element_at(NearestCentroids.column(col("cvec"), cents, 1), 1)
-            .as("list_id"),
-          col("cid"), col("cvec"))
-        .repartition(col("list_id")) // one file per touched list per epoch
-        .write.partitionBy("list_id").parquet(s"$stage/lists")
+      val vec = col(vecCol).cast("array<double>")
+      log.stage(survivors.select(nearestList(vec, cents).as("list_id"),
+        col(idCol).cast("long").as("cid"), vec.as("cvec")), stage, "lists")
       survivors
     } { survivors =>
-      // epoch fully committed: the between-epochs single-writer window
-      auto.tick(listFileCount(spark, indexDir), cents.length)(
-        compact(spark, indexDir))
+      autoTick(spark, log, indexDir, auto, cents.length)
       after(survivors)
     }
   }
 
   /** [[semanticScreenSink]] that RECENTERS ITSELF under embedding drift —
-    * closing the loop between the engine's drift-detection heritage (DDM,
-    * SURVEY §2.6) and its store layer. The plain screen's coarse centroids
-    * are frozen at mount; when the embedding distribution drifts (a new
-    * encoder version, a topic shift), fresh vectors quantize badly — they
-    * crowd into a few far-away cells, the probe's nprobe cells stop
-    * covering true neighbors, and paraphrase recall decays. The documented
-    * remedy was a MANUAL rebuild under a new variant token; this sink
-    * watches for the drift and performs the rebuild itself.
+    * DDM (SURVEY §2.6) applied to the store layer. The plain screen's
+    * centroids are frozen at mount; under embedding drift (a new encoder
+    * version, a topic shift) fresh vectors crowd into a few far cells, the
+    * nprobe cells stop covering true neighbors and paraphrase recall
+    * decays. This sink watches for that and rebuilds itself.
     *
-    * Drift signal: per admitted survivor, a Bernoulli "quantization miss"
-    * — cosine to its nearest coarse centroid < `fitCosine` — fed into a
-    * driver-side [[Drift.Ddm]] (zeros before ones within a trigger, a
-    * fixed order so the scan is deterministic). Re-delivered epochs feed
-    * NOTHING ([[screenEpoch]] skips its post-commit step), so the
-    * detector composes with the marker replay discipline. On a DDM drift
-    * signal whose trigger
-    * error rate also clears `minErrRate` (one bad doc after a long clean
-    * run must not thrash a petabyte index), the sink — in the SAME
+    * Drift signal: every admitted survivor feeds [[feedMisses]].
+    * Re-delivered epochs feed NOTHING ([[screenEpoch]] skips its
+    * post-commit step), so the detector composes with the marker replay
+    * discipline. On a fire (`minErrRate` keeps one bad doc after a long
+    * clean run from thrashing a petabyte index), the sink — in the SAME
     * between-epochs single-writer window auto-compaction already owns —
     * retrains k-means on the store's CURRENT vectors and swaps lists +
     * centroids under the staged [[Takedown]] protocol: both sub-tables
@@ -573,7 +652,7 @@ object AnnIndex {
     * the [[graft.streaming.ModelRefit]] publish discipline (train, persist,
     * then swap; never a half-built model) applied to an on-disk index.
     * Epoch markers are untouched, so replay idempotence survives the
-    * rebuild. The DDM resets after a rebuild (new regime, fresh baseline).
+    * rebuild.
     *
     * `onRebuild(epoch)` is telemetry (tests, ops counters) — called after
     * the swap commits. Single screen stream per index, as ever. */
@@ -589,37 +668,27 @@ object AnnIndex {
                             onRebuild: Long => Unit = _ => ())
                            (out: DataFrame => Unit): (DataFrame, Long) => Unit = {
     Takedown.heal(spark, indexDir) // a crashed recenter owns lists+centroids
-    val commit = mountScreen(spark, indexDir, streamTag)
+    val commit = screenCommit(indexDir, streamTag)
+    val log = mount(spark, commit)
     val cents = new java.util.concurrent.atomic.AtomicReference(
       loadCentroids(spark, indexDir))
     val ddm = new Drift.Ddm()
     val auto = new AutoCompact(autoCompactEvery, autoCompactFactor)
     (batch: DataFrame, epoch: Long) => {
       val c = cents.get()
-      screenEpoch(spark, idCol, vecCol, threshold, nprobe, commit, c,
+      screenEpoch(spark, idCol, vecCol, threshold, nprobe, commit, log, c,
           auto)(out, { survivors =>
         val vec = col(vecCol).cast("array<double>")
-        val centTable = typedLit(c.map(_.toSeq).toSeq)
-        val fitRow = survivors.select(
-            (VecFns.cosine(vec, element_at(centTable,
-              element_at(NearestCentroids.column(vec, c, 1), 1)))
-              < fitCosine).cast("long").as("miss"))
-          .agg(sum("miss"), count(lit(1))).head()
-        val bad = if (fitRow.isNullAt(0)) 0L else fitRow.getLong(0)
-        val n = fitRow.getLong(1)
-        // two-segment batch feed, zeros before ones (deterministic order):
-        // the detector's addRun keeps the reference recurrence bit-exact
-        var fire = ddm.addRun(0.0, n - bad)
-        if (ddm.addRun(1.0, bad)) fire = true
-        if (fire && n > 0 && bad.toDouble / n >= minErrRate) {
+        feedMisses(ddm, survivors, vec, nearestList(vec, c), c, fitCosine,
+            minErrRate, epoch, onRebuild) {
           cents.set(rebuildScreen(spark, indexDir, c.length, kmIters,
             kmSeed + epoch))
-          ddm.reset()
-          onRebuild(epoch)
         }
       })(batch, epoch)
     }
   }
+
+  // ------------------------------------------------------------ maintenance
 
   /** Manual recenter — the maintenance entry behind
     * [[recenteringScreenSink]]'s drift path, for operators who want to
@@ -633,23 +702,18 @@ object AnnIndex {
   def recenter(spark: SparkSession, indexDir: String, kmIters: Int = 3,
                seed: Long = 42L): Array[Array[Double]] = {
     Takedown.heal(spark, indexDir)
-    TableSwap.heal(fsOf(spark, indexDir), indexDir, "lists")
     val nlist = loadCentroids(spark, indexDir).length
     rebuildScreen(spark, indexDir, nlist, kmIters, seed)
   }
 
   /** Recenter verb for the PQ-coded (residual IVFADC) index — the
     * [[recenter]] protocol applied to the layout whose lists hold CODES,
-    * not vectors. Under the same embedding drift that decays the raw
-    * screen, this index decays TWICE: freshly appended vectors crowd into
-    * far coarse cells AND their residuals fall outside what the codebook's
-    * codewords cover, so ADC distances go mushy and the shortlist stops
-    * containing true neighbors; until this verb the only remedy was a full
-    * manual rebuild under a new variant token (discarding epoch markers
-    * and the dir identity).
+    * not vectors. Under drift this index decays twice: appended vectors
+    * crowd into far coarse cells AND their residuals fall outside the
+    * codebook's cover, so the ADC shortlist stops holding true neighbors.
     *
-    * Protocol: reconstruct every stored vector from its own codes — coarse
-    * centroid + per-subspace codeword, the PQ decode, exact up to
+    * Protocol: fold the log, then reconstruct every stored vector from its
+    * own codes — coarse centroid + per-subspace codeword, exact up to
     * quantization error — then retrain the coarse quantizer on the
     * reconstructions, recompute residuals against the NEW centroids,
     * retrain the codebook on those residuals (IVFADC: bits spend on local
@@ -668,7 +732,7 @@ object AnnIndex {
   def recenterPq(spark: SparkSession, indexDir: String, kmIters: Int = 3,
                  seed: Long = 42L): Array[Array[Double]] = {
     Takedown.heal(spark, indexDir)
-    TableSwap.heal(fsOf(spark, indexDir), indexDir, "lists")
+    fold(spark, indexDir)
     val cents = loadCentroids(spark, indexDir)
     val cb = loadCodebook(spark, indexDir)
     val m = cb.length
@@ -682,96 +746,62 @@ object AnnIndex {
       concat((0 until m).map(b => element_at(cbLits(b), col(s"c$b"))): _*),
       (coarse, res) => coarse + res)
     // pin the pre-rebuild reconstruction: the swap rewrites what we read
-    val cur = spark.read.parquet(s"$indexDir/lists")
+    val cur = read(spark, indexDir)
       .select(col("cid"), recon.as("cvec")).localCheckpoint()
     val newCents = graft.ml.KMeansQuantizer.fit(cur, "cid", "cvec",
       cents.length, kmIters, seed)
-    val assigned = cur.select(
-        element_at(NearestCentroids.column(col("cvec"), newCents, 1), 1)
-          .as("list_id"),
+    val assigned = cur.select(nearestList(col("cvec"), newCents).as("list_id"),
         col("cid"), col("cvec"))
       .withColumn("res", residualCol(col("cvec"), newCents, col("list_id")))
       .localCheckpoint()
     val newCb = graft.ml.KMeansQuantizer.fitProduct(assigned, "cid", "res",
       m, ksub, kmIters, seed)
-    val codeCols = Similarity.pqCodeCols(col("res"), newCb).map(_.cast("int"))
-    val spark2 = spark
-    import spark2.implicits._
     Takedown.run(spark, indexDir, Seq("lists", "centroids", "codebook")) {
       stage =>
-        assigned.select(Seq(col("list_id"), col("cid")) ++ codeCols: _*)
-          .repartition(col("list_id"))
-          .write.partitionBy("list_id").parquet(s"$stage/lists")
-        newCents.zipWithIndex.map { case (cv, i) => (i + 1, cv.toSeq) }.toSeq
-          .toDF("list_id", "cvec")
-          .coalesce(1).write.parquet(s"$stage/centroids")
-        newCb.zipWithIndex.flatMap { case (sub, b) =>
-            sub.zipWithIndex.map { case (cent, j) => (b, j, cent.toSeq) }
-          }.toSeq
-          .toDF("b", "j", "cent")
-          .coalesce(1).write.parquet(s"$stage/codebook")
+        writeBase(pqRows(assigned, newCb), s"$stage/lists")
+        writeCentroids(spark, newCents, s"$stage/centroids")
+        writeCodebook(spark, newCb, s"$stage/codebook")
     }
-    // release the pinned blocks (the rebuildScreen unpersist discipline)
-    Seq(cur, assigned).foreach { df =>
-      try df.queryExecution.logical.collect {
-        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-      }.foreach(_.unpersist(blocking = false))
-      catch { case _: Throwable => () }
-    }
+    Seq(cur, assigned).foreach(graft.SessionMemo.unpersistLeaves)
     newCents
   }
 
   /** Retrain the coarse quantizer on the store's current vectors and swap
-    * lists + centroids as ONE staged commit (see [[recenteringScreenSink]]).
+    * lists + centroids as ONE staged commit (see [[recenteringScreenSink]]);
+    * the log folds first, so the swap replaces every stored row.
     * Deterministic per (store content, seed). Returns the new centroids. */
   private def rebuildScreen(spark: SparkSession, indexDir: String,
                             nlist: Int, iters: Int,
                             seed: Long): Array[Array[Double]] = {
+    fold(spark, indexDir)
     // pin the pre-rebuild rows: the swap below rewrites what we read
-    val cur = spark.read.parquet(s"$indexDir/lists")
-      .select(col("cid"), col("cvec")).localCheckpoint()
+    val cur = read(spark, indexDir).select(col("cid"), col("cvec"))
+      .localCheckpoint()
     val newCents = graft.ml.KMeansQuantizer.fit(cur, "cid", "cvec", nlist,
       iters, seed)
-    val spark2 = spark
-    import spark2.implicits._
     Takedown.run(spark, indexDir, Seq("lists", "centroids")) { stage =>
-      cur.select(
-          element_at(NearestCentroids.column(col("cvec"), newCents, 1), 1)
-            .as("list_id"),
-          col("cid"), col("cvec"))
-        .repartition(col("list_id"))
-        .write.partitionBy("list_id").parquet(s"$stage/lists")
-      newCents.zipWithIndex.map { case (cv, i) => (i + 1, cv.toSeq) }.toSeq
-        .toDF("list_id", "cvec")
-        .coalesce(1).write.parquet(s"$stage/centroids")
+      writeBase(cur.select(nearestList(col("cvec"), newCents).as("list_id"),
+        col("cid"), col("cvec")), s"$stage/lists")
+      writeCentroids(spark, newCents, s"$stage/centroids")
     }
-    // release the pinned blocks (rebuilds recur on an unbounded stream):
-    // localCheckpoint blocks live at the RDD layer — the IngestGate
-    // unpersistLeaves shape, not Dataset.unpersist
-    try cur.queryExecution.logical.collect {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-    }.foreach(_.unpersist(blocking = false))
-    catch { case _: Throwable => () }
+    // release the pinned blocks (rebuilds recur on an unbounded stream)
+    graft.SessionMemo.unpersistLeaves(cur)
     newCents
   }
 
-  /** Compact the inverted file: every appended micro-batch leaves one
-    * parquet file per touched list partition, so a long-running ingest
-    * turns each list into thousands of tiny files — and the per-query cost
-    * becomes file opens, not bytes scanned (the small-file problem; FAISS
-    * solves it by merging on-disk segments, log-structured stores by
-    * leveled compaction). Rewrites `lists/` with ONE file per list: a
-    * hash-repartition on `list_id` puts each list in exactly one task, so
-    * the write emits one file per (task, list). Schema-agnostic — raw
-    * (cid, cvec) and PQ-coded (cid, c0..cm) layouts compact identically.
+  /** Compact the inverted file: fold the log into the base, then rewrite
+    * the base with ONE file per list. Each fold adds a file per touched
+    * list, so a long ingest turns each list into many small files and the
+    * per-query cost into file opens (the small-file problem; FAISS merges
+    * on-disk segments, log-structured stores compact by level).
+    * Schema-agnostic — raw and PQ-coded lists compact identically.
     *
-    * Swap protocol ([[TableSwap]]): the full rewrite lands in a temp dir
-    * first, then two renames publish it; a crash between them is healed by
-    * the recovery check on the next call or mount. Run from the maintenance
-    * path that owns the index while no appender is active — same
-    * single-writer contract as
-    * rebuilding under a new variant; epoch markers are untouched, so an
-    * appender restarted afterwards still skips ingested epochs. */
+    * Swap protocol ([[TableSwap]]): the rewrite lands in a temp dir, then
+    * two renames publish it; a crash between them heals at the next call,
+    * read or mount. The log folds first, so the swap only ever replaces
+    * the base and no logged row survives it twice. Single writer, between
+    * epochs; epoch markers are untouched, so a restarted appender still
+    * skips ingested epochs. */
   def compact(spark: SparkSession, indexDir: String): Unit =
     rewriteLists(spark, indexDir, exclude = Seq.empty)
 
@@ -787,11 +817,10 @@ object AnnIndex {
 
   private def rewriteLists(spark: SparkSession, indexDir: String,
                            exclude: Seq[Long]): Unit = {
-    val fs = fsOf(spark, indexDir)
-    // crash recovery: a previous compact moved lists/ aside but died before
-    // publishing the rewrite — the original data is intact under the aside
-    TableSwap.heal(fs, indexDir, "lists")
-    val kept0 = spark.read.parquet(s"$indexDir/lists")
+    // the fold heals a crashed compact's aside first: the original data is
+    // intact under it
+    fold(spark, indexDir)
+    val kept0 = read(spark, indexDir)
     val kept =
       if (exclude.isEmpty) kept0
       // bounded takedown batch: the id list rides as a NOT-IN predicate
@@ -806,23 +835,16 @@ object AnnIndex {
       require(!kept.isEmpty,
         s"AnnIndex.retract would remove $indexDir's every vector — delete " +
           "the index dir and reseed instead of retracting the whole store")
-    TableSwap.rewrite(fs, indexDir, "lists")(tmp =>
-      kept.repartition(col("list_id"))
-        .write.partitionBy("list_id").parquet(tmp.toString))
+    TableSwap.rewrite(fsOf(spark, indexDir), indexDir, "lists")(tmp =>
+      writeBase(kept, tmp.toString))
   }
 
-  /** Data-file count of the index's inverted file (compaction telemetry —
-    * the appender's files-per-epoch growth is what [[compact]] resets). */
+  /** Data-file count of the index's inverted file, base plus log
+    * (compaction telemetry — the files the epochs and folds add are what
+    * [[compact]] resets). */
   def listFileCount(spark: SparkSession, indexDir: String): Int = {
-    val lists = new Path(s"$indexDir/lists")
-    val fs = lists.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(lists, true)
-    var n = 0
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(".parquet")) n += 1
-    }
-    n
+    val fs = fsOf(spark, indexDir)
+    listsLog(fs, indexDir).fileCount(fs, indexDir, "lists")
   }
 
   /** Top-k cosine over the persisted index, probing `nprobe` lists per query.
@@ -830,21 +852,9 @@ object AnnIndex {
   def queryIvf(spark: SparkSession, indexDir: String, queries: DataFrame,
                qidCol: String, vecCol: String, k: Int,
                nprobe: Int = 4): DataFrame = {
-    val cents: Array[Array[Double]] = spark.read
-      .parquet(s"$indexDir/centroids").orderBy("list_id")
-      .select(col("cvec").cast("array<double>")).collect()
-      .map(_.getSeq[Double](0).toArray)
-    val q = queries.select(col(qidCol).as("qid"), col(vecCol).as("qvec"))
-    val qLists = q.select(col("qid"), col("qvec"),
-      explode(NearestCentroids.column(col("qvec"), cents,
-        math.min(nprobe, cents.length))).as("list_id"))
-    // The probe set is driver-known (the query side is small by contract) —
-    // materialize it so the list scan carries a static partition filter.
-    val probed = qLists.select("list_id").distinct().collect()
-      .map(_.getAs[Number](0).intValue)
-    val lists = spark.read.parquet(s"$indexDir/lists")
-      .filter(col("list_id").isin(probed.map(Int.box): _*))
-    val scored = lists.join(broadcast(qLists), Seq("list_id"))
+    val scored = probeJoin(spark, indexDir,
+        queries.select(col(qidCol).as("qid"), col(vecCol).as("qvec")),
+        loadCentroids(spark, indexDir), nprobe)
       .select(col("qid"), col("cid"),
         VecFns.cosine(col("qvec"), col("cvec")).as("cos"))
     TopK.topKPerQuery(scored, k)

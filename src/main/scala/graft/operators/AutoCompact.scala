@@ -2,9 +2,10 @@ package graft.operators
 
 /** Epoch-cadenced auto-compaction policy for the engine's persisted,
   * appender-maintained stores (fingerprints, packed shards, IVF lists,
-  * MinHash signatures). Every committed epoch leaves ~one parquet file per
-  * touched partition, so a long-lived sink degrades each partition into
-  * thousands of tiny files — and every store grew a manual `compact` for
+  * MinHash signatures). Every committed epoch leaves a parquet file (in
+  * the log of an [[EpochLog]] store, per touched partition in the packed
+  * shards), so a long-lived sink degrades a store into thousands of tiny
+  * files — and every store grew a manual `compact` for
   * exactly that, but a continuous deployment has no natural place to call
   * it. This hook IS that place: the sink calls [[tick]] AFTER an epoch
   * fully commits (marker written, publish finished), which is precisely
@@ -23,9 +24,11 @@ package graft.operators
   * untouched, so epoch idempotence survives. `checkEvery ≤ 0` disables
   * the hook (the manual-maintenance deployments keep their old behavior).
   *
-  * Stores with an [[EpochLog]] pass its fold as `fold`: it runs at EVERY
-  * cadence boundary, before the bound check, so the log holds at most
-  * `checkEvery` epochs and the bound is judged on the folded base.
+  * Stores with an [[EpochLog]] (fingerprints, signatures, IVF lists) pass
+  * its fold as `fold`: it runs at EVERY cadence boundary, before the bound
+  * check, so the log holds at most `checkEvery` epochs and the bound is
+  * judged on the folded base (each fold adds a file per touched
+  * partition).
   *
   * In-memory cadence state only: a restarted sink starts its count at the
   * bound check again from zero, which at worst delays one check by

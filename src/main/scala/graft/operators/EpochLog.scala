@@ -24,8 +24,8 @@ import org.apache.spark.sql.types.StructType
   * their compactions share is [[TableSwap]].
   *
   * Layout (the [[EpochLog]] instances: [[FingerprintStore]] `fps`,
-  * [[SignatureStore]] `sigs` and `bands`): each table is a partitioned
-  * BASE, `<table>/<part>=K/` (written by seed,
+  * [[SignatureStore]] `sigs` and `bands`, [[AnnIndex]] `lists`): each table
+  * is a partitioned BASE, `<table>/<part>=K/` (written by seed or build,
   * fold, compact and retract), plus a flat LOG, `<table>_log/`, holding ONE
   * parquet file per committed epoch whose rows carry their partition value
   * as a plain column. Why a log: an epoch's few dozen rows spread over a
@@ -36,9 +36,9 @@ import org.apache.spark.sql.types.StructType
   * append cost tracked the store's partition count, not the batch. One
   * file per table per epoch makes the append track the batch.
   *
-  * Reads go through [[read]]: base ∪ log. A static `part IN (...)` filter
-  * still prunes the base's partition dirs and becomes a row-group filter on
-  * the log's few files.
+  * Reads go through [[readHealed]] (or the audit's [[read]]): base ∪ log.
+  * A static `part IN (...)` filter still prunes the base's partition dirs
+  * and becomes a row-group filter on the log's few files.
   *
   * An epoch of these tables [[stage]]s one file per table, and its
   * publish renames that file into the table's log.
@@ -95,6 +95,16 @@ private[operators] final class EpochLog(tables: Seq[EpochLog.Table]) {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], t.schema))
   }
 
+  /** [[read]] for a reader beside the writer: heals a crashed compact's
+    * aside of `name` and finishes a committed fold first, so it never sees
+    * a silently empty table or a folded row twice. */
+  def readHealed(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val fs = fsOf(spark, dir)
+    TableSwap.heal(fs, dir, name)
+    finishFold(fs, dir)
+    read(spark, dir, name)
+  }
+
   /** Write one epoch's rows of `name` as ONE parquet file under
     * `stage/name` (batch-sized input: one task). */
   def stage(rows: DataFrame, stage: Path, name: String): Unit =
@@ -106,10 +116,13 @@ private[operators] final class EpochLog(tables: Seq[EpochLog.Table]) {
 
   /** Fold the log into the base: one partitioned write of every log row
     * (one file per touched partition), committed by `_fold_pending`, then
-    * published and the folded log files removed. Single-writer, between
-    * epochs — the store's compaction contract. No-op on an empty log. */
+    * published and the folded log files removed. Heals every table's
+    * compact aside first: a fold must never publish into a base a crashed
+    * compact moved aside. Single-writer, between epochs — the store's
+    * compaction contract. No-op on an empty log. */
   def fold(spark: SparkSession, dir: String): Unit = {
     val fs = fsOf(spark, dir)
+    tables.foreach(t => TableSwap.heal(fs, dir, t.name))
     healFold(fs, dir)
     val logged = tables.map(t => t -> logFiles(fs, dir, t.name))
       .filter(_._2.nonEmpty)

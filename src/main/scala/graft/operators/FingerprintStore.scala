@@ -72,12 +72,8 @@ object FingerprintStore {
     * compact's aside and finishes a committed fold first, so a reader never
     * sees a silently empty table or a folded row twice. Empty store → zero
     * rows. */
-  def read(spark: SparkSession, dir: String): DataFrame = {
-    val fs = fsOf(spark, dir)
-    TableSwap.heal(fs, dir, "fps")
-    Log.finishFold(fs, dir)
-    Log.read(spark, dir, "fps")
-  }
+  def read(spark: SparkSession, dir: String): DataFrame =
+    Log.readHealed(spark, dir, "fps")
 
   /** Fingerprint = xxhash64 of the raw text (the [[Dedup.fingerprint]]
     * exact-dup key); shard = its low byte. */
@@ -204,8 +200,6 @@ object FingerprintStore {
     val root = new Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val fpsDir = new Path(s"$dir/fps")
-    // before the fold: it must not publish over an aside
-    TableSwap.heal(fs, dir, "fps")
     Log.fold(spark, dir)
     if (!fs.exists(fpsDir)) return
     val kept0 = spark.read.schema(FpsSchema).parquet(fpsDir.toString)

@@ -195,12 +195,9 @@ object Forget {
     // wedging all future takedowns. Checked here, before anything
     // durable: the caller gets the error with a CLEAN ledger. One
     // request-pruned lists scan per configured semantic store.
-    def wouldEmpty(ivfDir: String, ids: Seq[Long]): Boolean = {
-      val lists = new Path(s"$ivfDir/lists")
-      ids.nonEmpty && fsOf(spark, ivfDir).exists(lists) &&
-        spark.read.parquet(lists.toString)
-          .filter(!col("cid").isin(ids.map(Long.box): _*)).isEmpty
-    }
+    def wouldEmpty(ivfDir: String, ids: Seq[Long]): Boolean =
+      ids.nonEmpty && AnnIndex.readNoHeal(spark, ivfDir).exists(
+        _.filter(!col("cid").isin(ids.map(Long.box): _*)).isEmpty)
     def refuseEmptying(ivfDir: String, ids: Seq[Long]): Unit =
       require(!wouldEmpty(ivfDir, ids),
         s"Forget: this request would retract $ivfDir's EVERY vector — " +

@@ -139,15 +139,14 @@ object Fsck {
     * `list_id` + `cid`). `id` carries the orphaned rows' cid. */
   def annInternal(spark: SparkSession, ivfDir: String,
                   layer: String = "ann"): DataFrame = {
-    val fs = fsOf(spark, ivfDir)
-    if (!fs.exists(new Path(s"$ivfDir/lists")) ||
-        !fs.exists(new Path(s"$ivfDir/centroids")))
+    if (!fsOf(spark, ivfDir).exists(new Path(s"$ivfDir/centroids")))
       return emptyFindings(spark)
-    val lists = spark.read.parquet(s"$ivfDir/lists").select("cid", "list_id")
-    val cents = spark.read.parquet(s"$ivfDir/centroids").select("list_id")
-    shape(lists.join(cents, Seq("list_id"), "left_anti")
-        .select(col("cid").as("id")),
-      "ann_orphan_list", layer, "vector in a list with no centroid")
+    AnnIndex.readNoHeal(spark, ivfDir).fold(emptyFindings(spark)) { lists =>
+      val cents = spark.read.parquet(s"$ivfDir/centroids").select("list_id")
+      shape(lists.join(cents, Seq("list_id"), "left_anti")
+          .select(col("cid").as("id")),
+        "ann_orphan_list", layer, "vector in a list with no centroid")
+    }
   }
 
   /** Cross-layer door membership: ids stored at a deeper layer must exist
@@ -155,14 +154,12 @@ object Fsck {
     * Checks ann ⊆ sig — the two id-keyed layers of the trio. */
   def doorMembership(spark: SparkSession, sigDir: String, ivfDir: String,
                      layer: String = "ann"): DataFrame = {
-    val fs = fsOf(spark, ivfDir)
-    if (!fs.exists(new Path(s"$ivfDir/lists")))
-      return emptyFindings(spark)
-    val annIds = spark.read.parquet(s"$ivfDir/lists")
-      .select(col("cid").as("id")).distinct()
-    val sigIds = SignatureStore.readSigsIdsNoHeal(spark, sigDir).distinct()
-    shape(annIds.join(sigIds, Seq("id"), "left_anti"),
-      "door_membership", layer, "stored in ann but not in sig")
+    AnnIndex.readNoHeal(spark, ivfDir).fold(emptyFindings(spark)) { lists =>
+      val annIds = lists.select(col("cid").as("id")).distinct()
+      val sigIds = SignatureStore.readSigsIdsNoHeal(spark, sigDir).distinct()
+      shape(annIds.join(sigIds, Seq("id"), "left_anti"),
+        "door_membership", layer, "stored in ann but not in sig")
+    }
   }
 
   /** Fingerprint-store screen audit: stored fps no Bloom sidecar claims
@@ -297,12 +294,9 @@ object Fsck {
         shape(wrong(SignatureStore.readSigsIdsNoHeal(spark, sigDir).distinct()),
           "misrouted", s"$layer/sig", s"route hash names another shard (k=$k)")
       else emptyFindings(spark)
-    val ann =
-      if (fsOf(spark, ivfDir).exists(new Path(s"$ivfDir/lists")))
-        shape(wrong(spark.read.parquet(s"$ivfDir/lists")
-            .select(col("cid").as("id")).distinct()),
-          "misrouted", s"$layer/ann", s"route hash names another shard (k=$k)")
-      else emptyFindings(spark)
+    val ann = AnnIndex.readNoHeal(spark, ivfDir).fold(emptyFindings(spark))(
+      lists => shape(wrong(lists.select(col("cid").as("id")).distinct()),
+        "misrouted", s"$layer/ann", s"route hash names another shard (k=$k)"))
     sig.unionByName(ann)
   }
 

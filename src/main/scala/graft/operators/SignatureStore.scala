@@ -274,12 +274,8 @@ object SignatureStore {
                                          dir: String): DataFrame =
     Log.read(spark, dir, "bands")
 
-  private def readSigsRaw(spark: SparkSession, dir: String): DataFrame = {
-    val fs = fsOf(spark, dir)
-    TableSwap.heal(fs, dir, "sigs")
-    Log.finishFold(fs, dir)
-    Log.read(spark, dir, "sigs")
-  }
+  private def readSigsRaw(spark: SparkSession, dir: String): DataFrame =
+    Log.readHealed(spark, dir, "sigs")
 
   /** The stored band index: (id, band_id, band_hash, bucket); empty frame
     * for a fresh store. A store holding sigs WITHOUT a band index (a
@@ -308,7 +304,7 @@ object SignatureStore {
     if (!hasSigs(spark, dir)) return
     // fold first: the rebuilt index replaces the whole bands base, so no
     // band row may stay behind in the log to double it
-    foldHealed(spark, dir)
+    Log.fold(spark, dir)
     val tmp = new Path(s"$dir/.bands_backfill.tmp")
     fs.delete(tmp, true)
     Dedup.bandedSigs(readSigsRaw(spark, dir).select("id", "sig"), "id",
@@ -566,25 +562,15 @@ object SignatureStore {
     * racing an in-flight one. */
   def compact(spark: SparkSession, dir: String): Unit = {
     Takedown.heal(spark, dir) // a crashed retract finishes before we rewrite
-    foldHealed(spark, dir)
+    Log.fold(spark, dir)
     compactTable(spark, dir, "sigs", "shard")
     compactTable(spark, dir, "bands", "bucket")
     writeBandCensus(spark, dir) // the census' periodic refresh point
   }
 
-  /** Heal both tables' compact asides, then fold the log (the fold must
-    * never publish into a base dir a crashed compact moved aside). */
-  private def foldHealed(spark: SparkSession, dir: String): Unit = {
-    val fs = fsOf(spark, dir)
-    TableSwap.heal(fs, dir, "sigs")
-    TableSwap.heal(fs, dir, "bands")
-    Log.fold(spark, dir)
-  }
-
   private def compactTable(spark: SparkSession, dir: String, sub: String,
                            partCol: String): Unit = {
-    val fs = fsOf(spark, dir)
-    TableSwap.heal(fs, dir, sub)
+    val fs = fsOf(spark, dir) // the fold before it healed the aside
     if (!fs.exists(new Path(s"$dir/$sub"))) return
     // schema supplied: compacting a table a takedown emptied must rewrite
     // zero rows, not fail schema inference
@@ -615,7 +601,7 @@ object SignatureStore {
     if (!hasSigs(spark, dir)) return
     // the log folds first (its own marker), so the staged swap below
     // rewrites the WHOLE store and no retracted row survives in the log
-    foldHealed(spark, dir)
+    Log.fold(spark, dir)
     import spark.implicits._
     // takedown batches are request-sized by contract — broadcast the list
     val gone = ids.toDF("id")

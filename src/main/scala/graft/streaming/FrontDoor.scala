@@ -56,12 +56,12 @@ import graft.operators.{AnnIndex, FingerprintStore, SignatureStore}
   * colliding band buckets, and the semantic probe only the batch's nprobe
   * nearest list partitions — nothing scales with store age except the
   * pruned partitions' own growth (BENCH_screen / BENCH_semscreen measure
-  * both at 10× stores). Writes track the batch too: the fp and signature
-  * layers append ONE log file per table per epoch (base + epoch log,
-  * [[graft.operators.EpochLog]]) instead of one file per touched
-  * partition — on a local FS without native Hadoop IO each created file
-  * and dir forks a `chmod`, and the partitioned append wrote ~290 of them
-  * per 100-doc trigger. Probes read base ∪ log; the stores' auto-compact
+  * both at 10× stores). Writes track the batch too: the fp, signature
+  * and semantic layers append ONE log file per table per epoch (base +
+  * epoch log, [[graft.operators.EpochLog]]) instead of one file per
+  * touched partition — on a local FS without native Hadoop IO each created
+  * file and dir forks a `chmod`, and the partitioned appends wrote ~290 of
+  * them per 100-doc trigger. Probes read base ∪ log; the stores' auto-compact
   * cadence folds the log into the partitioned base. Every store sink
   * applies [[graft.Tuning.mountDefaults]] at mount, so these reads list
   * their directories on the driver instead of in a distributed job

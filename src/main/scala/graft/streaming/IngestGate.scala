@@ -74,7 +74,8 @@ final class IngestGate(stats: DataFrame, minAffinity: Double,
   private def gateImpl(batch: DataFrame, idCol: String,
                        textCol: String): (DataFrame, () => Unit) = {
     val toks = Quality.tokens(batch, idCol, textCol).localCheckpoint()
-    (gateFromTokens(batch, toks, idCol), () => IngestGate.unpersistLeaves(toks))
+    (gateFromTokens(batch, toks, idCol),
+      () => graft.SessionMemo.unpersistLeaves(toks))
   }
 
   /** `writeStream.foreachBatch` adapter: admitted rows (original columns)
@@ -110,21 +111,9 @@ final class IngestGate(stats: DataFrame, minAffinity: Double,
           // have read the gated frame — block-manager occupancy stays
           // O(one batch) over an unbounded stream instead of riding GC.
           releaseToks()
-          IngestGate.unpersistLeaves(gated)
+          graft.SessionMemo.unpersistLeaves(gated)
         }
       }
     }
 }
 
-object IngestGate {
-  /** Best-effort unpersist of the localCheckpoint blocks a DataFrame pins
-    * (reachable as `LogicalRDD` leaves) — same shape as SessionMemo's
-    * eviction release. */
-  private[streaming] def unpersistLeaves(df: DataFrame): Unit =
-    try {
-      if (!df.sparkSession.sparkContext.isStopped)
-        df.queryExecution.logical.collect {
-          case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-        }.foreach(_.unpersist(blocking = false))
-    } catch { case _: Throwable => () }
-}

@@ -62,7 +62,7 @@ class AnnIndexSpec extends AnyFunSuite {
 
     // The space win is structural: the inverted lists persist ONLY
     // (cid, c0..c{m-1}) — no vector column anywhere in the on-disk schema.
-    val listCols = spark.read.parquet(s"$dir/lists").columns.toSet
+    val listCols = AnnIndex.read(spark, dir).columns.toSet
     assert(listCols == (Set("cid", "list_id") ++ (0 until 8).map(b => s"c$b")),
       listCols.toString)
 
@@ -163,10 +163,10 @@ class AnnIndexSpec extends AnyFunSuite {
       AnnIndex.retract(spark, dir, Seq(1L, 2L))
     }
     assert(ex.getMessage.contains("every vector"))
-    assert(spark.read.parquet(s"$dir/lists").count() == 2L,
+    assert(AnnIndex.read(spark, dir).count() == 2L,
       "the refused retract must leave the store untouched")
     AnnIndex.retract(spark, dir, Seq(1L)) // a non-emptying retract still works
-    assert(spark.read.parquet(s"$dir/lists").select("cid")
+    assert(AnnIndex.read(spark, dir).select("cid")
       .collect().map(_.getLong(0)).toSeq == Seq(2L))
   }
 
@@ -184,14 +184,113 @@ class AnnIndexSpec extends AnyFunSuite {
     val near = v0.zipWithIndex.map { case (x, i) => if (i == 0) x + 1e-3 else x }
     val far = Seq.fill(16)(2.0)
     val probes = Seq((900L, near), (901L, far)).toDF("vec_id", "embedding")
-    val flagged = AnnIndex.probeStoredVectors(spark, dir, probes, "vec_id",
-      "embedding", threshold = 0.999, nprobe = 2)
-    // probe pruning is structural, same pin as queryIvf: the inverted-file
-    // scan must carry a static list_id partition filter
-    val p = flagged.queryExecution.executedPlan.toString
-    assert(p.contains("PartitionFilters: [list_id"), p)
-    assert(flagged.collect().map(_.getLong(0)).toSeq == Seq(900L))
+    // the same probe over an index whose vec_id 0 sits only in the log:
+    // built without it, then appended
+    val logged = AnnIndex.ivfIndexDir(corpus.filter($"vec_id" =!= 0L),
+      "mem://ann_semprobe_spec", "vec_id", "embedding", nlist = 8, iters = 3,
+      seed = 42L,
+      variant = s"semprobe_log_${java.util.UUID.randomUUID().toString.take(8)}")
+    AnnIndex.ivfAppender(spark, logged, "vec_id", "embedding",
+      autoCompactEvery = 0)(corpus.filter($"vec_id" === 0L), 0L)
+    for (d <- Seq(dir, logged)) {
+      val flagged = AnnIndex.probeStoredVectors(spark, d, probes, "vec_id",
+        "embedding", threshold = 0.999, nprobe = 2)
+      // probe pruning is structural, same pin as queryIvf: the inverted-file
+      // scan must carry a static list_id partition filter
+      val p = flagged.queryExecution.executedPlan.toString
+      assert(p.contains("PartitionFilters: [list_id"), p)
+      assert(flagged.collect().map(_.getLong(0)).toSeq == Seq(900L), d)
+    }
     corpus.unpersist()
+  }
+
+  private def dataFiles(fs: org.apache.hadoop.fs.FileSystem, d: String) = {
+    val p = new org.apache.hadoop.fs.Path(d)
+    if (!fs.exists(p)) Seq.empty[org.apache.hadoop.fs.Path]
+    else fs.listStatus(p).map(_.getPath)
+      .filter(_.getName.endsWith(".parquet")).toSeq
+  }
+
+  private def listDirs(fs: org.apache.hadoop.fs.FileSystem, dir: String) =
+    fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/lists"))
+      .map(_.getPath.getName).filter(_.startsWith("list_id=")).toSet
+
+  /** vec_id `id`'s vector nudged by 1e-3 on dim 0: a paraphrase at cosine
+    * 1 − 1e-7, where two points of one cluster stay below 1 − 1e-6. */
+  private def nudged(id: Long, as: Long) =
+    clustered.filter($"vec_id" === id).select(lit(as).as("vec_id"),
+      transform($"embedding", (x, i) => when(i === 0, x + 1e-3).otherwise(x))
+        .as("embedding"))
+
+  test("semantic screen epoch appends ONE log file, the next epoch screens " +
+    "against it, and a fold moves it into the base with no cid twice") {
+    val (dir, fs, _) = crashFixture("ann_screen_log")
+    val listsBefore = listDirs(fs, dir)
+    val admitted = scala.collection.mutable.ArrayBuffer[Long]()
+    def screen(tag: String, every: Int) = AnnIndex.semanticScreenSink(spark,
+        dir, "vec_id", "embedding", threshold = 0.999999, nprobe = 2,
+        streamTag = tag, autoCompactEvery = every) { df =>
+      admitted ++= df.select("vec_id").collect().map(_.getLong(0)) }
+    val sink = screen("log", 0)
+    // epoch 0: two novel vectors from clusters 0 and 3
+    sink(clustered.filter($"vec_id".isin(30L, 150L)), 0L)
+    val logged = dataFiles(fs, s"$dir/lists_log")
+    assert(logged.size == 1, logged.mkString(","))
+    assert(spark.read.parquet(logged.head.toString).select("list_id")
+      .distinct().count() >= 2, "fixture: the epoch must touch two lists")
+    assert(listDirs(fs, dir) == listsBefore, "an epoch must add no list dir")
+    assert(admitted.toSet == Set(30L, 150L))
+    // epoch 1: a paraphrase of vec 30, stored only in the log, is killed
+    sink(nudged(30L, 900L).unionByName(clustered.filter($"vec_id" === 190L)),
+      1L)
+    assert(admitted.toSet == Set(30L, 150L, 190L), admitted.mkString(","))
+    assert(dataFiles(fs, s"$dir/lists_log").size == 2)
+    // a sink folding every epoch: its first tick moves the log into the base
+    screen("fold", 1)(clustered.filter($"vec_id" === 270L), 0L)
+    assert(dataFiles(fs, s"$dir/lists_log").isEmpty, "the fold empties the log")
+    val base = spark.read.parquet(s"$dir/lists").select("cid").collect()
+      .map(_.getLong(0)).toSeq
+    assert(Seq(30L, 150L, 190L, 270L).forall(base.contains))
+    val stored = storedCids(dir)
+    assert(stored.size == stored.distinct.size, "a cid is stored twice")
+    assert(stored.toSet == base.toSet)
+  }
+
+  test("ANN lists: a crash after a log fold published its base files but " +
+    "before it removed the folded log heals on the next read — no cid " +
+    "doubles and the probe is unchanged") {
+    val (dir, fs, _) = crashFixture("ann_fold_crash")
+    def path(s: String) = new org.apache.hadoop.fs.Path(s)
+    // three appended epochs, never folded: their rows sit in the log
+    val app = AnnIndex.ivfAppender(spark, dir, "vec_id", "embedding",
+      autoCompactEvery = 0)
+    Seq(30L, 150L, 270L).zipWithIndex.foreach { case (id, e) =>
+      app(clustered.filter($"vec_id" === id), e.toLong) }
+    val logged = dataFiles(fs, s"$dir/lists_log")
+      .map(p => s"lists_log/${p.getName}")
+    assert(logged.size == 3, logged.mkString(","))
+    def probe() = AnnIndex.probeStoredVectors(spark, dir,
+        nudged(150L, 900L).unionByName(nudged(31L, 901L)), "vec_id",
+        "embedding", threshold = 0.999999, nprobe = 2)
+      .collect().map(_.getLong(0)).toSeq
+    val rowsBefore = storedCids(dir).sorted
+    assert(probe() == Seq(900L))
+    // the crash window, rebuilt on disk: keep copies of the log files, let
+    // compact fold them into the base (and remove them), then put the
+    // copies back under a committed `_fold_pending` naming them
+    val keep = java.nio.file.Files.createTempDirectory("annfoldkeep").toString
+    logged.foreach(n => org.apache.hadoop.fs.FileUtil.copy(fs, path(s"$dir/$n"),
+      fs, path(s"$keep/$n"), false, spark.sparkContext.hadoopConfiguration))
+    AnnIndex.compact(spark, dir)
+    assert(logged.forall(n => !fs.exists(path(s"$dir/$n"))))
+    logged.foreach(n => require(fs.rename(path(s"$keep/$n"), path(s"$dir/$n"))))
+    val m = fs.create(path(s"$dir/_fold_pending"), true)
+    m.write(logged.mkString("\n").getBytes("UTF-8")); m.close()
+    // the next read heals: the named log files go, each cid is stored once
+    assert(storedCids(dir).sorted == rowsBefore, "a fold crash doubled a cid")
+    assert(!fs.exists(path(s"$dir/_fold_pending")))
+    assert(logged.forall(n => !fs.exists(path(s"$dir/$n"))))
+    assert(probe() == Seq(900L))
   }
 
   /** A fresh index over clusters' first 20 points, the filesystem, and
@@ -214,7 +313,7 @@ class AnnIndexSpec extends AnyFunSuite {
   }
 
   private def storedCids(dir: String): Seq[Long] =
-    spark.read.parquet(s"$dir/lists").select("cid").collect()
+    AnnIndex.read(spark, dir).select("cid").collect()
       .map(_.getLong(0)).toSeq
 
   /** The epoch batch whose staged rows `stageRows(ids, shift)` plants. */

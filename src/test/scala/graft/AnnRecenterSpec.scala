@@ -71,7 +71,7 @@ class AnnRecenterSpec extends AnyFunSuite {
     val cents = spark.read.parquet(s"$dir/centroids").orderBy("list_id")
       .select(col("cvec").cast("array<double>")).collect()
       .map(_.getSeq[Double](0).toArray)
-    val rows = spark.read.parquet(s"$dir/lists")
+    val rows = AnnIndex.read(spark, dir)
       .select(col("list_id").cast("int"), col("cid"),
         col("cvec").cast("array<double>")).collect()
     assert(rows.length == 48 + 50)
@@ -160,9 +160,9 @@ class AnnRecenterSpec extends AnyFunSuite {
     // lists still hold ONLY codes, row count intact, and no residue
     assert(spark.read.parquet(s"$dir/codebook").orderBy("b", "j")
       .collect().map(_.toString).toSeq != cbBefore, "codebook must retrain")
-    assert(spark.read.parquet(s"$dir/lists").columns.toSet ==
+    assert(AnnIndex.read(spark, dir).columns.toSet ==
       (Set("list_id", "cid") ++ (0 until 8).map(b => s"c$b")))
-    assert(spark.read.parquet(s"$dir/lists").count() == 320L + 200L)
+    assert(AnnIndex.read(spark, dir).count() == 320L + 200L)
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(!fs.exists(new Path(s"$dir/.retract_stage")) &&
       !fs.exists(new Path(s"$dir/_retract_pending")))
@@ -237,9 +237,9 @@ class AnnRecenterSpec extends AnyFunSuite {
       "an in-regime trigger must not re-fire the reset detector")
 
     // re-delivered epoch: marker skip — no rows doubled, no detector feed
-    val rows = spark.read.parquet(s"$dir/lists").count()
+    val rows = AnnIndex.read(spark, dir).count()
     sink(driftedRows.slice(0, 15).toDF("vec_id", "embedding"), 1L)
-    assert(spark.read.parquet(s"$dir/lists").count() == rows &&
+    assert(AnnIndex.read(spark, dir).count() == rows &&
       rebuilds.size == rebuildsAfterShift)
     Seq(base, drifted, corpus).foreach(_.unpersist())
   }

@@ -121,7 +121,7 @@ class ForgetSpec extends AnyFunSuite {
     assert(FingerprintStore.read(spark, fpDir).count() == 1L)
     assert(SignatureStore.read(spark, sigDir).select("id")
       .collect().map(_.getLong(0)).toSeq == Seq(2L))
-    assert(spark.read.parquet(s"$ivfDir/lists").filter(col("cid") < 100L)
+    assert(AnnIndex.read(spark, ivfDir).filter(col("cid") < 100L)
       .select("cid").collect().map(_.getLong(0)).toSeq == Seq(2L))
     // …the text stores and shards have not
     assert(spark.read.parquet(s"$bm25Dir/postings")
@@ -281,12 +281,12 @@ class ForgetSpec extends AnyFunSuite {
 
     // shard 0 forgot idA across all three layers…
     assert(SignatureStore.read(spark, door.sigDir(0)).count() == 0L)
-    assert(spark.read.parquet(s"${door.ivfDir(0)}/lists")
+    assert(AnnIndex.read(spark, door.ivfDir(0))
       .filter(col("cid") === idA).count() == 0L)
     // …shard 1's stores are byte-for-byte untouched
     assert(SignatureStore.read(spark, door.sigDir(1)).select("id")
       .collect().map(_.getLong(0)).toSeq == Seq(idB))
-    assert(spark.read.parquet(s"${door.ivfDir(1)}/lists")
+    assert(AnnIndex.read(spark, door.ivfDir(1))
       .filter(col("cid") === idB).count() == 1L)
     // the LM store subtracted exactly doc A
     val freshDir = tmp("fgs_lm_fresh")
@@ -337,11 +337,11 @@ class ForgetSpec extends AnyFunSuite {
     // this same failure on every later forget/heal forever)
     val residue = new java.io.File(ledger).listFiles()
     assert(residue == null || residue.isEmpty, residue.mkString(","))
-    assert(spark.read.parquet(s"$ivfDir/lists").count() === 6L)
+    assert(AnnIndex.read(spark, ivfDir).count() === 6L)
     // a partial request (leaves the index non-empty) walks normally
     Forget.forget(spark, ledger, stores,
       all.filter(col("doc_id") <= 3L), "doc_id", "text")
-    assert(spark.read.parquet(s"$ivfDir/lists")
+    assert(AnnIndex.read(spark, ivfDir)
       .select("cid").collect().map(_.getLong(0)).sorted.toSeq ===
       Seq(4L, 5L, 6L))
   }

@@ -87,7 +87,7 @@ class FrontDoorSpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(sigIds == Seq(1L, 5L, 6L), sigIds.mkString(","))
     // …and index vectors for the fully admitted set only
-    val cids = spark.read.parquet(s"$ivfDir/lists")
+    val cids = AnnIndex.read(spark, ivfDir)
       .filter(col("cid") < 100L).select("cid")
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(cids == Seq(1L, 6L), cids.mkString(","))
@@ -155,7 +155,7 @@ class FrontDoorSpec extends AnyFunSuite {
     // takedown doc 1 across all three stores in one call
     FrontDoor.retract(spark, fpDir, sigDir, ivfDir,
       Seq((1L, doc("alpha", 4))).toDF("doc_id", "text"), "doc_id", "text")
-    assert(spark.read.parquet(s"$ivfDir/lists")
+    assert(AnnIndex.read(spark, ivfDir)
       .filter(col("cid") < 100L).count() == 0L)
     // …and the retract reached the logged rows: no sig or band row of doc
     // 1 is left, and the fp layer keeps only docs 4 and 5's fingerprints
@@ -272,7 +272,7 @@ class FrontDoorSpec extends AnyFunSuite {
         .select("id").collect().map(_.getLong(0))
       assert(sigIds.nonEmpty && sigIds.forall(shardMap(_) == i),
         s"shard $i sig store holds foreign ids: ${sigIds.mkString(",")}")
-      val cids = spark.read.parquet(s"${door.ivfDir(i)}/lists")
+      val cids = AnnIndex.read(spark, door.ivfDir(i))
         .select("cid").collect().map(_.getLong(0))
       assert(cids.forall(shardMap(_) == i),
         s"shard $i index holds foreign ids")
@@ -334,7 +334,7 @@ class FrontDoorSpec extends AnyFunSuite {
     def storeState() = (
       FingerprintStore.read(spark, fpDir).count(),
       SignatureStore.read(spark, sigDir).count(),
-      spark.read.parquet(s"$ivfDir/lists").count())
+      AnnIndex.read(spark, ivfDir).count())
     val before = storeState()
     val verdicts = FrontDoor.probe(spark, fpDir, sigDir, ivfDir,
       Seq(

@@ -66,6 +66,20 @@ class FsckSpec extends AnyFunSuite {
     assert(got === (30L until 40L).map(("door_membership", "ann", _)).toSet)
   }
 
+  test("door_membership: an ann-only id stored only in the index's log is " +
+    "named") {
+    val sigDir = seedSig((0L until 30L).toSeq)
+    val ivfDir = buildIvf((20L until 30L).toSeq)
+    AnnIndex.ivfAppender(spark, ivfDir, "id", "embedding",
+      autoCompactEvery = 0)(Seq((77L, vec(77L))).toDF("id", "embedding"), 0L)
+    val fs = new Path(ivfDir).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    assert(fs.listStatus(new Path(s"$ivfDir/lists_log"))
+      .exists(_.getPath.getName.endsWith(".parquet")), "fixture: 77 is logged")
+    assert(findings(Fsck.doorMembership(spark, sigDir, ivfDir)) ===
+      Set(("door_membership", "ann", 77L)))
+  }
+
   test("sig_bands_missing: a sigs row without band rows is unscreenable") {
     val sigDir = seedSig((0L until 20L).toSeq)
     // plant: append a signature for id 999 with NO band index rows — the
@@ -112,7 +126,7 @@ class FsckSpec extends AnyFunSuite {
     val ivfDir = buildIvf((0L until 24L).toSeq)
     // plant: drop the centroids table's data files and republish a
     // centroid subset (list_id 1 only) — every other list goes dark
-    val lists = spark.read.parquet(s"$ivfDir/lists")
+    val lists = AnnIndex.read(spark, ivfDir)
       .select("cid", "list_id").collect()
       .map(r => (r.getLong(0), r.getInt(1)))
     val keep = 1

@@ -467,7 +467,7 @@ class StreamingSpec extends AnyFunSuite {
     } finally query.stop()
     // every row from the build + both epochs (one pre-, one post-compact)
     // is present exactly once
-    val ids = spark.read.parquet(s"$dir/lists").select("cid").collect()
+    val ids = AnnIndex.read(spark, dir).select("cid").collect()
       .map(_.getLong(0))
     val expected = (for (c <- 0 until 4; p <- 0 until 30) yield (c * 60 + p).toLong)
     assert(ids.length == expected.length && ids.toSet == expected.toSet,
@@ -970,7 +970,7 @@ class StreamingSpec extends AnyFunSuite {
     def fpRows(d: String) = graft.operators.FingerprintStore.read(spark, d)
       .select("fp", "shard").collect()
       .map(r => (r.getLong(0), r.getAs[Number](1).longValue)).sorted.toSeq
-    def listRows(d: String) = spark.read.parquet(s"$d/lists")
+    def listRows(d: String) = AnnIndex.read(spark, d)
       .select("cid", "list_id", "cvec").collect()
       .map(r => (r.getLong(0), r.getAs[Number](1).longValue,
         r.getSeq[Double](2).toList)).sortBy(_._1).toSeq
@@ -2286,7 +2286,7 @@ class StreamingSpec extends AnyFunSuite {
       s"semantic screen must reject the paraphrase both text screens " +
         s"admitted: ${admitted.mkString(",")}")
     // the index holds vectors for admitted docs only (plus the seed corpus)
-    val stored = spark.read.parquet(s"$ivfDir/lists")
+    val stored = AnnIndex.read(spark, ivfDir)
       .filter(col("cid") < 100L).select("cid")
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(stored == Seq(1L, 2L, 6L), stored.mkString(","))
@@ -2389,7 +2389,7 @@ class StreamingSpec extends AnyFunSuite {
                         // self-match window — replay must re-admit 7
     val (fpN, ivfN, accN) = runScenario("clean", Set.empty)
 
-    def listRows(d: String) = spark.read.parquet(s"$d/lists")
+    def listRows(d: String) = AnnIndex.read(spark, d)
       .select("cid").collect().map(_.getLong(0)).sorted.toSeq
     def fpRows(d: String) = graft.operators.FingerprintStore.read(spark, d)
       .select("fp").collect().map(_.getLong(0)).sorted.toSeq
