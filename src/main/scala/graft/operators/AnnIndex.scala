@@ -260,6 +260,13 @@ object AnnIndex {
                       ids: Seq[Int]): DataFrame =
     read(spark, indexDir).filter(col("list_id").isin(ids.map(Int.box): _*))
 
+  /** Each query row (qid, qvec) exploded onto its `nprobe` nearest lists. */
+  private def qLists(q: DataFrame, cents: Array[Array[Double]],
+                     nprobe: Int): DataFrame =
+    q.select(col("qid"), col("qvec"),
+      explode(NearestCentroids.column(col("qvec"), cents,
+        math.min(nprobe, cents.length))).as("list_id"))
+
   /** The probe step of [[queryIvf]] and [[probeStoredVectors]]: each query
     * row (qid, qvec) explodes onto its `nprobe` nearest lists, and the
     * stored rows of exactly those lists join it (broadcast probe side). The
@@ -267,13 +274,21 @@ object AnnIndex {
     * statically pruned. */
   private def probeJoin(spark: SparkSession, indexDir: String, q: DataFrame,
                         cents: Array[Array[Double]], nprobe: Int): DataFrame = {
-    val qLists = q.select(col("qid"), col("qvec"),
-      explode(NearestCentroids.column(col("qvec"), cents,
-        math.min(nprobe, cents.length))).as("list_id"))
-    val probed = qLists.select("list_id").distinct().collect()
-      .map(_.getAs[Number](0).intValue).toSeq
-    listsIn(spark, indexDir, probed).join(broadcast(qLists), Seq("list_id"))
+    val ql = qLists(q, cents, nprobe)
+    probeLists(spark, indexDir, ql, ql.select("list_id").distinct().collect()
+      .map(_.getAs[Number](0).intValue).toSeq)
   }
+
+  /** The stored rows of lists `probed` joined to the exploded queries `ql`. */
+  private def probeLists(spark: SparkSession, indexDir: String, ql: DataFrame,
+                         probed: Seq[Int]): DataFrame =
+    listsIn(spark, indexDir, probed).join(broadcast(ql), Seq("list_id"))
+
+  /** The qids of a probe join with a stored vector at cosine ≥ `threshold`;
+    * a qid may repeat. */
+  private def hits(probed: DataFrame, threshold: Double): DataFrame =
+    probed.filter(VecFns.cosine(col("qvec"), col("cvec")) >= threshold)
+      .select(col("qid").as("id"))
 
   /** Top-k over the persisted IVF+PQ index: ADC over the probed lists' codes
     * builds a `rerank`-deep shortlist per query (the index's raw bytes never
@@ -347,7 +362,8 @@ object AnnIndex {
   /** The appenders' epoch namespace: stages `.ingested_stage_<e>`, markers
     * `_ingested_epoch_<e>` (one maintainer stream per index, so no tag). */
   private def appenderCommit(indexDir: String): EpochLog.Commit =
-    EpochLog.Commit(indexDir, ".ingested_stage_", "_ingested_epoch_", Lists)
+    EpochLog.Commit(".ingested_stage_", "_ingested_epoch_",
+      Seq(EpochLog.Part(indexDir, Lists)))
 
   private def fsOf(spark: SparkSession, dir: String) =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -541,20 +557,10 @@ object AnnIndex {
   def probeStoredVectors(spark: SparkSession, indexDir: String,
                          queries: DataFrame, qidCol: String, vecCol: String,
                          threshold: Double, nprobe: Int = 4): DataFrame =
-    probeWith(spark, indexDir, loadCentroids(spark, indexDir), queries,
-      qidCol, vecCol, threshold, nprobe)
-
-  /** [[probeStoredVectors]] with the caller's centroids (a sink holds
-    * them from its mount). */
-  private def probeWith(spark: SparkSession, indexDir: String,
-                        cents: Array[Array[Double]], queries: DataFrame,
-                        qidCol: String, vecCol: String, threshold: Double,
-                        nprobe: Int): DataFrame =
-    probeJoin(spark, indexDir,
-        queries.select(col(qidCol).cast("long").as("qid"),
-          col(vecCol).cast("array<double>").as("qvec")), cents, nprobe)
-      .filter(VecFns.cosine(col("qvec"), col("cvec")) >= threshold)
-      .select(col("qid").as("id")).distinct()
+    hits(probeJoin(spark, indexDir,
+      queries.select(col(qidCol).cast("long").as("qid"),
+        col(vecCol).cast("array<double>").as("qvec")),
+      loadCentroids(spark, indexDir), nprobe), threshold).distinct()
 
   /** foreachBatch sink SCREENING each micro-batch's embeddings against the
     * persisted IVF index before admitting: documents whose vector is a
@@ -585,12 +591,9 @@ object AnnIndex {
                          autoCompactEvery: Int = AutoCompact.DefaultCheckEvery,
                          autoCompactFactor: Int = AutoCompact.DefaultFactor)
                         (out: DataFrame => Unit): (DataFrame, Long) => Unit = {
-    val commit = screenCommit(indexDir, streamTag)
-    val log = mount(spark, commit)
-    val cents = loadCentroids(spark, indexDir)
-    val auto = new AutoCompact(autoCompactEvery, autoCompactFactor)
-    screenEpoch(spark, idCol, vecCol, threshold, nprobe, commit, log, cents,
-      auto)(out, _ => ())
+    val s = screen(spark, indexDir, idCol, vecCol, threshold, nprobe,
+      streamTag, autoCompactEvery, autoCompactFactor)
+    ScreenEpoch.sink(s.commit, Seq(s))(out)
   }
 
   /** The screens' epoch namespace on stream `tag`:
@@ -598,37 +601,55 @@ object AnnIndex {
   private def screenCommit(indexDir: String, tag: String): EpochLog.Commit =
     EpochLog.commit(indexDir, "annscr", tag, Lists)
 
-  /** One screen trigger (shared by [[semanticScreenSink]] and
-    * [[recenteringScreenSink]]): probe → `out(survivors)` → stage, commit,
-    * publish → auto-compact tick → `after(survivors)`. A re-delivered (or
-    * empty) epoch reaches neither, so a caller's post-epoch bookkeeping
-    * (the recentering sink's drift feed) never double-counts it. */
-  private def screenEpoch(spark: SparkSession, idCol: String, vecCol: String,
-                          threshold: Double, nprobe: Int,
-                          commit: EpochLog.Commit, log: EpochLog,
-                          cents: Array[Array[Double]], auto: AutoCompact)
-                         (out: DataFrame => Unit, after: DataFrame => Unit)
-                         (batch: DataFrame, epoch: Long): Unit = {
-    val indexDir = commit.dir
-    commit.run(fsOf(batch.sparkSession, indexDir), batch, epoch) { stage =>
-      val b = batch.localCheckpoint()
-      val flagged = probeWith(spark, indexDir, cents, b, idCol, vecCol,
-          threshold, nprobe)
-        .select(col("id").as(idCol)).localCheckpoint()
-      val survivors = b.join(broadcast(flagged), Seq(idCol), "left_anti")
-        .localCheckpoint()
-      // CONTRACT: a pre-marker crash replays this epoch and re-invokes
-      // `out` with identical survivors — `out` must be idempotent under
-      // epoch re-delivery (marker-protected, like every sink here).
-      out(survivors)
+  /** The semantic layer of [[semanticScreenSink]], [[recenteringScreenSink]]
+    * and the ingest door ([[ScreenLayer]]), mounted on the screens'
+    * namespace of `streamTag`: the probe flags every id with a stored
+    * vector at cosine ≥ `threshold` in its `nprobe` nearest lists; a
+    * passing row stages into the lists' log under its nearest list. */
+  private[graft] def screen(spark: SparkSession, indexDir: String,
+                            idCol: String, vecCol: String, threshold: Double,
+                            nprobe: Int, streamTag: String,
+                            autoCompactEvery: Int = AutoCompact.DefaultCheckEvery,
+                            autoCompactFactor: Int = AutoCompact.DefaultFactor):
+      Screen =
+    new Screen(spark, indexDir, idCol, vecCol, threshold, nprobe, streamTag,
+      autoCompactEvery, autoCompactFactor)
+
+  private[graft] class Screen(spark: SparkSession, indexDir: String,
+                              idCol: String, vecCol: String,
+                              threshold: Double, nprobe: Int,
+                              streamTag: String, autoCompactEvery: Int,
+                              autoCompactFactor: Int) extends ScreenLayer {
+    val commit: EpochLog.Commit = screenCommit(indexDir, streamTag)
+    private val log = mount(spark, commit)
+    private val auto = new AutoCompact(autoCompactEvery, autoCompactFactor)
+    /** The coarse centroids the probe and the stage assign with. */
+    @volatile var cents: Array[Array[Double]] = loadCentroids(spark, indexDir)
+    val key: String = idCol
+    val added: Seq[String] = Nil
+    def prepare(rows: DataFrame): DataFrame = rows
+    private def ql(rows: DataFrame) =
+      qLists(rows.select(col(idCol).cast("long").as("qid"),
+        col(vecCol).cast("array<double>").as("qvec")), cents, nprobe)
+    def keys(prep: DataFrame): DataFrame = ql(prep).select("list_id")
+    def flagged(prep: DataFrame, lists: Set[Long]): DataFrame =
+      if (lists.isEmpty) prep.select(idCol).limit(0)
+      else hits(probeLists(spark, indexDir, ql(prep),
+          lists.toSeq.map(_.toInt).sorted), threshold).select(col("id").as(idCol))
+    def stage(passed: DataFrame, stage: Path, epoch: Long): () => Unit = {
+      val c = cents
       val vec = col(vecCol).cast("array<double>")
-      log.stage(survivors.select(nearestList(vec, cents).as("list_id"),
+      log.stage(passed.select(nearestList(vec, c).as("list_id"),
         col(idCol).cast("long").as("cid"), vec.as("cvec")), stage, "lists")
-      survivors
-    } { survivors =>
-      autoTick(spark, log, indexDir, auto, cents.length)
-      after(survivors)
+      () => {
+        autoTick(spark, log, indexDir, auto, c.length)
+        afterCommit(passed, c, epoch)
+      }
     }
+    /** After the auto-compact tick of a committed epoch: `survivors`
+      * passed, assigned with centroids `c`. */
+    protected def afterCommit(survivors: DataFrame, c: Array[Array[Double]],
+                              epoch: Long): Unit = ()
   }
 
   /** [[semanticScreenSink]] that RECENTERS ITSELF under embedding drift —
@@ -639,7 +660,7 @@ object AnnIndex {
     * decays. This sink watches for that and rebuilds itself.
     *
     * Drift signal: every admitted survivor feeds [[feedMisses]].
-    * Re-delivered epochs feed NOTHING ([[screenEpoch]] skips its
+    * Re-delivered epochs feed NOTHING ([[ScreenEpoch]] skips its
     * post-commit step), so the detector composes with the marker replay
     * discipline. On a fire (`minErrRate` keeps one bad doc after a long
     * clean run from thrashing a petabyte index), the sink — in the SAME
@@ -668,24 +689,20 @@ object AnnIndex {
                             onRebuild: Long => Unit = _ => ())
                            (out: DataFrame => Unit): (DataFrame, Long) => Unit = {
     Takedown.heal(spark, indexDir) // a crashed recenter owns lists+centroids
-    val commit = screenCommit(indexDir, streamTag)
-    val log = mount(spark, commit)
-    val cents = new java.util.concurrent.atomic.AtomicReference(
-      loadCentroids(spark, indexDir))
     val ddm = new Drift.Ddm()
-    val auto = new AutoCompact(autoCompactEvery, autoCompactFactor)
-    (batch: DataFrame, epoch: Long) => {
-      val c = cents.get()
-      screenEpoch(spark, idCol, vecCol, threshold, nprobe, commit, log, c,
-          auto)(out, { survivors =>
+    val s = new Screen(spark, indexDir, idCol, vecCol, threshold, nprobe,
+        streamTag, autoCompactEvery, autoCompactFactor) {
+      override protected def afterCommit(survivors: DataFrame,
+          c: Array[Array[Double]], epoch: Long): Unit = {
         val vec = col(vecCol).cast("array<double>")
         feedMisses(ddm, survivors, vec, nearestList(vec, c), c, fitCosine,
             minErrRate, epoch, onRebuild) {
-          cents.set(rebuildScreen(spark, indexDir, c.length, kmIters,
-            kmSeed + epoch))
+          cents = rebuildScreen(spark, indexDir, c.length, kmIters,
+            kmSeed + epoch)
         }
-      })(batch, epoch)
+      }
     }
+    ScreenEpoch.sink(s.commit, Seq(s))(out)
   }
 
   // ------------------------------------------------------------ maintenance

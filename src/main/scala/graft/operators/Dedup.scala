@@ -163,21 +163,22 @@ object Dedup {
       bands, threshold)
   }
 
-  /** Band projection over a signature frame: (asCol, band_id, band_hash) —
+  /** Band projection over a signature frame: (asCol, band_id, band_hash),
+    * with the frame's `keep` columns after asCol —
     * the narrow 24-byte rows every LSH bucket join in this file moves. Also
     * the row shape of [[SignatureStore]]'s persisted band index, so the
     * stored index and a probe's banding are the same deterministic hash by
     * construction. */
   private[operators] def bandedSigs(sigs: DataFrame, as: String,
-      numHashes: Int, bands: Int): DataFrame = {
+      numHashes: Int, bands: Int, keep: Seq[String] = Nil): DataFrame = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
     val rowsPerBand = numHashes / bands
-    sigs.select(col("id").as(as),
+    sigs.select(col("id").as(as) +: keep.map(col) :+
         posexplode(transform(sequence(lit(0), lit(bands - 1)),
           b => slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand))))
-          .as(Seq("band_id", "band")))
-      .select(col(as), col("band_id"),
-        xxhash64(col("band_id"), concat_ws(",", col("band"))).as("band_hash"))
+          .as(Seq("band_id", "band")): _*)
+      .select(col(as) +: keep.map(col) :+ col("band_id") :+
+        xxhash64(col("band_id"), concat_ws(",", col("band"))).as("band_hash"): _*)
   }
 
   /** Verify (id_in, id_base) candidate pairs by signature-estimated
@@ -193,13 +194,18 @@ object Dedup {
       .join(sigsB.select(col("id").as("id_base"), col("sig").as("sig_base")),
         Seq("id_base"))
       .select(col("id_in"),
-        (size(filter(zip_with(col("sig_in"), col("sig_base"),
-          (x, y) => x === y), eq => eq)).cast("double") / numHashes)
-          .as("est_jaccard"))
+        estJaccard(col("sig_in"), col("sig_base"), numHashes).as("est_jaccard"))
       .filter(col("est_jaccard") >= threshold)
       .groupBy(col("id_in").as("doc_id"))
       .agg(count(lit(1)).as("n_base_dups"),
         round(max("est_jaccard"), 6).as("max_est"))
+
+  /** Signature-estimated Jaccard of two MinHash signatures: the share of
+    * equal positions. */
+  private[operators] def estJaccard(a: Column, b: Column,
+                                    numHashes: Int): Column =
+    size(filter(zip_with(a, b, (x, y) => x === y), eq => eq))
+      .cast("double") / numHashes
 
   /** Core of the snapshot delta, over two signature frames: band both
     * sides, bucket-join candidates, verify by id-joining the signatures.

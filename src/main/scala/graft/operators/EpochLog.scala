@@ -15,10 +15,14 @@ import org.apache.spark.sql.types.StructType
   * point), publishes the stage into the store, then runs its post-commit
   * step. A replayed epoch whose marker exists only heals; a crash before
   * the marker discards the stage at the next heal (the epoch replays
-  * whole); after it, the heal finishes the publish. Its ten callers:
-  * [[FingerprintStore.dedupSink]], [[SignatureStore.appender]] and
-  * `screenSink`, [[AnnIndex]]'s `screenEpoch` (serving
-  * `semanticScreenSink` and `recenteringScreenSink`), `ivfAppender`,
+  * whole); after it, the heal finishes the publish. One commit may span
+  * several store dirs: each stages under its own dir, one marker commits
+  * them all, and every dir heals against it. Its callers:
+  * [[ScreenEpoch]] (serving [[FingerprintStore.dedupSink]],
+  * [[SignatureStore.screenSink]], [[AnnIndex]]'s `semanticScreenSink` and
+  * `recenteringScreenSink`, and the ingest door
+  * [[graft.streaming.FrontDoor.sink]], whose one commit spans its three
+  * stores), [[SignatureStore.appender]], [[AnnIndex]]'s `ivfAppender`,
   * `ivfPqAppender` and `recenteringPqAppender`, [[Bm25Store.appender]],
   * [[LmStore.appender]] and [[Pack.shardAppender]]. The whole-table swap
   * their compactions share is [[TableSwap]].
@@ -199,7 +203,7 @@ private[operators] final class EpochLog(tables: Seq[EpochLog.Table]) {
   }
 }
 
-private[operators] object EpochLog {
+private[graft] object EpochLog {
   /** One logged table: its name under the store dir, its partition
     * column, and its fixed schema (partition column included). */
   final case class Table(name: String, partCol: String, schema: StructType)
@@ -272,62 +276,82 @@ private[operators] object EpochLog {
     fs.delete(stage, true)
   }
 
-  /** One sink's epoch namespace under `dir`: epoch `e` stages under
-    * `<dir>/<stagePrefix><e>` and commits by creating
-    * `<dir>/<markerPrefix><e>`. `subs` say where a committed stage
-    * publishes ([[publish]]); each `(staged name, published prefix)` of
-    * `files` moves one staged file to `<dir>/<published prefix><e>`. */
-  final case class Commit(dir: String, stagePrefix: String,
-                          markerPrefix: String, subs: Seq[(String, String)],
-                          files: Seq[(String, String)] = Nil) {
+  /** One store dir's share of an epoch: where its stage publishes
+    * (`subs`, see [[publish]]), and each `(staged name, published prefix)`
+    * of `files` moves one staged file to `<dir>/<published prefix><e>`. */
+  final case class Part(dir: String, subs: Seq[(String, String)],
+                        files: Seq[(String, String)] = Nil)
 
-    private def stage(epoch: Long): Path = new Path(s"$dir/$stagePrefix$epoch")
+  /** One sink's epoch namespace over one or more store dirs: epoch `e`
+    * stages under `<part dir>/<stagePrefix><e>` in each part's dir and
+    * commits by creating ONE marker, `<dir>/<markerPrefix><e>` in the first
+    * part's dir. A committed stage publishes part by part; every part
+    * heals against that one marker. */
+  final case class Commit(stagePrefix: String, markerPrefix: String,
+                          parts: Seq[Part]) {
+
+    /** The marker's dir: the first part's. */
+    def dir: String = parts.head.dir
+
+    private def stage(p: Part, epoch: Long): Path =
+      new Path(s"${p.dir}/$stagePrefix$epoch")
 
     private def marker(epoch: Long): Path = new Path(s"$dir/$markerPrefix$epoch")
 
-    private def publishEpoch(fs: FileSystem, st: Path, epoch: Long): Unit =
-      publish(fs, dir, st, subs, files.map { case (f, to) =>
-        new Path(st, f) -> new Path(s"$dir/$to$epoch") })
+    /** True once epoch `epoch`'s marker exists. */
+    def committed(fs: FileSystem, epoch: Long): Boolean = fs.exists(marker(epoch))
 
-    /** Crash-recovery sweep over this namespace's leftover stages: a stage
-      * whose marker exists is committed — finish its publish; one without
-      * a marker is a pre-commit orphan — discard it (its epoch replays
-      * whole). Only purely-numeric epoch suffixes match, so a tag that
-      * prefixes another tag can never claim (and destroy) the longer tag's
-      * staging. */
-    def heal(fs: FileSystem): Unit = {
-      val root = new Path(dir)
-      if (!fs.exists(root)) return
-      fs.listStatus(root).map(_.getPath)
-        .filter(_.getName.startsWith(stagePrefix)).foreach { st =>
-          val e = st.getName.drop(stagePrefix.length)
-          if (isEpoch(e)) {
-            if (fs.exists(marker(e.toLong))) publishEpoch(fs, st, e.toLong)
-            else fs.delete(st, true)
-          }
-        }
+    private def publishPart(fs: FileSystem, p: Part, epoch: Long): Unit = {
+      val st = stage(p, epoch)
+      publish(fs, p.dir, st, p.subs, p.files.map { case (f, to) =>
+        new Path(st, f) -> new Path(s"${p.dir}/$to$epoch") })
     }
 
-    /** Run one epoch: a replay whose marker exists only heals; an empty
-      * batch is skipped; otherwise any leftover stage is deleted, `write`
-      * fills the stage, the marker is created holding `markerText`
-      * (evaluated after `write`), the stage publishes, and `afterCommit`
-      * gets `write`'s result — the between-epochs single-writer window. */
+    /** Crash-recovery sweep over this namespace's leftover stages, in every
+      * part's dir: a stage whose marker exists is committed — finish its
+      * publish; one without a marker is a pre-commit orphan — discard it
+      * (its epoch replays whole). Only purely-numeric epoch suffixes match,
+      * so a tag that prefixes another tag can never claim (and destroy) the
+      * longer tag's staging. */
+    def heal(fs: FileSystem): Unit = parts.foreach { p =>
+      val root = new Path(p.dir)
+      if (fs.exists(root))
+        fs.listStatus(root).map(_.getPath.getName)
+          .filter(_.startsWith(stagePrefix)).foreach { name =>
+            val e = name.drop(stagePrefix.length)
+            if (isEpoch(e)) {
+              if (committed(fs, e.toLong)) publishPart(fs, p, e.toLong)
+              else fs.delete(new Path(root, name), true)
+            }
+          }
+    }
+
+    /** Epoch `epoch`'s stage paths, one per part, any leftover deleted. */
+    def freshStages(fs: FileSystem, epoch: Long): Seq[Path] =
+      parts.map { p => val st = stage(p, epoch); fs.delete(st, true); st }
+
+    /** The commit point: create the marker holding `markerText`, then
+      * publish every part's stage. */
+    def commitEpoch(fs: FileSystem, epoch: Long, markerText: String = ""): Unit = {
+      val out = fs.create(marker(epoch), true)
+      try out.write(markerText.getBytes("UTF-8")) finally out.close()
+      parts.foreach(publishPart(fs, _, epoch))
+    }
+
+    /** Run one epoch of a one-dir namespace: a replay whose marker exists
+      * only heals; an empty batch is skipped; otherwise `write` fills the
+      * fresh stage, the marker is created holding `markerText` (evaluated
+      * after `write`), the stage publishes, and `afterCommit` gets `write`'s
+      * result — the between-epochs single-writer window. */
     def run[A](fs: FileSystem, batch: DataFrame, epoch: Long,
                markerText: => String = "")
-              (write: Path => A)(afterCommit: A => Unit): Unit = {
-      val m = marker(epoch)
-      if (fs.exists(m)) heal(fs)
+              (write: Path => A)(afterCommit: A => Unit): Unit =
+      if (committed(fs, epoch)) heal(fs)
       else if (!batch.isEmpty) {
-        val st = stage(epoch)
-        fs.delete(st, true)
-        val written = write(st)
-        val out = fs.create(m, true)
-        try out.write(markerText.getBytes("UTF-8")) finally out.close()
-        publishEpoch(fs, st, epoch)
+        val written = write(freshStages(fs, epoch).head)
+        commitEpoch(fs, epoch, markerText)
         afterCommit(written)
       }
-    }
   }
 
   /** The standard namespace of sink kind `kind` on stream `tag`: stages
@@ -335,6 +359,6 @@ private[operators] object EpochLog {
   def commit(dir: String, kind: String, tag: String,
              subs: Seq[(String, String)],
              files: Seq[(String, String)] = Nil): Commit =
-    Commit(dir, s".${kind}_stage_${tag}_", s"_${kind}_${tag}_epoch_", subs,
-      files)
+    Commit(s".${kind}_stage_${tag}_", s"_${kind}_${tag}_epoch_",
+      Seq(Part(dir, subs, files)))
 }

@@ -40,8 +40,9 @@ import org.apache.spark.util.sketch.BloomFilter
   *    collect its result within one fold window: a plan listed before a
   *    fold and run after it fails on a missing file — retry it.
   *  - Idempotent under foreachBatch at-least-once re-delivery: the epoch's
-  *    fps stage, the `_ingested_<tag>_epoch_<e>` marker commits, then the
-  *    staged file publishes into the log. A replayed epoch that finds its
+  *    fps and its Bloom sidecar stage, the `_ingested_<tag>_epoch_<e>`
+  *    marker (or the ingest door's own, [[graft.streaming.FrontDoor]])
+  *    commits, then the staged files publish. A replayed epoch that finds its
   *    marker is skipped (its fps are already stored — replaying would drop
   *    the whole batch as "dup" AND double-append fingerprints); a crash
   *    before the marker discards the stage and the epoch replays whole
@@ -61,9 +62,11 @@ object FingerprintStore {
 
   private val Log = new EpochLog(Seq(EpochLog.Table("fps", "shard", FpsSchema)))
 
-  /** [[dedupSink]]'s epoch namespace: `_ingested_<tag>_epoch_<e>`. */
+  /** [[dedupSink]]'s epoch namespace: `_ingested_<tag>_epoch_<e>`; a
+    * stage's `bloom` file publishes as the sidecar `bloom_<tag>_epoch_<e>`. */
   private def sinkCommit(dir: String, tag: String): EpochLog.Commit =
-    EpochLog.commit(dir, "ingested", tag, Log.subs)
+    EpochLog.commit(dir, "ingested", tag, Log.subs,
+      files = Seq("bloom" -> s"bloom_${tag}_epoch_"))
 
   private def fsOf(spark: SparkSession, dir: String) =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -104,8 +107,12 @@ object FingerprintStore {
   }
 
   private def writeBloom(fs: org.apache.hadoop.fs.FileSystem, dir: String,
-                         tag: String, bf: BloomFilter): Unit = {
-    val out = fs.create(new Path(s"$dir/bloom_$tag"), true)
+                         tag: String, bf: BloomFilter): Unit =
+    writeBloomAt(fs, new Path(s"$dir/bloom_$tag"), bf)
+
+  private def writeBloomAt(fs: org.apache.hadoop.fs.FileSystem, p: Path,
+                           bf: BloomFilter): Unit = {
+    val out = fs.create(p, true)
     try bf.writeTo(out) finally out.close()
   }
 
@@ -254,7 +261,7 @@ object FingerprintStore {
   /** foreachBatch sink: pass each micro-batch's never-seen-before documents
     * to `out` (at most one survivor per distinct text, min id wins) and
     * record their fingerprints. `out` receives the batch's surviving rows
-    * with their original columns.
+    * with their original columns, id first.
     *
     * `streamTag` scopes the idempotence markers to one logical stream:
     * epoch ids restart at 0 for every NEW query, so a fresh stream over the
@@ -266,101 +273,102 @@ object FingerprintStore {
                 autoCompactEvery: Int = AutoCompact.DefaultCheckEvery,
                 autoCompactFactor: Int = AutoCompact.DefaultFactor)
                (out: DataFrame => Unit): (DataFrame, Long) => Unit = {
+    val s = screen(spark, dir, idCol, textCol, streamTag, autoCompactEvery,
+      autoCompactFactor)
+    ScreenEpoch.sink(s.commit, Seq(s))(out)
+  }
+
+  /** The exact-dup layer of [[dedupSink]] and the ingest door
+    * ([[ScreenLayer]]), mounted on [[dedupSink]]'s namespace of
+    * `streamTag`. A restarted layer finishes (or discards) what a crash
+    * left staged before it reads anything: committed epochs publish into
+    * the log, a committed fold completes. The batch keeps one row per
+    * distinct text (min id; byte-identical re-delivered rows, which share
+    * the id too, keep one), keyed by its fingerprint `__fp`.
+    *
+    * The probe is a Bloom screen — definite-new rows skip disk entirely —
+    * then a join pipeline against only the candidates' shards:
+    *   store (shard-pruned scan)  LEFT SEMI  broadcast(candidates)
+    * and the caller masks with the broadcast result. No batch-sized literal
+    * ever reaches a plan (an `isin` over the batch's fingerprints grew an
+    * expression tree and its generated code with the batch); the only
+    * collect is the distinct shard list, bounded by NumShards (256).
+    *
+    * A passing row's fingerprint stages into the log with the epoch's
+    * Bloom sidecar. The Bloom list is loaded once per mount, BROADCAST to
+    * executors (a closure-captured filter would re-serialize with every
+    * task), and re-broadcast as soon as an epoch stages a sidecar, before
+    * the marker: an epoch that then never commits only leaves a filter
+    * that costs false positives, while a list missing a committed epoch's
+    * filter would wave its duplicates through. */
+  private[graft] def screen(spark: SparkSession, dir: String, idCol: String,
+                            textCol: String, streamTag: String,
+                            autoCompactEvery: Int = AutoCompact.DefaultCheckEvery,
+                            autoCompactFactor: Int = AutoCompact.DefaultFactor):
+      ScreenLayer = {
     graft.Tuning.mountDefaults(spark) // the store reads list on the driver
-    // A restarted sink finishes (or discards) what a crash left staged
-    // before it reads anything: committed epochs publish into the log, a
-    // committed fold completes.
-    val fs0 = fsOf(spark, dir)
-    val commit = sinkCommit(dir, streamTag)
-    commit.heal(fs0)
-    Log.healFold(fs0, dir)
-    // The Bloom list is loaded once per sink start, BROADCAST to executors
-    // (a closure-captured filter would re-serialize with every task), and
-    // re-broadcast only when an epoch extends it.
+    val fs = fsOf(spark, dir)
+    val own = sinkCommit(dir, streamTag)
+    own.heal(fs)
+    Log.healFold(fs, dir)
     val sc = spark.sparkContext
     var blooms: Seq[BloomFilter] = loadBlooms(spark, dir)
     var bloomBc = sc.broadcast(blooms.toArray)
+    def swap(next: Seq[BloomFilter]): Unit = {
+      blooms = next
+      val old = bloomBc
+      bloomBc = sc.broadcast(blooms.toArray)
+      old.unpersist()
+    }
     // auto-compaction keys on the Bloom-sidecar count here: every committed
     // non-empty epoch adds one sidecar, each costs a probe per lookup, and
     // compact() merges them to one (the base's fold files are rewritten in
     // the same pass) — so sidecars, not fps files, are this store's growth
     // telemetry. The log folds at every cadence boundary regardless.
     val auto = new AutoCompact(autoCompactEvery, autoCompactFactor)
-    (batch: DataFrame, epoch: Long) => {
-      val fs = fsOf(batch.sparkSession, dir)
-      commit.run(fs, batch, epoch) { stage =>
-        // one survivor per distinct text within the batch (min id; the
-        // dropDuplicates guards against byte-identical re-delivered rows,
-        // which the min-id join alone would emit twice)
-        val keyed = batch.withColumn("__fp", fpCol(textCol))
-        val firsts = keyed.groupBy("__fp").agg(min(col(idCol)).as(idCol))
-          .join(keyed, Seq("__fp", idCol)) // tiny: batch-sized
-          .dropDuplicates("__fp")
-          .localCheckpoint()
-        // Bloom screen: definite-new rows skip disk entirely. The disk
-        // verify is a join pipeline:
-        //   store (shard-pruned scan)  LEFT SEMI  broadcast(candidates)
-        //   firsts                     LEFT ANTI  broadcast(confirmed)
-        // What this buys on a mostly-duplicate replay (backlog re-delivery,
-        // the crash-recovery shape): NO batch-sized literal expression ever
-        // reaches the plan — the r8 isin shape grew an expression tree /
-        // generated code with the batch. The driver still holds the compact
-        // broadcast relations (8-byte fps of candidates / confirmed — the
-        // usual driver residency of any broadcast build side), and the only
-        // COLLECT is the distinct shard list, bounded by NumShards (256).
-        // The store side streams just its candidate shards.
-        val bc = bloomBc
-        val candidates =
-          if (bc.value.isEmpty) firsts.select("__fp").limit(0)
-          else
-            firsts.select("__fp").filter(bloomProbe(bc)(col("__fp")))
-        val cand = candidates
-          .select(col("__fp").as("fp"),
-            pmod(col("__fp"), lit(NumShards)).as("shard"))
-          .localCheckpoint()
-        val shards = cand.select("shard").distinct() // ≤ NumShards rows
-          .collect().map(_.getLong(0)).toSeq
-        // verify candidates against ONLY their shards (static partition
-        // filter); the semi-join keeps one store row per confirmed dup
-        val confirmed: DataFrame =
-          if (shards.isEmpty) cand.select("fp")
-          else read(spark, dir)
-            .filter(col("shard").isin(shards: _*))
-            .join(broadcast(cand.select("fp")), Seq("fp"), "left_semi")
-        val survivors = firsts
-          .join(broadcast(confirmed.select(col("fp").as("__fp"))),
-            Seq("__fp"), "left_anti")
-          .localCheckpoint()
-        out(survivors.drop("__fp"))
-        val newFps = survivors
-          .select(col("__fp").as("fp"),
-            pmod(col("__fp"), lit(NumShards)).as("shard"))
-        val n = survivors.count()
-        if (n > 0) {
-          // stage the epoch's fps as one file (invisible until published)
-          // and write its Bloom sidecar, both before the marker: a replay
-          // of an uncommitted epoch overwrites the sidecar, and until then
-          // the extra filter only costs false positives
-          Log.stage(newFps, stage, "fps")
-          val epochBloom = newFps.stat.bloomFilter("fp",
-            math.max(1024L, 2 * n), 0.01)
-          writeBloom(fs, dir, s"${streamTag}_epoch_$epoch", epochBloom)
-          blooms = blooms :+ epochBloom
-          val old = bloomBc
-          bloomBc = sc.broadcast(blooms.toArray)
-          old.unpersist()
+    def candidates(prep: DataFrame): DataFrame = {
+      val bc = bloomBc
+      if (bc.value.isEmpty) prep.select("__fp").limit(0)
+      else prep.select("__fp").filter(bloomProbe(bc)(col("__fp")))
+    }
+    new ScreenLayer {
+      val commit: EpochLog.Commit = own
+      val key = "__fp"
+      val added: Seq[String] = Seq("__fp")
+      def prepare(rows: DataFrame): DataFrame = {
+        // one aggregate: per text, the row with the least (non-null) id
+        val cols = idCol +: rows.columns.filterNot(_ == idCol).toSeq
+        rows.groupBy(fpCol(textCol).as("__fp"))
+          .agg(min_by(struct(cols.map(c => col(s"`$c`")): _*), col(idCol))
+            .as("__r"))
+          .filter(col("__r").isNotNull)
+          .select(col("__fp") +: cols.map(c => col("__r").getField(c).as(c)): _*)
+      }
+      def keys(prep: DataFrame): DataFrame =
+        candidates(prep).select(pmod(col("__fp"), lit(NumShards)))
+      def flagged(prep: DataFrame, shards: Set[Long]): DataFrame =
+        if (shards.isEmpty) prep.select("__fp").limit(0)
+        else read(spark, dir)
+          .filter(col("shard").isin(shards.toSeq.sorted: _*))
+          .join(broadcast(candidates(prep).select(col("__fp").as("fp"))),
+            Seq("fp"), "left_semi")
+          .select(col("fp").as("__fp"))
+      def stage(passed: DataFrame, stage: Path, epoch: Long): () => Unit = {
+        val fps = passed.select("__fp").collect().map(_.getLong(0))
+        if (fps.nonEmpty) {
+          Log.stage(passed.select(col("__fp").as("fp"),
+            pmod(col("__fp"), lit(NumShards)).as("shard")), stage, "fps")
+          val bloom = BloomFilter.create(math.max(1024L, 2L * fps.length), 0.01)
+          fps.foreach(bloom.putLong)
+          writeBloomAt(fs, new Path(stage, "bloom"), bloom)
+          swap(blooms :+ bloom)
         }
-      } { _ =>
-        // epoch fully committed: the between-epochs single-writer window
-        auto.tick(bloomCount(spark, dir), 1, Log.fold(spark, dir)) {
+        () => auto.tick(bloomCount(spark, dir), 1, Log.fold(spark, dir)) {
           compact(spark, dir)
           // the store's content is unchanged but its sidecars merged: swap
           // the in-memory list for the merged one (holding the old
           // per-epoch filters would be correct but never reclaim memory)
-          blooms = loadBlooms(spark, dir)
-          val old = bloomBc
-          bloomBc = sc.broadcast(blooms.toArray)
-          old.unpersist()
+          swap(loadBlooms(spark, dir))
         }
       }
     }

@@ -342,8 +342,8 @@ object Pack {
     * `.pack_stage_<tag>_<e>`, markers `_packed_<tag>_epoch_<e>`, publishing
     * the `shard=K/` dirs at the store root. */
   private def appendCommit(dir: String, tag: String): EpochLog.Commit =
-    EpochLog.Commit(dir, s".pack_stage_${tag}_", s"_packed_${tag}_epoch_",
-      Seq("" -> "shard"))
+    EpochLog.Commit(s".pack_stage_${tag}_", s"_packed_${tag}_epoch_",
+      Seq(EpochLog.Part(dir, Seq("" -> "shard"))))
 
   /** The appender heal across EVERY stream tag — the retract entry point
     * must fold committed-but-unpublished epochs of any appender into the

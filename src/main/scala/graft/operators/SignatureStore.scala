@@ -41,7 +41,9 @@ import org.apache.spark.sql.functions._
   *    markers, one namespace PER SINK KIND: an appender and a screen
   *    mounted on the same store can never suppress each other's epochs.
   *  - `.sigapp_stage_<tag>_<e>` / `.sigscr_stage_<tag>_<e>` — per-epoch
-  *    staging dirs ([[EpochLog.Commit]], every store sink's protocol).
+  *    staging dirs ([[EpochLog.Commit]], every store sink's protocol); the
+  *    ingest door stages under `.door_stage_<tag>_<e>` and commits with
+  *    one marker in its fingerprint store ([[graft.streaming.FrontDoor]]).
   *  - `_fold_pending` / `.fold_stage` — a log fold's commit marker and
   *    stage ([[EpochLog.fold]]).
   *
@@ -174,6 +176,13 @@ object SignatureStore {
     require(fs.rename(tmp, dest), s"SignatureStore: cannot publish $dest")
   }
 
+  /** The census sidecar's schema, supplied on read (no inference job). */
+  private val CensusSchema: org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("band_id", IntegerType),
+      StructField("band_hash", LongType), StructField("df", LongType)))
+  }
+
   /** Groups below this per-epoch merged floor are dropped from the
     * incremental census fold — see [[mergeBandCensus]]'s size bound. */
   private val CensusMergeFloor = 4
@@ -208,15 +217,18 @@ object SignatureStore {
   private def mergeBandCensus(spark: SparkSession, dir: String,
                               epochBands: DataFrame): Unit = {
     val fs = fsOf(spark, dir)
-    val epochCounts = epochBands.groupBy("band_id", "band_hash")
-      .agg(count(lit(1)).as("df"))
+    val epochRows = epochBands.select(col("band_id"), col("band_hash"),
+      lit(1L).as("df"))
     val censusP = new Path(s"$dir/hotbands")
-    val merged =
+    val rows =
       if (fs.exists(censusP))
-        spark.read.parquet(censusP.toString).unionByName(epochCounts)
-          .groupBy("band_id", "band_hash").agg(sum("df").as("df"))
-      else epochCounts
-    publishCensus(spark, dir, merged.filter(col("df") > CensusMergeFloor))
+        spark.read.schema(CensusSchema).parquet(censusP.toString)
+          .unionByName(epochRows)
+      else epochRows
+    // census-sized input: one task sums it, no shuffle
+    publishCensus(spark, dir, rows.coalesce(1)
+      .groupBy("band_id", "band_hash").agg(sum("df").as("df"))
+      .filter(col("df") > CensusMergeFloor))
   }
 
   /** The stored signature table: (id, sig, shard). Empty frame (same
@@ -429,25 +441,49 @@ object SignatureStore {
     // hash pass saved per probe (r17 StageProfile: the verify re-hash was
     // 7.5 s of executor time on dedup_delta_minhash_capped). Banding over
     // the pinned sigs is a cheap projection, recomputed per consumer. A
-    // caller that already checkpointed its sigs (screenSink) is not
-    // re-pinned — its frame is already a materialized leaf.
+    // caller that already checkpointed its sigs is not re-pinned — its
+    // frame is already a materialized leaf.
     val callerPinned = probeSigs.queryExecution.analyzed
       .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
     val sigsP = if (callerPinned) probeSigs.select("id", "sig")
                 else pin(probeSigs.select("id", "sig"))
-    val bandsI = Dedup.bandedSigs(sigsP, "id_in", numHashes, bands)
-      .withColumn("bucket", bucketCol(col("band_hash")))
-    val buckets = bandsI.select("bucket").distinct()
+    val buckets = bandBuckets(sigsP, numHashes, bands).distinct()
       .collect().map(_.getLong(0)).toSeq // ≤ NumBuckets rows
+    val cands = pin(candidates(spark, dir,
+      Dedup.bandedSigs(sigsP, "id_in", numHashes, bands), buckets, maxBandDf)
+      .distinct())
+    val shards = cands.select(shardCol(col("id_base")).as("shard"))
+      .distinct().collect().map(_.getLong(0)).toSeq // ≤ NumShards rows
+    val sigsB =
+      (if (shards.isEmpty) readSigsRaw(spark, dir).limit(0)
+       else readSigsRaw(spark, dir).filter(col("shard").isin(shards: _*))
+         .join(broadcast(cands.select(col("id_base").as("id"))), Seq("id"),
+           "left_semi"))
+        .select("id", "sig")
+    Dedup.verifySigCandidates(cands, sigsP, sigsB, numHashes, threshold)
+  }
+
+  /** The band buckets (column `bucket`) the probe of `sigs` reads. */
+  private def bandBuckets(sigs: DataFrame, numHashes: Int,
+                          bands: Int): DataFrame =
+    Dedup.bandedSigs(sigs, "id_in", numHashes, bands)
+      .select(bucketCol(col("band_hash")).as("bucket"))
+
+  /** Candidate pairs against the store: each stored band row in buckets
+    * `buckets` that matches a probe band of `bandsI` (band_id, band_hash,
+    * id_in, ...), as (id_base, id_in, ...) — one row per colliding band.
+    * The hot list comes from the census sidecar when it can answer the
+    * asked cap (tiny broadcast, zero extra band-table scans); a store
+    * without one — or a cap below the census floor — falls back to an
+    * on-the-fly group count over the already-pruned slice (a (band_id,
+    * band_hash) group lives entirely inside one bucket, so the slice's
+    * group df IS the store-wide df). */
+  private def candidates(spark: SparkSession, dir: String,
+                         bandsI: DataFrame, buckets: Seq[Long],
+                         maxBandDf: Int): DataFrame = {
     val storeBands = readBands(spark, dir)
     val slice0 = if (buckets.isEmpty) storeBands.limit(0)
                  else storeBands.filter(col("bucket").isin(buckets: _*))
-    // The hot list comes from the census sidecar when it can answer the
-    // asked cap (tiny broadcast, zero extra band-table scans); a store
-    // without one — or a cap below the census floor — falls back to an
-    // on-the-fly group count over the already-pruned slice (a (band_id,
-    // band_hash) group lives entirely inside one bucket, so the slice's
-    // group df IS the store-wide df).
     val slice = if (maxBandDf == Int.MaxValue) slice0 else {
       val censusP = new Path(s"$dir/hotbands")
       val hot =
@@ -459,20 +495,30 @@ object SignatureStore {
       slice0.join(broadcast(hot.select("band_id", "band_hash")),
         Seq("band_id", "band_hash"), "left_anti")
     }
-    val cands = pin(slice
-      .select(col("id").as("id_base"), col("band_id"), col("band_hash"))
-      .join(broadcast(bandsI.select("band_id", "band_hash", "id_in")),
-        Seq("band_id", "band_hash"))
-      .select("id_in", "id_base").distinct())
-    val shards = cands.select(shardCol(col("id_base")).as("shard"))
-      .distinct().collect().map(_.getLong(0)).toSeq // ≤ NumShards rows
-    val sigsB =
-      (if (shards.isEmpty) readSigsRaw(spark, dir).limit(0)
-       else readSigsRaw(spark, dir).filter(col("shard").isin(shards: _*))
-         .join(broadcast(cands.select(col("id_base").as("id"))), Seq("id"),
-           "left_semi"))
-        .select("id", "sig")
-    Dedup.verifySigCandidates(cands, sigsP, sigsB, numHashes, threshold)
+    slice.select(col("id").as("id_base"), col("band_id"), col("band_hash"))
+      .join(broadcast(bandsI), Seq("band_id", "band_hash"))
+      .drop("band_id", "band_hash")
+  }
+
+  /** The screen's verdict: ids of `sigsP` (id, sig) with a stored
+    * signature at estimated Jaccard ≥ `threshold`, reading only band
+    * buckets `buckets` and then only the candidates' sig shards. Each
+    * candidate pair carries its probe signature, so the verify is one
+    * pruned store scan joined to the broadcast pairs. An id may repeat. */
+  private def nearDupIds(spark: SparkSession, dir: String, sigsP: DataFrame,
+                         numHashes: Int, bands: Int, threshold: Double,
+                         buckets: Seq[Long], maxBandDf: Int): DataFrame = {
+    val bandsI = Dedup.bandedSigs(sigsP, "id_in", numHashes, bands,
+        keep = Seq("sig")).withColumnRenamed("sig", "sig_in")
+    val cands = candidates(spark, dir, bandsI, buckets, maxBandDf)
+      .localCheckpoint()
+    val shards = ScreenEpoch.distinctLongs(
+      cands.select(shardCol(col("id_base")))).toSeq // ≤ NumShards values
+    if (shards.isEmpty) cands.select("id_in").limit(0)
+    else readSigsRaw(spark, dir).filter(col("shard").isin(shards.sorted: _*))
+      .join(broadcast(cands), col("id") === col("id_base"))
+      .filter(Dedup.estJaccard(col("sig_in"), col("sig"), numHashes) >= threshold)
+      .select("id_in")
   }
 
   /** foreachBatch sink SCREENING each micro-batch against the store before
@@ -507,40 +553,60 @@ object SignatureStore {
                  autoCompactFactor: Int = AutoCompact.DefaultFactor,
                  maxBandDf: Int = Int.MaxValue)
                 (out: DataFrame => Unit): (DataFrame, Long) => Unit = {
+    val s = screen(spark, dir, idCol, textCol, threshold, numHashes, bands,
+      shingleSize, streamTag, autoCompactEvery, autoCompactFactor, maxBandDf)
+    ScreenEpoch.sink(s.commit, Seq(s))(out)
+  }
+
+  /** The near-dup layer of [[screenSink]] and the ingest door
+    * ([[ScreenLayer]]), mounted on [[screenSink]]'s namespace of
+    * `streamTag`: the batch gains its MinHash signature `__sig` (hashed
+    * once per id), the [[probeStored]] pruned path flags ids with a stored
+    * near-duplicate, and a passing id's signature and band rows stage into
+    * the logs. After the commit the survivors' band counts fold into the
+    * census (append-grown hot bands cappable before any compact), then the
+    * auto-compact tick runs. */
+  private[graft] def screen(spark: SparkSession, dir: String, idCol: String,
+                            textCol: String, threshold: Double,
+                            numHashes: Int = 32, bands: Int = 8,
+                            shingleSize: Int = 3, streamTag: String,
+                            autoCompactEvery: Int = AutoCompact.DefaultCheckEvery,
+                            autoCompactFactor: Int = AutoCompact.DefaultFactor,
+                            maxBandDf: Int = Int.MaxValue): ScreenLayer = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
-    val commit = mount(spark, dir, "sigscr", streamTag)
+    val own = mount(spark, dir, "sigscr", streamTag)
     val auto = new AutoCompact(autoCompactEvery, autoCompactFactor)
-    (batch: DataFrame, epoch: Long) => {
-      val fs = fsOf(batch.sparkSession, dir)
-      checkParams(fs, dir, numHashes, shingleSize, bands)
-      commit.run(fs, batch, epoch) { stage =>
-        val b = batch.localCheckpoint()
-        val sigsI = Dedup.minHashSignatures(b, idCol, textCol, numHashes,
-          shingleSize).localCheckpoint()
-        val flagged = probeStored(spark, dir, sigsI, numHashes, bands,
-            threshold, maxBandDf = maxBandDf)
-          .select(col("doc_id").as(idCol)).localCheckpoint()
-        val survivors = b.join(broadcast(flagged), Seq(idCol), "left_anti")
-          .localCheckpoint()
-        // CONTRACT: a pre-marker crash replays this epoch and re-invokes
-        // `out` with identical survivors — `out` must be idempotent under
-        // epoch re-delivery (marker-protected, like every sink in this
-        // engine). Pinned: StreamingSpec "screen out feeds a
-        // marker-protected downstream sink".
-        out(survivors)
-        val survSigs = sigsI
-          .join(broadcast(flagged.select(col(idCol).as("id"))), Seq("id"),
-            "left_anti")
-        writeStage(survSigs, numHashes, bands, stage)
-        writeParams(fs, dir, numHashes, shingleSize, bands)
-        survSigs
-      } { survSigs =>
-        // epoch fully committed: fold the survivors' band counts into the
-        // census (append-grown hot bands cappable before any compact),
-        // then the between-epochs single-writer auto-compact window
-        mergeBandCensus(spark, dir,
-          Dedup.bandedSigs(survSigs, "id", numHashes, bands))
-        autoTick(spark, dir, auto)
+    def sigsOf(rows: DataFrame): DataFrame =
+      rows.select(col(idCol).as("id"), col("__sig").as("sig"))
+        .filter(col("sig").isNotNull)
+    new ScreenLayer {
+      val commit: EpochLog.Commit = own
+      val key: String = idCol
+      val added: Seq[String] = Seq("__sig")
+      def prepare(rows: DataFrame): DataFrame = {
+        checkParams(fsOf(spark, dir), dir, numHashes, shingleSize, bands)
+        val sigs = Dedup.minHashSignatures(rows, idCol, textCol, numHashes,
+          shingleSize)
+        rows.join(sigs.select(col("id").as(idCol), col("sig").as("__sig")),
+            Seq(idCol), "left")
+          .select(rows.columns.map(col) :+ col("__sig"): _*)
+      }
+      def keys(prep: DataFrame): DataFrame =
+        bandBuckets(sigsOf(prep), numHashes, bands)
+      def flagged(prep: DataFrame, buckets: Set[Long]): DataFrame =
+        nearDupIds(spark, dir, sigsOf(prep), numHashes, bands, threshold,
+            buckets.toSeq.sorted, maxBandDf)
+          .select(col("id_in").as(idCol))
+      def stage(passed: DataFrame, stage: Path, epoch: Long): () => Unit = {
+        // one row per id, as the probe hashed them (one task: batch-sized)
+        val sigs = sigsOf(passed).coalesce(1).dropDuplicates("id")
+        writeStage(sigs, numHashes, bands, stage)
+        writeParams(fsOf(spark, dir), dir, numHashes, shingleSize, bands)
+        () => {
+          mergeBandCensus(spark, dir,
+            Dedup.bandedSigs(sigs, "id", numHashes, bands))
+          autoTick(spark, dir, auto)
+        }
       }
     }
   }

@@ -2,54 +2,72 @@ package graft.streaming
 
 import java.util.concurrent.atomic.AtomicLong
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, lit}
 
-import graft.operators.{AnnIndex, FingerprintStore, SignatureStore}
+import graft.operators.{AnnIndex, EpochLog, FingerprintStore, ScreenEpoch,
+  ScreenLayer, SignatureStore}
 
 /** The COMPLETE ingest front door as one `writeStream.foreachBatch` sink —
   * the four-layer admission chain every continuous-crawl deployment of this
   * engine wires by hand otherwise (and the StreamingSpec front-door tests
-  * wire by hand deliberately, to pin each layer in isolation):
+  * chain the per-layer sinks by hand deliberately, to pin each layer in
+  * isolation; those sinks run the same per-store steps):
   *
   *  1. [[IngestGate]] — DSIR affinity + quality gate: is this document
   *     worth anything at all? Rejects route to `quarantine` with their
   *     score columns for audit.
   *  2. [[FingerprintStore.dedupSink]] — exact dedup: the byte-identical
   *     re-delivery / re-crawl, killed by a broadcast Bloom + shard-pruned
-  *     verify. Cheapest per-doc, so it runs before anything hashes text.
+  *     verify; byte-identical docs within a batch keep the least id.
   *  3. [[SignatureStore.screenSink]] — MinHash near-dup screen: the
   *     re-crawl that changed one timestamp token.
   *  4. [[AnnIndex.semanticScreenSink]] — semantic screen: the PARAPHRASE
   *     (same meaning, disjoint shingles, near-identical embedding) that
   *     sails past both text layers.
   *
-  * Survivors of all four layers flow to `accept` (original columns).
-  * Duplicate kills at layers 2–4 are silent drops, not quarantines — a
-  * duplicate is already represented in the stores; only the GATE's rejects
-  * carry information a human reviews. The batch must already carry the
-  * embedding column (the door screens, it does not embed — run the
-  * [[graft.embed.EmbeddingProvider]] transform upstream in the same
-  * `foreachBatch` read or as a prior select).
+  * Survivors of all four layers flow to `accept` (original columns, id
+  * first). Duplicate kills at layers 2–4 are silent drops, not
+  * quarantines — a duplicate is already represented in the stores; only
+  * the GATE's rejects carry information a human reviews. The batch must
+  * already carry the embedding column (the door screens, it does not
+  * embed — run the [[graft.embed.EmbeddingProvider]] transform upstream in
+  * the same `foreachBatch` read or as a prior select).
   *
-  * Ordering is rejection-cost order: each layer only pays for what the
-  * cheaper layers above it admitted, so at steady state (most re-crawls are
-  * byte-identical) the expensive layers see a trickle. All four layers keep
-  * their own per-epoch idempotence markers under the shared `streamTag`, so
-  * the composed door inherits every individual crash-window guarantee the
-  * specs pin: a replay from ANY point re-derives identical admissions and
-  * bit-identical stores. Single door stream per store set (the usual
+  * One door epoch per trigger ([[graft.operators.ScreenEpoch]]): the
+  * gate's admitted rows are checkpointed once with their fingerprint and
+  * MinHash signature (one row per distinct text, min id), one job collects
+  * the three probes' partition keys (fingerprint shards of the Bloom
+  * candidates, band buckets, nearest lists), and all three stores are
+  * probed over those rows. A row dies at the first layer that flags it:
+  * each verdict is batch-vs-store, so probing a row a cheaper layer kills
+  * changes no other verdict. Each store then stages the rows that passed
+  * its own layer — the fingerprint store every fp survivor and its Bloom
+  * sidecar, the signature store the signature-layer survivors, the index
+  * the final survivors — in `.door_stage_<tag>_<e>` under its own dir, ONE
+  * marker `_door_<tag>_epoch_<e>` in the fingerprint dir commits all
+  * three, the stages publish, and the post-commit steps run once (band
+  * census fold, auto-compact ticks). A crash before the marker leaves
+  * orphan stages the next mount discards, and the epoch replays whole
+  * against stores without its rows (no probe ever matches its own epoch);
+  * after it, the mount finishes the publish in every dir and the replay
+  * only heals. Single door stream per store set (the usual
   * single-maintainer contract).
   *
-  * CALLBACK CONTRACT — foreachBatch is at-least-once, and the stores'
-  * markers protect the STORES, not the callbacks: `accept` re-fires with
-  * identical survivors if a crash lands before the semantic screen's epoch
-  * marker commits, and `quarantine` (the markerless gate-reject path)
-  * re-fires on ANY replay of its epoch. Both must be idempotent under
-  * epoch re-delivery — keyed/overwriting writes or their own
-  * marker-protected sinks, mirroring the CONTRACT note in
-  * [[AnnIndex.semanticScreenSink]] — or an external consumer will
-  * duplicate rows on replay.
+  * Stores written by the per-layer chain (each layer under its own
+  * marker, the fingerprint layer's `_ingested_<tag>_epoch_<e>` last) mount
+  * as they are: an epoch with that marker replays as a no-op, and one with
+  * only the later layers' markers is finished without those layers.
+  *
+  * CALLBACK CONTRACT — foreachBatch is at-least-once, and the door marker
+  * protects the STORES, not the callbacks: `accept` runs before the
+  * marker, so it fires again, with identical survivors, on a replay of an
+  * epoch whose door marker is absent; `quarantine`, the gate's reject path,
+  * has no marker and fires again on ANY replay of its epoch. Both must be
+  * idempotent under epoch re-delivery — keyed/overwriting writes or their
+  * own marker-protected sinks — or an external consumer will duplicate
+  * rows on replay.
   *
   * Scale: per trigger, the gate's work is O(|batch|) (broadcast stats), the
   * fp probe is Bloom + pruned shards, the signature probe reads only
@@ -79,10 +97,10 @@ object FrontDoor {
            streamTag: String = "door")
           (accept: DataFrame => Unit)
           (quarantine: DataFrame => Unit): (DataFrame, Long) => Unit = {
-    // Epoch threading: inner sinks are built once (their heal sweeps and
-    // Bloom loads run at mount, like a recovered driver would), and each
-    // trigger's epoch reaches the inner layers through this cell — set
-    // before the first inner sink runs, in the gate's accept callback.
+    // Epoch threading: the store half is mounted once (its heal sweeps and
+    // Bloom load run at mount, like a recovered driver would), and each
+    // trigger's epoch reaches it through this cell — set in the gate's
+    // accept callback, before the store half runs.
     val cur = new AtomicLong(-1L)
     val chain = storeChain(spark, fpDir, sigDir, ivfDir, idCol, textCol,
       vecCol, sigThreshold, semThreshold, nprobe, streamTag, cur)(accept)
@@ -91,12 +109,16 @@ object FrontDoor {
       { (df, _) => quarantine(df) })
   }
 
-  /** The three store layers behind the gate as one epoch-threaded sink.
+  /** The door epoch's store half: the three store layers on one commit.
     * Package-private so the guard below is pinnable; production callers use
     * [[sink]], which owns `cur` and sets it in the gate's accept path. The
     * `require` makes a mis-wired door (a layer fed directly, no gate epoch)
-    * fail LOUDLY instead of silently running every inner store at epoch −1
-    * — where one shared marker would swallow every subsequent batch. */
+    * fail LOUDLY instead of silently running every store at epoch −1 —
+    * where one shared marker would swallow every subsequent batch.
+    *
+    * Mount heals every namespace the stores may hold for `streamTag`: the
+    * door's own (all three dirs against its one marker) and the per-layer
+    * sinks' that earlier versions of this door committed under. */
   private[graft] def storeChain(spark: SparkSession, fpDir: String,
       sigDir: String, ivfDir: String, idCol: String, textCol: String,
       vecCol: String, sigThreshold: Double, semThreshold: Double,
@@ -109,14 +131,43 @@ object FrontDoor {
           "— wire batches through FrontDoor.sink, never into a layer directly")
       e
     }
-    val sem = AnnIndex.semanticScreenSink(spark, ivfDir, idCol, vecCol,
-      semThreshold, nprobe, streamTag)(accept)
-    val sig = SignatureStore.screenSink(spark, sigDir, idCol, textCol,
-      sigThreshold, streamTag = streamTag) { df => sem(df, epochNow()) }
-    val fp = FingerprintStore.dedupSink(spark, fpDir, idCol, textCol,
-      streamTag = streamTag) { df => sig(df, epochNow()) }
-    df => fp(df, epochNow())
+    val layers = Seq(
+      FingerprintStore.screen(spark, fpDir, idCol, textCol, streamTag),
+      SignatureStore.screen(spark, sigDir, idCol, textCol, sigThreshold,
+        streamTag = streamTag),
+      AnnIndex.screen(spark, ivfDir, idCol, vecCol, semThreshold, nprobe,
+        streamTag))
+    val commit = doorCommit(streamTag, layers)
+    val fs = new Path(fpDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    commit.heal(fs)
+    df => {
+      val e = epochNow()
+      // A store trio written by the per-layer chain commits each layer
+      // under its own marker, the fingerprint layer's last: with it, epoch
+      // e committed whole. With only the later layers' markers, that chain
+      // crashed mid-epoch; finish it as it would have — without the layers
+      // whose markers exist and, once the semantic layer has committed,
+      // without firing `accept` again. Recomputing such a layer would match
+      // the epoch's own stored rows.
+      if (commit.committed(fs, e) || layers.head.commit.committed(fs, e))
+        commit.heal(fs)
+      else {
+        val live = layers.indexWhere(_.commit.committed(fs, e)) match {
+          case -1 => layers.size
+          case k => k
+        }
+        ScreenEpoch.run(fs, commit, layers.take(live), df, e)(
+          if (live == layers.size) accept else _ => ())
+      }
+    }
   }
+
+  /** The door epoch's namespace on stream `tag`: stages
+    * `.door_stage_<tag>_<e>` in each of the three store dirs, one marker
+    * `_door_<tag>_epoch_<e>` in the fingerprint dir. */
+  private def doorCommit(tag: String, layers: Seq[ScreenLayer]): EpochLog.Commit =
+    EpochLog.Commit(s".door_stage_${tag}_", s"_door_${tag}_epoch_",
+      layers.map(_.commit.parts.head))
 
   /** READ-ONLY corpus-membership probe — the door's question ("have we
     * seen this content?") answered WITHOUT the writer lock: no append, no

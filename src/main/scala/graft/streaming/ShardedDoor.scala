@@ -16,9 +16,9 @@ import graft.operators.AnnIndex
   * cost: shard i owns `root/shard=i/{fp,sig,ivf}`, admits ONLY documents
   * with `hash(id) % k == i` (the route filter is the sink's first op, so
   * cross-shard traffic is structurally impossible, not a convention), and
-  * runs its own [[FrontDoor.sink]] with per-shard stream tags — every
-  * per-layer idempotence marker, crash window, and heal of the single door
-  * applies unchanged per shard, and a crash in one shard's stream never
+  * runs its own [[FrontDoor.sink]] with per-shard stream tags — the single
+  * door's epoch marker, crash windows and heals apply unchanged per
+  * shard, and a crash in one shard's stream never
   * blocks the others (disjoint dirs, disjoint markers, disjoint streams).
   *
   * ROUTING CONTRACT (the sharding trade, stated plainly): the route key is

@@ -484,6 +484,99 @@ class FrontDoorSpec extends AnyFunSuite {
     assert(fs.exists(new org.apache.hadoop.fs.Path(s"$root/_layout")))
   }
 
+  /** Counts the jobs started under one job group (broadcast and AQE stage
+    * jobs inherit the caller's group) and drains like a bench harness: it
+    * waits until no job is open and the bus has been quiet for 500 ms. */
+  private final class JobCounter(group: String)
+      extends org.apache.spark.scheduler.SparkListener {
+    private val open = scala.collection.mutable.Set[Int]()
+    @volatile private var lastEventMs = System.currentTimeMillis()
+    @volatile var jobs = 0
+    override def onJobStart(
+        e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = synchronized {
+      lastEventMs = System.currentTimeMillis()
+      if (Option(e.properties).exists(p =>
+          p.getProperty("spark.jobGroup.id") == group)) {
+        jobs += 1; open += e.jobId
+      }
+    }
+    override def onJobEnd(
+        e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = synchronized {
+      lastEventMs = System.currentTimeMillis(); open -= e.jobId
+    }
+    def drain(): Unit = {
+      val deadline = System.currentTimeMillis() + 20000
+      while (System.currentTimeMillis() < deadline &&
+        (synchronized(open.nonEmpty) ||
+          System.currentTimeMillis() - lastEventMs < 500)) Thread.sleep(50)
+    }
+  }
+
+  test("one warm 100-doc door trigger runs at most 40 Spark jobs") {
+    // the bench door's mix: 20 gate rejects, 20 exact copies of stored
+    // docs, 20 one-token re-crawls, 20 paraphrases, 20 novel docs
+    val n = 20
+    def words(k: Int, r: scala.util.Random) =
+      Seq.fill(k)(Seq.fill(8)(('a' + r.nextInt(26)).toChar).mkString)
+        .mkString(" ")
+    def randVec(r: scala.util.Random) = Seq.fill(16)(r.nextDouble() * 2 - 1)
+    val r0 = new scala.util.Random(7)
+    val stored = (0 until n).map(i => (i.toLong, words(24, r0), randVec(r0)))
+    val others = (0 until 40).map(i =>
+      (1000L + i, words(24, r0), randVec(r0)))
+    val all = (stored ++ others).toDF("doc_id", "text", "embedding")
+    val gate = new IngestGate(
+      Dsir.bucketStats(all.withColumn("is_target", col("doc_id") % 2 === 0),
+        "doc_id", "text", col("is_target")), minAffinity = -1e18)
+    val fpDir = java.nio.file.Files.createTempDirectory("fdj_fp").toString
+    val sigDir = java.nio.file.Files.createTempDirectory("fdj_sig").toString
+    FingerprintStore.seed(all, "text", fpDir)
+    SignatureStore.seed(all, "doc_id", "text", sigDir)
+    val ivfDir = AnnIndex.ivfIndexDir(all, "mem://fd_jobs", "doc_id",
+      "embedding", nlist = 8, iters = 3, seed = 42L,
+      variant = s"fdj_${java.util.UUID.randomUUID().toString.take(8)}")
+    // the callbacks count outside the measured job group: to the door they
+    // are no-ops
+    val counts = Array(0L, 0L)
+    val sc = spark.sparkContext
+    def countAside(i: Int, df: org.apache.spark.sql.DataFrame): Unit = {
+      val g = sc.getLocalProperty("spark.jobGroup.id")
+      sc.clearJobGroup()
+      try counts(i) += df.count()
+      finally if (g != null) sc.setJobGroup(g, "one warm door trigger")
+    }
+    val door = FrontDoor.sink(spark, gate, fpDir, sigDir, ivfDir, "doc_id",
+      "text", "embedding", sigThreshold = 0.45, semThreshold = 0.99,
+      nprobe = 4, streamTag = "jobs")(countAside(0, _))(countAside(1, _))
+    def batch(t: Int) = {
+      val r = new scala.util.Random(100 + t)
+      def nudge(v: Seq[Double]) = v.updated(0, v.head + 1e-3)
+      val id0 = 10000L * t
+      ((0 until n).map(i => (id0 + i, "x", randVec(r))) ++
+        stored.map { case (i, tx, v) => (id0 + 100 + i, tx, nudge(v)) } ++
+        stored.map { case (i, tx, v) =>
+          (id0 + 200 + i, tx + " " + words(1, r), nudge(v)) } ++
+        stored.map { case (i, _, v) => (id0 + 300 + i, words(24, r), nudge(v)) } ++
+        (0 until n).map(i => (id0 + 400 + i, words(24, r), randVec(r))))
+        .toDF("doc_id", "text", "embedding").localCheckpoint()
+    }
+    door(batch(1), 1L) // cold
+    assert(counts.toSeq == Seq(n.toLong, n.toLong), counts.mkString(","))
+    val warm = batch(2)
+    counts(0) = 0L; counts(1) = 0L
+    val group = s"door_jobs_${java.util.UUID.randomUUID().toString.take(8)}"
+    val counter = new JobCounter(group)
+    sc.addSparkListener(counter)
+    try {
+      sc.setJobGroup(group, "one warm door trigger")
+      try door(warm, 2L) finally sc.clearJobGroup()
+      counter.drain()
+    } finally sc.removeSparkListener(counter)
+    assert(counts.toSeq == Seq(n.toLong, n.toLong), counts.mkString(","))
+    info(s"warm trigger: ${counter.jobs} jobs")
+    assert(counter.jobs <= 40, s"a warm door trigger ran ${counter.jobs} jobs")
+  }
+
   test("a mis-wired store chain (layer fed with no gate epoch) fails " +
     "loudly instead of running the stores at epoch -1") {
     val seed = (for (c <- 0 until 8; k <- 0 until 6) yield
@@ -503,4 +596,320 @@ class FrontDoorSpec extends AnyFunSuite {
     }
     assert(ex.getMessage.contains("before any gate epoch"))
   }
+
+  // ---- the door epoch against the per-layer chain, and its crash windows
+
+  /** Three epochs holding every door outcome: e0 admits 1 and 3 and
+    * rejects 2 at the gate; e1 holds an exact copy of 1 (11), an
+    * intra-batch byte-identical pair (13 and 12: min id 12 survives), a
+    * one-token re-crawl of 3 (14), a paraphrase of 1 (15), a novel page
+    * (16) and a gate reject (17); e2 an exact copy of the pair's text
+    * (21), a re-crawl of 16 (22), a paraphrase of 3 (23), a novel page
+    * (24) and a gate reject (25). Distinct pages share no shingle: each
+    * has its own vocabulary or a disjoint window of one. */
+  private def doorEpochs: Seq[Seq[(Long, String, Seq[Double])]] = {
+    val (v1, v3, ve) = (vec(0, 0.5, 2), vec(5, 0.5, 7), vec(6, 0.5, 1))
+    val (n1, n2) = (vec(7, 0.5, 5), vec(3, 0.5, 6))
+    Seq(
+      Seq((1L, doc("alpha", 4), v1), (2L, doc("beta", 7), vec(1, 0.5, 3)),
+        (3L, doc("gamma", 4), v3)),
+      Seq((11L, doc("alpha", 4), v1), (13L, doc("delta", 4), ve),
+        (12L, doc("delta", 4), ve), (14L, recrawl("gamma", 4), nudge(v3, 4)),
+        (15L, doc("kappa", 4), nudge(v1, 3)), (16L, doc("alpha", 30), n1),
+        (17L, doc("beta", 30), vec(2, 0.5, 4))),
+      Seq((21L, doc("delta", 4), ve), (22L, recrawl("alpha", 30), nudge(n1, 3)),
+        (23L, doc("gamma", 30), nudge(v3, 2)), (24L, doc("delta", 30), n2),
+        (25L, doc("beta", 56), vec(4, 0.5, 0))))
+  }
+
+  private def doorGate(): IngestGate = {
+    val ref = (Seq("alpha", "gamma", "delta", "kappa").zipWithIndex.flatMap {
+        case (v, k) => (0 until 60).map(i => (k * 100L + i, doc(v, i), true))
+      } ++ (0 until 60).map(i => (900L + i, doc("beta", i), false)))
+      .toDF("doc_id", "text", "is_target")
+    new IngestGate(Dsir.bucketStats(ref, "doc_id", "text", col("is_target")),
+      minAffinity = 2.0)
+  }
+
+  /** A fresh (fp, sig, ivf) store trio; every trio's index is trained on
+    * the same seed vectors with the same seed, so all start identical. */
+  private def doorTrio(name: String): (String, String, String) = {
+    val seed = (for (c <- 0 until 8; k <- 0 until 6) yield
+      ((100 + c * 6 + k).toLong, vec(c, 0.15 * k, (c + 1) % 8)))
+      .toDF("doc_id", "embedding")
+    (java.nio.file.Files.createTempDirectory(s"${name}_fp").toString,
+      java.nio.file.Files.createTempDirectory(s"${name}_sig").toString,
+      AnnIndex.ivfIndexDir(seed, s"mem://door_$name", "doc_id", "embedding",
+        nlist = 8, iters = 3, seed = 42L,
+        variant = s"${name}_${java.util.UUID.randomUUID().toString.take(8)}"))
+  }
+
+  /** The per-layer sinks chained by hand, wired as the door chained them
+    * before it ran one epoch: gate -> fp -> sig -> sem, each layer
+    * committing under its own marker. */
+  private def layerChain(gate: IngestGate, trio: (String, String, String),
+                         tag: String, afterSem: Long => Unit = _ => ())
+                        (accept: org.apache.spark.sql.DataFrame => Unit)
+                        (quarantine: org.apache.spark.sql.DataFrame => Unit) = {
+    val (fpDir, sigDir, ivfDir) = trio
+    val cur = new java.util.concurrent.atomic.AtomicLong(-1L)
+    val sem = AnnIndex.semanticScreenSink(spark, ivfDir, "doc_id",
+      "embedding", 0.99, 2, tag)(accept)
+    val sig = SignatureStore.screenSink(spark, sigDir, "doc_id", "text",
+      0.45, streamTag = tag) { df => sem(df, cur.get()); afterSem(cur.get()) }
+    val fp = FingerprintStore.dedupSink(spark, fpDir, "doc_id", "text",
+      streamTag = tag) { df => sig(df, cur.get()) }
+    gate.sinkEpoch("doc_id", "text")({ (df, e) => cur.set(e); fp(df, e) })(
+      { (df, _) => quarantine(df) })
+  }
+
+  private def doorSink(trio: (String, String, String), tag: String)
+                      (accept: org.apache.spark.sql.DataFrame => Unit)
+                      (quarantine: org.apache.spark.sql.DataFrame => Unit) =
+    FrontDoor.sink(spark, doorGate(), trio._1, trio._2, trio._3, "doc_id",
+      "text", "embedding", sigThreshold = 0.45, semThreshold = 0.99,
+      nprobe = 2, streamTag = tag)(accept)(quarantine)
+
+  private def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+    df.select("doc_id").collect().map(_.getLong(0)).toSeq
+
+  /** The trio's four tables and the band census, each as sorted rows. */
+  private def doorTables(trio: (String, String, String)): Seq[Seq[String]] = {
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).toSeq.sorted
+    val census = new org.apache.hadoop.fs.Path(s"${trio._2}/hotbands")
+    Seq(rows(FingerprintStore.read(spark, trio._1)),
+      rows(SignatureStore.read(spark, trio._2)),
+      rows(SignatureStore.readBands(spark, trio._2)),
+      rows(AnnIndex.read(spark, trio._3)),
+      if (!exists(census.toString)) Nil
+      else rows(spark.read.parquet(census.toString)))
+  }
+
+  private def leftStages(trio: (String, String, String)): Seq[String] =
+    Seq(trio._1, trio._2, trio._3).flatMap { d =>
+      val p = new org.apache.hadoop.fs.Path(d)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p)
+        .map(_.getPath.getName).filter(_.contains("_stage_")).toSeq
+    }
+
+  test("the door epoch equals the per-layer chain: the same admissions and " +
+    "quarantines per epoch and the same rows in every store table") {
+    val (doorT, chainT) = (doorTrio("eqd"), doorTrio("eqc"))
+    def run(sink: ((org.apache.spark.sql.DataFrame => Unit),
+                   (org.apache.spark.sql.DataFrame => Unit)) =>
+                  ((org.apache.spark.sql.DataFrame, Long) => Unit)) = {
+      val acc = Array.fill(3)(Seq.empty[Long])
+      val quar = Array.fill(3)(Seq.empty[Long])
+      var e = 0
+      val s = sink(df => acc(e) ++= ids(df), df => quar(e) ++= ids(df))
+      doorEpochs.zipWithIndex.foreach { case (rows, i) =>
+        e = i
+        s(rows.toDF("doc_id", "text", "embedding"), i.toLong)
+      }
+      (acc.map(_.sorted).toSeq, quar.map(_.sorted).toSeq)
+    }
+    val door = run((a, q) => doorSink(doorT, "eq")(a)(q))
+    val chain = run((a, q) => layerChain(doorGate(), chainT, "eq")(a)(q))
+    assert(door._1 == Seq(Seq(1L, 3L), Seq(12L, 16L), Seq(24L)),
+      door._1.toString)
+    assert(door._2 == Seq(Seq(2L), Seq(17L), Seq(25L)), door._2.toString)
+    assert(door == chain, s"door $door vs chain $chain")
+    val (dt, ct) = (doorTables(doorT), doorTables(chainT))
+    Seq("fps", "sigs", "bands", "lists", "census").zipWithIndex.foreach {
+      case (name, i) => assert(dt(i) == ct(i), s"$name differs")
+    }
+    // the fp layer stored every fp survivor (14, 15, 22 and 23 died
+    // later), the signature layer its own survivors (15 and 23 too)
+    assert(dt.head.size == 9, dt.head.toString)
+    assert(SignatureStore.read(spark, doorT._2).select("id").collect()
+      .map(_.getLong(0)).sorted.toSeq == Seq(1L, 3L, 12L, 15L, 16L, 23L, 24L))
+    assert(leftStages(doorT).isEmpty)
+  }
+
+  /** [[doorEpochs]] as a file source's input dir, one file per epoch. */
+  private def doorInput(name: String): String = {
+    val inDir = java.nio.file.Files.createTempDirectory(s"${name}_in").toFile
+    doorEpochs.zipWithIndex.foreach { case (rows, i) =>
+      val f = new java.io.File(inDir, f"b$i%02d.json")
+      java.nio.file.Files.write(f.toPath, rows.map { case (id, t, v) =>
+        s"""{"doc_id":$id,"text":"$t","embedding":[${v.mkString(",")}]}"""
+      }.mkString("\n").getBytes("UTF-8"))
+      f.setLastModified(1700000000000L + i * 60000L)
+    }
+    inDir.getAbsolutePath
+  }
+
+  /** Runs a checkpointed file-source query over `inDir` into
+    * `mkSink(crashPoint)`, one input file per epoch, restarting it after
+    * every crash until it completes; `beforeRestart` repairs what a crash
+    * point planted. A fresh sink per start: Bloom lists and heals reload
+    * from disk, as in a recovered driver. */
+  private def doorStream(inDir: String, ckpt: String,
+                         mkSink: (String => Unit) =>
+                           ((org.apache.spark.sql.DataFrame, Long) => Unit),
+                         crashPlan: Set[String] = Set.empty,
+                         beforeRestart: () => Unit = () => ()): Unit = {
+    val crashed = scala.collection.mutable.Set[String]()
+    def crashPoint(p: String): Unit =
+      if (crashPlan.contains(p) && crashed.add(p))
+        throw new IllegalStateException(s"injected crash at $p")
+    var (done, attempts) = (false, 0)
+    while (!done && attempts < 8) {
+      attempts += 1
+      if (attempts > 1) beforeRestart()
+      val q = spark.readStream
+        .schema("doc_id BIGINT, text STRING, embedding ARRAY<DOUBLE>")
+        .option("maxFilesPerTrigger", 1).json(inDir)
+        .writeStream.option("checkpointLocation", ckpt)
+        .foreachBatch(mkSink(crashPoint)).start()
+      try { q.processAllAvailable(); done = true }
+      catch { case _: Throwable => () }
+      finally { try q.stop() catch { case _: Throwable => () } }
+    }
+    assert(done, s"the stream never completed in $attempts attempts")
+    assert(crashed == crashPlan,
+      s"crash points never reached: ${(crashPlan -- crashed).mkString(",")}")
+  }
+
+  test("door epoch crash replay: a crash in accept, a crash after the " +
+    "commit, and a committed epoch whose publish reached one store dir " +
+    "only all replay to the crash-free admissions, tables and census") {
+    val fs = new org.apache.hadoop.fs.Path("/").getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    def path(p: String) = new org.apache.hadoop.fs.Path(p)
+    // accept records (epoch, ids); for the post-commit crash it corrupts
+    // the band census, so the census fold after the commit fails: a crash
+    // between the commit and the post-commit steps
+    def run(name: String, acceptCrash: Set[String], censusCrash: Long) = {
+      val trio = doorTrio(name)
+      val fired = scala.collection.mutable.ArrayBuffer[(Long, Seq[Long])]()
+      val aside = path(s"${trio._2}/.hotbands.aside")
+      var planted = false
+      def mk(crashPoint: String => Unit) = {
+        val cur = new java.util.concurrent.atomic.AtomicLong(-1L)
+        val door = doorSink(trio, "cr") { df =>
+          val e = cur.get()
+          fired += e -> ids(df).sorted
+          crashPoint(s"accept-$e")
+          if (e == censusCrash && !planted) {
+            planted = true
+            assert(fs.rename(path(s"${trio._2}/hotbands"), aside))
+            val out = fs.create(path(s"${trio._2}/hotbands/part-0.parquet"))
+            out.write("not parquet".getBytes("UTF-8")); out.close()
+          }
+        } { _ => () }
+        (df: org.apache.spark.sql.DataFrame, e: Long) => {
+          cur.set(e)
+          door(df, e)
+        }
+      }
+      val restoreCensus: () => Unit = () => if (fs.exists(aside)) {
+        fs.delete(path(s"${trio._2}/hotbands"), true)
+        assert(fs.rename(aside, path(s"${trio._2}/hotbands")))
+      }
+      val (inDir, ckpt) = (doorInput(name),
+        java.nio.file.Files.createTempDirectory(s"${name}_ck").toString)
+      doorStream(inDir, ckpt, mk, acceptCrash, restoreCensus)
+      assert(planted == (censusCrash >= 0))
+      (trio, fired, inDir, ckpt, mk _)
+    }
+    val (cleanT, cleanFired, _, _, _) = run("crc", Set.empty, -1L)
+    val (t, fired, inDir, ckpt, mk) = run("crx", Set("accept-0"), 1L)
+    assert(cleanFired.map(_._2) == Seq(Seq(1L, 3L), Seq(12L, 16L), Seq(24L)),
+      cleanFired.toString)
+    // accept fired again only for the epoch whose marker was absent
+    assert(fired == cleanFired.head +: cleanFired, fired.toString)
+    assert(doorTables(t) == doorTables(cleanT))
+    assert(leftStages(t).isEmpty, leftStages(t).toString)
+
+    // epoch 2 committed, but its publish reached the fp dir only: move the
+    // signature and list rows it published back into its stages, and roll
+    // the query's commit back so that epoch 2 is delivered again
+    def newest(d: String) = fs.listStatus(path(d))
+      .filter(_.getPath.getName.endsWith(".parquet"))
+      .maxBy(_.getModificationTime).getPath
+    Seq((t._2, "sigs"), (t._2, "bands"), (t._3, "lists")).foreach {
+      case (d, table) =>
+        val f = newest(s"$d/${table}_log")
+        fs.mkdirs(path(s"$d/.door_stage_cr_2/$table"))
+        assert(fs.rename(f, path(s"$d/.door_stage_cr_2/$table/${f.getName}")))
+    }
+    assert(fs.exists(path(s"${t._1}/_door_cr_epoch_2")))
+    assert(doorTables(t) != doorTables(cleanT), "fixture: nothing unpublished")
+    assert(fs.delete(path(s"$ckpt/commits/2"), false))
+    fired.clear()
+    doorStream(inDir, ckpt, mk)
+    assert(fired.isEmpty, s"a committed epoch fired accept: $fired")
+    assert(doorTables(t) == doorTables(cleanT))
+    assert(leftStages(t).isEmpty, leftStages(t).toString)
+  }
+
+  test("door restart on stores the per-layer chain wrote: a fully committed " +
+    "epoch replays as a no-op, and a chain that crashed after its semantic " +
+    "or signature layer committed finishes without recomputing them") {
+    val cleanT = doorTrio("pc")
+    val cleanAcc = scala.collection.mutable.ArrayBuffer[Long]()
+    val clean = doorSink(cleanT, "pc")(cleanAcc ++= ids(_))(_ => ())
+    doorEpochs.zipWithIndex.foreach { case (rows, e) =>
+      clean(rows.toDF("doc_id", "text", "embedding"), e.toLong) }
+
+    val t = doorTrio("pl")
+    val acc = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
+    def batch(e: Int) = doorEpochs(e).toDF("doc_id", "text", "embedding")
+    // the per-layer chain commits epoch 0 whole; epoch 1 crashes after its
+    // semantic layer committed (accept fired), before the signature layer
+    // staged
+    var cur = -1L
+    def chain(crashAfterSem: Boolean) = layerChain(doorGate(), t, "pc",
+        afterSem = e => if (crashAfterSem && e == 1L)
+          throw new IllegalStateException("crash after the semantic layer")) {
+      df => acc ++= ids(df).map(cur -> _) } { _ => () }
+    cur = 0L; chain(false)(batch(0), 0L)
+    cur = 1L
+    intercept[IllegalStateException] { chain(true)(batch(1), 1L) }
+    val fs = new org.apache.hadoop.fs.Path(t._1).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    assert(fs.exists(new org.apache.hadoop.fs.Path(s"${t._3}/_annscr_pc_epoch_1")))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"${t._2}/_sigscr_pc_epoch_1")))
+    assert(acc.map(_._2).sorted == Seq(1L, 3L, 12L, 16L))
+    // the door mounts on that trio and the stream replays epochs 0 and 1
+    val door = doorSink(t, "pc") { df => acc ++= ids(df).map(cur -> _) }(_ => ())
+    cur = 0L; door(batch(0), 0L)
+    cur = 1L; door(batch(1), 1L)
+    assert(acc.map(_._2).sorted == Seq(1L, 3L, 12L, 16L),
+      s"a committed layer re-fired accept: $acc")
+    assert(fs.exists(new org.apache.hadoop.fs.Path(s"${t._1}/_door_pc_epoch_1")))
+    // the signature layer committed, the fp layer not: a chain that
+    // crashed there finishes the fp layer alone
+    val t2 = doorTrio("pl2")
+    acc.clear()
+    val chain2 = layerChain(doorGate(), t2, "pc")(
+      df => acc ++= ids(df).map(cur -> _))(_ => ())
+    cur = 0L; chain2(batch(0), 0L)
+    // epoch 1 whole through the per-layer chain, then its fp layer undone:
+    // the state of a crash after the signature layer's marker
+    cur = 1L; chain2(batch(1), 1L)
+    val fpMarker = new org.apache.hadoop.fs.Path(s"${t2._1}/_ingested_pc_epoch_1")
+    val fpLogs = fs.listStatus(new org.apache.hadoop.fs.Path(s"${t2._1}/fps_log"))
+      .map(_.getPath).filter(_.getName.endsWith(".parquet"))
+    val epoch1Log = fs.listStatus(new org.apache.hadoop.fs.Path(s"${t2._1}/fps_log"))
+      .filter(_.getPath.getName.endsWith(".parquet"))
+      .maxBy(_.getModificationTime).getPath
+    assert(fpLogs.length == 2)
+    assert(fs.delete(fpMarker, false) && fs.delete(epoch1Log, false))
+    assert(fs.delete(new org.apache.hadoop.fs.Path(s"${t2._1}/bloom_pc_epoch_1"), false))
+    val door2 = doorSink(t2, "pc") { df => acc ++= ids(df).map(cur -> _) }(_ => ())
+    cur = 1L; door2(batch(1), 1L)
+    assert(acc.map(_._2).sorted == Seq(1L, 3L, 12L, 16L), acc.toString)
+    // both trios then run epoch 2 through the door and equal the door-only
+    // run in every table
+    Seq(t, t2).foreach { tr =>
+      val d = doorSink(tr, "pc")(_ => ())(_ => ())
+      d(batch(2), 2L)
+      assert(doorTables(tr) == doorTables(cleanT), tr.toString)
+      assert(leftStages(tr).isEmpty)
+    }
+  }
+
 }

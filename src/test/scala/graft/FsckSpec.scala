@@ -166,6 +166,33 @@ class FsckSpec extends AnyFunSuite {
     assert(fs.exists(new Path(s"$annDir/.annscr_stage_door_3")))
   }
 
+  test("crash_residue: a door epoch's stages in the signature and ANN dirs " +
+    "and a door marker whose publish never finished are listed, not healed") {
+    val sigDir = seedSig((0L until 10L).toSeq)
+    val (fpDir, annDir) = (tmp("fsck_door_fp"), tmp("fsck_door_ann"))
+    val fs = new Path(sigDir).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    // an uncommitted door epoch 3: stages, no marker
+    fs.mkdirs(new Path(s"$sigDir/.door_stage_door_3"))
+    fs.mkdirs(new Path(s"$annDir/.door_stage_door_3"))
+    // a committed door epoch 4 whose publish stopped after the marker
+    fs.create(new Path(s"$fpDir/_door_door_epoch_4"), true).close()
+    fs.mkdirs(new Path(s"$fpDir/.door_stage_door_4/fps"))
+    fs.mkdirs(new Path(s"$annDir/.door_stage_door_4/lists"))
+    val dirs = Seq("fp" -> fpDir, "sig" -> sigDir, "ann" -> annDir)
+    val got = Fsck.residue(spark, dirs).select("layer", "detail").collect()
+      .map(r => (r.getString(0), r.getString(1))).toSet
+    assert(got === Set("sig" -> "unhealed: .door_stage_door_3",
+      "ann" -> "unhealed: .door_stage_door_3",
+      "fp" -> "unhealed: .door_stage_door_4",
+      "ann" -> "unhealed: .door_stage_door_4"))
+    // read-only: every stage and the marker are still on disk
+    Seq(s"$sigDir/.door_stage_door_3", s"$annDir/.door_stage_door_3",
+      s"$fpDir/_door_door_epoch_4", s"$fpDir/.door_stage_door_4",
+      s"$annDir/.door_stage_door_4").foreach(p =>
+      assert(fs.exists(new Path(p)), s"$p was healed"))
+  }
+
   test("fsck reads never heal: a crashed-compact aside (root moved away) " +
       "stays exactly where it lay through every check that reads the store") {
     val sigDir = seedSig((0L until 15L).toSeq)
