@@ -351,11 +351,8 @@ object AnnIndex {
     * publish or discard what a crashed epoch left staged, then finish or
     * discard a crashed fold. Returns the lists table the sink stages into. */
   private def mount(spark: SparkSession, commit: EpochLog.Commit): EpochLog = {
-    graft.Tuning.mountDefaults(spark) // the index reads list on the driver
-    val fs = fsOf(spark, commit.dir)
-    val log = listsLog(fs, commit.dir)
-    commit.heal(fs)
-    log.healFold(fs, commit.dir)
+    val log = listsLog(fsOf(spark, commit.dir), commit.dir)
+    log.mount(spark, commit)
     log
   }
 
@@ -575,23 +572,21 @@ object AnnIndex {
     * (the SemDeDup observation, applied at ingest time instead of as a
     * batch sweep).
     *
-    * Per epoch the batch probes via [[probeStoredVectors]] (probe cost
-    * tracks the batch's cell footprint × list depth, never store age) and
-    * survivors append under [[EpochLog.Commit]]: a replay from a
-    * pre-marker crash re-probes a store WITHOUT this epoch's vectors
-    * (never a self-match); a post-marker one heals the publish. Near-dups
-    * WITHIN
-    * one batch admit together (screen compares batch vs store; intra-batch
-    * semantic dedup at micro-batch size is the batch pipeline's job —
-    * `dedup_semantic`). Single screen stream per index; re-centering over
-    * drift is a rebuild under a new variant token, as for the appenders. */
+    * Per epoch the batch runs the [[probeStoredVectors]] pruned path (probe
+    * cost tracks the batch's cell footprint × list depth, never store age)
+    * and survivors append through [[ScreenEpoch]]'s commit. Near-dups
+    * WITHIN one batch admit together (screen compares batch vs store;
+    * intra-batch semantic dedup at micro-batch size is the batch
+    * pipeline's job — `dedup_semantic`). Single screen stream per index;
+    * re-centering over drift is a rebuild under a new variant token, as
+    * for the appenders. */
   def semanticScreenSink(spark: SparkSession, indexDir: String,
                          idCol: String, vecCol: String, threshold: Double,
                          nprobe: Int = 4, streamTag: String = "stream",
                          autoCompactEvery: Int = AutoCompact.DefaultCheckEvery,
                          autoCompactFactor: Int = AutoCompact.DefaultFactor)
                         (out: DataFrame => Unit): (DataFrame, Long) => Unit = {
-    val s = screen(spark, indexDir, idCol, vecCol, threshold, nprobe,
+    val s = new Screen(spark, indexDir, idCol, vecCol, threshold, nprobe,
       streamTag, autoCompactEvery, autoCompactFactor)
     ScreenEpoch.sink(s.commit, Seq(s))(out)
   }
@@ -606,27 +601,17 @@ object AnnIndex {
     * namespace of `streamTag`: the probe flags every id with a stored
     * vector at cosine ≥ `threshold` in its `nprobe` nearest lists; a
     * passing row stages into the lists' log under its nearest list. */
-  private[graft] def screen(spark: SparkSession, indexDir: String,
-                            idCol: String, vecCol: String, threshold: Double,
-                            nprobe: Int, streamTag: String,
-                            autoCompactEvery: Int = AutoCompact.DefaultCheckEvery,
-                            autoCompactFactor: Int = AutoCompact.DefaultFactor):
-      Screen =
-    new Screen(spark, indexDir, idCol, vecCol, threshold, nprobe, streamTag,
-      autoCompactEvery, autoCompactFactor)
-
   private[graft] class Screen(spark: SparkSession, indexDir: String,
-                              idCol: String, vecCol: String,
-                              threshold: Double, nprobe: Int,
-                              streamTag: String, autoCompactEvery: Int,
-                              autoCompactFactor: Int) extends ScreenLayer {
+      idCol: String, vecCol: String, threshold: Double, nprobe: Int,
+      streamTag: String,
+      autoCompactEvery: Int = AutoCompact.DefaultCheckEvery,
+      autoCompactFactor: Int = AutoCompact.DefaultFactor) extends ScreenLayer {
     val commit: EpochLog.Commit = screenCommit(indexDir, streamTag)
     private val log = mount(spark, commit)
     private val auto = new AutoCompact(autoCompactEvery, autoCompactFactor)
     /** The coarse centroids the probe and the stage assign with. */
     @volatile var cents: Array[Array[Double]] = loadCentroids(spark, indexDir)
     val key: String = idCol
-    val added: Seq[String] = Nil
     def prepare(rows: DataFrame): DataFrame = rows
     private def ql(rows: DataFrame) =
       qLists(rows.select(col(idCol).cast("long").as("qid"),

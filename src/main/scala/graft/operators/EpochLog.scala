@@ -179,6 +179,17 @@ private[operators] final class EpochLog(tables: Seq[EpochLog.Table]) {
     fs.delete(new Path(dir, FoldStage), true)
   }
 
+  /** A sink's mount on `commit`, whose dir holds these tables: the store's
+    * reads list on the driver ([[graft.Tuning.mountDefaults]]), committed
+    * stages publish and orphans are discarded, a crashed fold heals. */
+  def mount(spark: SparkSession, commit: Commit): FileSystem = {
+    graft.Tuning.mountDefaults(spark)
+    val fs = fsOf(spark, commit.dir)
+    commit.heal(fs)
+    healFold(fs, commit.dir)
+    fs
+  }
+
   /** Data files of `name` on disk: the base's partition files plus the
     * log's files. */
   def fileCount(fs: FileSystem, dir: String, name: String): Int = {

@@ -1,7 +1,8 @@
 package graft.operators
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
 
@@ -92,7 +93,7 @@ object FingerprintStore {
     val spark = docs.sparkSession
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val fps = docs.select(fpCol(textCol).as("fp"))
-      .withColumn("shard", pmod(col("fp"), lit(NumShards)))
+      .withColumn("shard", shardOf(col("fp")))
       .distinct().localCheckpoint()
     // one file per touched shard (the repartition-before-partitioned-write
     // layout rule — without it each write task emits a file per shard)
@@ -101,17 +102,13 @@ object FingerprintStore {
     val n = fps.count()
     if (n > 0) {
       val tag = s"seed_${java.util.UUID.randomUUID().toString.take(8)}"
-      writeBloom(fs, dir, tag,
+      writeBloom(fs, new Path(s"$dir/bloom_$tag"),
         fps.stat.bloomFilter("fp", math.max(1024L, 2 * n), 0.01))
     }
   }
 
-  private def writeBloom(fs: org.apache.hadoop.fs.FileSystem, dir: String,
-                         tag: String, bf: BloomFilter): Unit =
-    writeBloomAt(fs, new Path(s"$dir/bloom_$tag"), bf)
-
-  private def writeBloomAt(fs: org.apache.hadoop.fs.FileSystem, p: Path,
-                           bf: BloomFilter): Unit = {
+  private def writeBloom(fs: org.apache.hadoop.fs.FileSystem, p: Path,
+                         bf: BloomFilter): Unit = {
     val out = fs.create(p, true)
     try bf.writeTo(out) finally out.close()
   }
@@ -138,7 +135,7 @@ object FingerprintStore {
     * broadcast sidecar list has no native-expression equivalent (the
     * filters are opaque sketch objects). Shared by the ingest screen and
     * the [[Fsck]] audit so the probe semantics can never diverge. */
-  private def bloomProbe(bc: org.apache.spark.broadcast.Broadcast[Array[BloomFilter]]) =
+  private def bloomProbe(bc: Broadcast[Array[BloomFilter]]) =
     udf((fp: Long) => bc.value.exists(_.mightContainLong(fp)))
 
   /** Audit view for [[Fsck]]: stored fingerprints NO Bloom sidecar claims.
@@ -165,23 +162,39 @@ object FingerprintStore {
   def probeTexts(spark: SparkSession, dir: String, docs: DataFrame,
                  idCol: String, textCol: String): DataFrame = {
     val keyed = docs.select(col(idCol).cast("long").as("id"),
-      fpCol(textCol).as("fp")).localCheckpoint()
+      fpCol(textCol).as("__fp")).localCheckpoint()
     if (!Log.hasRows(fsOf(spark, dir), dir, "fps"))
       return keyed.select("id").limit(0)
-    val bc = spark.sparkContext.broadcast(loadBlooms(spark, dir).toArray)
-    val cand = keyed.filter(bloomProbe(bc)(col("fp")))
-      .select("fp").distinct()
-      .withColumn("shard", pmod(col("fp"), lit(NumShards)))
-      .localCheckpoint()
-    val shards = cand.select("shard").distinct() // ≤ NumShards rows
-      .collect().map(_.getLong(0)).toSeq
-    if (shards.isEmpty) return keyed.select("id").limit(0)
-    val confirmed = read(spark, dir)
-      .filter(col("shard").isin(shards: _*))
-      .join(broadcast(cand.select("fp")), Seq("fp"), "left_semi")
-    keyed.join(broadcast(confirmed.select("fp")), Seq("fp"), "left_semi")
-      .select("id")
+    val cands = bloomCands(
+        spark.sparkContext.broadcast(loadBlooms(spark, dir).toArray), keyed)
+      .distinct().localCheckpoint()
+    val shards = ScreenEpoch.distinctLongs(cands.select(shardOf(col("__fp"))))
+    keyed.join(broadcast(storedFps(spark, dir, cands, shards)), Seq("__fp"),
+      "left_semi").select("id")
   }
+
+  private def shardOf(fp: Column): Column = pmod(fp, lit(NumShards))
+
+  /** The Bloom candidates among `fps` (column `__fp`): the possible hits
+    * of sidecar list `bc`; definite-new rows never touch disk. */
+  private def bloomCands(bc: Broadcast[Array[BloomFilter]],
+                         fps: DataFrame): DataFrame =
+    if (bc.value.isEmpty) fps.select("__fp").limit(0)
+    else fps.select("__fp").filter(bloomProbe(bc)(col("__fp")))
+
+  /** The fps of `cands` (column `__fp`) the store holds, reading only
+    * shards `shards` (static partition filter):
+    *   store (shard-pruned scan)  LEFT SEMI  broadcast(candidates)
+    * and the caller masks with the broadcast result. No batch-sized literal
+    * reaches a plan (an `isin` over the batch's fingerprints grew an
+    * expression tree and its generated code with the batch). */
+  private def storedFps(spark: SparkSession, dir: String, cands: DataFrame,
+                        shards: Set[Long]): DataFrame =
+    if (shards.isEmpty) cands.select("__fp").limit(0)
+    else read(spark, dir).filter(col("shard").isin(shards.toSeq.sorted: _*))
+      .join(broadcast(cands.select(col("__fp").as("fp"))), Seq("fp"),
+        "left_semi")
+      .select(col("fp").as("__fp"))
 
   /** Compact a long-lived store in place: fold the per-epoch Bloom sidecars
     * into ONE filter sized to the store's true distinct count, fold the
@@ -224,8 +237,9 @@ object FingerprintStore {
     val bloom =
       if (n == 0L) BloomFilter.create(1024L, 0.01)
       else fps.stat.bloomFilter("fp", math.max(1024L, 2 * n), 0.01)
-    writeBloom(fs, dir,
-      s"compact_${java.util.UUID.randomUUID().toString.take(8)}", bloom)
+    writeBloom(fs, new Path(
+      s"$dir/bloom_compact_${java.util.UUID.randomUUID().toString.take(8)}"),
+      bloom)
     oldBlooms.foreach(fs.delete(_, false))
     TableSwap.rewrite(fs, dir, "fps")(tmp =>
       fps.write.partitionBy("shard").parquet(tmp.toString))
@@ -280,37 +294,27 @@ object FingerprintStore {
 
   /** The exact-dup layer of [[dedupSink]] and the ingest door
     * ([[ScreenLayer]]), mounted on [[dedupSink]]'s namespace of
-    * `streamTag`. A restarted layer finishes (or discards) what a crash
-    * left staged before it reads anything: committed epochs publish into
-    * the log, a committed fold completes. The batch keeps one row per
-    * distinct text (min id; byte-identical re-delivered rows, which share
-    * the id too, keep one), keyed by its fingerprint `__fp`.
-    *
-    * The probe is a Bloom screen — definite-new rows skip disk entirely —
-    * then a join pipeline against only the candidates' shards:
-    *   store (shard-pruned scan)  LEFT SEMI  broadcast(candidates)
-    * and the caller masks with the broadcast result. No batch-sized literal
-    * ever reaches a plan (an `isin` over the batch's fingerprints grew an
-    * expression tree and its generated code with the batch); the only
-    * collect is the distinct shard list, bounded by NumShards (256).
+    * `streamTag`. The batch keeps one row per distinct text (min id;
+    * byte-identical re-delivered rows, which share the id too, keep one),
+    * keyed by its fingerprint `__fp`; the probe is [[probeTexts]]'s Bloom
+    * screen and shard-pruned verify.
     *
     * A passing row's fingerprint stages into the log with the epoch's
-    * Bloom sidecar. The Bloom list is loaded once per mount, BROADCAST to
-    * executors (a closure-captured filter would re-serialize with every
-    * task), and re-broadcast as soon as an epoch stages a sidecar, before
-    * the marker: an epoch that then never commits only leaves a filter
-    * that costs false positives, while a list missing a committed epoch's
-    * filter would wave its duplicates through. */
+    * Bloom sidecar, built on the driver from the passing fingerprints (one
+    * batch-sized collect; the filter the `bloomFilter` aggregate builds).
+    * The Bloom list is loaded once per mount, BROADCAST to executors (a
+    * closure-captured filter would re-serialize with every task), and
+    * re-broadcast as soon as an epoch stages a sidecar, before the marker:
+    * an epoch that then never commits only leaves a filter that costs
+    * false positives, while a list missing a committed epoch's filter would
+    * wave its duplicates through. */
   private[graft] def screen(spark: SparkSession, dir: String, idCol: String,
                             textCol: String, streamTag: String,
                             autoCompactEvery: Int = AutoCompact.DefaultCheckEvery,
                             autoCompactFactor: Int = AutoCompact.DefaultFactor):
       ScreenLayer = {
-    graft.Tuning.mountDefaults(spark) // the store reads list on the driver
-    val fs = fsOf(spark, dir)
     val own = sinkCommit(dir, streamTag)
-    own.heal(fs)
-    Log.healFold(fs, dir)
+    val fs = Log.mount(spark, own)
     val sc = spark.sparkContext
     var blooms: Seq[BloomFilter] = loadBlooms(spark, dir)
     var bloomBc = sc.broadcast(blooms.toArray)
@@ -326,15 +330,9 @@ object FingerprintStore {
     // the same pass) — so sidecars, not fps files, are this store's growth
     // telemetry. The log folds at every cadence boundary regardless.
     val auto = new AutoCompact(autoCompactEvery, autoCompactFactor)
-    def candidates(prep: DataFrame): DataFrame = {
-      val bc = bloomBc
-      if (bc.value.isEmpty) prep.select("__fp").limit(0)
-      else prep.select("__fp").filter(bloomProbe(bc)(col("__fp")))
-    }
     new ScreenLayer {
       val commit: EpochLog.Commit = own
       val key = "__fp"
-      val added: Seq[String] = Seq("__fp")
       def prepare(rows: DataFrame): DataFrame = {
         // one aggregate: per text, the row with the least (non-null) id
         val cols = idCol +: rows.columns.filterNot(_ == idCol).toSeq
@@ -345,22 +343,17 @@ object FingerprintStore {
           .select(col("__fp") +: cols.map(c => col("__r").getField(c).as(c)): _*)
       }
       def keys(prep: DataFrame): DataFrame =
-        candidates(prep).select(pmod(col("__fp"), lit(NumShards)))
+        bloomCands(bloomBc, prep).select(shardOf(col("__fp")))
       def flagged(prep: DataFrame, shards: Set[Long]): DataFrame =
-        if (shards.isEmpty) prep.select("__fp").limit(0)
-        else read(spark, dir)
-          .filter(col("shard").isin(shards.toSeq.sorted: _*))
-          .join(broadcast(candidates(prep).select(col("__fp").as("fp"))),
-            Seq("fp"), "left_semi")
-          .select(col("fp").as("__fp"))
+        storedFps(spark, dir, bloomCands(bloomBc, prep), shards)
       def stage(passed: DataFrame, stage: Path, epoch: Long): () => Unit = {
         val fps = passed.select("__fp").collect().map(_.getLong(0))
         if (fps.nonEmpty) {
           Log.stage(passed.select(col("__fp").as("fp"),
-            pmod(col("__fp"), lit(NumShards)).as("shard")), stage, "fps")
+            shardOf(col("__fp")).as("shard")), stage, "fps")
           val bloom = BloomFilter.create(math.max(1024L, 2L * fps.length), 0.01)
           fps.foreach(bloom.putLong)
-          writeBloomAt(fs, new Path(stage, "bloom"), bloom)
+          writeBloom(fs, new Path(stage, "bloom"), bloom)
           swap(blooms :+ bloom)
         }
         () => auto.tick(bloomCount(spark, dir), 1, Log.fold(spark, dir)) {

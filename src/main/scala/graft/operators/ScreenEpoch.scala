@@ -1,7 +1,9 @@
 package graft.operators
 
+import scala.reflect.ClassTag
+
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.{broadcast, col, lit}
 
 /** One store's screening steps, shared by its own sink and the ingest
@@ -14,9 +16,7 @@ private[graft] trait ScreenLayer {
   def commit: EpochLog.Commit
   /** The column of the prepared rows that [[flagged]] names rows by. */
   def key: String
-  /** Columns [[prepare]] adds; dropped before the rows reach `out`. */
-  def added: Seq[String]
-  /** The batch plus this layer's derived columns. */
+  /** The batch plus this layer's derived columns (dropped before `out`). */
   def prepare(rows: DataFrame): DataFrame
   /** The store partitions (one long column) the probe of `prep` reads. */
   def keys(prep: DataFrame): DataFrame
@@ -57,9 +57,7 @@ private[graft] object ScreenEpoch {
             val k = l.keys(prep)
             k.select(lit(i), col(k.columns.head).cast("long"))
           }).reduce(_.union(_))
-      val found = tagged.rdd.mapPartitions(rows =>
-          rows.map(r => (r.getInt(0), r.getLong(1))).toSet.iterator)
-        .collect().toSet
+      val found = distinctRows(tagged)(r => (r.getInt(0), r.getLong(1)))
       if (!found.exists(_._1 == -1)) return
       val flagged = layers.zipWithIndex.map { case (l, i) =>
         l.flagged(prep, found.collect { case (`i`, k) => k }) }
@@ -78,7 +76,7 @@ private[graft] object ScreenEpoch {
       // passed(i): the rows no layer before i flagged
       val passed = (0 to layers.size).map(i =>
         if (i == 0) prep else levels.filter(col("__passed") >= i).drop("__passed"))
-      out(passed.last.drop(layers.flatMap(_.added): _*))
+      out(passed.last.drop(prep.columns.diff(batch.columns): _*))
       val stages = commit.freshStages(fs, epoch)
       val after = layers.indices.map(i =>
         layers(i).stage(passed(i + 1), stages(i), epoch))
@@ -87,12 +85,15 @@ private[graft] object ScreenEpoch {
     } finally pinned.foreach(graft.SessionMemo.unpersistLeaves)
   }
 
-  /** The distinct values of `df`'s one long column in one job: each
-    * partition collects its own distinct set (bounded by the column's
-    * value range), the driver merges them. */
+  /** The distinct values `f` takes on `df`'s rows, in one job: each
+    * partition collects its own distinct set (bounded by the values'
+    * range), the driver merges them. */
+  private def distinctRows[T: ClassTag](df: DataFrame)(f: Row => T): Set[T] =
+    df.rdd.mapPartitions(rows => rows.map(f).toSet.iterator).collect().toSet
+
+  /** The distinct values of `df`'s one long column, in one job. */
   private[operators] def distinctLongs(df: DataFrame): Set[Long] =
-    df.rdd.mapPartitions(rows => rows.map(_.getLong(0)).toSet.iterator)
-      .collect().toSet
+    distinctRows(df)(_.getLong(0))
 
   /** A sink over `layers` on `commit`: a replayed epoch whose marker exists
     * only heals. */

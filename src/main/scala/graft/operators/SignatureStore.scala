@@ -351,11 +351,8 @@ object SignatureStore {
     * published and uncommitted ones discarded, a committed fold finished. */
   private def mount(spark: SparkSession, dir: String, kind: String,
                     tag: String): EpochLog.Commit = {
-    graft.Tuning.mountDefaults(spark) // the store reads list on the driver
-    val fs = fsOf(spark, dir)
     val commit = EpochLog.commit(dir, kind, tag, Log.subs)
-    commit.heal(fs)
-    Log.healFold(fs, dir)
+    Log.mount(spark, commit)
     commit
   }
 
@@ -582,7 +579,6 @@ object SignatureStore {
     new ScreenLayer {
       val commit: EpochLog.Commit = own
       val key: String = idCol
-      val added: Seq[String] = Seq("__sig")
       def prepare(rows: DataFrame): DataFrame = {
         checkParams(fsOf(spark, dir), dir, numHashes, shingleSize, bands)
         val sigs = Dedup.minHashSignatures(rows, idCol, textCol, numHashes,

@@ -135,7 +135,7 @@ object FrontDoor {
       FingerprintStore.screen(spark, fpDir, idCol, textCol, streamTag),
       SignatureStore.screen(spark, sigDir, idCol, textCol, sigThreshold,
         streamTag = streamTag),
-      AnnIndex.screen(spark, ivfDir, idCol, vecCol, semThreshold, nprobe,
+      new AnnIndex.Screen(spark, ivfDir, idCol, vecCol, semThreshold, nprobe,
         streamTag))
     val commit = doorCommit(streamTag, layers)
     val fs = new Path(fpDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
