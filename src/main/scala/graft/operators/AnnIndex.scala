@@ -593,7 +593,7 @@ object AnnIndex {
 
   /** The screens' epoch namespace on stream `tag`:
     * `.annscr_stage_<tag>_<e>`, `_annscr_<tag>_epoch_<e>`. */
-  private def screenCommit(indexDir: String, tag: String): EpochLog.Commit =
+  private[graft] def screenCommit(indexDir: String, tag: String): EpochLog.Commit =
     EpochLog.commit(indexDir, "annscr", tag, Lists)
 
   /** The semantic layer of [[semanticScreenSink]], [[recenteringScreenSink]]

@@ -255,7 +255,10 @@ private[graft] object EpochLog {
     * [[EpochLog]] epoch's one file per table) go to the table's log
     * `<dir>/<sub>_log/`. The empty `sub` is the stage and store root (the
     * packed-shard store's `shard=K/` dirs). Each `(staged, published)`
-    * pair of `files` then moves as named. Idempotent: per-file atomic
+    * pair of `files` then moves as named, replacing a file of that name
+    * (the epoch's own, written straight into the store by a writer that
+    * crashed before its marker; a rename onto an existing file fails on
+    * HDFS and S3A). Idempotent: per-file atomic
     * renames, files already moved are simply absent on a re-sweep — or
     * vanish under a concurrent finisher of the same committed fold, which
     * is not an error either. */
@@ -281,6 +284,7 @@ private[graft] object EpochLog {
     files.foreach { case (from, to) =>
       if (fs.exists(from)) {
         fs.mkdirs(to.getParent)
+        fs.delete(to, false) // a copy an uncommitted epoch wrote directly
         move(fs, from, to)
       }
     }
@@ -297,12 +301,17 @@ private[graft] object EpochLog {
     * stages under `<part dir>/<stagePrefix><e>` in each part's dir and
     * commits by creating ONE marker, `<dir>/<markerPrefix><e>` in the first
     * part's dir. A committed stage publishes part by part; every part
-    * heals against that one marker. */
+    * heals against that one marker. The parts may sit on different
+    * filesystems: each method's `fs` supplies the Hadoop configuration, and
+    * every dir resolves its own FileSystem under it. */
   final case class Commit(stagePrefix: String, markerPrefix: String,
                           parts: Seq[Part]) {
 
     /** The marker's dir: the first part's. */
     def dir: String = parts.head.dir
+
+    private def fsAt(fs: FileSystem, d: String): FileSystem =
+      new Path(d).getFileSystem(fs.getConf)
 
     private def stage(p: Part, epoch: Long): Path =
       new Path(s"${p.dir}/$stagePrefix$epoch")
@@ -310,11 +319,12 @@ private[graft] object EpochLog {
     private def marker(epoch: Long): Path = new Path(s"$dir/$markerPrefix$epoch")
 
     /** True once epoch `epoch`'s marker exists. */
-    def committed(fs: FileSystem, epoch: Long): Boolean = fs.exists(marker(epoch))
+    def committed(fs: FileSystem, epoch: Long): Boolean =
+      fsAt(fs, dir).exists(marker(epoch))
 
     private def publishPart(fs: FileSystem, p: Part, epoch: Long): Unit = {
       val st = stage(p, epoch)
-      publish(fs, p.dir, st, p.subs, p.files.map { case (f, to) =>
+      publish(fsAt(fs, p.dir), p.dir, st, p.subs, p.files.map { case (f, to) =>
         new Path(st, f) -> new Path(s"${p.dir}/$to$epoch") })
     }
 
@@ -326,25 +336,27 @@ private[graft] object EpochLog {
       * longer tag's staging. */
     def heal(fs: FileSystem): Unit = parts.foreach { p =>
       val root = new Path(p.dir)
-      if (fs.exists(root))
-        fs.listStatus(root).map(_.getPath.getName)
+      val pfs = fsAt(fs, p.dir)
+      if (pfs.exists(root))
+        pfs.listStatus(root).map(_.getPath.getName)
           .filter(_.startsWith(stagePrefix)).foreach { name =>
             val e = name.drop(stagePrefix.length)
             if (isEpoch(e)) {
               if (committed(fs, e.toLong)) publishPart(fs, p, e.toLong)
-              else fs.delete(new Path(root, name), true)
+              else pfs.delete(new Path(root, name), true)
             }
           }
     }
 
     /** Epoch `epoch`'s stage paths, one per part, any leftover deleted. */
     def freshStages(fs: FileSystem, epoch: Long): Seq[Path] =
-      parts.map { p => val st = stage(p, epoch); fs.delete(st, true); st }
+      parts.map { p =>
+        val st = stage(p, epoch); fsAt(fs, p.dir).delete(st, true); st }
 
     /** The commit point: create the marker holding `markerText`, then
       * publish every part's stage. */
     def commitEpoch(fs: FileSystem, epoch: Long, markerText: String = ""): Unit = {
-      val out = fs.create(marker(epoch), true)
+      val out = fsAt(fs, dir).create(marker(epoch), true)
       try out.write(markerText.getBytes("UTF-8")) finally out.close()
       parts.foreach(publishPart(fs, _, epoch))
     }

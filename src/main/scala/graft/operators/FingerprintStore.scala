@@ -65,7 +65,7 @@ object FingerprintStore {
 
   /** [[dedupSink]]'s epoch namespace: `_ingested_<tag>_epoch_<e>`; a
     * stage's `bloom` file publishes as the sidecar `bloom_<tag>_epoch_<e>`. */
-  private def sinkCommit(dir: String, tag: String): EpochLog.Commit =
+  private[graft] def sinkCommit(dir: String, tag: String): EpochLog.Commit =
     EpochLog.commit(dir, "ingested", tag, Log.subs,
       files = Seq("bloom" -> s"bloom_${tag}_epoch_"))
 

@@ -347,14 +347,9 @@ object SignatureStore {
       .withColumn("bucket", bucketCol(col("band_hash"))), stage, "bands")
   }
 
-  /** Sink mount: the epoch namespace of (kind, tag), its committed stages
-    * published and uncommitted ones discarded, a committed fold finished. */
-  private def mount(spark: SparkSession, dir: String, kind: String,
-                    tag: String): EpochLog.Commit = {
-    val commit = EpochLog.commit(dir, kind, tag, Log.subs)
-    Log.mount(spark, commit)
-    commit
-  }
+  /** [[screenSink]]'s epoch namespace on stream `tag`. */
+  private[graft] def screenCommit(dir: String, tag: String): EpochLog.Commit =
+    EpochLog.commit(dir, "sigscr", tag, Log.subs)
 
   /** The between-epochs window after a committed epoch: fold the log at
     * the cadence, compact past the bound. */
@@ -376,7 +371,8 @@ object SignatureStore {
                autoCompactFactor: Int = AutoCompact.DefaultFactor):
       (DataFrame, Long) => Unit = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
-    val commit = mount(spark, dir, "sigapp", streamTag)
+    val commit = EpochLog.commit(dir, "sigapp", streamTag, Log.subs)
+    Log.mount(spark, commit)
     val auto = new AutoCompact(autoCompactEvery, autoCompactFactor)
     (batch: DataFrame, epoch: Long) => {
       val fs = fsOf(batch.sparkSession, dir)
@@ -400,12 +396,16 @@ object SignatureStore {
 
   /** Batch-vs-store near-dup probe on the PRUNED path: band the probe
     * sigs, read ONLY the store buckets those bands hash into (static
-    * partition filter over the band index), then verify candidates against
-    * ONLY their sig shards (static partition filter + broadcast semi-join,
-    * the [[FingerprintStore.dedupSink]] verify shape). Returns
+    * partition filter over the band index), then verify the candidate
+    * pairs, each carrying its probe signature, against ONLY their sig
+    * shards (static partition filter + broadcast join, the
+    * [[FingerprintStore.dedupSink]] verify shape). Returns
     * (doc_id, n_base_dups, max_est) — [[Dedup.minHashDeltaOverSigs]]
     * semantics. The only collects are the two distinct partition-value
-    * lists, bounded by NumBuckets (256) and NumShards (64). `eager=false`
+    * lists, bounded by NumBuckets (256) and NumShards (64). The probe's
+    * band rows are broadcast carrying their signature, so a probe batch
+    * must be broadcast-sized (a door trigger, a delta's incoming slice).
+    * `eager=false`
     * skips the intermediate localCheckpoints so the returned plan exposes
     * both pruned scans (plan pins); production callers keep the default.
     *
@@ -432,7 +432,7 @@ object SignatureStore {
     checkParams(fsOf(spark, dir), dir, numHashes, -1, bands)
     def pin(df: DataFrame) = if (eager) df.localCheckpoint() else df
     // Pin the SIGNATURE frame, not the banded view: the probe consumes the
-    // sigs twice (banding below, candidate verify at the bottom), and a
+    // sigs twice (the bucket list, then the candidate bands), and a
     // caller handing a raw plan (the delta queries) would otherwise re-run
     // the whole shingle+hash chain for the verify side — one full batch
     // hash pass saved per probe (r17 StageProfile: the verify re-hash was
@@ -444,20 +444,13 @@ object SignatureStore {
       .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
     val sigsP = if (callerPinned) probeSigs.select("id", "sig")
                 else pin(probeSigs.select("id", "sig"))
-    val buckets = bandBuckets(sigsP, numHashes, bands).distinct()
-      .collect().map(_.getLong(0)).toSeq // ≤ NumBuckets rows
-    val cands = pin(candidates(spark, dir,
-      Dedup.bandedSigs(sigsP, "id_in", numHashes, bands), buckets, maxBandDf)
-      .distinct())
-    val shards = cands.select(shardCol(col("id_base")).as("shard"))
-      .distinct().collect().map(_.getLong(0)).toSeq // ≤ NumShards rows
-    val sigsB =
-      (if (shards.isEmpty) readSigsRaw(spark, dir).limit(0)
-       else readSigsRaw(spark, dir).filter(col("shard").isin(shards: _*))
-         .join(broadcast(cands.select(col("id_base").as("id"))), Seq("id"),
-           "left_semi"))
-        .select("id", "sig")
-    Dedup.verifySigCandidates(cands, sigsP, sigsB, numHashes, threshold)
+    val buckets = ScreenEpoch.distinctLongs(bandBuckets(sigsP, numHashes,
+      bands)).toSeq.sorted // ≤ NumBuckets values
+    verified(spark, dir, sigsP, numHashes, bands, threshold, buckets,
+        maxBandDf, pairs => pin(pairs.distinct()))
+      .groupBy(col("id_in").as("doc_id"))
+      .agg(count(lit(1)).as("n_base_dups"),
+        round(max("est_jaccard"), 6).as("max_est"))
   }
 
   /** The band buckets (column `bucket`) the probe of `sigs` reads. */
@@ -497,25 +490,29 @@ object SignatureStore {
       .drop("band_id", "band_hash")
   }
 
-  /** The screen's verdict: ids of `sigsP` (id, sig) with a stored
-    * signature at estimated Jaccard ≥ `threshold`, reading only band
-    * buckets `buckets` and then only the candidates' sig shards. Each
-    * candidate pair carries its probe signature, so the verify is one
-    * pruned store scan joined to the broadcast pairs. An id may repeat. */
-  private def nearDupIds(spark: SparkSession, dir: String, sigsP: DataFrame,
-                         numHashes: Int, bands: Int, threshold: Double,
-                         buckets: Seq[Long], maxBandDf: Int): DataFrame = {
+  /** The (probe, stored) candidate pairs of `sigsP` (id, sig) at
+    * estimated Jaccard ≥ `threshold`, as (id_in, est_jaccard): the
+    * candidates come from band buckets `buckets` and carry their probe
+    * signature, so the verify is one scan of only their sig shards joined
+    * to the broadcast pairs. `ready` takes the candidates, one row per
+    * colliding band, before their shard list is collected: it pins them,
+    * and makes them distinct where the caller counts pairs. */
+  private def verified(spark: SparkSession, dir: String, sigsP: DataFrame,
+                       numHashes: Int, bands: Int, threshold: Double,
+                       buckets: Seq[Long], maxBandDf: Int,
+                       ready: DataFrame => DataFrame): DataFrame = {
     val bandsI = Dedup.bandedSigs(sigsP, "id_in", numHashes, bands,
         keep = Seq("sig")).withColumnRenamed("sig", "sig_in")
-    val cands = candidates(spark, dir, bandsI, buckets, maxBandDf)
-      .localCheckpoint()
+    val cands = ready(candidates(spark, dir, bandsI, buckets, maxBandDf))
     val shards = ScreenEpoch.distinctLongs(
       cands.select(shardCol(col("id_base")))).toSeq // ≤ NumShards values
-    if (shards.isEmpty) cands.select("id_in").limit(0)
+    val est = Dedup.estJaccard(col("sig_in"), col("sig"), numHashes)
+    if (shards.isEmpty) cands.select(col("id_in"), lit(0.0).as("est_jaccard"))
+      .limit(0)
     else readSigsRaw(spark, dir).filter(col("shard").isin(shards.sorted: _*))
       .join(broadcast(cands), col("id") === col("id_base"))
-      .filter(Dedup.estJaccard(col("sig_in"), col("sig"), numHashes) >= threshold)
-      .select("id_in")
+      .select(col("id_in"), est.as("est_jaccard"))
+      .filter(col("est_jaccard") >= threshold)
   }
 
   /** foreachBatch sink SCREENING each micro-batch against the store before
@@ -571,7 +568,8 @@ object SignatureStore {
                             autoCompactFactor: Int = AutoCompact.DefaultFactor,
                             maxBandDf: Int = Int.MaxValue): ScreenLayer = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
-    val own = mount(spark, dir, "sigscr", streamTag)
+    val own = screenCommit(dir, streamTag)
+    Log.mount(spark, own)
     val auto = new AutoCompact(autoCompactEvery, autoCompactFactor)
     def sigsOf(rows: DataFrame): DataFrame =
       rows.select(col(idCol).as("id"), col("__sig").as("sig"))
@@ -590,8 +588,8 @@ object SignatureStore {
       def keys(prep: DataFrame): DataFrame =
         bandBuckets(sigsOf(prep), numHashes, bands)
       def flagged(prep: DataFrame, buckets: Set[Long]): DataFrame =
-        nearDupIds(spark, dir, sigsOf(prep), numHashes, bands, threshold,
-            buckets.toSeq.sorted, maxBandDf)
+        verified(spark, dir, sigsOf(prep), numHashes, bands, threshold,
+            buckets.toSeq.sorted, maxBandDf, _.localCheckpoint())
           .select(col("id_in").as(idCol))
       def stage(passed: DataFrame, stage: Path, epoch: Long): () => Unit = {
         // one row per id, as the probe hashed them (one task: batch-sized)

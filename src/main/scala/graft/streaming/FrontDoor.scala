@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, lit}
 
 import graft.operators.{AnnIndex, EpochLog, FingerprintStore, ScreenEpoch,
-  ScreenLayer, SignatureStore}
+  SignatureStore}
 
 /** The COMPLETE ingest front door as one `writeStream.foreachBatch` sink —
   * the four-layer admission chain every continuous-crawl deployment of this
@@ -117,8 +117,10 @@ object FrontDoor {
     * where one shared marker would swallow every subsequent batch.
     *
     * Mount heals every namespace the stores may hold for `streamTag`: the
-    * door's own (all three dirs against its one marker) and the per-layer
-    * sinks' that earlier versions of this door committed under. */
+    * door's own (all three dirs against its one marker) first, so that a
+    * committed epoch's Bloom sidecar is published before the fingerprint
+    * layer loads its Bloom list, then the per-layer sinks' that earlier
+    * versions of this door committed under. */
   private[graft] def storeChain(spark: SparkSession, fpDir: String,
       sigDir: String, ivfDir: String, idCol: String, textCol: String,
       vecCol: String, sigThreshold: Double, semThreshold: Double,
@@ -131,15 +133,22 @@ object FrontDoor {
           "— wire batches through FrontDoor.sink, never into a layer directly")
       e
     }
+    // the door epoch's namespace: `.door_stage_<tag>_<e>` in each store
+    // dir, where that store's own sink publishes; one marker
+    // `_door_<tag>_epoch_<e>` in the fingerprint dir
+    val commit = EpochLog.Commit(s".door_stage_${streamTag}_",
+      s"_door_${streamTag}_epoch_", Seq(
+        FingerprintStore.sinkCommit(fpDir, streamTag),
+        SignatureStore.screenCommit(sigDir, streamTag),
+        AnnIndex.screenCommit(ivfDir, streamTag)).map(_.parts.head))
+    val fs = new Path(fpDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    commit.heal(fs)
     val layers = Seq(
       FingerprintStore.screen(spark, fpDir, idCol, textCol, streamTag),
       SignatureStore.screen(spark, sigDir, idCol, textCol, sigThreshold,
         streamTag = streamTag),
       new AnnIndex.Screen(spark, ivfDir, idCol, vecCol, semThreshold, nprobe,
         streamTag))
-    val commit = doorCommit(streamTag, layers)
-    val fs = new Path(fpDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    commit.heal(fs)
     df => {
       val e = epochNow()
       // A store trio written by the per-layer chain commits each layer
@@ -161,13 +170,6 @@ object FrontDoor {
       }
     }
   }
-
-  /** The door epoch's namespace on stream `tag`: stages
-    * `.door_stage_<tag>_<e>` in each of the three store dirs, one marker
-    * `_door_<tag>_epoch_<e>` in the fingerprint dir. */
-  private def doorCommit(tag: String, layers: Seq[ScreenLayer]): EpochLog.Commit =
-    EpochLog.Commit(s".door_stage_${tag}_", s"_door_${tag}_epoch_",
-      layers.map(_.commit.parts.head))
 
   /** READ-ONLY corpus-membership probe — the door's question ("have we
     * seen this content?") answered WITHOUT the writer lock: no append, no

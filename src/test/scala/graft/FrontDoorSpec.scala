@@ -606,21 +606,34 @@ class FrontDoorSpec extends AnyFunSuite {
     * (16) and a gate reject (17); e2 an exact copy of the pair's text
     * (21), a re-crawl of 16 (22), a paraphrase of 3 (23), a novel page
     * (24) and a gate reject (25). Distinct pages share no shingle: each
-    * has its own vocabulary or a disjoint window of one. */
+    * has its own vocabulary or a disjoint window of one. Each of e0 and e1
+    * also admits a band family ([[familyA]], [[familyB]]): six one-token
+    * variants of one page, which share bands often enough to put groups
+    * into the band census. */
   private def doorEpochs: Seq[Seq[(Long, String, Seq[Double])]] = {
     val (v1, v3, ve) = (vec(0, 0.5, 2), vec(5, 0.5, 7), vec(6, 0.5, 1))
     val (n1, n2) = (vec(7, 0.5, 5), vec(3, 0.5, 6))
+    def family(ids: Seq[Long], v: String, offAxis: Int) =
+      ids.zipWithIndex.map { case (id, j) =>
+        (id, (0 until 23).map(i => w(v, 56 + i)).mkString(" ") + " " +
+          w(v, Seq(0, 1, 2, 3, 28, 29)(j)), vec(8 + j, 0.5, offAxis)) }
     Seq(
       Seq((1L, doc("alpha", 4), v1), (2L, doc("beta", 7), vec(1, 0.5, 3)),
-        (3L, doc("gamma", 4), v3)),
+        (3L, doc("gamma", 4), v3)) ++ family(familyA, "kappa", 15),
       Seq((11L, doc("alpha", 4), v1), (13L, doc("delta", 4), ve),
         (12L, doc("delta", 4), ve), (14L, recrawl("gamma", 4), nudge(v3, 4)),
         (15L, doc("kappa", 4), nudge(v1, 3)), (16L, doc("alpha", 30), n1),
-        (17L, doc("beta", 30), vec(2, 0.5, 4))),
+        (17L, doc("beta", 30), vec(2, 0.5, 4))) ++ family(familyB, "delta", 14),
       Seq((21L, doc("delta", 4), ve), (22L, recrawl("alpha", 30), nudge(n1, 3)),
         (23L, doc("gamma", 30), nudge(v3, 2)), (24L, doc("delta", 30), n2),
         (25L, doc("beta", 56), vec(4, 0.5, 0))))
   }
+  private val familyA = 41L to 46L
+  private val familyB = 51L to 56L
+
+  /** [[doorEpochs]]' admissions per epoch. */
+  private val doorAccepted: Seq[Seq[Long]] =
+    Seq(Seq(1L, 3L) ++ familyA, Seq(12L, 16L) ++ familyB, Seq(24L))
 
   private def doorGate(): IngestGate = {
     val ref = (Seq("alpha", "gamma", "delta", "kappa").zipWithIndex.flatMap {
@@ -711,19 +724,20 @@ class FrontDoorSpec extends AnyFunSuite {
     }
     val door = run((a, q) => doorSink(doorT, "eq")(a)(q))
     val chain = run((a, q) => layerChain(doorGate(), chainT, "eq")(a)(q))
-    assert(door._1 == Seq(Seq(1L, 3L), Seq(12L, 16L), Seq(24L)),
-      door._1.toString)
+    assert(door._1 == doorAccepted, door._1.toString)
     assert(door._2 == Seq(Seq(2L), Seq(17L), Seq(25L)), door._2.toString)
     assert(door == chain, s"door $door vs chain $chain")
     val (dt, ct) = (doorTables(doorT), doorTables(chainT))
     Seq("fps", "sigs", "bands", "lists", "census").zipWithIndex.foreach {
       case (name, i) => assert(dt(i) == ct(i), s"$name differs")
     }
+    assert(dt(4).nonEmpty, "fixture: no band group reaches the census")
     // the fp layer stored every fp survivor (14, 15, 22 and 23 died
     // later), the signature layer its own survivors (15 and 23 too)
-    assert(dt.head.size == 9, dt.head.toString)
+    assert(dt.head.size == 21, dt.head.toString)
     assert(SignatureStore.read(spark, doorT._2).select("id").collect()
-      .map(_.getLong(0)).sorted.toSeq == Seq(1L, 3L, 12L, 15L, 16L, 23L, 24L))
+      .map(_.getLong(0)).sorted.toSeq ==
+      (Seq(1L, 3L, 12L, 15L, 16L, 23L, 24L) ++ familyA ++ familyB).sorted)
     assert(leftStages(doorT).isEmpty)
   }
 
@@ -774,7 +788,8 @@ class FrontDoorSpec extends AnyFunSuite {
 
   test("door epoch crash replay: a crash in accept, a crash after the " +
     "commit, and a committed epoch whose publish reached one store dir " +
-    "only all replay to the crash-free admissions, tables and census") {
+    "only all replay to the crash-free admissions and tables; the census " +
+    "loses only the fold of the epoch that crashed after its commit") {
     val fs = new org.apache.hadoop.fs.Path("/").getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     def path(p: String) = new org.apache.hadoop.fs.Path(p)
@@ -816,11 +831,26 @@ class FrontDoorSpec extends AnyFunSuite {
     }
     val (cleanT, cleanFired, _, _, _) = run("crc", Set.empty, -1L)
     val (t, fired, inDir, ckpt, mk) = run("crx", Set("accept-0"), 1L)
-    assert(cleanFired.map(_._2) == Seq(Seq(1L, 3L), Seq(12L, 16L), Seq(24L)),
-      cleanFired.toString)
+    assert(cleanFired.map(_._2) == doorAccepted, cleanFired.toString)
     // accept fired again only for the epoch whose marker was absent
     assert(fired == cleanFired.head +: cleanFired, fired.toString)
-    assert(doorTables(t) == doorTables(cleanT))
+    // The census fold runs after the commit, so the crash there lost epoch
+    // 1's fold (the census's undercount; a replay of a committed epoch only
+    // heals) and never applied it twice. Epoch 0 crashed before its commit
+    // and replayed whole, its fold included: exactly once. So the census
+    // is the crash-free one without family B's groups, and holds family
+    // A's.
+    val clean = doorTables(cleanT)
+    val famB = SignatureStore.readBands(spark, cleanT._2)
+      .filter(col("id").isin(familyB: _*)).select("band_id", "band_hash")
+    val census = spark.read.parquet(s"${cleanT._2}/hotbands")
+      .join(famB, Seq("band_id", "band_hash"), "left_anti")
+      .select("band_id", "band_hash", "df")
+      .collect().map(_.toString).toSeq.sorted
+    assert(census.nonEmpty && census != clean(4),
+      s"fixture: census $census, crash-free ${clean(4)}")
+    def replayed = doorTables(t)
+    assert(replayed == clean.take(4) :+ census, replayed.toString)
     assert(leftStages(t).isEmpty, leftStages(t).toString)
 
     // epoch 2 committed, but its publish reached the fp dir only: move the
@@ -836,12 +866,12 @@ class FrontDoorSpec extends AnyFunSuite {
         assert(fs.rename(f, path(s"$d/.door_stage_cr_2/$table/${f.getName}")))
     }
     assert(fs.exists(path(s"${t._1}/_door_cr_epoch_2")))
-    assert(doorTables(t) != doorTables(cleanT), "fixture: nothing unpublished")
+    assert(replayed != clean.take(4) :+ census, "fixture: nothing unpublished")
     assert(fs.delete(path(s"$ckpt/commits/2"), false))
     fired.clear()
     doorStream(inDir, ckpt, mk)
     assert(fired.isEmpty, s"a committed epoch fired accept: $fired")
-    assert(doorTables(t) == doorTables(cleanT))
+    assert(replayed == clean.take(4) :+ census, replayed.toString)
     assert(leftStages(t).isEmpty, leftStages(t).toString)
   }
 
@@ -872,12 +902,13 @@ class FrontDoorSpec extends AnyFunSuite {
       spark.sparkContext.hadoopConfiguration)
     assert(fs.exists(new org.apache.hadoop.fs.Path(s"${t._3}/_annscr_pc_epoch_1")))
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"${t._2}/_sigscr_pc_epoch_1")))
-    assert(acc.map(_._2).sorted == Seq(1L, 3L, 12L, 16L))
+    val admitted = doorAccepted.take(2).flatten.sorted
+    assert(acc.map(_._2).sorted == admitted)
     // the door mounts on that trio and the stream replays epochs 0 and 1
     val door = doorSink(t, "pc") { df => acc ++= ids(df).map(cur -> _) }(_ => ())
     cur = 0L; door(batch(0), 0L)
     cur = 1L; door(batch(1), 1L)
-    assert(acc.map(_._2).sorted == Seq(1L, 3L, 12L, 16L),
+    assert(acc.map(_._2).sorted == admitted,
       s"a committed layer re-fired accept: $acc")
     assert(fs.exists(new org.apache.hadoop.fs.Path(s"${t._1}/_door_pc_epoch_1")))
     // the signature layer committed, the fp layer not: a chain that
@@ -887,8 +918,11 @@ class FrontDoorSpec extends AnyFunSuite {
     val chain2 = layerChain(doorGate(), t2, "pc")(
       df => acc ++= ids(df).map(cur -> _))(_ => ())
     cur = 0L; chain2(batch(0), 0L)
-    // epoch 1 whole through the per-layer chain, then its fp layer undone:
-    // the state of a crash after the signature layer's marker
+    // epoch 1 whole through the per-layer chain, then its fp layer's log
+    // file and marker undone: the state of a crash after the signature
+    // layer's marker. Epoch 1's Bloom sidecar stays, as a chain that wrote
+    // it into the store before its marker left it; the replay publishes its
+    // own over it.
     cur = 1L; chain2(batch(1), 1L)
     val fpMarker = new org.apache.hadoop.fs.Path(s"${t2._1}/_ingested_pc_epoch_1")
     val fpLogs = fs.listStatus(new org.apache.hadoop.fs.Path(s"${t2._1}/fps_log"))
@@ -898,10 +932,9 @@ class FrontDoorSpec extends AnyFunSuite {
       .maxBy(_.getModificationTime).getPath
     assert(fpLogs.length == 2)
     assert(fs.delete(fpMarker, false) && fs.delete(epoch1Log, false))
-    assert(fs.delete(new org.apache.hadoop.fs.Path(s"${t2._1}/bloom_pc_epoch_1"), false))
     val door2 = doorSink(t2, "pc") { df => acc ++= ids(df).map(cur -> _) }(_ => ())
     cur = 1L; door2(batch(1), 1L)
-    assert(acc.map(_._2).sorted == Seq(1L, 3L, 12L, 16L), acc.toString)
+    assert(acc.map(_._2).sorted == admitted, acc.toString)
     // both trios then run epoch 2 through the door and equal the door-only
     // run in every table
     Seq(t, t2).foreach { tr =>
@@ -910,6 +943,40 @@ class FrontDoorSpec extends AnyFunSuite {
       assert(doorTables(tr) == doorTables(cleanT), tr.toString)
       assert(leftStages(tr).isEmpty)
     }
+  }
+
+  test("door remount: a committed epoch whose fingerprint stage (fps and " +
+    "Bloom sidecar) never published is published before the Bloom list " +
+    "loads, so the next epoch's byte copy still dies at the fp layer") {
+    def batch(e: Int) = doorEpochs(e).toDF("doc_id", "text", "embedding")
+    val cleanT = doorTrio("bc")
+    val clean = doorSink(cleanT, "bh")(_ => ())(_ => ())
+    doorEpochs.indices.foreach(e => clean(batch(e), e.toLong))
+    val t = doorTrio("bl")
+    val acc = scala.collection.mutable.ArrayBuffer[Long]()
+    val first = doorSink(t, "bh")(acc ++= ids(_))(_ => ())
+    Seq(0, 1).foreach(e => first(batch(e), e.toLong))
+    // epoch 1 committed, but the fp dir's share of its publish never ran:
+    // move its fps log file and its Bloom sidecar back into its stage
+    def path(p: String) = new org.apache.hadoop.fs.Path(p)
+    val fs = path(t._1).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val stage = s"${t._1}/.door_stage_bh_1"
+    val log = fs.listStatus(path(s"${t._1}/fps_log"))
+      .filter(_.getPath.getName.endsWith(".parquet"))
+      .maxBy(_.getModificationTime).getPath
+    assert(fs.mkdirs(path(s"$stage/fps")))
+    assert(fs.rename(log, path(s"$stage/fps/${log.getName}")))
+    assert(fs.rename(path(s"${t._1}/bloom_bh_epoch_1"), path(s"$stage/bloom")))
+    assert(fs.exists(path(s"${t._1}/_door_bh_epoch_1")))
+    // the remount heals, and epoch 2 holds 21, a byte copy of epoch 1's 12
+    val door = doorSink(t, "bh")(acc ++= ids(_))(_ => ())
+    door(batch(2), 2L)
+    assert(acc.sorted == doorAccepted.flatten.sorted, acc.toString)
+    def fps(d: String) = FingerprintStore.read(spark, d).collect()
+      .map(_.toString).toSeq.sorted
+    assert(fps(t._1) == fps(cleanT._1))
+    assert(doorTables(t) == doorTables(cleanT))
+    assert(leftStages(t).isEmpty, leftStages(t).toString)
   }
 
 }
